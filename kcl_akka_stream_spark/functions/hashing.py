@@ -17,11 +17,3 @@ def md5_seeded(col: Column, seed: int) -> Column:
     """Seeded md5 hex digest -- a family of independent hash functions
     indexed by seed (classic minhash construction)."""
     return F.md5(F.concat(col.cast("string"), F.lit(f"#{seed}")))
-
-
-def hex_digit_bit(hex_col: Column, position: int) -> Column:
-    """High bit of the hex digit at `position` (1-based) of a hex string:
-    1 for digits 8-f, else 0.  Gives k independent unbiased bits from one
-    md5 -- used by simhash."""
-    digit = F.substring(hex_col, position, 1)
-    return F.when(digit.isin("8", "9", "a", "b", "c", "d", "e", "f"), 1).otherwise(0)

@@ -215,11 +215,13 @@ def payload_simhash(
                 offs = np.arange(0, len(data) - gram + 1, stride)
                 n = len(offs)
                 wins = arr[offs[:, None] + np.arange(gram)]  # (n, gram)
-                keys = wins.copy().view(f"S{gram}").ravel()
+                # void view: an S view would strip trailing NULs and hash
+                # b"ab\0\0" as b"ab"
+                keys = wins.copy().view(f"V{gram}").ravel()
                 uniq, cnt = np.unique(keys, return_counts=True)
                 # counts[i] = sum over windows of bit i -- fold the
                 # distinct-gram bit matrix weighted by multiplicity
-                mat = np.stack([bits_of(g) for g in uniq]).astype(np.int64)
+                mat = np.stack([bits_of(bytes(g)) for g in uniq]).astype(np.int64)
                 counts = (mat * cnt[:, None]).sum(axis=0)  # (bits,)
                 fp = int(
                     ((2 * counts - n > 0).astype(np.int64)

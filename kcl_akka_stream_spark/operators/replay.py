@@ -116,19 +116,3 @@ def remove_reprocessed(
         .groupBy(key_col)
         .applyInPandas(scan, schema=out_schema)
     )
-
-
-def dedup_and_group_by_key_strict(
-    df: DataFrame, key_col: str, msg_col: str, order_col: str
-) -> DataFrame:
-    """A2 strict form -- ``dedupAndGroupByKey`` (IT/MessageUtil.scala:9-13):
-    group by key preserving order, then validate+strip replays."""
-    from pyspark.sql import functions as F
-
-    deduped = remove_reprocessed(df, key_col, msg_col, order_col)
-    return deduped.groupBy(key_col).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col("position").alias("o"), F.col(msg_col).alias("v")))),
-            lambda s: s.getField("v"),
-        ).alias("values")
-    )

@@ -66,9 +66,9 @@ def summarize_plan_str(plan: str) -> dict:
     micro-batch plans (VERDICT r13 #3) where no live DataFrame exists by
     the time the audit reads them.  Handles BOTH explain styles: the
     formatted mode's ``(N) Op`` detail headers (what physical_plan()
-    captures at the _collect_state / epoch-append seams) and the simple
-    mode's tree lines (what StreamingQuery.explainInternal emits for the
-    watermark families).  Counting rules mirror count_operator /
+    captures for each epoch state inside streaming_q._fold_epochs) and
+    the simple mode's tree lines (what StreamingQuery.explainInternal
+    emits for the watermark families).  Counting rules mirror count_operator /
     count_exchanges exactly: node NAMES anchored, so ReusedExchange and
     BroadcastExchange never inflate the shuffle count."""
     # explainInternal carries every section (Parsed/Analyzed/Optimized/
@@ -219,10 +219,10 @@ def narrow_expensive_maps(df: DataFrame, max_parts: int = 2) -> list[dict]:
 #: spec built WITHOUT a ``partitionBy`` collapses its input onto a single
 #: task -- a global sort/scan that is fine on a bounded relation and a
 #: scale-killer on a data-sized one (the r14 ``text_heaps_law`` finding,
-#: since rewritten to a two-pass range-bucketed rank).  Mirroring the
-#: streaming ``STATE_CARDINALITY`` audit: every unpartitioned global
-#: window site in the package must carry a row here stating WHY its
-#: input relation is bounded; ``tests/test_global_window_audit.py``
+#: since rewritten to a two-pass range-bucketed rank).  Every
+#: unpartitioned global window site in the package must carry a row here
+#: stating WHY its input relation is bounded;
+#: ``tests/test_global_window_audit.py``
 #: AST-scans the package and fails on any site without a row (or any
 #: stale row), so the next data-sized global window cannot land
 #: silently.  Keys are (module path relative to the package root,

@@ -12415,9 +12415,9 @@ def emb_power_iteration_pc1(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3 localCheckpoint-materialized 4096-row broadcast joins + arg-max
     # subplans -- ~7 tiny Spark jobs whose scheduling dwarfed their
     # arithmetic.  The covariance is a BOUNDED aggregate (dims x dims =
-    # 4096 rows regardless of data -- the _collect_state / codebook
-    # collect class this repo already uses), so fold it to the driver
-    # once and run the iterations as exact int64 Python, replicating
+    # 4096 rows regardless of data -- the codebook collect class this
+    # repo already uses), so fold it to the driver once and run the
+    # iterations as exact int64 Python, replicating
     # Spark's `div` (truncation toward ZERO, unlike Python's floor
     # division) bit-for-bit: same mx/sign rule, same divide-first
     # staging.  Identical results (same oracle, gated at 3 SFs); the
@@ -12441,14 +12441,15 @@ def emb_power_iteration_pc1(spark: SparkSession, sf_dir: str) -> DataFrame:
             d: sum(cn[(d, d2)] * vm[d2] for d2 in dims if (d, d2) in cn)
             for d in dims
         }
-        # ADVICE r15 #4: Python ints are exact where Spark's bigint sum
-        # would wrap -- assert the bound so the "bit-for-bit equivalent
-        # to the all-Spark plan" claim stays checkable rather than
-        # silently diverging on overflow-scale covariances.
-        assert all(-(1 << 63) <= x < (1 << 63) for x in w.values()), (
-            "emb_power_iteration_pc1: w exceeds int64; the Spark-"
-            "equivalence claim no longer holds for this input scale"
-        )
+        # Python ints are exact where Spark's bigint sum would wrap --
+        # raise on the bound so the "bit-for-bit equivalent to the
+        # all-Spark plan" claim stays checkable rather than silently
+        # diverging on overflow-scale covariances.
+        if not all(-(1 << 63) <= x < (1 << 63) for x in w.values()):
+            raise OverflowError(
+                "emb_power_iteration_pc1: w exceeds int64; the Spark-"
+                "equivalence claim no longer holds for this input scale"
+            )
         mx = max(abs(x) for x in w.values())
         dstar = min(d for d in dims if abs(w[d]) == mx)
         sg = 1 if w[dstar] >= 0 else -1

@@ -1,9 +1,25 @@
 """Structured Streaming queries exposed through the batch correctness gate.
 
-Each callable runs a REAL streaming query (readStream -> transform ->
-memory sink, driven to completion with processAllAvailable) and returns the
-sink table -- so the DuckDB oracle checks end-to-end streaming semantics,
-not a batch re-expression (SURVEY §2.9).
+Each callable runs a REAL streaming query and returns its result, so the
+DuckDB oracle checks end-to-end streaming semantics, not a batch
+re-expression (SURVEY §2.9).  Two private helpers own every streaming
+lifecycle in this module:
+
+- ``_drain(writer)`` starts a query, drives it with processAllAvailable
+  and stops it in ``finally``, whatever the query raised.
+- ``_fold_epochs(spark, df, partial, tag)`` is the one harness for the
+  mergeable-state twins, modelled on Discretized Streams (state is one
+  dataset per interval, merged after the intervals).  It stages ``df``
+  as ``N_EPOCHS`` files, streams one file per trigger, and in
+  foreachBatch turns each micro-batch into its partial state
+  ``partial(batch_df, epoch_id)``, pinned executor-side by an eager
+  localCheckpoint.  After the drain it stops the query, removes the
+  staged files and returns the union of the per-epoch states; the twin
+  merges and finalizes that union.  No state row ever folds through the
+  driver, so state size is an executor concern at any scale.
+
+``stream_scd2_merge`` keeps its own callback: its merge depends on batch
+order, so each batch folds into the standing table as it arrives.
 """
 
 from __future__ import annotations
@@ -12,9 +28,12 @@ import os
 import shutil
 import tempfile
 import uuid
+from functools import reduce
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from kcl_akka_stream_spark.queries.registry import query, tbl
 
@@ -23,30 +42,11 @@ def _cents(col):
     return F.floor(col * 100 + F.lit(0.5)).cast("long")
 
 
-#: VERDICT r10 #3: every mergeable-family twin folds per-batch state on
-#: the driver via collect() -- sound ONLY because the collected relation
-#: is a bounded AGGREGATE (bars x types, digests x replicas: group
-#: cardinality, never data size).  Nothing used to enforce that contract;
-#: re-key the same fold by user_id and it silently becomes a driver OOM
-#: at 100x.  _collect_state is the loud guard (the similarity family's
-#: max_queries / max_codebook_rows pattern): the fetch itself is LIMIT
-#: (cap+1)-bounded, so an unbounded state raises instead of OOMing.
-MAX_STATE_ROWS = 100_000
-
-
-class StateCardinalityExceeded(RuntimeError):
-    """A streaming twin's per-batch state relation exceeded max_state_rows."""
-
-
-#: VERDICT r13 #3: the streaming twins' micro-batch plans were the one
-#: headline slice with no EXPLAIN-grade audit -- EXPLAIN.md carried a
-#: "(streaming -- plan decided per micro-batch)" marker instead of
-#: exchange/pushdown counts.  When tools/explain_audit.py installs a
-#: capture dict here, every micro-batch state relation's PHYSICAL plan
-#: is recorded under its family tag before execution: the driver-fold
-#: families capture at the _collect_state seam, the epoch-union family
-#: at its per-batch parquet append, and the watermark/memory-sink
-#: family via StreamingQuery.explainInternal after the final trigger.
+#: When tools/explain_audit.py (or a test) installs a capture dict here,
+#: every micro-batch state relation's PHYSICAL plan is recorded under its
+#: family tag before execution: the mergeable-state twins capture inside
+#: _fold_epochs, and the watermark/memory-sink family via
+#: StreamingQuery.explainInternal after the final trigger.
 PLAN_CAPTURE: dict[str, list[str]] | None = None
 
 
@@ -57,26 +57,13 @@ def _capture_plan(tag: str, df: DataFrame) -> None:
         PLAN_CAPTURE.setdefault(tag, []).append(physical_plan(df))
 
 
-#: Optimization r15 (guide §1.2 order-of-operations, §2.4/§2.5): every
-#: mergeable-state twin staged its source fixture as
-#: ``df.repartition(4).write`` -- a ROUND-ROBIN exchange (which pays the
-#: SPARK-23207 sort-before-repartition on every row) into four files,
-#: then FOUR micro-batches at maxFilesPerTrigger=1.  Measured on the
-#: events projection at sf0.1: fixture write 0.56 s round-robin vs
-#: 0.36 s for a 2-way hash split, and each extra trigger costs ~0.22 s
-#: of micro-batch machinery against a no-op fold.  The merge contract
-#: these twins prove (per-batch states fold to exactly the whole-stream
-#: state: abelian sums, min/max/OR semilattices, bottom-k) is
-#: batch-composition- and batch-count-independent BY CONSTRUCTION, and
-#: every family's oracle recomputes from the whole relation -- so any
-#: deterministic multi-file split yields identical results (every twin
-#: re-gated at all 3 SFs after this change).  TWO epochs exercise the
-#: same cross-batch merge (state from batch 0 merged with state from
-#: batch 1; replay/idempotence semantics stay pinned by the pytest
-#: fixtures) at half the trigger overhead.  The split key is a
-#: deterministic full-row hash -- cheaper than the round-robin sort and
-#: reproducible under task retry (guide §2.5: never derive a partitioning
-#: key from rand()).
+#: The mergeable-state contract (epoch states fold to exactly the
+#: whole-stream state: abelian sums, min/max/OR semilattices, bottom-k)
+#: is independent of batch count and composition BY CONSTRUCTION, and
+#: every oracle recomputes from the whole relation.  TWO epochs exercise
+#: the cross-batch merge at the least trigger overhead (~0.22 s per extra
+#: trigger at sf0.1).  The split key is a deterministic full-row hash:
+#: cheaper than a round-robin repartition and reproducible under retry.
 N_EPOCHS = 2
 
 
@@ -86,184 +73,47 @@ def _write_epoch_fixture(df: DataFrame, src: str, n: int = N_EPOCHS) -> None:
     ).parquet(src)
 
 
-#: VERDICT r12 #2: the per-family state-cardinality AUDIT for all 23
-#: mergeable-state streaming-twin families.  Each entry states HOW the
-#: per-batch state is held and WHY its cardinality cannot grow with row
-#: volume:
-#:   mechanism 'driver-fold'   -- state folds through the guarded
-#:                                _collect_state driver list; legitimate
-#:                                ONLY for constant / group-bounded state.
-#:                                ``folds`` lists the exact what-tags used
-#:                                at the _collect_state call sites (pytest
-#:                                pins set equality against the source).
-#:   mechanism 'epoch-union'   -- per-batch state APPENDS executor-side to
-#:                                a parquet store; merge is distributed;
-#:                                result detaches via eager
-#:                                localCheckpoint.  Required for any
-#:                                data-dependent state.
-#:   mechanism 'checkpoint-fold' -- state is a standing DataFrame merged
-#:                                batch-over-batch and re-detached via
-#:                                eager localCheckpoint (block-manager
-#:                                partitions, never a driver row list).
-#:   cardinality 'constant'      -- rows/batch bounded by a fixed sketch
-#:                                size x group count (k, bands, bins, b).
-#:   cardinality 'group-bounded' -- rows/batch bounded by group-domain
-#:                                cells (types x hours/bins/bars); grows
-#:                                with the DOMAIN (value range, stream
-#:                                time-span), never with row volume.
-#:   cardinality 'data-dependent' -- grows with data (id universe, user
-#:                                count): MUST NOT be a driver-fold.
-#: tests/test_streaming_state_audit.py pins (a) the folds tags complete
-#: and exact against the actual _collect_state call sites, and (b) no
-#: driver-fold family classified data-dependent.
-STATE_CARDINALITY = {
-    "stream_kmv_merge": (
-        "driver-fold", "constant", "epochs x k=64 bottom hashes",
-        ("stream_kmv_merge",),
-    ),
-    "stream_cms_merge": (
-        "driver-fold", "constant", "types x fixed depth*width counters",
-        ("stream_cms_merge",),
-    ),
-    "stream_hist_merge": (
-        "driver-fold", "group-bounded", "types x value-range bins",
-        ("stream_hist_merge",),
-    ),
-    "stream_kmv_set_ops": (
-        "driver-fold", "constant", "set-tags x k=64 bottom hashes",
-        ("stream_kmv_set_ops",),
-    ),
-    "stream_rollup_incremental": (
-        "driver-fold", "constant", "types x 4 int64 sufficient stats",
-        ("stream_rollup_incremental",),
-    ),
-    "stream_moments_merge": (
-        "driver-fold", "constant", "types x 4 int64 power sums",
-        ("stream_moments_merge",),
-    ),
-    "stream_scd2_merge": (
-        "checkpoint-fold", "group-bounded",
-        "the changes-sized SCD2 dimension itself, localCheckpoint-held",
-        (),
-    ),
-    "stream_bitmap_merge": (
-        "epoch-union", "data-dependent",
-        "types x dense-id-range/63 words -- grows with the id universe",
-        (),
-    ),
-    "stream_reservoir_merge": (
-        "driver-fold", "constant", "types x k=8 bottom hashes",
-        ("stream_reservoir_merge",),
-    ),
-    "stream_bootstrap_merge": (
-        "driver-fold", "constant",
-        "types x b=32 replicate sums + types x point sums",
-        ("stream_bootstrap_merge:replicates", "stream_bootstrap_merge:point"),
-    ),
-    "stream_pearson_merge": (
-        "driver-fold", "constant", "types x 6 int64 sufficient stats",
-        ("stream_pearson_merge",),
-    ),
-    "stream_kl_drift_merge": (
-        "epoch-union", "group-bounded",
-        "types x 2 halves x unit bins -- grows with the value domain"
-        " (migrated off the driver list, VERDICT r14 #5)",
-        (),
-    ),
-    "stream_ks_merge": (
-        "epoch-union", "group-bounded",
-        "types x 2 halves x deci-bins -- grows with the value domain"
-        " (migrated off the driver list, VERDICT r14 #5)",
-        (),
-    ),
-    "stream_entropy_merge": (
-        "driver-fold", "group-bounded", "types x 24 hour cells",
-        ("stream_entropy_merge",),
-    ),
-    "stream_mi_merge": (
-        "driver-fold", "group-bounded", "types x 24 hour cells",
-        ("stream_mi_merge",),
-    ),
-    "stream_ohlc_merge": (
-        "epoch-union", "group-bounded",
-        "types x hourly bars -- grows with stream time-span, not volume"
-        " (migrated off the driver list, VERDICT r14 #5)",
-        (),
-    ),
-    "stream_topk_merge": (
-        "driver-fold", "constant", "windows x k candidates",
-        ("stream_topk_merge",),
-    ),
-    "stream_session_merge": (
-        "epoch-union", "data-dependent",
-        "users x batch-local sessions -- grows with user count",
-        (),
-    ),
-    "stream_minhash_merge": (
-        "driver-fold", "constant", "langs x 8 signature chunks",
-        ("stream_minhash_merge",),
-    ),
-    "stream_bloom_merge": (
-        "epoch-union", "constant",
-        "types x <= 261 words (ceil(m/63), m fixed at 16384);"
-        " epoch-union anyway -- no driver list (VERDICT r14 #5)",
-        (),
-    ),
-    "stream_quantile_merge": (
-        "driver-fold", "constant",
-        "types x k=256 bottom-hash (id, cents) sample rows",
-        ("stream_quantile_merge",),
-    ),
-    "stream_hll_merge": (
-        "driver-fold", "constant",
-        "types x m=64 HLL registers (max-semilattice)",
-        ("stream_hll_merge",),
-    ),
-    "stream_f2_merge": (
-        "driver-fold", "constant",
-        "types x one row of b=64 AMS signed sums (additive)",
-        ("stream_f2_merge",),
-    ),
-}
+def _drain(writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer``, process everything available, and stop the query
+    even when a trigger raised.  Returns the stopped query."""
+    q = writer.start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return q
 
 
-def _collect_state(
+def _fold_epochs(
+    spark: SparkSession,
     df: DataFrame,
-    what: str,
-    domain_bound: int | None = None,
-    max_state_rows: int = MAX_STATE_ROWS,
-):
-    """Guarded driver fetch of one micro-batch's state relation.
+    partial: Callable[[DataFrame, int], DataFrame],
+    tag: str,
+) -> DataFrame:
+    """Stream ``df`` as N_EPOCHS micro-batches and return the union of the
+    per-epoch states ``partial(batch_df, epoch_id)``.  Each state is
+    pinned by an eager localCheckpoint inside its trigger, so it lives in
+    executor block storage and outlives the staged files, which are
+    removed (and the query stopped) even when a trigger raises."""
+    src = tempfile.mkdtemp(prefix="kcl_epochs_")
+    states: list[DataFrame] = []
 
-    ``domain_bound`` (VERDICT r13 #4) is the family's OWN per-batch
-    domain cap -- the ``types x bins/bars/k`` formula stated at the call
-    site.  MAX_STATE_ROWS alone let a group-bounded family whose DOMAIN
-    grows (value-range bins, stream-time-span bars) drift silently
-    toward the 100k cliff; the per-family bound raises with the family
-    name the moment its domain outgrows the declared envelope.  Every
-    registry twin passes one (AST-pinned by
-    tests/test_streaming_state_audit.py); None is tolerated only for
-    ad-hoc probes."""
-    cap = (
-        max_state_rows
-        if domain_bound is None
-        else min(domain_bound, max_state_rows)
-    )
-    _capture_plan(what, df)
-    rows = df.limit(cap + 1).collect()
-    if len(rows) > cap:
-        which = (
-            "max_state_rows"
-            if domain_bound is None or domain_bound >= max_state_rows
-            else "domain_bound"
+    def fold(batch_df: DataFrame, epoch_id: int) -> None:
+        st = partial(batch_df, int(epoch_id))
+        _capture_plan(tag, st)
+        states.append(st.localCheckpoint(eager=True))
+
+    try:
+        _write_epoch_fixture(df, src)
+        _drain(
+            spark.readStream.schema(df.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+            .writeStream.foreachBatch(fold)
         )
-        raise StateCardinalityExceeded(
-            f"{what}: per-batch state relation exceeded {which}={cap}; "
-            "fold state must be group-bounded "
-            "(bars x types, digests x replicas), never data-sized -- "
-            "re-key the state or raise the cap explicitly at the call site"
-        )
-    return rows
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+    return reduce(DataFrame.unionByName, states)
 
 
 @query(
@@ -294,18 +144,15 @@ def stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-        if PLAN_CAPTURE is not None:
-            # the watermark/stateful plan of the last executed trigger
-            # (extended=True includes the physical plan with the
-            # StateStoreRestore/Save + Exchange chain)
-            PLAN_CAPTURE.setdefault("stream_tumbling_agg", []).append(
-                q._jsq.explainInternal(True)
-            )
-    finally:
-        q.stop()
+    q = _drain(agg.writeStream.outputMode("complete").format("memory").queryName(name))
+    if PLAN_CAPTURE is not None:
+        # the watermark/stateful plan of the last executed trigger
+        # (extended=True includes the physical plan with the
+        # StateStoreRestore/Save + Exchange chain); a stopped query
+        # keeps its last execution
+        PLAN_CAPTURE.setdefault("stream_tumbling_agg", []).append(
+            q._jsq.explainInternal(True)
+        )
     return spark.table(name)
 
 
@@ -332,11 +179,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.write.mode("append").parquet(tmp)  # the replayed duplicates
         stream = spark.readStream.schema(ev.schema).parquet(tmp)
         deduped = stream.withWatermark("ts", "1 hour").dropDuplicates(["event_id"])
-        q = deduped.writeStream.outputMode("append").format("memory").queryName(name).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        _drain(deduped.writeStream.outputMode("append").format("memory").queryName(name))
         return (
             spark.table(name)
             .groupBy("event_type")
@@ -373,16 +216,7 @@ def stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
         deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
             ["event_id"]
         )
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        _drain(deduped.writeStream.outputMode("append").format("memory").queryName(name))
         return (
             spark.table(name)
             .groupBy("event_type")
@@ -427,11 +261,7 @@ def stream_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(agg.writeStream.outputMode("complete").format("memory").queryName(name))
     return spark.table(name)
 
 
@@ -471,11 +301,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(agg.writeStream.outputMode("complete").format("memory").queryName(name))
     return spark.table(name)
 
 
@@ -535,13 +361,7 @@ def stream_checkpoint_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("event_type") != "error").alias("processed"),
             )
         )
-        q = tracked.writeStream.outputMode("update").format("memory").queryName(name).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        from pyspark.sql import Window
-
+        _drain(tracked.writeStream.outputMode("update").format("memory").queryName(name))
         w = Window.partitionBy("shard_id").orderBy(F.col("update_id").desc())
         return (
             spark.table(name)
@@ -595,11 +415,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("clk_ts") <= F.col("err_ts")),
         "inner",
     )
-    q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(joined.writeStream.outputMode("append").format("memory").queryName(name))
     return (
         spark.table(name)
         .groupBy(F.col("err_id"))
@@ -647,16 +463,11 @@ def stream_committed_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).parquet(sink_dir)
 
         cb = committing_foreach_batch(process, tracker, commit_dir)
-        q = (
+        _drain(
             stream_events(spark, sf_dir)
             .writeStream.foreachBatch(cb)
             .outputMode("append")
-            .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         commits = read_commits(commit_dir)
         if not commits:
             raise AssertionError("commit log empty: cadence machinery did not run")
@@ -695,16 +506,7 @@ def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagged = structural_metrics(stream).filter(F.col("n_words") >= 30).select(
         "doc_id", "n_words", "mean_word_len"
     )
-    q = (
-        flagged.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(flagged.writeStream.outputMode("append").format("memory").queryName(name))
     return spark.table(name)
 
 
@@ -731,49 +533,25 @@ def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_kmv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming sketch rollup: the event stream is split into epoch
-    # micro-batches (maxFilesPerTrigger=1 over an N_EPOCHS-file copy,
-    # _write_epoch_fixture); each batch folds
-    # into its own KMV state inside foreachBatch; the tiny per-batch
-    # states (<= batches x k hashes) are then merged into ONE global
-    # estimate.  The KMV closure property guarantees the merge equals the
-    # direct batch sketch bit-for-bit -- which is exactly what the oracle
-    # checks.  This is the 100 TB shape for streaming distinct counts:
-    # state per batch is k numbers, never the data.
+    # Streaming distinct count: each epoch folds to its own KMV state (k
+    # hashes, keyed by the epoch) and the states merge into ONE global
+    # estimate.  KMV closure makes the merge equal the direct batch sketch
+    # bit-for-bit, which the oracle checks; state is k numbers per batch.
     from kcl_akka_stream_spark.operators.sketches import (
         kmv_merge_estimate,
         kmv_sketch,
     )
 
     ev = tbl(spark, sf_dir, "events").select("user_id")
-    src = tempfile.mkdtemp(prefix="kcl_kmv_src_")
-    state_rows = []
-    state_schema = None
-    try:
-        _write_epoch_fixture(ev, src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def fold_state(batch_df, epoch_id):
-            st = kmv_sketch(
-                batch_df.withColumn("g", F.lit(int(epoch_id))), "g", "user_id", k=64
-            )
-            state_rows.extend(_collect_state(st, "stream_kmv_merge", domain_bound=4))
-
-        q = stream.writeStream.foreachBatch(fold_state).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        states = spark.createDataFrame(
-            state_rows, "g long, kmins array<double>"
-        )
-        return kmv_merge_estimate(states, k=64)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    states = _fold_epochs(
+        spark,
+        ev,
+        lambda b, epoch: kmv_sketch(
+            b.withColumn("g", F.lit(epoch)), "g", "user_id", k=64
+        ),
+        "stream_kmv_merge",
+    )
+    return kmv_merge_estimate(states, k=64)
 
 
 @query(
@@ -796,48 +574,27 @@ def stream_kmv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming frequency-sketch rollup, twin of stream_kmv_merge: each
-    # of N_EPOCHS micro-batches folds into its own Count-Min counter state
-    # inside foreachBatch; the states are summed into the global sketch,
-    # which counter additivity guarantees equals the direct batch build
-    # -- the oracle checks every counter.  Streaming state per batch is
-    # <= depth x width counters, never the data.
+    # Streaming Count-Min rollup: per-epoch counter states (<= depth x width
+    # counters) sum into the global sketch, which counter additivity makes
+    # equal to the direct batch build -- the oracle checks every counter.
     from kcl_akka_stream_spark.operators.sketches import cms_merge, cms_state
 
     ev = tbl(spark, sf_dir, "events").select("user_id")
-    src = tempfile.mkdtemp(prefix="kcl_cms_src_")
-    state_rows = []
-    try:
-        _write_epoch_fixture(ev, src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def fold_state(batch_df, epoch_id):
-            st = cms_state(
-                batch_df.withColumn("g", F.lit(int(epoch_id))),
-                "user_id",
-                depth=4,
-                width=64,
-                group_col="g",
-            )
-            state_rows.extend(_collect_state(st, "stream_cms_merge", domain_bound=256))
-
-        q = stream.writeStream.foreachBatch(fold_state).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        states = spark.createDataFrame(
-            state_rows, "g long, row int, bucket long, cnt long"
-        )
-        return cms_merge(states).select(
-            "row", "bucket", F.col("cnt").cast("long").alias("cnt")
-        )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    states = _fold_epochs(
+        spark,
+        ev,
+        lambda b, epoch: cms_state(
+            b.withColumn("g", F.lit(epoch)),
+            "user_id",
+            depth=4,
+            width=64,
+            group_col="g",
+        ),
+        "stream_cms_merge",
+    )
+    return cms_merge(states).select(
+        "row", "bucket", F.col("cnt").cast("long").alias("cnt")
+    )
 
 
 @query(
@@ -868,16 +625,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value"
         ),
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(agg.writeStream.outputMode("complete").format("memory").queryName(name))
     return spark.table(name)
 
 
@@ -906,79 +654,52 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_hist_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming quantile rollup -- the third mergeable-state family after
-    # KMV (distinct) and CMS (frequency): per-micro-batch equi-width
-    # histogram states fold in foreachBatch (state per batch = at most
-    # types x 50 bin counts, never the data), then merge by SUMMING bin
-    # counts -- additive, so the merged histogram equals the direct batch
-    # histogram exactly and the oracle is the same one agg_hist_median
-    # checks against.  This is the 100 TB shape for streaming medians /
-    # percentiles: no sort, no raw-value retention, bounded state.
-    from pyspark.sql import Window
-
+    # Streaming median: per-epoch equi-width histogram states (types x 50
+    # bin counts) merge by SUMMING counts, so the merged histogram equals the
+    # direct one and the oracle is agg_hist_median's.  No sort, no raw-value
+    # retention.
     width, n_bins = 10.0, 50
     ev = tbl(spark, sf_dir, "events").select("event_type", "value")
-    src = tempfile.mkdtemp(prefix="kcl_hist_src_")
-    state_rows = []
-    try:
-        _write_epoch_fixture(ev, src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def fold_state(batch_df, epoch_id):
-            st = batch_df.groupBy(
-                "event_type",
-                F.least(
-                    F.floor(F.col("value") / width).cast("long"),
-                    F.lit(n_bins - 1),
-                ).alias("bin"),
-            ).agg(F.count(F.lit(1)).alias("cnt"))
-            state_rows.extend(_collect_state(st, "stream_hist_merge", domain_bound=2048))
-
-        q = stream.writeStream.foreachBatch(fold_state).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        states = spark.createDataFrame(
-            state_rows, "event_type string, bin long, cnt long"
-        )
-        merged = states.groupBy("event_type", "bin").agg(
-            F.sum("cnt").alias("cnt")
-        )
-        wc = Window.partitionBy("event_type").orderBy("bin").rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-        wt = Window.partitionBy("event_type")
-        c = merged.select(
+    states = _fold_epochs(
+        spark,
+        ev,
+        lambda b, _epoch: b.groupBy(
             "event_type",
-            "bin",
-            "cnt",
-            F.sum("cnt").over(wc).alias("cum"),
-            F.sum("cnt").over(wt).alias("n"),
-        ).filter(F.col("cum") >= F.col("n") * 0.5)
-        rk = Window.partitionBy("event_type").orderBy("bin")
-        return (
-            c.withColumn("rk", F.row_number().over(rk))
-            .filter(F.col("rk") == 1)
-            .select(
-                "event_type",
-                F.col("n").cast("long").alias("n_rows"),
-                F.round(
-                    F.col("bin") * width
-                    + (F.col("n") * 0.5 - (F.col("cum") - F.col("cnt")))
-                    / F.col("cnt")
-                    * width,
-                    6,
-                ).alias("est_median"),
-            )
+            F.least(
+                F.floor(F.col("value") / width).cast("long"),
+                F.lit(n_bins - 1),
+            ).alias("bin"),
+        ).agg(F.count(F.lit(1)).alias("cnt")),
+        "stream_hist_merge",
+    )
+    merged = states.groupBy("event_type", "bin").agg(F.sum("cnt").alias("cnt"))
+    wc = Window.partitionBy("event_type").orderBy("bin").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    wt = Window.partitionBy("event_type")
+    c = merged.select(
+        "event_type",
+        "bin",
+        "cnt",
+        F.sum("cnt").over(wc).alias("cum"),
+        F.sum("cnt").over(wt).alias("n"),
+    ).filter(F.col("cum") >= F.col("n") * 0.5)
+    rk = Window.partitionBy("event_type").orderBy("bin")
+    return (
+        c.withColumn("rk", F.row_number().over(rk))
+        .filter(F.col("rk") == 1)
+        .select(
+            "event_type",
+            F.col("n").cast("long").alias("n_rows"),
+            F.round(
+                F.col("bin") * width
+                + (F.col("n") * 0.5 - (F.col("cum") - F.col("cnt")))
+                / F.col("cnt")
+                * width,
+                6,
+            ).alias("est_median"),
         )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    )
 
 
 @query(
@@ -1040,11 +761,7 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("clk_ts") <= F.col("err_ts")),
         "left_outer",
     )
-    q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(joined.writeStream.outputMode("append").format("memory").queryName(name))
     return (
         spark.table(name)
         .groupBy("err_id")
@@ -1066,67 +783,28 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The CDC-apply / keyed-upsert pattern: a changelog stream folds into
-    # a keyed state table via foreachBatch -- per batch, take the batch's
-    # latest row per key (max of the UNIQUE (ts, event_id) struct --
-    # duplicate-ts max_by would be fold-order-nondeterministic), merge
-    # with the prior state, and write a NEW state version (write-
-    # before-swap, the C4 commit discipline; Delta's MERGE INTO is the
-    # managed form of this loop).  Two micro-batches with interleaved
-    # keys force genuine cross-batch upserts; the merge is an argmax, so
-    # the final state is batch-split-independent -- which is what the
-    # whole-table oracle verifies.  State is one row per key, never the
-    # changelog.
+    # The CDC-apply / keyed-upsert pattern: each epoch folds to its latest
+    # row per key -- the max of the UNIQUE (ts, event_id) struct (duplicate-
+    # ts max_by would be fold-order-nondeterministic) -- and the upsert is
+    # the same argmax over the epoch states.  Argmax is associative and
+    # commutative, so the final table is batch-split-independent, which the
+    # whole-table oracle verifies.  State is one row per key.
     ev = tbl(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", "ts"
     )
-    src = tempfile.mkdtemp(prefix="kcl_cdc_src_")
-    state_root = tempfile.mkdtemp(prefix="kcl_cdc_state_")
-    last_state: list[str] = []
-    try:
-        ev.repartition(2).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def upsert(batch_df, epoch_id):
-            latest = batch_df.groupBy("user_id").agg(
-                F.max(F.struct("ts", "event_id", "event_type")).alias("s")
-            )
-            cur = latest.select("user_id", "s.ts", "s.event_id", "s.event_type")
-            if last_state:
-                prev = batch_df.sparkSession.read.parquet(last_state[-1])
-                cur = (
-                    cur.unionByName(prev)
-                    .groupBy("user_id")
-                    .agg(F.max(F.struct("ts", "event_id", "event_type")).alias("s"))
-                    .select("user_id", "s.ts", "s.event_id", "s.event_type")
-                )
-            out = os.path.join(state_root, f"v{int(epoch_id)}")
-            cur.write.mode("overwrite").parquet(out)
-            last_state.append(out)
-
-        q = stream.writeStream.foreachBatch(upsert).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        state = spark.read.parquet(last_state[-1])
-        rows = state.select(
-            "user_id",
-            F.col("event_id").alias("last_event_id"),
-            F.col("event_type").alias("last_event_type"),
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("last_ts"),
-        ).collect()
-        return spark.createDataFrame(
-            rows,
-            "user_id long, last_event_id long, last_event_type string, last_ts string",
-        )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+    latest = F.max(F.struct("ts", "event_id", "event_type")).alias("s")
+    states = _fold_epochs(
+        spark,
+        ev,
+        lambda b, _epoch: b.groupBy("user_id").agg(latest),
+        "stream_cdc_upsert",
+    )
+    return states.groupBy("user_id").agg(F.max("s").alias("s")).select(
+        "user_id",
+        F.col("s.event_id").alias("last_event_id"),
+        F.col("s.event_type").alias("last_event_type"),
+        F.date_format("s.ts", "yyyy-MM-dd HH:mm:ss").alias("last_ts"),
+    )
 
 
 @query(
@@ -1167,11 +845,7 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         # boundary shifts it
         F.sum("sequence_number").alias("sum_seq"),
     )
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(agg.writeStream.outputMode("complete").format("memory").queryName(name))
     return spark.table(name)
 
 
@@ -1225,11 +899,7 @@ def stream_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(agg.writeStream.outputMode("complete").format("memory").queryName(name))
     return spark.table(name)
 
 
@@ -1280,11 +950,7 @@ def stream_chained_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "n_hours",
     )
-    q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(out.writeStream.outputMode("append").format("memory").queryName(name))
     return spark.table(name)
 
 
@@ -1311,9 +977,6 @@ def stream_pyds_pipeline_manifest(spark: SparkSession, sf_dir: str) -> DataFrame
     # checked against the generator's closed form.  Any row lost, doubled,
     # or corrupted ANYWHERE in the read-transform-commit-reread chain
     # moves a count or a seq-sum.
-    import shutil
-    import tempfile
-
     from kcl_akka_stream_spark.sources.python_source import (
         register,
         stream_manifest_files,
@@ -1331,17 +994,12 @@ def stream_pyds_pipeline_manifest(spark: SparkSession, sf_dir: str) -> DataFrame
         kept = stream.filter(F.substring("partition_key", 1, 1) < "8").select(
             "shard_id", "sequence_number", "partition_key"
         )
-        q = (
+        _drain(
             kept.writeStream.format("manifest_jsonl")
             .option("path", out)
             .option("checkpointLocation", ckpt)
             .outputMode("append")
-            .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         back = spark.read.schema(
             "shard_id string, sequence_number long, partition_key string"
         ).json(stream_manifest_files(spark, out))
@@ -1445,16 +1103,7 @@ def stream_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int")
         .alias("is_known"),
     )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(out.writeStream.outputMode("append").format("memory").queryName(name))
     return spark.table(name)
 
 
@@ -1466,64 +1115,46 @@ def _stream_kmv_set_ops_oracle() -> str:
 
 @query("stream_kmv_set_ops", _stream_kmv_set_ops_oracle())
 def stream_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming twin of agg_kmv_set_ops, SAME oracle: each micro-batch
-    # folds its purchase-user and click-user slices into separate KMV
-    # states (<= k hashes per set per batch); the accumulated states
-    # merge into each set's global k-mins, and the set-operation
-    # estimator runs on the MERGED states (prehashed path).  The KMV
-    # closure makes merged == direct, so streamed union/Jaccard/
-    # intersection estimates equal the batch query bit-for-bit -- the
-    # fourth mergeable-state streaming family (KMV distinct, CMS,
-    # histogram, and now KMV set algebra).
+    # Streaming twin of agg_kmv_set_ops, SAME oracle: each epoch folds its
+    # purchase-user and click-user slices into ONE KMV state keyed by event
+    # type; per set the epoch states merge to the global k-mins, and the
+    # set-operation estimator runs on the merged states.  KMV closure makes
+    # merged == direct bit-for-bit.
     from kcl_akka_stream_spark.operators.sketches import (
         kmv_set_estimates,
         kmv_sketch,
     )
 
     ev = tbl(spark, sf_dir, "events").select("event_type", "user_id", "value")
-    src = tempfile.mkdtemp(prefix="kcl_kmvset_src_")
-    states = {"a": [], "b": []}
-    try:
-        _write_epoch_fixture(ev, src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    states = _fold_epochs(
+        spark,
+        ev,
+        lambda b, _epoch: kmv_sketch(
+            b.filter(
+                F.col("event_type").isin("purchase", "click")
+                & (F.col("value") >= 50)
+            ),
+            "event_type",
+            "user_id",
+            k=64,
+        ),
+        "stream_kmv_set_ops",
+    )
+
+    def merged(etype: str) -> DataFrame:
+        ex = (
+            states.filter(F.col("event_type") == etype)
+            .select(F.explode("kmins").alias("h"))
+            .distinct()
         )
+        # global k-min via TakeOrderedAndProject (per-partition top-k
+        # + k-sized merge) -- same scale-safe shape as the batch
+        # estimator; input here is bounded (batches x k) anyway.
+        return ex.orderBy("h").limit(64).select("h")
 
-        def fold_state(batch_df, epoch_id):
-            for tag, etype in (("a", "purchase"), ("b", "click")):
-                st = kmv_sketch(
-                    batch_df.filter(
-                        (F.col("event_type") == etype) & (F.col("value") >= 50)
-                    ).withColumn("g", F.lit(int(epoch_id))),
-                    "g",
-                    "user_id",
-                    k=64,
-                )
-                states[tag].extend(_collect_state(st, "stream_kmv_set_ops", domain_bound=4))
-
-        q = stream.writeStream.foreachBatch(fold_state).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        def merged(tag: str) -> DataFrame:
-            st = spark.createDataFrame(
-                states[tag], "g long, kmins array<double>"
-            )
-            ex = st.select(F.explode("kmins").alias("h")).distinct()
-            # global k-min via TakeOrderedAndProject (per-partition top-k
-            # + k-sized merge) -- same scale-safe shape as the batch
-            # estimator; input here is bounded (batches x k) anyway.
-            return ex.orderBy("h").limit(64).select("h")
-
-        return kmv_set_estimates(
-            merged("a"), merged("b"), "h", k=64, prehashed=True
-        )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    return kmv_set_estimates(
+        merged("purchase"), merged("click"), "h", k=64, prehashed=True
+    )
 
 
 def _rollup_incremental_oracle() -> str:
@@ -1534,69 +1165,40 @@ def _rollup_incremental_oracle() -> str:
 
 @query("stream_rollup_incremental", _rollup_incremental_oracle())
 def stream_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming twin of pipeline_rollup_incremental, SAME oracle: each
-    # micro-batch folds to per-group partial states (count/sum/min/max --
-    # commutative monoids), the accumulated states merge states-sized,
-    # and derived columns (avg) compute after the merge.  The fifth
-    # mergeable-state streaming family (KMV, CMS, histogram, KMV set
-    # ops, and now plain rollup states): merged == direct is checked by
-    # the oracle recomputing from all raw rows in one pass.
+    # Streaming twin of pipeline_rollup_incremental, SAME oracle: per-epoch
+    # count/sum/min/max states (commutative monoids) merge states-sized, and
+    # derived columns (avg) compute after the merge.
     ev = tbl(spark, sf_dir, "events").select("event_type", "value")
-    src = tempfile.mkdtemp(prefix="kcl_rollup_src_")
-    states: list = []
-    try:
-        _write_epoch_fixture(ev, src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def fold_state(batch_df, epoch_id):
-            part = (
-                batch_df.select(
-                    "event_type",
-                    F.floor(F.col("value") * 100 + F.lit(0.5))
-                    .cast("long")
-                    .alias("v"),
-                )
-                .groupBy("event_type")
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n"),
-                    F.sum("v").cast("long").alias("sum_cents"),
-                    F.min("v").cast("long").alias("min_cents"),
-                    F.max("v").cast("long").alias("max_cents"),
-                )
-            )
-            states.extend(_collect_state(part, "stream_rollup_incremental", domain_bound=32))
-
-        q = stream.writeStream.foreachBatch(fold_state).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        st = spark.createDataFrame(
-            states,
-            "event_type string, n long, sum_cents long, "
-            "min_cents long, max_cents long",
-        )
-        merged = st.groupBy("event_type").agg(
-            F.sum("n").cast("long").alias("n"),
-            F.sum("sum_cents").cast("long").alias("sum_cents"),
-            F.min("min_cents").cast("long").alias("min_cents"),
-            F.max("max_cents").cast("long").alias("max_cents"),
-        )
-        return merged.select(
+    states = _fold_epochs(
+        spark,
+        ev,
+        lambda b, _epoch: b.select(
             "event_type",
-            "n",
-            "sum_cents",
-            "min_cents",
-            "max_cents",
-            F.expr("(sum_cents * 10000) div n").cast("long").alias("avg_micro"),
+            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
         )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("v").cast("long").alias("sum_cents"),
+            F.min("v").cast("long").alias("min_cents"),
+            F.max("v").cast("long").alias("max_cents"),
+        ),
+        "stream_rollup_incremental",
+    )
+    merged = states.groupBy("event_type").agg(
+        F.sum("n").cast("long").alias("n"),
+        F.sum("sum_cents").cast("long").alias("sum_cents"),
+        F.min("min_cents").cast("long").alias("min_cents"),
+        F.max("max_cents").cast("long").alias("max_cents"),
+    )
+    return merged.select(
+        "event_type",
+        "n",
+        "sum_cents",
+        "min_cents",
+        "max_cents",
+        F.expr("(sum_cents * 10000) div n").cast("long").alias("avg_micro"),
+    )
 
 
 def _power_sums_oracle() -> str:
@@ -1607,54 +1209,26 @@ def _power_sums_oracle() -> str:
 
 @query("stream_moments_merge", _power_sums_oracle())
 def stream_moments_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming twin of agg_power_sums, SAME oracle: each micro-batch
-    # folds to per-group exact integer power sums (operators/
-    # aggregations.py::power_sums), the accumulated states merge by
-    # plain addition (merge_power_sums), and the derived mean computes
-    # after the merge.  The sixth mergeable-state streaming family --
-    # int64 adds are order-independent, so 4-batch-fold == direct build
-    # bit-for-bit, which the shared oracle (one pass over all raw rows)
-    # checks.
+    # Streaming twin of agg_power_sums, SAME oracle: per-epoch exact
+    # integer power sums merge by addition (merge_power_sums); the mean
+    # derives after the merge.
     from kcl_akka_stream_spark.operators.aggregations import (
         merge_power_sums,
         power_sums,
     )
 
     ev = tbl(spark, sf_dir, "events").select("event_type", "value")
-    src = tempfile.mkdtemp(prefix="kcl_moments_src_")
-    states: list = []
-    try:
-        _write_epoch_fixture(ev, src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def fold_state(batch_df, epoch_id):
-            states.extend(
-                _collect_state(
-                    power_sums(batch_df, "event_type", "value"),
-                    "stream_moments_merge", domain_bound=32,
-                )
-            )
-
-        q = stream.writeStream.foreachBatch(fold_state).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        st = spark.createDataFrame(
-            states, "event_type string, n long, s1 long, s2 long, s3 long"
-        )
-        merged = merge_power_sums(st, "event_type")
-        return merged.select(
-            "event_type", "n", "s1", "s2", "s3",
-            F.expr("(s1 * 100000) div n").cast("long").alias("mean_micro"),
-        )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    states = _fold_epochs(
+        spark,
+        ev,
+        lambda b, _epoch: power_sums(b, "event_type", "value"),
+        "stream_moments_merge",
+    )
+    merged = merge_power_sums(states, "event_type")
+    return merged.select(
+        "event_type", "n", "s1", "s2", "s3",
+        F.expr("(s1 * 100000) div n").cast("long").alias("mean_micro"),
+    )
 
 
 def _scd2_oracle() -> str:
@@ -1665,19 +1239,12 @@ def _scd2_oracle() -> str:
 
 @query("stream_scd2_merge", _scd2_oracle())
 def stream_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming SCD2 maintenance, SAME oracle as the batch build: the
-    # change feed arrives as 4 TIME-RANGED micro-batches (range files
-    # given strictly increasing mtimes, so FileStreamSource's
-    # (mtime, path) ordering is deterministic -- the in-order CDC
-    # contract scd2_merge requires); each batch folds into the standing
-    # SCD2 table via operators/cdc.py::scd2_merge inside foreachBatch.
-    # State is the changes-sized dimension itself, never the raw feed;
-    # merged-across-batches == full recompute is checked by the shared
-    # oracle, boundary absorption included -- the seventh
-    # mergeable-state streaming family, and the one whose merge is NOT
-    # commutative (order matters, unlike sketches/rollups).
-    import os as _os
-
+    # Streaming SCD2 maintenance, SAME oracle as the batch build: the change
+    # feed arrives as 4 TIME-RANGED micro-batches (range files with strictly
+    # increasing mtimes, so FileStreamSource's (mtime, path) order is the
+    # in-order CDC contract scd2_merge requires), and each batch folds into
+    # the standing SCD2 table.  The one family whose merge is NOT commutative,
+    # so it folds batch-over-batch instead of through _fold_epochs.
     from kcl_akka_stream_spark.operators.cdc import scd2_compact, scd2_merge
 
     ev = tbl(spark, sf_dir, "events").select(
@@ -1687,17 +1254,9 @@ def stream_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = {"scd2": None}
     try:
         ev.repartitionByRange(4, "ts").write.mode("overwrite").parquet(src)
-        parts = sorted(
-            f for f in _os.listdir(src) if f.startswith("part-")
-        )
+        parts = sorted(f for f in os.listdir(src) if f.startswith("part-"))
         for i, f in enumerate(parts):
-            _os.utime(_os.path.join(src, f), (1_700_000_000 + i, 1_700_000_000 + i))
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(src)
-        )
+            os.utime(os.path.join(src, f), (1_700_000_000 + i, 1_700_000_000 + i))
 
         def fold(batch_df, epoch_id):
             batch = batch_df.localCheckpoint(eager=True)
@@ -1710,26 +1269,27 @@ def stream_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                     eager=True
                 )
 
-        q = stream.writeStream.foreachBatch(fold).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        return state["scd2"].select(
-            "user_id",
-            "state",
-            "version",
-            F.date_format("valid_from", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-                "valid_from"
-            ),
-            F.date_format("valid_to", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-                "valid_to"
-            ),
-            "is_current",
+        _drain(
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1)
+            .option("latestFirst", "false")
+            .parquet(src)
+            .writeStream.foreachBatch(fold)
         )
     finally:
         shutil.rmtree(src, ignore_errors=True)
+    return state["scd2"].select(
+        "user_id",
+        "state",
+        "version",
+        F.date_format("valid_from", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
+            "valid_from"
+        ),
+        F.date_format("valid_to", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
+            "valid_to"
+        ),
+        "is_current",
+    )
 
 
 @query(
@@ -1758,8 +1318,6 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ranking inside the stream would force a non-combinable global state
     # per window, while rank-after-drain costs one tiny window sort --
     # the dashboard "top talkers per hour" shape at any volume.
-    from pyspark.sql import Window
-
     from kcl_akka_stream_spark.sources.batch import stream_events
 
     name = f"stream_topk_{uuid.uuid4().hex[:8]}"
@@ -1775,11 +1333,7 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(agg.writeStream.outputMode("complete").format("memory").queryName(name))
     sink = spark.table(name)
     w = Window.partitionBy("window_start").orderBy(
         F.col("n").desc(), "event_type"
@@ -1802,21 +1356,11 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_bitmap_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming EXACT distinct rollup -- the eighth mergeable-state
-    # streaming family, and the first exact AND idempotent one: the
-    # event stream splits into N_EPOCHS micro-batches, each folds to its own
-    # (type, word, bits) bitmap state in foreachBatch, and the states
-    # OR-merge into the global exact count.  Idempotence is the
-    # operational point: an at-least-once replay of a whole batch
-    # changes NOTHING (OR absorbs it), where every counting scheme
-    # needs dedup state.  State per batch is words-sized, never rows --
-    # but words-sized is DATA-DEPENDENT (types x dense-id-range/63 grows
-    # with the id universe; see _STATE_CARDINALITY), so this twin uses
-    # the executor-side parquet epoch-union pattern proven by
-    # stream_session_merge (VERDICT r12 #2): per-batch states APPEND to
-    # a parquet store, the OR-merge runs as the distributed groupBy it
-    # always was, and the result detaches via eager localCheckpoint --
-    # no collect(), no driver list, no max_state_rows cliff at 100x.
+    # Streaming EXACT distinct rollup: each epoch folds to (type, word,
+    # bits) bitmap words that OR-merge into the global exact count.  OR is
+    # idempotent, so an at-least-once replay of a whole batch changes
+    # nothing.  State is types x dense-id-range/63 words -- it grows with the
+    # id universe -- and the OR-merge is a distributed groupBy.
     from kcl_akka_stream_spark.operators.sketches import (
         bitmap_counts,
         bitmap_merge,
@@ -1824,38 +1368,16 @@ def stream_bitmap_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = tbl(spark, sf_dir, "events").select("event_type", "user_id")
-    src = tempfile.mkdtemp(prefix="kcl_bitmap_src_")
-    state_dir = tempfile.mkdtemp(prefix="kcl_bitmap_state_")
-    try:
-        _write_epoch_fixture(ev, src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def fold_state(batch_df, epoch_id):
-            st = bitmap_state(batch_df, "event_type", "user_id")
-            # executor-side state append: no collect(), no driver list
-            st.write.mode("append").parquet(state_dir)
-
-        q = stream.writeStream.foreachBatch(fold_state).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        states = spark.read.schema(
-            "event_type string, wrd long, bits long"
-        ).parquet(state_dir)
-        merged = bitmap_merge(states, "event_type")
-        out = bitmap_counts(merged, "event_type").select(
-            "event_type", "n_words", "n_distinct"
-        )
-        # detach from state_dir before the finally-rmtree, executor-sized
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(state_dir, ignore_errors=True)
+    states = _fold_epochs(
+        spark,
+        ev,
+        lambda b, _epoch: bitmap_state(b, "event_type", "user_id"),
+        "stream_bitmap_merge",
+    )
+    merged = bitmap_merge(states, "event_type")
+    return bitmap_counts(merged, "event_type").select(
+        "event_type", "n_words", "n_distinct"
+    )
 
 
 def _reservoir_oracle() -> str:
@@ -1866,59 +1388,30 @@ def _reservoir_oracle() -> str:
 
 @query("stream_reservoir_merge", _reservoir_oracle())
 def stream_reservoir_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming twin of sample_reservoir_merge, SAME oracle: each
-    # micro-batch folds to its bottom-k-by-hash survivors
-    # (operators/sampling.py::hash_bottom_k), the accumulated k-row
-    # states merge by re-applying the same selection, and the oracle
-    # rebuilds the sample directly from all raw rows -- merged == direct
-    # is the hash match.  The ninth mergeable-state streaming family,
-    # and (with the bitmap) the second IDEMPOTENT one: a replayed batch
-    # re-offers rows whose hashes are already in (or above) the bottom-k,
-    # so at-least-once delivery cannot change the sample -- the
-    # always-fresh uniform inspection panel over an unbounded stream at
-    # k-rows state cost.
-    from pyspark.sql import Window
-
+    # Streaming twin of sample_reservoir_merge, SAME oracle: each epoch
+    # keeps its bottom-k-by-hash survivors (hash_bottom_k) and the merge
+    # re-applies the same selection, so merged == direct is the hash match.
+    # IDEMPOTENT: a replayed row's hash is already in (or above) the
+    # bottom-k, so at-least-once delivery cannot change the sample.
     from kcl_akka_stream_spark.operators.sampling import hash_bottom_k
 
     ev = tbl(spark, sf_dir, "events").select("event_type", "event_id")
-    src = tempfile.mkdtemp(prefix="kcl_rsv_src_")
-    states: list = []
-    try:
-        _write_epoch_fixture(ev, src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def fold_state(batch_df, epoch_id):
-            states.extend(
-                _collect_state(
-                    hash_bottom_k(batch_df, "event_type", "event_id", 8, seed="rsv"),
-                    "stream_reservoir_merge", domain_bound=256,
-                )
-            )
-
-        q = stream.writeStream.foreachBatch(fold_state).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        st = spark.createDataFrame(states, "event_type string, event_id long")
-        merged = hash_bottom_k(st, "event_type", "event_id", 8, seed="rsv")
-        key = F.md5(
-            F.concat(F.lit("rsv|"), F.col("event_id").cast("string"))
-        )
-        w = Window.partitionBy("event_type").orderBy(key, F.col("event_id"))
-        return merged.select(
-            "event_type",
-            F.row_number().over(w).alias("sample_rank"),
-            "event_id",
-        )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    states = _fold_epochs(
+        spark,
+        ev,
+        lambda b, _epoch: hash_bottom_k(b, "event_type", "event_id", 8, seed="rsv"),
+        "stream_reservoir_merge",
+    )
+    merged = hash_bottom_k(states, "event_type", "event_id", 8, seed="rsv")
+    key = F.md5(
+        F.concat(F.lit("rsv|"), F.col("event_id").cast("string"))
+    )
+    w = Window.partitionBy("event_type").orderBy(key, F.col("event_id"))
+    return merged.select(
+        "event_type",
+        F.row_number().over(w).alias("sample_rank"),
+        "event_id",
+    )
 
 
 def _bootstrap_ci_oracle() -> str:
@@ -1929,108 +1422,61 @@ def _bootstrap_ci_oracle() -> str:
 
 @query("stream_bootstrap_merge", _bootstrap_ci_oracle())
 def stream_bootstrap_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming twin of agg_bootstrap_ci, SAME oracle -- the TENTH
-    # mergeable-state streaming family: each micro-batch folds to
-    # per-(type, replica) partial weighted sums (sum(w*cents), sum(w))
-    # plus the point-estimate moments (n, sum cents); both states merge
-    # by plain int64 addition, and the replicate means / rank / CI
-    # derive ONLY after the merge (a mean is not mergeable; its
-    # numerator and denominator are -- the rollup_incremental lesson).
-    # Deterministic md5 weights make every replicate independent of
-    # batch boundaries, so 4-batch-fold == direct build bit-for-bit.
-    from pyspark.sql import Window
-
+    # Streaming twin of agg_bootstrap_ci, SAME oracle: each epoch folds to
+    # per-(type, replica) sums (sum(w*cents), sum(w)); the point estimate is
+    # the replica whose every weight is 1, so it rides the same state under
+    # the label b = -1.  States merge by int64 addition, and the replicate
+    # means / rank / CI derive only after the merge.  md5 weights make every
+    # replicate independent of batch boundaries.
     from kcl_akka_stream_spark.operators.sampling import (
         poisson_bootstrap_weights,
     )
 
+    def partial(batch: DataFrame, _epoch: int) -> DataFrame:
+        cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+        reps = poisson_bootstrap_weights(
+            batch, "event_id", b=32
+        ).withColumn("cents", cents)
+        rep = reps.groupBy("event_type", "b").agg(
+            F.sum(F.col("w") * F.col("cents")).cast("long").alias("swc"),
+            F.sum("w").cast("long").alias("sw"),
+        )
+        point = batch.groupBy("event_type").agg(
+            F.lit(-1).alias("b"),
+            F.sum(cents).cast("long").alias("swc"),
+            F.count(F.lit(1)).cast("long").alias("sw"),
+        )
+        return rep.unionByName(point)
+
     ev = tbl(spark, sf_dir, "events").select("event_type", "event_id", "value")
-    src = tempfile.mkdtemp(prefix="kcl_boot_src_")
-    rep_states: list = []
-    pt_states: list = []
-    try:
-        _write_epoch_fixture(ev, src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def fold_state(batch_df, epoch_id):
-            cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            reps = poisson_bootstrap_weights(
-                batch_df, "event_id", b=32
-            ).withColumn("cents", cents)
-            rep_states.extend(
-                _collect_state(
-                    reps.groupBy("event_type", "b").agg(
-                        F.sum(F.col("w") * F.col("cents"))
-                        .cast("long")
-                        .alias("swc"),
-                        F.sum("w").cast("long").alias("sw"),
-                    ),
-                    "stream_bootstrap_merge:replicates", domain_bound=1024,
-                )
-            )
-            pt_states.extend(
-                _collect_state(
-                    batch_df.groupBy("event_type").agg(
-                        F.count(F.lit(1)).cast("long").alias("n"),
-                        F.sum(cents).cast("long").alias("s1"),
-                    ),
-                    "stream_bootstrap_merge:point", domain_bound=32,
-                )
-            )
-
-        q = stream.writeStream.foreachBatch(fold_state).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        rs = spark.createDataFrame(
-            rep_states, "event_type string, b long, swc long, sw long"
-        )
-        rep_means = (
-            rs.groupBy("event_type", "b")
-            .agg(
-                F.sum("swc").cast("long").alias("swc"),
-                F.sum("sw").cast("long").alias("sw"),
-            )
-            .select(
-                "event_type",
-                "b",
-                F.expr("swc * 100 div greatest(sw, 1)").alias("mean_cc"),
-            )
-        )
-        w = Window.partitionBy("event_type").orderBy("mean_cc", "b")
-        ranked = rep_means.withColumn("r", F.row_number().over(w))
-        ci = ranked.groupBy("event_type").agg(
-            F.max(F.when(F.col("r") == 2, F.col("mean_cc"))).alias("ci_lo_cc"),
-            F.max(F.when(F.col("r") == 31, F.col("mean_cc"))).alias("ci_hi_cc"),
-        )
-        ps = spark.createDataFrame(pt_states, "event_type string, n long, s1 long")
-        pt = (
-            ps.groupBy("event_type")
-            .agg(
-                F.sum("n").cast("long").alias("n_events"),
-                F.sum("s1").cast("long").alias("s1"),
-            )
-            .select(
-                "event_type",
-                "n_events",
-                F.expr("s1 * 100 div n_events").cast("long").alias("mean_cc"),
-            )
-        )
-        return pt.join(ci, "event_type").select(
-            "event_type",
-            "n_events",
-            F.col("mean_cc").cast("long").alias("mean_cc"),
-            F.col("ci_lo_cc").cast("long").alias("ci_lo_cc"),
-            F.col("ci_hi_cc").cast("long").alias("ci_hi_cc"),
-        )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    states = _fold_epochs(spark, ev, partial, "stream_bootstrap_merge")
+    merged = states.groupBy("event_type", "b").agg(
+        F.sum("swc").cast("long").alias("swc"),
+        F.sum("sw").cast("long").alias("sw"),
+    )
+    rep_means = merged.filter(F.col("b") >= 0).select(
+        "event_type",
+        "b",
+        F.expr("swc * 100 div greatest(sw, 1)").alias("mean_cc"),
+    )
+    w = Window.partitionBy("event_type").orderBy("mean_cc", "b")
+    ranked = rep_means.withColumn("r", F.row_number().over(w))
+    ci = ranked.groupBy("event_type").agg(
+        F.max(F.when(F.col("r") == 2, F.col("mean_cc"))).alias("ci_lo_cc"),
+        F.max(F.when(F.col("r") == 31, F.col("mean_cc"))).alias("ci_hi_cc"),
+    )
+    pt = merged.filter(F.col("b") < 0).select(
+        "event_type",
+        F.col("sw").alias("n_events"),
+        F.expr("swc * 100 div sw").cast("long").alias("mean_cc"),
+    )
+    return pt.join(ci, "event_type").select(
+        "event_type",
+        "n_events",
+        F.col("mean_cc").cast("long").alias("mean_cc"),
+        F.col("ci_lo_cc").cast("long").alias("ci_lo_cc"),
+        F.col("ci_hi_cc").cast("long").alias("ci_hi_cc"),
+    )
 
 
 def _pearson_oracle() -> str:
@@ -2041,79 +1487,50 @@ def _pearson_oracle() -> str:
 
 @query("stream_pearson_merge", _pearson_oracle())
 def stream_pearson_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming twin of agg_pearson_corr, SAME oracle -- the ELEVENTH
-    # mergeable-state streaming family: the six-integer sufficient
-    # statistic (n, sx, sy, sxy, sx2, sy2) folds per micro-batch and
-    # merges by plain int64 addition; r and the slope derive ONLY after
-    # the merge (correlation is not mergeable; its moments are).
-    # Int64 sums are order-independent, so 4-batch-fold == direct build
-    # bit-for-bit.
+    # Streaming twin of agg_pearson_corr, SAME oracle: the six-integer
+    # sufficient statistic (n, sx, sy, sxy, sx2, sy2) merges by int64
+    # addition; r and the slope derive only after the merge.
+    x = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    y = F.hour("ts").cast("long")
     ev = tbl(spark, sf_dir, "events").select("event_type", "ts", "value")
-    src = tempfile.mkdtemp(prefix="kcl_pearson_src_")
-    states: list = []
-    try:
-        _write_epoch_fixture(ev, src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def fold_state(batch_df, epoch_id):
-            x = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            y = F.hour("ts").cast("long")
-            states.extend(
-                _collect_state(
-                    batch_df.select("event_type", x.alias("x"), y.alias("y"))
-                    .groupBy("event_type")
-                    .agg(
-                        F.count(F.lit(1)).cast("long").alias("n"),
-                        F.sum("x").cast("long").alias("sx"),
-                        F.sum("y").cast("long").alias("sy"),
-                        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-                        F.sum(F.col("x") * F.col("x")).cast("long").alias("sx2"),
-                        F.sum(F.col("y") * F.col("y")).cast("long").alias("sy2"),
-                    ),
-                    "stream_pearson_merge", domain_bound=32,
-                )
-            )
-
-        q = stream.writeStream.foreachBatch(fold_state).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        st = spark.createDataFrame(
-            states,
-            "event_type string, n long, sx long, sy long, sxy long, "
-            "sx2 long, sy2 long",
-        )
-        merged = st.groupBy("event_type").agg(
-            *[F.sum(c).cast("long").alias(c) for c in ("n", "sx", "sy", "sxy", "sx2", "sy2")]
-        )
-        d = lambda c: F.col(c).cast("double")  # noqa: E731
-        cov_n = d("n") * d("sxy") - d("sx") * d("sy")
-        varx_n = d("n") * d("sx2") - d("sx") * d("sx")
-        vary_n = d("n") * d("sy2") - d("sy") * d("sy")
-        return merged.select(
-            "event_type",
-            "n",
-            "sx",
-            "sy",
-            "sxy",
-            "sx2",
-            "sy2",
-            F.when(
-                (varx_n > 0) & (vary_n > 0),
-                F.round(cov_n / (F.sqrt(varx_n) * F.sqrt(vary_n)), 6),
-            ).alias("corr_r"),
-            F.when(varx_n > 0, F.floor(cov_n * F.lit(1000000.0) / varx_n))
-            .cast("long")
-            .alias("beta_micro"),
-        )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    states = _fold_epochs(
+        spark,
+        ev,
+        lambda b, _epoch: b.select("event_type", x.alias("x"), y.alias("y"))
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("x").cast("long").alias("sx"),
+            F.sum("y").cast("long").alias("sy"),
+            F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
+            F.sum(F.col("x") * F.col("x")).cast("long").alias("sx2"),
+            F.sum(F.col("y") * F.col("y")).cast("long").alias("sy2"),
+        ),
+        "stream_pearson_merge",
+    )
+    merged = states.groupBy("event_type").agg(
+        *[F.sum(c).cast("long").alias(c) for c in ("n", "sx", "sy", "sxy", "sx2", "sy2")]
+    )
+    d = lambda c: F.col(c).cast("double")  # noqa: E731
+    cov_n = d("n") * d("sxy") - d("sx") * d("sy")
+    varx_n = d("n") * d("sx2") - d("sx") * d("sx")
+    vary_n = d("n") * d("sy2") - d("sy") * d("sy")
+    return merged.select(
+        "event_type",
+        "n",
+        "sx",
+        "sy",
+        "sxy",
+        "sx2",
+        "sy2",
+        F.when(
+            (varx_n > 0) & (vary_n > 0),
+            F.round(cov_n / (F.sqrt(varx_n) * F.sqrt(vary_n)), 6),
+        ).alias("corr_r"),
+        F.when(varx_n > 0, F.floor(cov_n * F.lit(1000000.0) / varx_n))
+        .cast("long")
+        .alias("beta_micro"),
+    )
 
 
 def _kl_drift_oracle() -> str:
@@ -2124,98 +1541,57 @@ def _kl_drift_oracle() -> str:
 
 @query("stream_kl_drift_merge", _kl_drift_oracle())
 def stream_kl_drift_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming twin of agg_histogram_kl_drift, SAME oracle -- the
-    # TWELFTH mergeable-state streaming family, and the cleanest
-    # demonstration of the fold/merge/FINALIZE split: the state is the
-    # raw (type, half, bin) count histogram (plain-addition mergeable);
+    # Streaming twin of agg_histogram_kl_drift, SAME oracle: the state is
+    # the raw (type, half, bin) count histogram (plain-addition mergeable);
     # the +1 Laplace smoothing, the full-outer bin alignment and the
-    # frozen-ln KL fold are all FINALIZE steps that run only after the
-    # merge -- smoothing per batch would double-count the prior and
-    # break merge == direct.
-    #
-    # VERDICT r14 #5: formerly the joint-largest driver fold
-    # (domain_bound=65536 = types x 2 halves x value-range bins); bins
-    # grow with the VALUE DOMAIN, so a wide-range production stream
-    # outgrows any driver list.  Migrated to the executor-side parquet
-    # epoch-union pattern: per-batch histograms APPEND to a parquet
-    # store, the count merge is the distributed groupBy it always was,
-    # and the result detaches via eager localCheckpoint.
-    from pyspark.sql import Window
-
+    # frozen-ln KL fold are FINALIZE steps after the merge -- smoothing per
+    # batch would double-count the prior and break merge == direct.
     ev = tbl(spark, sf_dir, "events").select("event_type", "event_id", "value")
-    src = tempfile.mkdtemp(prefix="kcl_kl_src_")
-    state_dir = tempfile.mkdtemp(prefix="kcl_kl_state_")
-    try:
-        _write_epoch_fixture(ev, src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def fold_state(batch_df, epoch_id):
-            st = (
-                batch_df.select(
-                    "event_type",
-                    (F.col("event_id") % 2).cast("int").alias("half"),
-                    F.expr(
-                        "cast(floor(value * 100 + 0.5) as bigint) div 100"
-                    ).alias("bin"),
-                )
-                .groupBy("event_type", "half", "bin")
-                .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            )
-            _capture_plan("stream_kl_drift_merge", st)
-            # executor-side state append: no collect(), no driver list
-            st.write.mode("append").parquet(state_dir)
-
-        q = stream.writeStream.foreachBatch(fold_state).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        st = spark.read.schema(
-            "event_type string, half int, bin long, c long"
-        ).parquet(state_dir)
-        merged = st.groupBy("event_type", "half", "bin").agg(
-            F.sum("c").cast("long").alias("c")
-        )
-        ha = merged.filter(F.col("half") == 0).select(
-            "event_type", "bin", F.col("c").alias("a")
-        )
-        hb = merged.filter(F.col("half") == 1).select(
-            "event_type", "bin", F.col("c").alias("bc")
-        )
-        j = ha.join(hb, ["event_type", "bin"], "full_outer").select(
+    states = _fold_epochs(
+        spark,
+        ev,
+        lambda b, _epoch: b.select(
             "event_type",
-            "bin",
-            (F.coalesce("a", F.lit(0)) + 1).alias("a1"),
-            (F.coalesce("bc", F.lit(0)) + 1).alias("b1"),
+            (F.col("event_id") % 2).cast("int").alias("half"),
+            F.expr("cast(floor(value * 100 + 0.5) as bigint) div 100").alias("bin"),
         )
-        tw = Window.partitionBy("event_type")
-        t = j.withColumn("na", F.sum("a1").over(tw)).withColumn(
-            "nb", F.sum("b1").over(tw)
+        .groupBy("event_type", "half", "bin")
+        .agg(F.count(F.lit(1)).cast("long").alias("c")),
+        "stream_kl_drift_merge",
+    )
+    merged = states.groupBy("event_type", "half", "bin").agg(
+        F.sum("c").cast("long").alias("c")
+    )
+    ha = merged.filter(F.col("half") == 0).select(
+        "event_type", "bin", F.col("c").alias("a")
+    )
+    hb = merged.filter(F.col("half") == 1).select(
+        "event_type", "bin", F.col("c").alias("bc")
+    )
+    j = ha.join(hb, ["event_type", "bin"], "full_outer").select(
+        "event_type",
+        "bin",
+        (F.coalesce("a", F.lit(0)) + 1).alias("a1"),
+        (F.coalesce("bc", F.lit(0)) + 1).alias("b1"),
+    )
+    tw = Window.partitionBy("event_type")
+    t = j.withColumn("na", F.sum("a1").over(tw)).withColumn(
+        "nb", F.sum("b1").over(tw)
+    )
+    term = F.round(
+        F.log(
+            (F.col("a1").cast("double") * F.col("nb"))
+            / (F.col("b1").cast("double") * F.col("na"))
         )
-        term = F.round(
-            F.log(
-                (F.col("a1").cast("double") * F.col("nb"))
-                / (F.col("b1").cast("double") * F.col("na"))
-            )
-            * 1e6,
-            0,
-        ).cast("long")
-        out = t.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n_bins"),
-            F.max("na").cast("long").alias("n_a_smoothed"),
-            F.max("nb").cast("long").alias("n_b_smoothed"),
-            F.sum(F.col("a1") * term).cast("long").alias("kl_num_micro"),
-        )
-        # detach from state_dir before the finally-rmtree, types-sized
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(state_dir, ignore_errors=True)
+        * 1e6,
+        0,
+    ).cast("long")
+    return t.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("n_bins"),
+        F.max("na").cast("long").alias("n_a_smoothed"),
+        F.max("nb").cast("long").alias("n_b_smoothed"),
+        F.sum(F.col("a1") * term).cast("long").alias("kl_num_micro"),
+    )
 
 
 def _ks_drift_oracle() -> str:
@@ -2226,98 +1602,57 @@ def _ks_drift_oracle() -> str:
 
 @query("stream_ks_merge", _ks_drift_oracle())
 def stream_ks_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming twin of agg_ks_drift, SAME oracle -- the THIRTEENTH
-    # mergeable-state streaming family.  The state is the raw
-    # (type, half, deci-bin) count histogram (plain-addition mergeable,
-    # the same state shape as the KL twin); the full-outer bin
-    # alignment, the cumulative-CDF windows and the common-denominator
-    # max-gap fold are all FINALIZE steps that run only after the merge
-    # -- a per-batch CDF would be meaningless (cumulative sums do not
-    # merge; counts do).
-    #
-    # VERDICT r14 #5: formerly the joint-largest driver fold
-    # (domain_bound=65536, same deci-bin domain argument as the KL
-    # twin); migrated to the executor-side parquet epoch-union pattern
-    # -- per-batch histograms append executor-side, the count merge is
-    # distributed, the result detaches via eager localCheckpoint.
-    from pyspark.sql import Window
-
+    # Streaming twin of agg_ks_drift, SAME oracle: the state is the raw
+    # (type, half, deci-bin) count histogram, as in the KL twin; the bin
+    # alignment, cumulative CDFs and max-gap fold run only after the merge
+    # (cumulative sums do not merge; counts do).
     ev = tbl(spark, sf_dir, "events").select("event_type", "event_id", "value")
-    src = tempfile.mkdtemp(prefix="kcl_ks_src_")
-    state_dir = tempfile.mkdtemp(prefix="kcl_ks_state_")
-    try:
-        _write_epoch_fixture(ev, src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def fold_state(batch_df, epoch_id):
-            st = (
-                batch_df.select(
-                    "event_type",
-                    (F.col("event_id") % 2).cast("int").alias("half"),
-                    F.expr(
-                        "cast(floor(value * 10 + 0.5) as bigint)"
-                    ).alias("bin"),
-                )
-                .groupBy("event_type", "half", "bin")
-                .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            )
-            _capture_plan("stream_ks_merge", st)
-            # executor-side state append: no collect(), no driver list
-            st.write.mode("append").parquet(state_dir)
-
-        q = stream.writeStream.foreachBatch(fold_state).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        st = spark.read.schema(
-            "event_type string, half int, bin long, c long"
-        ).parquet(state_dir)
-        # merge (plain addition on the state key) and pivot the halves in
-        # the SAME agg -- the finalize needs no per-half relation or
-        # alignment join
-        j = st.groupBy("event_type", "bin").agg(
-            F.sum(F.when(F.col("half") == 0, F.col("c")).otherwise(0))
-            .cast("long")
-            .alias("ca"),
-            F.sum(F.when(F.col("half") == 1, F.col("c")).otherwise(0))
-            .cast("long")
-            .alias("cb"),
-        )
-        wcum = (
-            Window.partitionBy("event_type")
-            .orderBy("bin")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        wall = Window.partitionBy("event_type")
-        cum = j.select(
+    states = _fold_epochs(
+        spark,
+        ev,
+        lambda b, _epoch: b.select(
             "event_type",
-            F.sum("ca").over(wcum).alias("cum_a"),
-            F.sum("cb").over(wcum).alias("cum_b"),
-            F.sum("ca").over(wall).alias("na"),
-            F.sum("cb").over(wall).alias("nb"),
+            (F.col("event_id") % 2).cast("int").alias("half"),
+            F.expr("cast(floor(value * 10 + 0.5) as bigint)").alias("bin"),
         )
-        out = cum.groupBy("event_type").agg(
-            F.max("na").cast("long").alias("na"),
-            F.max("nb").cast("long").alias("nb"),
-            # ppm scaling is ONE shared IEEE double op (gini_ppm pattern;
-            # the old *1_000_000 int64 form overflowed past ~3e6 rows per
-            # half -- ADVICE r10, fixed in lockstep with agg_ks_drift)
-            F.expr(
-                "cast(floor(cast(max(abs(cum_a * nb - cum_b * na)) as double)"
-                " * 1000000.0 / (cast(max(na) as double) * max(nb))) as bigint)"
-            ).alias("ks_ppm"),
-        )
-        # detach from state_dir before the finally-rmtree, types-sized
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(state_dir, ignore_errors=True)
+        .groupBy("event_type", "half", "bin")
+        .agg(F.count(F.lit(1)).cast("long").alias("c")),
+        "stream_ks_merge",
+    )
+    # merge (plain addition on the state key) and pivot the halves in
+    # the SAME agg -- the finalize needs no per-half relation or
+    # alignment join
+    j = states.groupBy("event_type", "bin").agg(
+        F.sum(F.when(F.col("half") == 0, F.col("c")).otherwise(0))
+        .cast("long")
+        .alias("ca"),
+        F.sum(F.when(F.col("half") == 1, F.col("c")).otherwise(0))
+        .cast("long")
+        .alias("cb"),
+    )
+    wcum = (
+        Window.partitionBy("event_type")
+        .orderBy("bin")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    wall = Window.partitionBy("event_type")
+    cum = j.select(
+        "event_type",
+        F.sum("ca").over(wcum).alias("cum_a"),
+        F.sum("cb").over(wcum).alias("cum_b"),
+        F.sum("ca").over(wall).alias("na"),
+        F.sum("cb").over(wall).alias("nb"),
+    )
+    return cum.groupBy("event_type").agg(
+        F.max("na").cast("long").alias("na"),
+        F.max("nb").cast("long").alias("nb"),
+        # ppm scaling is ONE shared IEEE double op (gini_ppm pattern;
+        # an int64 *1_000_000 form overflows past ~3e6 rows per half)
+        F.expr(
+            "cast(floor(cast(max(abs(cum_a * nb - cum_b * na)) as double)"
+            " * 1000000.0 / (cast(max(na) as double) * max(nb))) as bigint)"
+        ).alias("ks_ppm"),
+    )
 
 
 def _entropy_oracle() -> str:
@@ -2328,57 +1663,32 @@ def _entropy_oracle() -> str:
 
 @query("stream_entropy_merge", _entropy_oracle())
 def stream_entropy_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming twin of agg_entropy_profile, SAME oracle -- the
-    # FOURTEENTH mergeable-state streaming family.  State = (type, hour)
-    # counts (plain-addition mergeable); the frozen-ln entropy fold is a
-    # FINALIZE step strictly after the merge (a per-batch entropy would
-    # average entropies, which is not the entropy of the union).
-    from pyspark.sql import Window
-
+    # Streaming twin of agg_entropy_profile, SAME oracle: (type, hour)
+    # counts merge by addition; the frozen-ln entropy fold runs after the
+    # merge (averaging per-batch entropies is not the union's entropy).
     ev = tbl(spark, sf_dir, "events").select("event_type", "ts")
-    src = tempfile.mkdtemp(prefix="kcl_ent_src_")
-    states: list = []
-    try:
-        _write_epoch_fixture(ev, src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def fold_state(batch_df, epoch_id):
-            states.extend(
-                _collect_state(
-                    batch_df.groupBy(
-                        "event_type", F.hour("ts").cast("long").alias("hr")
-                    ).agg(F.count(F.lit(1)).cast("long").alias("c")),
-                    "stream_entropy_merge", domain_bound=768,
-                )
-            )
-
-        q = stream.writeStream.foreachBatch(fold_state).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        st = spark.createDataFrame(states, "event_type string, hr long, c long")
-        merged = st.groupBy("event_type", "hr").agg(
-            F.sum("c").cast("long").alias("c")
-        )
-        t = merged.withColumn(
-            "n", F.sum("c").over(Window.partitionBy("event_type"))
-        )
-        return t.groupBy("event_type").agg(
-            F.max("n").cast("long").alias("n"),
-            F.count(F.lit(1)).cast("long").alias("n_bins"),
-            F.expr(
-                "cast(sum(c * cast(round(ln(cast(n as double) / c) * 1000000)"
-                " as bigint)) div max(n) as bigint)"
-            ).alias("entropy_micronats"),
-        )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    states = _fold_epochs(
+        spark,
+        ev,
+        lambda b, _epoch: b.groupBy(
+            "event_type", F.hour("ts").cast("long").alias("hr")
+        ).agg(F.count(F.lit(1)).cast("long").alias("c")),
+        "stream_entropy_merge",
+    )
+    merged = states.groupBy("event_type", "hr").agg(
+        F.sum("c").cast("long").alias("c")
+    )
+    t = merged.withColumn(
+        "n", F.sum("c").over(Window.partitionBy("event_type"))
+    )
+    return t.groupBy("event_type").agg(
+        F.max("n").cast("long").alias("n"),
+        F.count(F.lit(1)).cast("long").alias("n_bins"),
+        F.expr(
+            "cast(sum(c * cast(round(ln(cast(n as double) / c) * 1000000)"
+            " as bigint)) div max(n) as bigint)"
+        ).alias("entropy_micronats"),
+    )
 
 
 def _mi_oracle() -> str:
@@ -2389,80 +1699,53 @@ def _mi_oracle() -> str:
 
 @query("stream_mi_merge", _mi_oracle())
 def stream_mi_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming twin of agg_mutual_information, SAME oracle -- the
-    # FIFTEENTH mergeable-state streaming family, sharing the
-    # (type, hour) count state shape with stream_entropy_merge: counts
-    # merge by addition; margins, the frozen-ln MI fold and both
-    # marginal entropies are FINALIZE steps strictly after the merge
-    # (per-batch MI would need per-batch margins -- meaningless for the
-    # union).
-    from pyspark.sql import Window
-
+    # Streaming twin of agg_mutual_information, SAME oracle, with the
+    # entropy twin's (type, hour) count state: counts merge by addition;
+    # margins, the MI fold and both marginal entropies run after the merge.
     ev = tbl(spark, sf_dir, "events").select("event_type", "ts")
-    src = tempfile.mkdtemp(prefix="kcl_mi_src_")
-    states: list = []
-    try:
-        _write_epoch_fixture(ev, src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    states = _fold_epochs(
+        spark,
+        ev,
+        lambda b, _epoch: b.groupBy(
+            "event_type", F.hour("ts").cast("long").alias("hr")
+        ).agg(F.count(F.lit(1)).cast("long").alias("c")),
+        "stream_mi_merge",
+    )
+    cells = states.groupBy("event_type", "hr").agg(
+        F.sum("c").cast("long").alias("o")
+    ).localCheckpoint(eager=True)  # feeds the MI fold AND both margins
+    m = cells.select(
+        "o",
+        F.sum("o").over(Window.partitionBy("event_type")).alias("r"),
+        F.sum("o").over(Window.partitionBy("hr")).alias("c"),
+        F.sum("o").over(Window.partitionBy()).alias("n"),
+    )
+    mi = m.agg(
+        F.max("n").cast("long").alias("n"),
+        F.expr(
+            "cast(sum(o * cast(round(ln(cast(o as double) * n"
+            " / (cast(r as double) * c)) * 1000000) as bigint))"
+            " div max(n) as bigint)"
+        ).alias("mi_micronats"),
+    )
 
-        def fold_state(batch_df, epoch_id):
-            states.extend(
-                _collect_state(
-                    batch_df.groupBy(
-                        "event_type", F.hour("ts").cast("long").alias("hr")
-                    ).agg(F.count(F.lit(1)).cast("long").alias("c")),
-                    "stream_mi_merge", domain_bound=768,
-                )
-            )
-
-        q = stream.writeStream.foreachBatch(fold_state).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        st = spark.createDataFrame(states, "event_type string, hr long, c long")
-        cells = st.groupBy("event_type", "hr").agg(
-            F.sum("c").cast("long").alias("o")
-        ).localCheckpoint(eager=True)
-        m = cells.select(
-            "o",
-            F.sum("o").over(Window.partitionBy("event_type")).alias("r"),
-            F.sum("o").over(Window.partitionBy("hr")).alias("c"),
-            F.sum("o").over(Window.partitionBy()).alias("n"),
-        )
-        mi = m.agg(
-            F.max("n").cast("long").alias("n"),
+    def _margin_entropy(key: str, alias: str):
+        mg = cells.groupBy(key).agg(F.sum("o").cast("long").alias("cnt"))
+        mg = mg.withColumn("n1", F.sum("cnt").over(Window.partitionBy()))
+        return mg.agg(
             F.expr(
-                "cast(sum(o * cast(round(ln(cast(o as double) * n"
-                " / (cast(r as double) * c)) * 1000000) as bigint))"
-                " div max(n) as bigint)"
-            ).alias("mi_micronats"),
+                "cast(sum(cnt * cast(round(ln(cast(n1 as double) / cnt)"
+                " * 1000000) as bigint)) div max(n1) as bigint)"
+            ).alias(alias)
         )
 
-        def _margin_entropy(key: str, alias: str):
-            mg = cells.groupBy(key).agg(F.sum("o").cast("long").alias("cnt"))
-            mg = mg.withColumn("n1", F.sum("cnt").over(Window.partitionBy()))
-            return mg.agg(
-                F.expr(
-                    "cast(sum(cnt * cast(round(ln(cast(n1 as double) / cnt)"
-                    " * 1000000) as bigint)) div max(n1) as bigint)"
-                ).alias(alias)
-            )
-
-        hx = _margin_entropy("event_type", "h_type_micronats")
-        hy = _margin_entropy("hr", "h_hour_micronats")
-        return (
-            mi.crossJoin(F.broadcast(hx))
-            .crossJoin(F.broadcast(hy))
-            .select("n", "mi_micronats", "h_type_micronats", "h_hour_micronats")
-        )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    hx = _margin_entropy("event_type", "h_type_micronats")
+    hy = _margin_entropy("hr", "h_hour_micronats")
+    return (
+        mi.crossJoin(F.broadcast(hx))
+        .crossJoin(F.broadcast(hy))
+        .select("n", "mi_micronats", "h_type_micronats", "h_hour_micronats")
+    )
 
 
 def _ohlc_oracle() -> str:
@@ -2473,103 +1756,48 @@ def _ohlc_oracle() -> str:
 
 @query("stream_ohlc_merge", _ohlc_oracle())
 def stream_ohlc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming twin of w_ohlc_bars, SAME oracle -- the SIXTEENTH
-    # mergeable family and the first NON-ADDITIVE one: the per-(type,
-    # bar) state is a LATTICE element (earliest-keyed open, max, min,
-    # latest-keyed close, count) and merge is component-wise
-    # min/max/min/max/sum -- open/close carry their (ts, event_id)
-    # ordering key THROUGH the merge as a struct, so merging any batch
-    # split reproduces the direct bar exactly (struct min/max orders
-    # lexicographically; (ts, event_id) is unique).  Counts merge by
-    # addition like every other family; the lattice components are why
-    # "mergeable state" means commutative-associative-idempotent-capable
-    # combination, not just sums.
-    #
-    # VERDICT r14 #5: this was the largest-bound driver fold
-    # (domain_bound=35328 = types x hourly bars); bars grow with the
-    # stream's TIME-SPAN, so on a years-long production stream the
-    # driver list is the wrong place for the state.  Migrated to the
-    # executor-side parquet epoch-union pattern proven by
-    # stream_bitmap_merge / stream_session_merge: per-batch bar states
-    # APPEND to a parquet store (no collect(), no driver list), the
-    # lattice merge runs as the distributed groupBy it always was, and
-    # the result detaches via eager localCheckpoint.
+    # Streaming twin of w_ohlc_bars, SAME oracle, and NON-ADDITIVE: the
+    # per-(type, bar) state is a LATTICE element (earliest-keyed open, max,
+    # min, latest-keyed close, count) merged component-wise.  open/close
+    # carry their unique (ts, event_id) key THROUGH the merge as a struct, so
+    # any batch split reproduces the direct bar exactly.
+    x = F.expr("cast(floor(value * 10 + 0.5) as bigint)")
     ev = tbl(spark, sf_dir, "events").select("event_type", "ts", "event_id", "value")
-    src = tempfile.mkdtemp(prefix="kcl_ohlc_src_")
-    state_dir = tempfile.mkdtemp(prefix="kcl_ohlc_state_")
-    try:
-        _write_epoch_fixture(ev, src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def fold_state(batch_df, epoch_id):
-            x = F.expr("cast(floor(value * 10 + 0.5) as bigint)")
-            st = (
-                batch_df.select(
-                    "event_type",
-                    F.date_trunc("hour", "ts").alias("bar"),
-                    F.struct("ts", "event_id", x.alias("x")).alias("okey"),
-                    x.alias("x"),
-                )
-                .groupBy("event_type", "bar")
-                .agg(
-                    F.min("okey").alias("o"),
-                    F.max("x").alias("h"),
-                    F.min("x").alias("l"),
-                    F.max("okey").alias("c"),
-                    F.count(F.lit(1)).alias("n"),
-                )
-                .select(
-                    "event_type", "bar",
-                    F.col("o.ts").alias("o_ts"),
-                    F.col("o.event_id").alias("o_id"),
-                    F.col("o.x").alias("o_x"),
-                    "h", "l",
-                    F.col("c.ts").alias("c_ts"),
-                    F.col("c.event_id").alias("c_id"),
-                    F.col("c.x").alias("c_x"),
-                    F.col("n").cast("long").alias("n"),
-                )
-            )
-            _capture_plan("stream_ohlc_merge", st)
-            # executor-side state append: no collect(), no driver list
-            st.write.mode("append").parquet(state_dir)
-
-        q = stream.writeStream.foreachBatch(fold_state).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        st = spark.read.schema(
-            "event_type string, bar timestamp, o_ts timestamp, o_id long,"
-            " o_x long, h long, l long, c_ts timestamp, c_id long, c_x long,"
-            " n long"
-        ).parquet(state_dir)
-        merged = st.groupBy("event_type", "bar").agg(
-            F.min(F.struct("o_ts", "o_id", "o_x")).alias("o"),
-            F.max("h").alias("h"),
-            F.min("l").alias("l"),
-            F.max(F.struct("c_ts", "c_id", "c_x")).alias("c"),
-            F.sum("n").cast("long").alias("n"),
-        )
-        out = merged.select(
+    states = _fold_epochs(
+        spark,
+        ev,
+        lambda b, _epoch: b.select(
             "event_type",
-            F.date_format("bar", "yyyy-MM-dd HH:mm:ss").alias("bar_start"),
-            "n",
-            F.col("o.o_x").cast("long").alias("open_deci"),
-            F.col("h").cast("long").alias("high_deci"),
-            F.col("l").cast("long").alias("low_deci"),
-            F.col("c.c_x").cast("long").alias("close_deci"),
+            F.date_trunc("hour", "ts").alias("bar"),
+            F.struct("ts", "event_id", x.alias("x")).alias("okey"),
+            x.alias("x"),
         )
-        # detach from state_dir before the finally-rmtree, bar-sized
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(state_dir, ignore_errors=True)
+        .groupBy("event_type", "bar")
+        .agg(
+            F.min("okey").alias("o"),
+            F.max("x").alias("h"),
+            F.min("x").alias("l"),
+            F.max("okey").alias("c"),
+            F.count(F.lit(1)).cast("long").alias("n"),
+        ),
+        "stream_ohlc_merge",
+    )
+    merged = states.groupBy("event_type", "bar").agg(
+        F.min("o").alias("o"),
+        F.max("h").alias("h"),
+        F.min("l").alias("l"),
+        F.max("c").alias("c"),
+        F.sum("n").cast("long").alias("n"),
+    )
+    return merged.select(
+        "event_type",
+        F.date_format("bar", "yyyy-MM-dd HH:mm:ss").alias("bar_start"),
+        "n",
+        F.col("o.x").cast("long").alias("open_deci"),
+        F.col("h").cast("long").alias("high_deci"),
+        F.col("l").cast("long").alias("low_deci"),
+        F.col("c.x").cast("long").alias("close_deci"),
+    )
 
 
 @query(
@@ -2590,72 +1818,39 @@ def stream_ohlc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_topk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The SEVENTEENTH mergeable-state streaming family, and the second
-    # NON-additive one (after the OHLC lattice): bounded ORDER-STATISTIC
-    # state.  Each micro-batch folds to its own per-type top-8 events by
-    # value (k rows per type, k-bounded regardless of batch size); the
-    # merge is identity-DEDUP then re-top-k over the UNION of batch
-    # states -- associative, commutative and IDEMPOTENT: a replayed
-    # batch re-offers rows the distinct() absorbs, so at-least-once
-    # delivery changes nothing.  The dedup is the load-bearing half of
-    # the idempotence claim (bare multiset concat + re-top-k would rank
-    # a replayed element twice -- caught by this wave's lattice pytest
-    # while writing it).  Merge == direct is the lattice law
-    # top_k(A ∪ B) = top_k(top_k(A) ∪ top_k(B)) over SET union --
-    # proven over every 2-way split in pytest (the OHLC proof pattern).
-    # The deterministic (cents DESC, event_id) tiebreak makes the state
-    # and the oracle bit-equal.
-    from pyspark.sql import Window
-
+    # Bounded ORDER-STATISTIC state: each epoch keeps its per-type top-8
+    # events by value; the merge is identity-DEDUP then re-top-k over the
+    # union -- top_k(A ∪ B) = top_k(top_k(A) ∪ top_k(B)) over SET union, so
+    # it is associative, commutative and IDEMPOTENT (the distinct() absorbs a
+    # replayed batch; bare concat + re-top-k would rank it twice).  The
+    # (cents DESC, event_id) tiebreak makes state and oracle bit-equal.
+    wk = Window.partitionBy("event_type").orderBy(
+        F.col("cents").desc(), "event_id"
+    )
     ev = tbl(spark, sf_dir, "events").select("event_type", "event_id", "value")
-    src = tempfile.mkdtemp(prefix="kcl_topk_src_")
-    state_rows = []
-    try:
-        _write_epoch_fixture(ev, src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    states = _fold_epochs(
+        spark,
+        ev,
+        lambda b, _epoch: b.select(
+            "event_type",
+            "event_id",
+            F.expr("cast(floor(value * 100 + 0.5) as bigint)").alias("cents"),
         )
-        wk = Window.partitionBy("event_type").orderBy(
-            F.col("cents").desc(), "event_id"
+        .withColumn("rk", F.row_number().over(wk))
+        .filter(F.col("rk") <= 8)
+        .drop("rk"),
+        "stream_topk_merge",
+    ).distinct()  # identity dedup: absorbs at-least-once batch replays
+    return (
+        states.withColumn("rk", F.row_number().over(wk))
+        .filter(F.col("rk") <= 8)
+        .select(
+            "event_type",
+            F.col("rk").cast("long").alias("rk"),
+            F.col("event_id").cast("long").alias("event_id"),
+            "cents",
         )
-
-        def fold_state(batch_df, epoch_id):
-            st = (
-                batch_df.select(
-                    "event_type",
-                    "event_id",
-                    F.expr("cast(floor(value * 100 + 0.5) as bigint)").alias(
-                        "cents"
-                    ),
-                )
-                .withColumn("rk", F.row_number().over(wk))
-                .filter(F.col("rk") <= 8)
-                .drop("rk")
-            )
-            state_rows.extend(_collect_state(st, "stream_topk_merge", domain_bound=256))
-
-        q = stream.writeStream.foreachBatch(fold_state).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        states = spark.createDataFrame(
-            state_rows, "event_type string, event_id long, cents long"
-        ).distinct()  # identity dedup: absorbs at-least-once batch replays
-        return (
-            states.withColumn("rk", F.row_number().over(wk))
-            .filter(F.col("rk") <= 8)
-            .select(
-                "event_type",
-                F.col("rk").cast("long").alias("rk"),
-                F.col("event_id").cast("long").alias("event_id"),
-                "cents",
-            )
-        )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    )
 
 
 def _sessionize_oracle() -> str:
@@ -2666,87 +1861,46 @@ def _sessionize_oracle() -> str:
 
 @query("stream_session_merge", _sessionize_oracle())
 def stream_session_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The EIGHTEENTH mergeable-state streaming family and the third
-    # non-additive one: SESSION-INTERVAL state (the merge that makes
-    # session windows work in Spark/Flink/Beam, public).  Each
-    # micro-batch sessionizes ITS OWN events (gap 1800 s) and keeps one
-    # (user, start_us, end_us) interval per batch-local session; the
-    # merge is gap-closing interval union -- a closure operator, so
-    # closure(closure(A) ∪ closure(B)) == closure(A ∪ B) and batch
-    # boundaries cannot split or double-count a session even though
-    # maxFilesPerTrigger slices the stream in arbitrary event order.
-    # The endpoint rule equals the event rule: if any earlier event
-    # lies within the gap of a new interval's start, the covering
-    # interval's END does too.  SAME oracle as w_sessionize (per-user
-    # session counts).  State is (user x batch-local sessions)-sized --
-    # the largest state of the 18 families -- so unlike the other 17
-    # twins (whose folds are group-bounded AGGREGATES and go through the
-    # _collect_state guard) it NEVER touches the driver (VERDICT r11
-    # #2): each epoch's interval relation is appended executor-side to
-    # a parquet epoch-union store, and the gap-closing closure runs as
-    # a DISTRIBUTED per-user window over the union (running-max
-    # streaming frame).  At 100x the state grows in files and shuffle
-    # partitions, not driver memory -- the max_state_rows guard no
-    # longer binds this twin's scale.
-    from pyspark.sql import Window
-
+    # SESSION-INTERVAL state: each epoch sessionizes ITS OWN events (gap
+    # 1800 s) into (user, start_us, end_us) intervals; the merge is
+    # gap-closing interval union -- a closure operator, so closure(closure(A)
+    # ∪ closure(B)) == closure(A ∪ B) and batch boundaries cannot split or
+    # double-count a session (if an earlier event lies within the gap of a
+    # new interval's start, the covering interval's END does too).  SAME
+    # oracle as w_sessionize.  State is (user x batch-local sessions)-sized,
+    # so the closure runs as a distributed per-user running-max window.
     from kcl_akka_stream_spark.operators.windows import sessionize
 
     ev = tbl(spark, sf_dir, "events").select("user_id", "ts")
-    src = tempfile.mkdtemp(prefix="kcl_sess_src_")
-    state_dir = tempfile.mkdtemp(prefix="kcl_sess_state_")
-    try:
-        _write_epoch_fixture(ev, src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    states = _fold_epochs(
+        spark,
+        ev,
+        lambda b, _epoch: sessionize(b, "user_id", "ts", 1800)
+        .groupBy("user_id", "session_id")
+        .agg(
+            F.min(F.unix_micros("ts")).alias("s_us"),
+            F.max(F.unix_micros("ts")).alias("e_us"),
         )
-
-        def fold_state(batch_df, epoch_id):
-            sess = sessionize(batch_df, "user_id", "ts", 1800)
-            st = sess.groupBy("user_id", "session_id").agg(
-                F.min(F.unix_micros("ts")).alias("s_us"),
-                F.max(F.unix_micros("ts")).alias("e_us"),
-            ).drop("session_id")
-            _capture_plan("stream_session_merge", st)
-            # executor-side state append: no collect(), no driver list
-            st.write.mode("append").parquet(state_dir)
-
-        q = stream.writeStream.foreachBatch(fold_state).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        states = spark.read.schema(
-            "user_id long, s_us long, e_us long"
-        ).parquet(state_dir)
-        w = Window.partitionBy("user_id").orderBy("s_us", "e_us")
-        prev_max_e = F.max("e_us").over(
-            w.rowsBetween(Window.unboundedPreceding, -1)
+        .drop("session_id"),
+        "stream_session_merge",
+    )
+    w = Window.partitionBy("user_id").orderBy("s_us", "e_us")
+    prev_max_e = F.max("e_us").over(
+        w.rowsBetween(Window.unboundedPreceding, -1)
+    )
+    merged = states.select(
+        "user_id",
+        F.when(
+            prev_max_e.isNull()
+            | (F.col("s_us") - prev_max_e > 1800 * 1_000_000),
+            1,
         )
-        merged = states.select(
-            "user_id",
-            F.when(
-                prev_max_e.isNull()
-                | (F.col("s_us") - prev_max_e > 1800 * 1_000_000),
-                1,
-            )
-            .otherwise(0)
-            .alias("new_session"),
-        )
-        out = merged.groupBy("user_id").agg(
-            F.sum("new_session").cast("long").alias("n_sessions")
-        )
-        # eager localCheckpoint detaches the result from state_dir before
-        # the finally-rmtree, keeping it EXECUTOR-sized (block manager
-        # partitions, never a driver row list -- the stream_cdc_upsert
-        # collect() detach pattern is the cliff this twin removes).
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(state_dir, ignore_errors=True)
+        .otherwise(0)
+        .alias("new_session"),
+    )
+    return merged.groupBy("user_id").agg(
+        F.sum("new_session").cast("long").alias("n_sessions")
+    )
 
 
 def _minhash_lang_oracle(num_hashes: int = 8) -> str:
@@ -2780,46 +1934,22 @@ def _minhash_lang_oracle(num_hashes: int = 8) -> str:
 
 @query("stream_minhash_merge", _minhash_lang_oracle())
 def stream_minhash_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The NINETEENTH mergeable-state streaming family, 4th non-additive:
-    # the MINHASH SIGNATURE itself is a semilattice under elementwise
-    # min -- min(sig(A), sig(B)) == sig(A UNION B) by definition of the
-    # min-hash, so per-batch per-lang signatures merge into exactly the
-    # whole-corpus signature (idempotent: a replayed batch re-offers
-    # values the min absorbs; at-least-once delivery changes nothing).
-    # This is how a streaming ingest maintains the near-dup sketch of a
-    # growing corpus WITHOUT recomputing it: state is langs x 8 hex
-    # chunks, never the data.  Oracle = the direct batch signature.
+    # min(sig(A), sig(B)) == sig(A ∪ B) by definition of the min-hash, so
+    # per-epoch per-lang signatures merge into exactly the whole-corpus
+    # signature (idempotent under replay).  State is langs x 8 hex chunks,
+    # never the data.  Oracle = the direct batch signature.
     from kcl_akka_stream_spark.operators.dedup import minhash_signatures
 
     docs = tbl(spark, sf_dir, "documents").select("lang", "text")
-    src = tempfile.mkdtemp(prefix="kcl_mh_src_")
-    state_rows = []
-    try:
-        _write_epoch_fixture(docs, src)
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def fold_state(batch_df, epoch_id):
-            st = minhash_signatures(batch_df, text_col="text", id_col="lang")
-            state_rows.extend(_collect_state(st, "stream_minhash_merge", domain_bound=64))
-
-        q = stream.writeStream.foreachBatch(fold_state).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        states = spark.createDataFrame(
-            state_rows,
-            "lang string, " + ", ".join(f"mh_{s} string" for s in range(8)),
-        )
-        return states.groupBy("lang").agg(
-            *[F.min(f"mh_{s}").alias(f"mh_{s}") for s in range(8)]
-        )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    states = _fold_epochs(
+        spark,
+        docs,
+        lambda b, _epoch: minhash_signatures(b, text_col="text", id_col="lang"),
+        "stream_minhash_merge",
+    )
+    return states.groupBy("lang").agg(
+        *[F.min(f"mh_{s}").alias(f"mh_{s}") for s in range(8)]
+    )
 
 
 def _bloom_merge_oracle(m_bits: int = 16384, k_hashes: int = 4,
@@ -2883,20 +2013,13 @@ def _bloom_merge_oracle(m_bits: int = 16384, k_hashes: int = 4,
 
 @query("stream_bloom_merge", _bloom_merge_oracle())
 def stream_bloom_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The TWENTIETH mergeable-state streaming family, and the third
-    # IDEMPOTENT one (after bitmap and reservoir): a fixed-m Bloom
-    # filter is an OR-semilattice over its bit words, so per-batch
-    # filters merge into exactly the whole-stream filter and an
-    # at-least-once replay is absorbed for free.  Unlike the bitmap
-    # twin (words = id-range/63, data-dependent -> epoch-union) the
-    # Bloom state is CONSTANT: <= m/63 words per type regardless of id
-    # universe -- the membership sketch a streaming ingest keeps when
-    # ids are sparse and exactness can trade for fixed memory.
-    # FINALIZE (after the merge, like every family): bit census, the
-    # standard -m/k * ln(1 - X/m) cardinality inversion (micro-frozen;
-    # (m - X)/m is exact in binary FP because m is a power of two), and
-    # a 200-probe ENGINEERED-ABSENT panel whose hit count is the
-    # measured false-positive rate -- the acceptance signal; the oracle
+    # A fixed-m Bloom filter is an OR-semilattice over its bit words, so
+    # epoch filters merge into exactly the whole-stream filter and a replay is
+    # absorbed.  Unlike the bitmap twin the state is CONSTANT: <= m/63 words
+    # per type regardless of the id universe.  FINALIZE: bit census, the
+    # -m/k * ln(1 - X/m) cardinality inversion (micro-frozen; exact in binary
+    # FP because m is a power of two), and a 200-probe ENGINEERED-ABSENT
+    # panel whose hit count is the measured false-positive rate; the oracle
     # rebuilds the filter bit-for-bit from the distinct relation.
     m_bits, k_hashes, n_probes = 16384, 4, 200
 
@@ -2909,121 +2032,86 @@ def stream_bloom_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(k_hashes)
         ]
 
-    # VERDICT r14 #5: although the Bloom state is CONSTANT-bounded
-    # (types x ceil(m/63) words), it was the largest remaining driver
-    # fold after the domain-growing families migrated; the epoch-union
-    # pattern costs nothing here and removes the driver list entirely --
-    # per-batch word states append executor-side, the bit_or merge is
-    # distributed, the result detaches via eager localCheckpoint.
     ev = tbl(spark, sf_dir, "events").select("event_type", "user_id")
-    src = tempfile.mkdtemp(prefix="kcl_bloom_src_")
-    state_dir = tempfile.mkdtemp(prefix="kcl_bloom_state_")
-    try:
-        _write_epoch_fixture(ev, src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    states = _fold_epochs(
+        spark,
+        ev,
+        lambda b, _epoch: b.select(
+            "event_type",
+            F.explode(F.array(*positions("cast(user_id as string)"))).alias("p"),
         )
-
-        def fold_state(batch_df, epoch_id):
-            st = (
-                batch_df.select(
-                    "event_type",
-                    F.explode(
-                        F.array(*positions("cast(user_id as string)"))
-                    ).alias("p"),
-                )
-                .select(
-                    "event_type",
-                    F.expr("p div 63").alias("wrd"),
-                    F.expr("shiftleft(1L, cast(p % 63 as int))").alias("msk"),
-                )
-                .groupBy("event_type", "wrd")
-                .agg(F.bit_or("msk").alias("bits"))
-            )
-            _capture_plan("stream_bloom_merge", st)
-            # executor-side state append: no collect(), no driver list
-            st.write.mode("append").parquet(state_dir)
-
-        q = stream.writeStream.foreachBatch(fold_state).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        st = spark.read.schema(
-            "event_type string, wrd long, bits long"
-        ).parquet(state_dir)
-        words = st.groupBy("event_type", "wrd").agg(
-            F.bit_or("bits").alias("bits")
-        ).localCheckpoint(eager=True)  # feeds the census AND the probe panel
-        filt = words.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n_words"),
-            F.sum(F.bit_count("bits")).cast("long").alias("n_bits_set"),
+        .select(
+            "event_type",
+            F.expr("p div 63").alias("wrd"),
+            F.expr("shiftleft(1L, cast(p % 63 as int))").alias("msk"),
         )
-        probes = (
-            spark.range(n_probes)
-            .select(F.concat(F.lit("absent:"), F.col("id")).alias("pk"))
-            .select(
-                "pk", F.explode(F.array(*positions("pk"))).alias("p")
-            )
+        .groupBy("event_type", "wrd")
+        .agg(F.bit_or("msk").alias("bits")),
+        "stream_bloom_merge",
+    )
+    words = states.groupBy("event_type", "wrd").agg(
+        F.bit_or("bits").alias("bits")
+    ).localCheckpoint(eager=True)  # feeds the census AND the probe panel
+    filt = words.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("n_words"),
+        F.sum(F.bit_count("bits")).cast("long").alias("n_bits_set"),
+    )
+    probes = (
+        spark.range(n_probes)
+        .select(F.concat(F.lit("absent:"), F.col("id")).alias("pk"))
+        .select(
+            "pk", F.explode(F.array(*positions("pk"))).alias("p")
         )
-        hits = (
-            probes.join(
-                words, words["wrd"] == F.expr("p div 63"), "inner"
-            )
-            .groupBy("event_type", "pk")
-            .agg(
-                (
-                    F.sum(
-                        F.expr(
-                            "cast(bits & shiftleft(1L, cast(p % 63 as int))"
-                            " <> 0 as int)"
-                        )
+    )
+    hits = (
+        probes.join(
+            words, words["wrd"] == F.expr("p div 63"), "inner"
+        )
+        .groupBy("event_type", "pk")
+        .agg(
+            (
+                F.sum(
+                    F.expr(
+                        "cast(bits & shiftleft(1L, cast(p % 63 as int))"
+                        " <> 0 as int)"
                     )
-                    == k_hashes
                 )
-                .cast("int")
-                .alias("hit")
+                == k_hashes
             )
+            .cast("int")
+            .alias("hit")
         )
-        fp = hits.groupBy("event_type").agg(
-            F.sum("hit").cast("long").alias("fp_probe_hits")
+    )
+    fp = hits.groupBy("event_type").agg(
+        F.sum("hit").cast("long").alias("fp_probe_hits")
+    )
+    truth = ev.distinct().groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("n_true_keys")
+    )
+    # saturation guard: if a type's filter ever fills every bit
+    # (n_bits_set == m), ln(0) -> -inf and the engines DIVERGE in
+    # failure mode (Spark non-ANSI casts +inf to Long.MAX, DuckDB CAST
+    # raises) -- NULL the estimate on both sides with an identical CASE
+    est = (
+        f"case when n_bits_set < {m_bits} then"
+        f" cast(round(-(cast({m_bits} as double) / {k_hashes})"
+        f" * ln(cast({m_bits} - n_bits_set as double) / {m_bits})"
+        " * 1000000, 0) as bigint) end"
+    )
+    return (
+        filt.join(truth, "event_type")
+        .join(fp, "event_type", "left")
+        .select(
+            "event_type",
+            "n_words",
+            "n_bits_set",
+            "n_true_keys",
+            F.coalesce("fp_probe_hits", F.lit(0))
+            .cast("long")
+            .alias("fp_probe_hits"),
+            F.expr(est).alias("est_keys_micro"),
         )
-        truth = ev.distinct().groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n_true_keys")
-        )
-        # saturation guard (ADVICE r13): if a type's filter ever fills
-        # every bit (n_bits_set == m), ln(0) -> -inf and the engines
-        # DIVERGE in failure mode (Spark non-ANSI casts +inf to
-        # Long.MAX, DuckDB CAST raises) -- NULL the estimate on both
-        # sides with an identical CASE instead
-        est = (
-            f"case when n_bits_set < {m_bits} then"
-            f" cast(round(-(cast({m_bits} as double) / {k_hashes})"
-            f" * ln(cast({m_bits} - n_bits_set as double) / {m_bits})"
-            " * 1000000, 0) as bigint) end"
-        )
-        out = (
-            filt.join(truth, "event_type")
-            .join(fp, "event_type", "left")
-            .select(
-                "event_type",
-                "n_words",
-                "n_bits_set",
-                "n_true_keys",
-                F.coalesce("fp_probe_hits", F.lit(0))
-                .cast("long")
-                .alias("fp_probe_hits"),
-                F.expr(est).alias("est_keys_micro"),
-            )
-        )
-        # detach from state_dir before the finally-rmtree, types-sized
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(state_dir, ignore_errors=True)
+    )
 
 
 def _quantile_merge_oracle(k: int = 256, n_dec: int = 9) -> str:
@@ -3089,27 +2177,18 @@ def _quantile_merge_oracle(k: int = 256, n_dec: int = 9) -> str:
 
 @query("stream_quantile_merge", _quantile_merge_oracle())
 def stream_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The TWENTY-FIRST mergeable-state streaming family (VERDICT r13 #6)
-    # and the fourth IDEMPOTENT one: a MERGEABLE QUANTILE SUMMARY.  GK is
-    # provably not fully mergeable and KLL's compactions are randomized /
-    # merge-order-sensitive (Agarwal et al., "Mergeable Summaries", PODS
-    # 2012 -- the paper that frames this whole family catalog); the
-    # deterministic mergeable quantile summary that keeps a bit-for-bit
-    # cross-engine oracle is the same paper's UNIFORM-SAMPLE summary,
-    # made deterministic by a fixed hash order: per type keep the k=256
-    # (id, cents) rows with the lowest seeded md5(id) -- a min-union
-    # semilattice (bottom-k of a union of bottom-ks == bottom-k of the
-    # union), so per-batch states merge exactly and an at-least-once
-    # replay re-offers rows already in (or above) the sample: absorbed.
-    # State is CONSTANT: types x k rows, domain-independent -- the
-    # complement of stream_hist_merge, whose value-range bins grow with
-    # the DOMAIN.  FINALIZE: rank-pick decile estimates from the merged
-    # sample, then the ACCEPTANCE REPORT every sketch family carries --
-    # the exact rank of each estimate (one broadcast 9-rows-per-type
-    # pass over the raw relation, map-side combine) vs the sample rank,
-    # gated by the DKW inequality at delta=0.01: err^2 * 2k <= ln(200)
-    # held as the frozen integer micro-nat literal 5298317 so the gate
-    # is pure int64 on both engines (no runtime transcendental).
+    # A MERGEABLE QUANTILE SUMMARY (Agarwal et al., "Mergeable Summaries",
+    # PODS 2012): GK is not fully mergeable and KLL's compactions are
+    # randomized, so the deterministic choice is the paper's uniform-sample
+    # summary under a fixed hash order -- per type the k=256 (id, cents) rows
+    # with the lowest seeded md5(id).  Bottom-k of a union of bottom-ks ==
+    # bottom-k of the union, so epoch states merge exactly and a replayed row
+    # is absorbed; state is types x k rows, domain-independent (unlike
+    # stream_hist_merge's bins).  FINALIZE: rank-pick decile estimates, then
+    # the exact rank of each estimate (one broadcast pass over the raw
+    # relation) gated by DKW at delta=0.01: err^2 * 2k <= ln(200), held as
+    # the frozen integer micro-nat literal 5298317 so the gate is pure int64
+    # on both engines.
     from kcl_akka_stream_spark.operators.sampling import hash_bottom_k
 
     k, n_dec = 256, 9
@@ -3118,115 +2197,87 @@ def stream_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.expr("cast(floor(value * 100 + 0.5) as bigint)").alias("cents"),
     )
-    src = tempfile.mkdtemp(prefix="kcl_qsk_src_")
-    states: list = []
-    try:
-        _write_epoch_fixture(ev, src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def fold_state(batch_df, epoch_id):
-            states.extend(
-                _collect_state(
-                    hash_bottom_k(
-                        batch_df, "event_type", "event_id", k, seed="qsk"
-                    ),
-                    "stream_quantile_merge",
-                    domain_bound=8192,  # types<=32 x k=256 sample rows
+    states = _fold_epochs(
+        spark,
+        ev,
+        lambda b, _epoch: hash_bottom_k(b, "event_type", "event_id", k, seed="qsk"),
+        "stream_quantile_merge",
+    )
+    # merge = the same bottom-k selection over the unioned states
+    # (min-union semilattice; replayed ids dedup inside the operator)
+    merged = hash_bottom_k(states, "event_type", "event_id", k, seed="qsk")
+    wr = Window.partitionBy("event_type").orderBy("cents", "event_id")
+    wt = Window.partitionBy("event_type")
+    sr = merged.select(
+        "event_type",
+        "cents",
+        F.row_number().over(wr).alias("rn"),
+        F.count(F.lit(1)).over(wt).alias("k_s"),
+    )
+    dec = spark.range(1, n_dec + 1).select(
+        F.col("id").cast("int").alias("decile")
+    )
+    est = (
+        sr.crossJoin(F.broadcast(dec))
+        .groupBy("event_type", "decile")
+        .agg(
+            F.min(
+                F.when(
+                    10 * F.col("rn") >= F.col("decile") * F.col("k_s"),
+                    F.col("cents"),
                 )
             )
-
-        q = stream.writeStream.foreachBatch(fold_state).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        from pyspark.sql import Window
-
-        st = spark.createDataFrame(
-            states, "event_type string, event_id long, cents long"
+            .cast("long")
+            .alias("est_cents"),
+            F.max("k_s").cast("long").alias("k_s"),
         )
-        # merge = the same bottom-k selection over the unioned states
-        # (min-union semilattice; replayed ids dedup inside the operator)
-        merged = hash_bottom_k(st, "event_type", "event_id", k, seed="qsk")
-        wr = Window.partitionBy("event_type").orderBy("cents", "event_id")
-        wt = Window.partitionBy("event_type")
-        sr = merged.select(
+        .localCheckpoint(eager=True)  # 45 rows; feeds BOTH rank passes
+    )
+    s_le = (
+        merged.join(F.broadcast(est), "event_type")
+        .groupBy("event_type", "decile")
+        .agg(
+            F.sum(
+                (F.col("cents") <= F.col("est_cents")).cast("long")
+            ).alias("s_le")
+        )
+    )
+    exact = (
+        ev.join(F.broadcast(est), "event_type")
+        .groupBy("event_type", "decile")
+        .agg(
+            F.sum(
+                (F.col("cents") <= F.col("est_cents")).cast("long")
+            ).alias("cnt_le"),
+            F.count(F.lit(1)).cast("long").alias("n"),
+        )
+    )
+    out = (
+        est.join(s_le, ["event_type", "decile"])
+        .join(exact, ["event_type", "decile"])
+        .select(
             "event_type",
-            "cents",
-            F.row_number().over(wr).alias("rn"),
-            F.count(F.lit(1)).over(wt).alias("k_s"),
+            "decile",
+            "est_cents",
+            "k_s",
+            "n",
+            F.expr("1000000 * s_le div k_s").alias("sample_rank_ppm"),
+            F.expr("1000000 * cnt_le div n").alias("exact_rank_ppm"),
+            F.expr(
+                "abs(1000000 * cnt_le div n - 1000000 * s_le div k_s)"
+            ).alias("err_ppm"),
+            F.expr(
+                "case when abs(1000000 * cnt_le div n"
+                "              - 1000000 * s_le div k_s)"
+                "          * abs(1000000 * cnt_le div n"
+                "                - 1000000 * s_le div k_s)"
+                "          * 2 * k_s <= 5298317000000"
+                " then 1 else 0 end"
+            ).alias("within_dkw"),
         )
-        dec = spark.range(1, n_dec + 1).select(
-            F.col("id").cast("int").alias("decile")
-        )
-        est = (
-            sr.crossJoin(F.broadcast(dec))
-            .groupBy("event_type", "decile")
-            .agg(
-                F.min(
-                    F.when(
-                        10 * F.col("rn") >= F.col("decile") * F.col("k_s"),
-                        F.col("cents"),
-                    )
-                )
-                .cast("long")
-                .alias("est_cents"),
-                F.max("k_s").cast("long").alias("k_s"),
-            )
-            .localCheckpoint(eager=True)  # 45 rows; feeds BOTH rank passes
-        )
-        s_le = (
-            merged.join(F.broadcast(est), "event_type")
-            .groupBy("event_type", "decile")
-            .agg(
-                F.sum(
-                    (F.col("cents") <= F.col("est_cents")).cast("long")
-                ).alias("s_le")
-            )
-        )
-        exact = (
-            ev.join(F.broadcast(est), "event_type")
-            .groupBy("event_type", "decile")
-            .agg(
-                F.sum(
-                    (F.col("cents") <= F.col("est_cents")).cast("long")
-                ).alias("cnt_le"),
-                F.count(F.lit(1)).cast("long").alias("n"),
-            )
-        )
-        out = (
-            est.join(s_le, ["event_type", "decile"])
-            .join(exact, ["event_type", "decile"])
-            .select(
-                "event_type",
-                "decile",
-                "est_cents",
-                "k_s",
-                "n",
-                F.expr("1000000 * s_le div k_s").alias("sample_rank_ppm"),
-                F.expr("1000000 * cnt_le div n").alias("exact_rank_ppm"),
-                F.expr(
-                    "abs(1000000 * cnt_le div n - 1000000 * s_le div k_s)"
-                ).alias("err_ppm"),
-                F.expr(
-                    "case when abs(1000000 * cnt_le div n"
-                    "              - 1000000 * s_le div k_s)"
-                    "          * abs(1000000 * cnt_le div n"
-                    "                - 1000000 * s_le div k_s)"
-                    "          * 2 * k_s <= 5298317000000"
-                    " then 1 else 0 end"
-                ).alias("within_dkw"),
-            )
-            .orderBy("event_type", "decile")
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+        .orderBy("event_type", "decile")
+    )
+    return out.localCheckpoint(eager=True)
 
 
 def _hll_merge_oracle() -> str:
@@ -3237,82 +2288,52 @@ def _hll_merge_oracle() -> str:
 
 @query("stream_hll_merge", _hll_merge_oracle())
 def stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The TWENTY-SECOND mergeable-state streaming family and the fifth
-    # IDEMPOTENT one, SAME oracle as agg_hll_estimate: HyperLogLog
-    # registers form a JOIN-SEMILATTICE under per-register MAX, so each
-    # micro-batch's 64-register relation merges into exactly the
-    # whole-stream registers and an at-least-once replay is absorbed
-    # (a replayed row can only re-offer a rank already <= the register).
-    # The canonical streaming cardinality sketch: CONSTANT state
-    # (types x 64 registers) against the bitmap twin's data-dependent
-    # words and KMV's per-epoch keying -- merged == direct batch build
-    # is the hash match.
+    # SAME oracle as agg_hll_estimate: HyperLogLog registers form a
+    # JOIN-SEMILATTICE under per-register MAX, so epoch register relations
+    # merge into exactly the whole-stream registers and a replay is absorbed.
+    # CONSTANT state: types x 64 registers.
     from kcl_akka_stream_spark.operators.sketches import (
         hll_estimate,
         hll_registers,
     )
 
     ev = tbl(spark, sf_dir, "events").select("event_type", "user_id")
-    src = tempfile.mkdtemp(prefix="kcl_hll_src_")
-    states: list = []
-    try:
-        _write_epoch_fixture(ev, src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    states = _fold_epochs(
+        spark,
+        ev,
+        lambda b, _epoch: hll_registers(b, "event_type", "user_id"),
+        "stream_hll_merge",
+    )
+    # merge = per-register MAX over the unioned batch states
+    merged = states.groupBy("event_type", "j").agg(
+        F.max("m_r").cast("long").alias("m_r")
+    )
+    est = hll_estimate(merged, "event_type")
+    truth = ev.groupBy("event_type").agg(
+        F.countDistinct("user_id").cast("long").alias("n_true")
+    )
+    out = (
+        est.join(truth, "event_type")
+        .select(
+            "event_type",
+            "n_registers_set",
+            "v_zeros",
+            "rmax",
+            "s2",
+            "method",
+            "est_micro",
+            "n_true",
+            F.expr("abs(est_micro div n_true - 1000000)").alias(
+                "rel_err_ppm"
+            ),
+            F.expr(
+                "case when abs(est_micro div n_true - 1000000)"
+                " <= 390000 then 1 else 0 end"
+            ).alias("within_3sigma"),
         )
-
-        def fold_state(batch_df, epoch_id):
-            states.extend(
-                _collect_state(
-                    hll_registers(batch_df, "event_type", "user_id"),
-                    "stream_hll_merge",
-                    domain_bound=2048,  # types<=32 x m=64 registers
-                )
-            )
-
-        q = stream.writeStream.foreachBatch(fold_state).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        st = spark.createDataFrame(
-            states, "event_type string, j long, m_r long"
-        )
-        # merge = per-register MAX over the unioned batch states
-        merged = st.groupBy("event_type", "j").agg(
-            F.max("m_r").cast("long").alias("m_r")
-        )
-        est = hll_estimate(merged, "event_type")
-        truth = ev.groupBy("event_type").agg(
-            F.countDistinct("user_id").cast("long").alias("n_true")
-        )
-        out = (
-            est.join(truth, "event_type")
-            .select(
-                "event_type",
-                "n_registers_set",
-                "v_zeros",
-                "rmax",
-                "s2",
-                "method",
-                "est_micro",
-                "n_true",
-                F.expr("abs(est_micro div n_true - 1000000)").alias(
-                    "rel_err_ppm"
-                ),
-                F.expr(
-                    "case when abs(est_micro div n_true - 1000000)"
-                    " <= 390000 then 1 else 0 end"
-                ).alias("within_3sigma"),
-            )
-            .orderBy("event_type")
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+        .orderBy("event_type")
+    )
+    return out.localCheckpoint(eager=True)
 
 
 def _f2_merge_oracle() -> str:
@@ -3323,14 +2344,10 @@ def _f2_merge_oracle() -> str:
 
 @query("stream_f2_merge", _f2_merge_oracle())
 def stream_f2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The TWENTY-THIRD mergeable-state streaming family, SAME oracle as
-    # agg_f2_sketch: the AMS signed sums are ADDITIVE (an abelian group,
-    # the counts/moments algebra), so per-batch states merge by plain
-    # column-wise sum into exactly the whole-stream sketch -- the
-    # streaming self-join-size monitor that flags a skewed-key blowup
-    # while the stream runs, at types x b=64 int64s of state.  Additive
-    # (not idempotent): exactly-once batch semantics, like every other
-    # sum-based family.
+    # SAME oracle as agg_f2_sketch: the AMS signed sums are ADDITIVE, so
+    # epoch states merge by column-wise sum into exactly the whole-stream
+    # sketch -- a self-join-size monitor at types x b=64 int64s of state.
+    # Not idempotent: exactly-once batch semantics, like every sum family.
     from kcl_akka_stream_spark.operators.sketches import (
         f2_estimate,
         f2_sketch_state,
@@ -3338,66 +2355,41 @@ def stream_f2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     b = 64
     ev = tbl(spark, sf_dir, "events").select("event_type", "user_id")
-    src = tempfile.mkdtemp(prefix="kcl_f2_src_")
-    states: list = []
-    try:
-        _write_epoch_fixture(ev, src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    states = _fold_epochs(
+        spark,
+        ev,
+        lambda batch, _epoch: f2_sketch_state(batch, "event_type", "user_id"),
+        "stream_f2_merge",
+    )
+    # merge = column-wise sum (abelian group addition)
+    merged = states.groupBy("event_type").agg(
+        *[F.sum(f"x_{r}").cast("long").alias(f"x_{r}") for r in range(b)]
+    )
+    est = f2_estimate(merged, "event_type")
+    exact = (
+        ev.groupBy("event_type", "user_id")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .groupBy("event_type")
+        .agg(
+            F.sum(F.expr("c * c")).cast("long").alias("f2_exact"),
+            F.sum("c").cast("long").alias("n_rows"),
         )
-
-        def fold_state(batch_df, epoch_id):
-            states.extend(
-                _collect_state(
-                    f2_sketch_state(batch_df, "event_type", "user_id"),
-                    "stream_f2_merge",
-                    domain_bound=32,  # types<=32, ONE b-column row each
-                )
-            )
-
-        q = stream.writeStream.foreachBatch(fold_state).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        schema = "event_type string, " + ", ".join(
-            f"x_{r} long" for r in range(b)
+    )
+    out = (
+        est.join(exact, "event_type")
+        .select(
+            "event_type",
+            "n_rows",
+            "f2_exact",
+            "est_f2",
+            F.expr(
+                "abs(1000000 * est_f2 div f2_exact - 1000000)"
+            ).alias("rel_err_ppm"),
+            F.expr(
+                "case when abs(1000000 * est_f2 div f2_exact"
+                " - 1000000) <= 530330 then 1 else 0 end"
+            ).alias("within_3sigma"),
         )
-        st = spark.createDataFrame(states, schema)
-        # merge = column-wise sum (abelian group addition)
-        merged = st.groupBy("event_type").agg(
-            *[F.sum(f"x_{r}").cast("long").alias(f"x_{r}") for r in range(b)]
-        )
-        est = f2_estimate(merged, "event_type")
-        exact = (
-            ev.groupBy("event_type", "user_id")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .groupBy("event_type")
-            .agg(
-                F.sum(F.expr("c * c")).cast("long").alias("f2_exact"),
-                F.sum("c").cast("long").alias("n_rows"),
-            )
-        )
-        out = (
-            est.join(exact, "event_type")
-            .select(
-                "event_type",
-                "n_rows",
-                "f2_exact",
-                "est_f2",
-                F.expr(
-                    "abs(1000000 * est_f2 div f2_exact - 1000000)"
-                ).alias("rel_err_ppm"),
-                F.expr(
-                    "case when abs(1000000 * est_f2 div f2_exact"
-                    " - 1000000) <= 530330 then 1 else 0 end"
-                ).alias("within_3sigma"),
-            )
-            .orderBy("event_type")
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+        .orderBy("event_type")
+    )
+    return out.localCheckpoint(eager=True)

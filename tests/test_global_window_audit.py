@@ -1,8 +1,8 @@
 """VERDICT r14 #4: the global-window audit must be COMPLETE (every
 unpartitioned ``Window.orderBy`` site in the package classified by its
-relation bound) and CURRENT (no stale rows) -- the STATE_CARDINALITY
-pattern applied to window specs, so the next data-sized global sort
-cannot land silently (the r14 ``text_heaps_law`` failure mode)."""
+relation bound) and CURRENT (no stale rows), so the next data-sized
+global sort cannot land silently (the r14 ``text_heaps_law`` failure
+mode)."""
 
 from __future__ import annotations
 

@@ -3,6 +3,7 @@ and its DKW acceptance gate."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -578,6 +579,25 @@ def test_power_iteration_pc1_finds_planted_direction(spark):
     assert len(out) == 8
     assert abs(out[0]) == 1000  # dominant component saturates the norm
     assert all(abs(out[d]) < 500 for d in range(1, 8)), out
+
+
+def test_power_iteration_pc1_raises_when_w_exceeds_int64(spark):
+    # +-316 per component gives a ~1e17 micro-unit covariance, so the
+    # first iteration's w = cov * 1000 is ~1e20, past int64; the guard
+    # must be a real exception (a bare assert vanishes under python -O)
+    import kcl_akka_stream_spark.queries.pipeline as P
+
+    df = spark.createDataFrame(
+        [(0, [316.0, 316.0]), (1, [-316.0, -316.0])],
+        "vec_id long, embedding array<double>",
+    )
+    orig = P.tbl
+    try:
+        P.tbl = lambda s, d, n: df
+        with pytest.raises(OverflowError, match="w exceeds int64"):
+            P.emb_power_iteration_pc1(spark, "x")
+    finally:
+        P.tbl = orig
 
 
 def test_heaps_law_monotone_and_beta(spark, sf_dir):

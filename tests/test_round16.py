@@ -8,27 +8,34 @@ from pyspark.sql import functions as F
 
 
 def test_stream_merge_multiway_four_epochs(spark, sf_dir, monkeypatch):
-    # ADVICE r15 #5: N_EPOCHS=2 means every benchmarked twin exercises a
-    # single cross-batch state merge; a merge bug that only manifests
-    # with >2 states (a non-associative fold order) would no longer be
-    # caught.  One representative twin re-runs here with a FOUR-epoch
-    # fixture: the bottom-k (KMV) semilattice closure says the global
-    # state must be identical no matter how many batches the stream is
-    # split into, so any fold-order sensitivity shows as a diff.
+    # N_EPOCHS=2 means every twin exercises a single cross-batch state
+    # merge; a merge bug that only manifests with >2 states (a
+    # non-associative fold order) would not be caught.  Three twins whose
+    # merges differ in kind -- KMV bottom-k closure, additive histogram
+    # counts, keyed (ts, event_id) argmax upsert -- re-run here with a
+    # FOUR-epoch fixture: each merge law says the result must not depend
+    # on how many batches the stream is split into.
     from kcl_akka_stream_spark.queries import streaming_q as sq
 
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
 
-    base = rows(sq.stream_kmv_merge(spark, sf_dir))  # declared 2-epoch path
+    twins = ("stream_kmv_merge", "stream_ks_merge", "stream_cdc_upsert")
+    base = {t: rows(getattr(sq, t)(spark, sf_dir)) for t in twins}  # 2 epochs
+
+    staged = []
 
     def four_epochs(df, src, n=4):
+        staged.append(src)
         df.repartition(4, F.xxhash64(*df.columns)).write.mode(
             "overwrite"
         ).parquet(src)
 
     monkeypatch.setattr(sq, "_write_epoch_fixture", four_epochs)
-    assert rows(sq.stream_kmv_merge(spark, sf_dir)) == base
+    for t in twins:
+        before = len(staged)
+        assert rows(getattr(sq, t)(spark, sf_dir)) == base[t], t
+        assert len(staged) == before + 1, f"{t}: four-epoch fixture unused"
 
 
 def test_kmeans_assign_keep_vector_carries_input_unchanged(spark):
@@ -113,8 +120,16 @@ def test_payload_simhash_vectorized_matches_scalar(spark, sf_dir):
         payload_simhash,
     )
 
-    media = documents_as_media(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+    # binary payloads with NUL bytes: a trailing-NUL gram and an all-NUL
+    # payload must hash their full bytes, not a NUL-stripped prefix
+    nul = spark.createDataFrame(
+        [(-1, bytearray(b"abcdab\0\0")), (-2, bytearray(12))],
+        "media_id long, payload binary",
+    )
+    media = (
+        documents_as_media(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+        .select("media_id", "payload")
+        .unionByName(nul)
     )
     got = {
         r.media_id: r.simhash

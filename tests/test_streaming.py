@@ -425,42 +425,6 @@ def test_two_consumers_disjoint_leases_union_to_sent(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_stateful_tracker_v2_gap_blocks_frontier(spark, tmp_path):
-    # Same gap matrix as v1 (ShardCheckpointTrackerTest.scala:70-81) on the
-    # Spark 4 transformWithStateInPandas API.
-    import uuid as _uuid
-
-    from kcl_akka_stream_spark.streaming.tracker import (
-        streaming_checkpoint_frontier_v2,
-        v2_available,
-    )
-
-    if streaming_checkpoint_frontier_v2 is None or not v2_available():
-        pytest.skip("transformWithStateInPandas needs a working protobuf install")
-    rows = [(7, 0, True), (7, 1, True), (7, 2, False), (7, 3, True)]
-    df = spark.createDataFrame(rows, "shard_id long, seq long, processed boolean")
-    src = str(tmp_path / "ckpt_v2_src")
-    df.coalesce(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(df.schema).parquet(src)
-    name = f"t_tracker2_{_uuid.uuid4().hex[:8]}"
-    q = (
-        streaming_checkpoint_frontier_v2(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    out = spark.table(name).orderBy(F.col("update_id").desc()).collect()
-    last = out[0]
-    assert last.frontier_seq == 1
-    assert last.processed_uncheckpointed_count == 1
-    assert last.in_flight_count == 1
-
-
 def test_batch_sessionize_matches_streaming_session_window(spark):
     # Cross-boundary invariant: the batch window-function sessionization
     # (operators/windows.py) and streaming session_window agree on session
@@ -871,26 +835,138 @@ def test_streaming_observe_metrics_ride_microbatches(spark, sf_dir):
     assert total == direct and errs == err_direct and total > 0
 
 
-def test_collect_state_guard_raises_on_unbounded_state(spark, sf_dir):
-    # VERDICT r10 #3: the streaming twins' driver-side folds must be
-    # LOUDLY bounded.  A data-sized "state" (keyed by event_id -- the
-    # anti-pattern the guard exists for) raises StateCardinalityExceeded
-    # instead of OOMing the driver; the fetch itself is LIMIT-bounded so
-    # the failure costs one bounded collect, not a full materialization.
-    import pytest
+def _driver_fetches_in_stream_callbacks():
+    """Every ``.collect()`` / ``.toPandas()`` call reachable from a
+    foreachBatch callback or a ``_fold_epochs`` partial in streaming_q,
+    as (root, function, line).  Reachability follows names through
+    nested defs, callback-building assignments, local imports and
+    module globals into any function of this package (AST, not regex)."""
+    import ast
+    import importlib
+    import inspect
+    import textwrap
 
-    from kcl_akka_stream_spark.queries.streaming_q import (
-        MAX_STATE_ROWS,
-        StateCardinalityExceeded,
-        _collect_state,
+    from kcl_akka_stream_spark.queries import streaming_q
+
+    found, seen = [], set()
+
+    def scope_of(fn_node, glb):
+        defs = {
+            n.name: n
+            for n in ast.walk(fn_node)
+            if isinstance(n, ast.FunctionDef) and n is not fn_node
+        }
+        imports = {}
+        for n in ast.walk(fn_node):
+            if isinstance(n, ast.ImportFrom) and n.module:
+                mod = importlib.import_module(n.module)
+                for a in n.names:
+                    imports[a.asname or a.name] = getattr(mod, a.name, None)
+        return defs, imports, glb
+
+    def visit_fn(obj, root):
+        if obj in seen:
+            return
+        seen.add(obj)
+        node = ast.parse(textwrap.dedent(inspect.getsource(obj))).body[0]
+        visit(node, scope_of(node, obj.__globals__), root, obj.__qualname__)
+
+    def visit(node, scope, root, where):
+        defs, imports, glb = scope
+        for n in ast.walk(node):
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in ("collect", "toPandas")
+            ):
+                found.append((root, where, n.lineno))
+            if not (isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)):
+                continue
+            if n.id in defs and (id(defs[n.id]), where) not in seen:
+                seen.add((id(defs[n.id]), where))
+                visit(defs[n.id], scope, root, f"{where}.{n.id}")
+                continue
+            obj = imports.get(n.id, glb.get(n.id))
+            if inspect.isfunction(obj) and obj.__module__.startswith(
+                "kcl_akka_stream_spark"
+            ):
+                visit_fn(obj, root)
+
+    n_roots = 0
+    for name, fn in vars(streaming_q).items():
+        if not inspect.isfunction(fn) or fn.__module__ != streaming_q.__name__:
+            continue
+        node = ast.parse(textwrap.dedent(inspect.getsource(fn))).body[0]
+        scope = scope_of(node, fn.__globals__)
+        assigns = {
+            t.id: a.value
+            for a in ast.walk(node)
+            if isinstance(a, ast.Assign)
+            for t in a.targets
+            if isinstance(t, ast.Name)
+        }
+        for call in ast.walk(node):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            if isinstance(f, ast.Attribute) and f.attr == "foreachBatch":
+                cb = call.args[0]
+            elif isinstance(f, ast.Name) and f.id == "_fold_epochs":
+                kw = {k.arg: k.value for k in call.keywords}
+                cb = call.args[2] if len(call.args) > 2 else kw["partial"]
+            else:
+                continue
+            n_roots += 1
+            if isinstance(cb, ast.Name) and cb.id in assigns:
+                cb = assigns[cb.id]
+            visit(ast.Expression(cb), scope, name, name)
+    return n_roots, found
+
+
+def test_stream_callbacks_never_fetch_rows_to_the_driver():
+    # Mergeable state lives executor-side: nothing a micro-batch callback
+    # or an epoch partial can reach may pull rows onto the driver.
+    n_roots, found = _driver_fetches_in_stream_callbacks()
+    assert n_roots >= 26  # 23 partials + _fold_epochs + scd2 + commit sink
+    assert found == []
+
+
+def _failing_on_second_epoch(batch_df, epoch_id):
+    if epoch_id == 1:
+        raise RuntimeError("injected failure on epoch 1")
+    return batch_df.groupBy().count()
+
+
+def test_fold_epochs_stops_query_and_removes_fixture_on_failure(
+    spark, monkeypatch
+):
+    from kcl_akka_stream_spark.queries import streaming_q as sq
+
+    staged = []
+    write = sq._write_epoch_fixture
+
+    def spy(df, src, n=sq.N_EPOCHS):
+        staged.append(src)
+        write(df, src, n)
+
+    monkeypatch.setattr(sq, "_write_epoch_fixture", spy)
+    df = spark.range(200).withColumnRenamed("id", "v")
+    with pytest.raises(Exception, match="injected failure on epoch 1"):
+        sq._fold_epochs(spark, df, _failing_on_second_epoch, "test-failure")
+    assert spark.streams.active == []
+    assert len(staged) == 1 and not os.path.exists(staged[0])
+
+
+def test_drain_stops_query_on_failure(spark, tmp_path):
+    from kcl_akka_stream_spark.queries.streaming_q import _drain
+
+    src = str(tmp_path / "src")
+    spark.range(200).repartition(2).write.parquet(src)
+    stream = (
+        spark.readStream.schema("id long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
     )
-    from kcl_akka_stream_spark.sources.batch import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    bounded = ev.groupBy("event_type").count()
-    rows = _collect_state(bounded, "test-bounded")
-    assert 0 < len(rows) <= MAX_STATE_ROWS
-
-    unbounded = ev.select("event_id")  # data-sized: one row per event
-    with pytest.raises(StateCardinalityExceeded, match="max_state_rows"):
-        _collect_state(unbounded, "test-unbounded", max_state_rows=100)
+    with pytest.raises(Exception, match="injected failure on epoch 1"):
+        _drain(stream.writeStream.foreachBatch(_failing_on_second_epoch))
+    assert spark.streams.active == []

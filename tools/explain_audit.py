@@ -90,9 +90,9 @@ def main() -> None:
     for name in names or HEADLINE:
         if name.startswith("stream_"):
             # VERDICT r13 #3: run the streaming twin for real with the
-            # micro-batch plan capture installed (driver-fold families
-            # capture at the _collect_state seam, epoch-union at its
-            # parquet append, watermark families via explainInternal)
+            # micro-batch plan capture installed (mergeable-state
+            # families capture each epoch state inside _fold_epochs,
+            # watermark families via explainInternal)
             # and audit the captured physical plans -- the worst batch
             # wins, so a single skewed trigger cannot hide.
             from kcl_akka_stream_spark.plans.hygiene import (
