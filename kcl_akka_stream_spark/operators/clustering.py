@@ -88,17 +88,21 @@ def kmeans_update(
     assignment: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    *,
+    assignment_has_vector: bool,
 ) -> DataFrame:
     """Recompute centroids as the element-wise mean of each cluster's
     vectors.  posexplode → avg keyed by (cluster, dim) combines map-side;
     the rebuilt centroid arrays are k × d rows total.
 
-    When ``assignment`` already carries ``vec_col``
-    (``kmeans_assign(keep_vector=True)``), the vectors-assignment join is
-    skipped outright (r16, guide §1.2): the assignment has exactly one
-    row per vector id with the identical array, so the posexplode reads
-    it directly -- same rows in, same means out."""
-    if vec_col in assignment.columns:
+    ``assignment_has_vector`` says whether ``assignment`` carries
+    ``vec_col`` (``kmeans_assign(keep_vector=True)``).  If it does, the
+    vectors-assignment join is skipped outright (r16, guide §1.2): the
+    assignment has exactly one row per vector id with the identical array,
+    so the posexplode reads it directly -- same rows in, same means out.
+    The caller states it, so the path never hinges on which columns a
+    relation happens to carry."""
+    if assignment_has_vector:
         joined = assignment.select("cluster_id", vec_col)
     else:
         joined = vectors.join(assignment.select(id_col, "cluster_id"), id_col)
@@ -143,9 +147,9 @@ def kmeans(
     ).localCheckpoint(eager=True)
     assignment = kmeans_assign(vectors, centroids, id_col, vec_col)
     for _ in range(iters - 1):
-        centroids = kmeans_update(vectors, assignment, id_col, vec_col).localCheckpoint(
-            eager=True
-        )
+        centroids = kmeans_update(
+            vectors, assignment, id_col, vec_col, assignment_has_vector=False
+        ).localCheckpoint(eager=True)
         assignment = kmeans_assign(vectors, centroids, id_col, vec_col)
     return assignment, centroids
 

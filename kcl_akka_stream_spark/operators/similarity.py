@@ -196,7 +196,9 @@ def _learn_quantizer(
     ).localCheckpoint(eager=True)
     # kmeans_update reads the carried vector off the assignment (no
     # vectors-assignment join -- see its docstring)
-    centroids = kmeans_update(corpus, assignment, id_col, vec_col).select(
+    centroids = kmeans_update(
+        corpus, assignment, id_col, vec_col, assignment_has_vector=True
+    ).select(
         F.col("cluster_id").alias("cluster"), "centroid"
     )
     return assignment, centroids

@@ -1610,7 +1610,7 @@ def cluster_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("centroid"),
     )
     assignment = CL.kmeans_assign(emb, centroids)
-    updated = CL.kmeans_update(emb, assignment)
+    updated = CL.kmeans_update(emb, assignment, assignment_has_vector=False)
     comps = updated.select(
         "cluster_id", F.explode("centroid").alias("mval")
     )

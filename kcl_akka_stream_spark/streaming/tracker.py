@@ -28,18 +28,30 @@ was given up -- a bounded-state/bounded-loss trade the operator surfaces
 LOUDLY instead of leaking.  Shards are independent groups so state
 shuffles once by shard key and lives in the state store across
 micro-batches.
+
+The kept window is stored as two ``binary`` state fields -- ``seqs`` packed
+little-endian int64, ``procs`` packed bool -- decoded with ``np.frombuffer``
+and re-encoded with ``tobytes`` at the kernel's edges.  Array fields
+(``array<long>``/``array<boolean>``) cost a fresh code generation every
+trigger: Spark rebuilds the state encoder per micro-batch, its
+``MapObjects`` draw new global lambda-variable ids, so the generated
+projection source never matched the codegen cache and every trigger
+compiled (and JIT-warmed) two new classes.  Flat binary fields generate
+the same source each trigger.  Checkpoints written with the array layout
+fail to resume with ``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``; start
+them over on a fresh ``checkpointLocation``.
 """
 
 from __future__ import annotations
 
 from typing import Any, Iterator, Tuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
+    BinaryType,
     IntegerType,
     LongType,
     StructField,
@@ -49,8 +61,8 @@ from pyspark.sql.types import (
 STATE_SCHEMA = StructType(
     [
         StructField("frontier", LongType()),
-        StructField("seqs", ArrayType(LongType())),
-        StructField("procs", ArrayType(BooleanType())),
+        StructField("seqs", BinaryType()),  # packed little-endian int64
+        StructField("procs", BinaryType()),  # packed bool
         StructField("n_updates", IntegerType()),
     ]
 )
@@ -182,11 +194,12 @@ def _make_track(max_pending: int | None):
                     "max_pending setting, or start a fresh checkpoint location."
                 )
             if evicting:
-                frontier, seqs_t, procs_t, n_updates, n_evicted = got
+                frontier, seqs_b, procs_b, n_updates, n_evicted = got
             else:
-                frontier, seqs_t, procs_t, n_updates = got
+                frontier, seqs_b, procs_b, n_updates = got
                 n_evicted = 0
-            seqs, procs = list(seqs_t), list(procs_t)
+            seqs = np.frombuffer(seqs_b, dtype="<i8").tolist()
+            procs = np.frombuffer(procs_b, dtype=np.bool_).tolist()
         else:
             frontier, seqs, procs, n_updates, n_evicted = _NO_FRONTIER, [], [], 0, 0
         for pdf in pdfs:
@@ -199,10 +212,12 @@ def _make_track(max_pending: int | None):
             )
             n_evicted += evicted_now
         n_updates += 1
+        seqs_b = np.asarray(seqs, dtype="<i8").tobytes()
+        procs_b = np.asarray(procs, dtype=np.bool_).tobytes()
         if evicting:
-            state.update((frontier, seqs, procs, n_updates, n_evicted))
+            state.update((frontier, seqs_b, procs_b, n_updates, n_evicted))
         else:
-            state.update((frontier, seqs, procs, n_updates))
+            state.update((frontier, seqs_b, procs_b, n_updates))
         row = {
             "shard_id": int(key[0]),
             "frontier_seq": None if frontier == _NO_FRONTIER else frontier,

@@ -599,7 +599,7 @@ def test_kmeans_update_elementwise_mean(spark):
     asg = spark.createDataFrame(
         [(0, 0), (1, 0), (2, 1)], "vec_id long, cluster_id long"
     )
-    got = {r.cluster_id: r.centroid for r in kmeans_update(vecs, asg).collect()}
+    got = {r.cluster_id: r.centroid for r in kmeans_update(vecs, asg, assignment_has_vector=False).collect()}
     assert got[0] == [1.0, 3.0] and got[1] == [10.0, 10.0]
 
 

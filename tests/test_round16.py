@@ -72,10 +72,13 @@ def test_kmeans_assign_keep_vector_carries_input_unchanged(spark):
     slow = {
         r.cluster_id: r.centroid
         for r in kmeans_update(
-            vecs, kept.select("vec_id", "cluster_id")
+            vecs, kept.select("vec_id", "cluster_id"), assignment_has_vector=False
         ).collect()
     }
-    fast = {r.cluster_id: r.centroid for r in kmeans_update(vecs, kept).collect()}
+    fast = {
+        r.cluster_id: r.centroid
+        for r in kmeans_update(vecs, kept, assignment_has_vector=True).collect()
+    }
     assert fast == slow
 
 

@@ -570,7 +570,7 @@ def test_tracker_state_bounded_across_microbatches(spark, tmp_path):
         .selectExpr(
             "key.shard_id AS shard_id",
             "value.groupState.frontier AS frontier",
-            "size(value.groupState.seqs) AS n_kept",
+            "octet_length(value.groupState.seqs) DIV 8 AS n_kept",
         )
         .collect()
     )
@@ -675,7 +675,7 @@ def test_tracker_poisoned_shard_bounded_state(spark, tmp_path):
         .load(ckpt)
         .selectExpr(
             "key.shard_id AS shard_id",
-            "size(value.groupState.seqs) AS n_kept",
+            "octet_length(value.groupState.seqs) DIV 8 AS n_kept",
             "value.groupState.n_evicted AS n_evicted",
         )
         .collect()
@@ -683,6 +683,187 @@ def test_tracker_poisoned_shard_bounded_state(spark, tmp_path):
     by_shard = {r.shard_id: r for r in state}
     assert by_shard[1].n_kept == 0
     assert by_shard[1].n_evicted == 1
+
+
+def test_tracker_compiles_no_code_per_steady_trigger(spark, tmp_path):
+    # Structured Streaming plans every micro-batch again, so generated code
+    # that differs between triggers misses the codegen cache each time.
+    # Array-typed tracker state did (the state encoder's MapObjects drew
+    # fresh lambda-variable ids: 2 compilations per trigger); the binary
+    # state must compile nothing once every path has run.  Files are
+    # written with pandas, so nothing else in the window runs Spark code.
+    import pandas as pd
+
+    from kcl_akka_stream_spark.streaming.tracker import streaming_checkpoint_frontier
+
+    src = tmp_path / "codegen_src"
+    src.mkdir()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def put(i):
+        # every trigger touches every shard: new records, some left un-acked
+        seqs = list(range(i * 10, i * 10 + 10))
+        pdf = pd.DataFrame(
+            {
+                "shard_id": [s % 3 for s in seqs],
+                "seq": seqs,
+                "processed": [s % 7 != 3 for s in seqs],
+            }
+        )
+        pdf.to_parquet(src / f".f{i}", index=False)
+        os.rename(src / f".f{i}", src / f"f{i}.parquet")
+
+    put(0)
+    stream = (
+        spark.readStream.schema("shard_id long, seq long, processed boolean")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src))
+    )
+    q = (
+        streaming_checkpoint_frontier(stream)
+        .writeStream.outputMode("update")
+        .format("memory")
+        .queryName(f"t_codegen_{uuid.uuid4().hex[:8]}")
+        .option("checkpointLocation", str(tmp_path / "codegen_ckpt"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        counts = []
+        for i in range(1, 6):
+            put(i)
+            q.processAllAvailable()
+            counts.append(codegen.METRIC_COMPILATION_TIME().getCount())
+    finally:
+        q.stop()
+    assert q.lastProgress["batchId"] == 5
+    assert counts[-1] == counts[1], f"compilations after triggers 1-5: {counts}"
+
+
+def test_tracker_rejects_array_layout_checkpoint(spark, tmp_path):
+    # Checkpoints written before the state went binary held the kept window
+    # as array<long>/array<boolean>; resuming one must fail on Spark's
+    # state-schema check (documented: start a fresh checkpointLocation),
+    # never decode array bytes as packed int64.
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+    from pyspark.sql.utils import StreamingQueryException
+
+    from kcl_akka_stream_spark.streaming.tracker import (
+        OUTPUT_SCHEMA,
+        streaming_checkpoint_frontier,
+    )
+
+    src = str(tmp_path / "old_src")
+    ckpt = str(tmp_path / "old_ckpt")
+    schema = "shard_id long, seq long, processed boolean"
+    spark.createDataFrame([(1, 0, True), (1, 2, True)], schema).write.parquet(src)
+    stream = spark.readStream.schema(schema).parquet(src)
+
+    def _old_track(key, pdfs, state):
+        seqs = [int(s) for pdf in pdfs for s in pdf["seq"]]
+        state.update((0, seqs, [True] * len(seqs), 1))
+        yield pd.DataFrame([(int(key[0]), 0, 0, 0, 1)], columns=OUTPUT_SCHEMA.names)
+
+    old = stream.groupBy("shard_id").applyInPandasWithState(
+        _old_track,
+        outputStructType=OUTPUT_SCHEMA,
+        stateStructType=(
+            "frontier long, seqs array<long>, procs array<boolean>, n_updates int"
+        ),
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    q = (
+        old.writeStream.outputMode("update")
+        .format("noop")
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    spark.createDataFrame([(1, 1, True)], schema).write.mode("append").parquet(src)
+    q = (
+        streaming_checkpoint_frontier(stream)
+        .writeStream.outputMode("update")
+        .format("noop")
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    try:
+        with pytest.raises(StreamingQueryException) as err:
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert "STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE" in str(err.value)
+
+
+_ZIP_REREAD_PROBE = r"""
+import importlib, sys, zipfile, zipimport
+from kcl_akka_stream_spark.worker_daemon import install
+
+install()
+archive = sys.argv[1]
+with zipfile.ZipFile(archive, "w") as z:
+    z.writestr("m.py", "X = 1\n")
+sys.path.insert(0, archive)
+import m
+
+reads = []
+read_directory = zipimport._read_directory
+
+
+def counting_read(path):
+    if path == archive:
+        reads.append(path)
+    return read_directory(path)
+
+
+zipimport._read_directory = counting_read
+importlib.invalidate_caches()
+importlib.invalidate_caches()
+assert reads == [], reads
+
+with zipfile.ZipFile(archive, "w") as z:
+    z.writestr("m.py", "X = 1\n")
+    z.writestr("n.py", "Y = 2\n")
+importlib.invalidate_caches()
+assert reads == [archive], reads
+import n
+
+assert (m.X, n.Y) == (1, 2)
+print("ok")
+"""
+
+
+def test_worker_daemon_rereads_zip_directory_only_when_changed(tmp_path):
+    # The worker daemon's zipimport patch (CPython < 3.13), run in a
+    # subprocess so this interpreter's zipimport stays untouched: an
+    # unchanged archive keeps its directory across invalidate_caches(), a
+    # rewritten one is re-read and its new module imports.
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if sys.version_info >= (3, 13):
+        pytest.skip("CPython 3.13+ re-reads zip directories lazily; no patch")
+    out = subprocess.run(
+        [sys.executable, "-c", _ZIP_REREAD_PROBE, str(tmp_path / "mods.zip")],
+        cwd=root,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip() == "ok"
+
+
+def test_session_forks_workers_from_the_worker_daemon(spark):
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.daemon.module") == "kcl_akka_stream_spark.worker_daemon"
 
 
 def test_watermark_drops_too_late_rows(spark, tmp_path):

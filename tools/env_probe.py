@@ -8,7 +8,6 @@ convert the corresponding skip/stub into live coverage:
 - spark_avro:    from_avro/to_avro codec (sources gated on the MODULE,
                  not the core avro jars that ship with Spark)
 - pil / ffmpeg:  real image/audio decode behind multimodal.set_decoder
-- protobuf:      transformWithState v2 tracker (streaming/tracker.py)
 
 Usage: python tools/env_probe.py
 """
@@ -31,8 +30,7 @@ def probe() -> dict:
     out["kinesis_jar"] = any("kinesis" in j.lower() for j in jars)
     # the spark-avro MODULE (spark-avro_*.jar), not avro-core
     out["spark_avro_jar"] = any(j.lower().startswith("spark-avro") for j in jars)
-    for mod, key in (("PIL", "pil"), ("ffmpeg", "ffmpeg"),
-                     ("google.protobuf", "protobuf")):
+    for mod, key in (("PIL", "pil"), ("ffmpeg", "ffmpeg")):
         try:
             importlib.import_module(mod)
             out[key] = True
