@@ -303,8 +303,8 @@ def semantic_dedup(
     job, no centroid assign): block count scales with the corpus so
     expected per-cluster size stays ~constant.  A FIXED small
     ``n_clusters`` on a growing corpus is the quadratic anti-pattern
-    (tools/scale_probe.py measured 12.5x wall at 10x data for frozen
-    k=8 vs ~flat for the auto mode); the learned-quantizer mode exists
+    (SCALE_PROBE.md at `f2504d4` records 12.5x wall at 10x data for
+    frozen k=8 vs ~flat for the auto mode); the learned-quantizer mode exists
     for oracle-pinned gates and pre-clustered corpora, the auto mode is
     the 100 TB default."""
     from kcl_akka_stream_spark.operators.dedup import connected_components_fast
@@ -497,8 +497,8 @@ def embedding_near_dup_pairs(
     deterministic guardrail for the skewed tail -- over-cap blocks are
     dropped whole BEFORE pair generation, the same bounded-fan-out
     discipline as the MinHash hot-bucket cap and the Jaccard df-cap
-    (tools/scale_probe.py: uncapped 4-dim blocking went 45x wall at 10x
-    data; capped stays linear).  On the LSH path the per-bucket sizes
+    (SCALE_PROBE.md at `f2504d4`: uncapped 4-dim blocking went 45x wall
+    at 10x data; capped stays linear).  On the LSH path the per-bucket sizes
     (<= 2^MAX_AUTO_LSH_DIMS rows) are collected driver-side: the kept set
     broadcasts from a local list and the dropped-block count is LOGGED --
     no silent truncation, no second scan for the cap."""

@@ -242,7 +242,7 @@ def rolling_fingerprint(df: DataFrame, text_col: str = "text", window: int = 4) 
     Higher-order functions evaluate interpreted (no codegen), so per-row
     cost is high enough that partition parallelism is the whole game --
     spread() guards the single-partition small-file case (found via
-    tools/scale_probe.py: 12.8s serial vs ~1s spread at sf0.1).
+    SCALE_PROBE.md at `f2504d4`: 12.8s serial vs ~1s spread at sf0.1).
 
     Window hashes are built as a zip-chain over shifted slices of the
     code array: ``h_j = (h_{j-1} * B + c_{i+j}) % M`` zipped positionally
@@ -258,7 +258,7 @@ def rolling_fingerprint(df: DataFrame, text_col: str = "text", window: int = 4) 
     (~window+2 times) and interpreted HOF evaluation re-runs each copy
     per row; CollapseProject keeps the two projections separate because
     the alias is non-cheap and multiply-referenced.  Found via
-    tools/scale_probe.py: 3.92x wall at 10x data inlined (the worst
+    SCALE_PROBE.md at `f2504d4`: 3.92x wall at 10x data inlined (the worst
     non-quadratic ratio in the round-5 table) vs ~1.3x materialized."""
     from kcl_akka_stream_spark.plans.hygiene import spread
 

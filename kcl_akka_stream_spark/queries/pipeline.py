@@ -1835,7 +1835,8 @@ def emb_near_dup_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of freezing at a constant; blocks over the cap are dropped whole
     # before pair generation (logged, never silent) -- the same
     # deterministic bounded-fan-out discipline as the MinHash hot-bucket
-    # cap (tools/scale_probe.py: uncapped 4-dim went 45x wall at 10x data).
+    # cap (SCALE_PROBE.md at `f2504d4`: uncapped 4-dim went 45x wall at 10x
+    # data).
     return S.embedding_near_dup_pairs(
         tbl(spark, sf_dir, "embeddings"),
         threshold=0.35,
@@ -8824,8 +8825,8 @@ def _wav_oracle() -> str:
 
 
 def _wav_media(docs: DataFrame) -> DataFrame:
-    """Deterministic WAV fixture build (shared by the query and
-    tools/scale_probe.py): payload per doc, every 13th corrupted."""
+    """Deterministic WAV fixture build: payload per doc, every 13th
+    corrupted."""
 
     def le(v: str, w: int) -> str:
         h = f"lpad(hex({v}), {w * 2}, '0')"
@@ -8952,8 +8953,8 @@ def _mp4_oracle() -> str:
 
 
 def _mp4_media(docs: DataFrame) -> DataFrame:
-    """Deterministic faststart-MP4 fixture build (shared by the query and
-    tools/scale_probe.py): payload per doc, every 11th corrupted."""
+    """Deterministic faststart-MP4 fixture build: payload per doc, every
+    11th corrupted."""
 
     def be(v: str, w: int) -> str:
         return f"unhex(lpad(hex({v}), {w * 2}, '0'))"
@@ -9163,8 +9164,8 @@ def pipeline_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _png_media(docs: DataFrame) -> DataFrame:
-    """Deterministic PNG IHDR fixture build (shared by the query and
-    tools/scale_probe.py): payload per doc, every 17th corrupted."""
+    """Deterministic PNG IHDR fixture build: payload per doc, every 17th
+    corrupted."""
 
     def be(v: str, w: int) -> str:
         return f"unhex(lpad(hex({v}), {w * 2}, '0'))"
@@ -9910,11 +9911,11 @@ def _jpeg_oracle(max_segments: int = 6) -> str:
 
 
 def _jpeg_media(docs: DataFrame) -> DataFrame:
-    """Deterministic JPEG fixture build (shared by the query and
-    tools/scale_probe.py): JFIF APP0 + 0..2 DQT filler segments + SOF0
-    or SOF2, dims/kind/components derived from doc_id; every 19th doc
-    corrupted.  The VARIABLE filler count is the point: the SOF lands
-    at a data-dependent offset, so only a real segment walk parses it."""
+    """Deterministic JPEG fixture build: JFIF APP0 + 0..2 DQT filler
+    segments + SOF0 or SOF2, dims/kind/components derived from doc_id;
+    every 19th doc corrupted.  The VARIABLE filler count is the point: the
+    SOF lands at a data-dependent offset, so only a real segment walk
+    parses it."""
     p = docs.select(
         "doc_id",
         "text",
@@ -10066,11 +10067,10 @@ def _mp3_oracle() -> str:
 
 
 def _mp3_media(docs: DataFrame) -> DataFrame:
-    """Deterministic MP3 fixture build (shared by the query and
-    tools/scale_probe.py): optional ID3v2 tag (variable syncsafe body
-    size -- the first audio frame lands at a data-dependent offset) +
-    n_frames Layer III frames of the exact frame-equation size; every
-    23rd doc corrupted."""
+    """Deterministic MP3 fixture build: optional ID3v2 tag (variable
+    syncsafe body size -- the first audio frame lands at a data-dependent
+    offset) + n_frames Layer III frames of the exact frame-equation size;
+    every 23rd doc corrupted."""
     br_case = (
         "CASE br_idx WHEN 1 THEN 32 WHEN 2 THEN 40 WHEN 3 THEN 48"
         " WHEN 4 THEN 56 WHEN 5 THEN 64 WHEN 6 THEN 80 WHEN 7 THEN 96"

@@ -48,7 +48,7 @@ def get_session(app_name: str = "kcl_akka_stream_spark", *, shuffle_partitions: 
         # Arrow batch size for the Python data plane (Pandas UDFs and the
         # Python DataSource): measured sweep at 2M rows through the
         # envelope_sim streaming source + watermarked window (VERDICT r8
-        # #8, tools/scale_probe.py::arrow_batch_sweep): 2k = 64k rows/s,
+        # #8, SCALE_PROBE.md at `f2504d4`): 2k = 64k rows/s,
         # 10k = 91k, 25k = 92k, 50k = 88k, 100k = 95-97k.  The curve
         # plateaus past 10k; 100k wins the head-to-head re-run and
         # minimizes per-batch IPC/flush overhead, while 64-dim float

@@ -74,8 +74,6 @@ def _file_key(path: str) -> tuple[str, int, int]:
 
 
 def _read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
-    if os.environ.get("SPARK_GRAFT_NO_SCHEMA_CACHE"):  # A/B kill-switch
-        return spark.read.parquet(path)
     key = _file_key(path)
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
@@ -89,16 +87,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if not os.environ.get("SPARK_GRAFT_NO_SCHEMA_CACHE"):
-        per_session = _DF_CACHE.setdefault(spark, {})
-        dfk = (name, *_file_key(path))
-        cached = per_session.get(dfk)
-        if cached is not None:
-            return cached
-        df = _load_table_uncached(spark, path, name)
-        per_session[dfk] = df
-        return df
-    return _load_table_uncached(spark, path, name)
+    per_session = _DF_CACHE.setdefault(spark, {})
+    dfk = (name, *_file_key(path))
+    cached = per_session.get(dfk)
+    if cached is None:
+        cached = per_session[dfk] = _load_table_uncached(spark, path, name)
+    return cached
 
 
 def _load_table_uncached(spark: SparkSession, path: str, name: str) -> DataFrame:

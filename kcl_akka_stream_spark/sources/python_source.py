@@ -149,7 +149,7 @@ class _BatchReader(DataSourceReader):
 
 
 #: Generator-side RecordBatch size for the Arrow fast path ("arrow_chunk"
-#: source option).  Swept r10 (tools/scale_probe.py::arrow_chunk_sweep) at
+#: source option).  Swept r10 (SCALE_PROBE.md at `f2504d4`) at
 #: the r9-tuned maxRecordsPerBatch=100k on the 2M-row RocksDB streaming
 #: pipeline: 1,024 collapses to ~25k rows/s (per-batch build overhead:
 #: one python-list -> pa.array pass per column per chunk); everything
@@ -250,10 +250,10 @@ class _StreamReader(DataSourceStreamReader):
     def read(self, partition: _ShardRange):
         # arrow=true: same RecordBatch fast path as the batch reader --
         # micro-batch rows cross the Python/JVM boundary as columnar
-        # buffers instead of per-row pickles.  tools/scale_probe.py's
-        # streaming probe measures ~1.7x end-to-end pipeline throughput
-        # (45k vs 27k rows/s incl. windowed agg; the source-only gain is
-        # larger but the stateful stages cap the pipeline).
+        # buffers instead of per-row pickles.  The streaming probe in
+        # SCALE_PROBE.md at `f2504d4` measured ~1.7x end-to-end pipeline
+        # throughput (45k vs 27k rows/s incl. windowed agg; the source-only
+        # gain is larger but the stateful stages cap the pipeline).
         if self._arrow:
             yield from _arrow_batches(partition, self._chunk)
             return

@@ -1,0 +1,167 @@
+"""Time registry queries by name, at 1x or at 1x and Nx the fixture.
+
+Usage: python tools/probe.py [sf_dir] [--scale N] name [name ...]
+
+One Spark session.  For each name: clearCache and a JVM GC, one warm-up,
+then REPS timed noop writes of ``QUERIES[name](spark, sf_dir)``.  Prints
+the median, every run, and Spark jobs per run (the DAG scheduler's job-id
+delta, so eager checkpoints, dims probes and collects all count, which
+``explain()`` does not show).  A query that raises prints ``FAILED`` and
+the run goes on; the exit code is 1 if any query failed.
+
+``--scale N`` writes an N-times copy of sf_dir once (``write_scaled``),
+into a temp directory removed at exit, times every name on both
+directories and prints the Nx/1x wall and jobs ratios.  A wall ratio
+near 1 means fixed per-query cost dominates; near N means linear; well
+above N means a superlinear plan.
+
+Not the bench: numbers printed here never enter BENCH_DETAIL.jsonl, and
+comparing one commit against another is perfbench/'s job.
+"""
+
+from __future__ import annotations
+
+import os
+import shutil
+import statistics
+import sys
+import tempfile
+import time
+import traceback
+from functools import reduce
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from kcl_akka_stream_spark.sources.batch import DEFAULT_SF_DIR, TABLE_NAMES, load_table
+
+REPS = 3
+#: Replica i shifts every id by i * ID_STRIDE; fixture ids stay below it.
+ID_STRIDE = 10_000_000
+VOWELS = "aeiou"
+CONSONANTS = "bcdfghjklmnpqrstvwxz"
+
+
+def _replica(name: str, df: DataFrame, i: int) -> DataFrame:
+    """Replica ``i`` of one table: ids shifted out of every other
+    replica's range, content perturbed so replicas stay distinct."""
+    shift = F.lit(i * ID_STRIDE)
+    if name == "documents":
+        # The perturbation must be injective per replica.  Rotating vowels
+        # by i % 5 alone made replicas i and i + 5 byte-identical, so a 10x
+        # corpus carried 25k built-in exact-dup pairs; rotating consonants
+        # by i // 5 as well keeps all n <= 100 replicas distinct.
+        # translate() maps one char to one char, so n_chars stays true.
+        rot = VOWELS[i % 5 :] + VOWELS[: i % 5]
+        c = (i // 5) % len(CONSONANTS)
+        crot = CONSONANTS[c:] + CONSONANTS[:c]
+        text = F.translate(F.translate("text", VOWELS, rot), CONSONANTS, crot)
+        return df.withColumns({"doc_id": F.col("doc_id") + shift, "text": text})
+    if name == "embeddings":
+        # x + i * 1e-4 widens the elements to double; cast back.
+        emb = F.transform("embedding", lambda x: x + F.lit(i * 1e-4))
+        return df.withColumns({
+            "vec_id": F.col("vec_id") + shift,
+            "embedding": emb.cast("array<float>"),
+        })
+    # events: disjoint user ids, so user-keyed windows do not widen per user
+    return df.withColumns({
+        "event_id": F.col("event_id") + shift,
+        "user_id": F.col("user_id") + shift,
+    })
+
+
+def write_scaled(spark: SparkSession, src: str, dst: str, n: int) -> None:
+    """Write an n-times copy of fixture dir ``src`` into ``dst``, each
+    table as one ``<table>.parquet`` file like the fixture: the loader
+    caches and the IVF index key on one file's identity, and the
+    streaming twins glob ``<table>.[p]arquet``.  documents, embeddings
+    and events are replicated (``_replica``); every other table is a
+    byte copy."""
+    for name in TABLE_NAMES:
+        out = os.path.join(dst, f"{name}.parquet")
+        if name not in ("documents", "embeddings", "events"):
+            shutil.copyfile(os.path.join(src, f"{name}.parquet"), out)
+            continue
+        base = load_table(spark, src, name)
+        scaled = reduce(DataFrame.unionByName, [_replica(name, base, i) for i in range(n)])
+        stage = os.path.join(dst, f"_{name}_stage")
+        scaled.coalesce(1).write.parquet(stage)
+        (part,) = [f for f in os.listdir(stage) if f.endswith(".parquet")]
+        os.replace(os.path.join(stage, part), out)
+        shutil.rmtree(stage)
+
+
+def _timed(spark: SparkSession, name: str, sf_dir: str, tag: str) -> tuple[float, float] | None:
+    """Time one query and print its line: (median, jobs per run), or None
+    after printing FAILED if it raised."""
+    from kcl_akka_stream_spark.queries import QUERIES
+
+    def run() -> None:
+        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    try:
+        spark.catalog.clearCache()
+        spark.sparkContext._jvm.System.gc()
+        run()
+        j0 = dag.nextJobId()
+        times = []
+        for _ in range(REPS):
+            t0 = time.perf_counter()
+            run()
+            times.append(time.perf_counter() - t0)
+    except Exception as e:  # report and go on to the next query
+        traceback.print_exc()
+        msg = (str(e).strip().splitlines() or [""])[0]
+        print(f"{name}{tag}: FAILED {type(e).__name__}: {msg}", flush=True)
+        return None
+    med, jobs = statistics.median(times), (dag.nextJobId() - j0) / REPS
+    runs = " ".join(f"{t:.3f}" for t in times)
+    print(f"{name}{tag}: median {med:.3f}s  jobs/run {jobs:.1f}  runs {runs}", flush=True)
+    return med, jobs
+
+
+def main() -> int:
+    args = sys.argv[1:]
+    sf_dir = args.pop(0) if args and os.path.isdir(args[0]) else DEFAULT_SF_DIR
+    scale = None
+    if args[:1] == ["--scale"] and len(args) > 1:
+        scale, args = int(args[1]), args[2:]
+    if not args or args[0].startswith("-") or (scale is not None and scale < 1):
+        print(__doc__.split("\n\n")[1], file=sys.stderr)
+        return 2
+
+    from kcl_akka_stream_spark.session import get_session
+
+    spark = get_session("probe")
+    print(f"# {spark.sparkContext.master} on {os.cpu_count()} CPUs, {sf_dir}", flush=True)
+    if scale is None:
+        results = [_timed(spark, name, sf_dir, "") for name in args]
+        return int(None in results)
+
+    failed = False
+    scaled_dir = tempfile.mkdtemp(prefix=f"probe_x{scale}_")
+    try:
+        t0 = time.perf_counter()
+        write_scaled(spark, sf_dir, scaled_dir, scale)
+        print(f"# {scale}x fixture written in {time.perf_counter() - t0:.1f}s", flush=True)
+        for name in args:
+            one = _timed(spark, name, sf_dir, " [1x]")
+            big = _timed(spark, name, scaled_dir, f" [{scale}x]")
+            if one is None or big is None:
+                failed = True
+                continue
+            print(
+                f"{name}: wall ratio {big[0] / one[0]:.2f}  jobs ratio {big[1] / one[1]:.2f}",
+                flush=True,
+            )
+    finally:
+        shutil.rmtree(scaled_dir, ignore_errors=True)
+    return int(failed)
+
+
+if __name__ == "__main__":
+    raise SystemExit(main())
