@@ -93,6 +93,5 @@ class ConsumerConfig:
         elif self.initial_position == InitialPosition.TRIM_HORIZON:
             opts["startingPosition"] = "trim_horizon"
         else:
-            assert self.at_timestamp is not None
             opts["startingPosition"] = self.at_timestamp.isoformat()
         return opts

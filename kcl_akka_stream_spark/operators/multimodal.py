@@ -18,28 +18,6 @@ from typing import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-#: Typed metadata carried next to the opaque payload.
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
-        T.StructField("payload", T.BinaryType(), False),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("sample_rate", T.IntegerType(), True),
-                    T.StructField("n_frames", T.IntegerType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
 
 FEATURE_SCHEMA = "media_id long, kind string, n_bytes long, digest string, feature array<double>"
 

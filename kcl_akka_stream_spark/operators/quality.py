@@ -54,36 +54,6 @@ _TOKEN_RE = re.compile(X.TOKEN_PATTERN)
 _ALPHA_RE = re.compile("[a-z]")
 
 
-def _grams(toks: Column, n: int) -> Column:
-    """Overlapping word n-grams of a token array (empty below n tokens).
-
-    Expression-level reference implementation, property-tested against a
-    Python model in tests/test_properties.py and used by callers that
-    need grams as a COLUMN (decontamination overlap).  The quality gate
-    itself computes gram statistics in the Arrow pass below — this HOF
-    chain evaluates interpreted (never codegen), which is exactly the
-    cold-JVM cliff the mapInPandas path exists to avoid.
-
-    Built by zipping the array with its own shifted slices — the array
-    arguments are evaluated once per ROW.  The tempting alternative,
-    ``transform(sequence(...), i -> element_at(toks, i))``, puts ``toks``
-    inside the lambda body, where Catalyst re-evaluates the underlying
-    expression PER ELEMENT (no CSE across lambda bodies); with tokens
-    coming from regexp_extract_all that made gram construction quadratic
-    in document length (observed 25 s vs ~1 s at sf0.1)."""
-    size = F.size(toks)
-    g = toks
-    for j in range(1, n):
-        g = F.zip_with(
-            g,
-            F.slice(toks, j + 1, size),
-            lambda x, y: F.concat_ws(" ", x, y),
-        )
-    return F.when(size >= n, F.slice(g, 1, size - (n - 1))).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def structural_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Map-only structural metrics: word count, mean word length,
     alphabetic-word fraction.  Zero shuffle.

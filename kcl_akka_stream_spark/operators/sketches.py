@@ -404,16 +404,14 @@ def bitmap_set_ops(a_state: DataFrame, b_state: DataFrame) -> DataFrame:
     )
 
 
-def hll_registers(
-    df: DataFrame, group_col: str, id_col: str, p: int = 6, seed: str = "hll"
-) -> DataFrame:
-    """HyperLogLog register relation (Flajolet et al. 2007, public): m=2^p
+def hll_registers(df: DataFrame, group_col: str, id_col: str) -> DataFrame:
+    """HyperLogLog register relation (Flajolet et al. 2007, public): m=64
     registers per group, each holding the MAX leading-zero rank seen in
     its hash bucket.  Deterministic + cross-engine exact: the hash is the
-    15-hex (60-bit) seeded md5 prefix; bucket j = the top p bits, payload
-    w = the low (60-p) bits, and rho(w) = leading zeros of w within its
-    (60-p)-bit field + 1 -- computed WITHOUT log2 (whose libm rounding
-    differs at powers of two) as ``(60-p+1) - length(bin(w))``, since
+    15-hex (60-bit) md5 prefix of ``'hll|' || id``; bucket j = the top 6
+    bits, payload w = the low 54 bits, and rho(w) = leading zeros of w
+    within its 54-bit field + 1 -- computed WITHOUT log2 (whose libm
+    rounding differs at powers of two) as ``55 - length(bin(w))``, since
     both engines' ``bin()`` prints the minimal binary string.  Register
     max is a JOIN-SEMILATTICE: per-partition / per-micro-batch registers
     merge by MAX into exactly the whole-data registers, and a replayed
@@ -422,10 +420,10 @@ def hll_registers(
 
     Scale shape: one map-side hash + ONE (group, j) aggregation;
     downstream sees <= m rows per group, never the data."""
-    m_low = 1 << (60 - p)
-    rho_full = 60 - p + 1
+    m_low = 1 << 54
+    rho_full = 55
     h = F.expr(
-        f"cast(conv(substring(md5(concat('{seed}|', cast({id_col} as"
+        f"cast(conv(substring(md5(concat('hll|', cast({id_col} as"
         f" string))), 1, 15), 16, 10) as bigint)"
     )
     return (
@@ -454,8 +452,9 @@ def hll_registers(
     )
 
 
-def hll_estimate(registers: DataFrame, group_col: str, p: int = 6) -> DataFrame:
-    """HLL cardinality estimate from a (group, j, m_r) register relation.
+def hll_estimate(registers: DataFrame, group_col: str) -> DataFrame:
+    """HLL cardinality estimate from ``hll_registers``' (group, j, m_r)
+    relation, m=64.
 
     Integer-held harmonic mean: the indicator sum 2^(-M_j) is rescaled by
     the FIXED payload field width 2^55 (rho <= 55 always), so
@@ -468,7 +467,6 @@ def hll_estimate(registers: DataFrame, group_col: str, p: int = 6) -> DataFrame:
     COUNTING correction applies when raw <= 2.5m and empty registers
     remain: m * ln(m/V), micro-nat frozen (the one transcendental,
     per-group, flip risk ~1e-10)."""
-    assert p == 6, "constants below are frozen for m=64"
     agg = registers.groupBy(group_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_registers_set"),
         (F.lit(64) - F.count(F.lit(1))).cast("long").alias("v_zeros"),

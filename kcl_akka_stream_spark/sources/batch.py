@@ -28,9 +28,6 @@ TABLE_NAMES = [
     "embeddings",
 ]
 
-#: Small dimension tables -- always broadcast-join these at any scale factor.
-SMALL_DIMS = {"region", "nation"}
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 #: Optimization r15 (guide §1/§5 -- driver-side work in the timed path):

@@ -77,6 +77,13 @@ class CommitTracker:
         return entry
 
 
+def _write_commit(commit_dir: str, entry: dict) -> None:
+    """The external commit write: one JSON file per commit point."""
+    path = os.path.join(commit_dir, f"commit-{entry['epoch_id']:010d}.json")
+    with open(path, "w") as f:
+        json.dump(entry, f)
+
+
 def committing_foreach_batch(
     process: Callable[[DataFrame, int], None],
     tracker: CommitTracker,
@@ -88,23 +95,18 @@ def committing_foreach_batch(
 
     ``commit_dir`` receives one JSON file per commit point -- the analogue
     of the reference's DynamoDB checkpoint row (the per-batch WAL/commit
-    log is Spark's own, in checkpointLocation).
+    log is Spark's own, in checkpointLocation).  Every due commit goes
+    through ``commit_with_taxonomy``: a throttled write keeps the point
+    pending and the stream goes on, a shutdown race is ignored, anything
+    else fails the batch with ``CommitAbort``.
     """
     if mode not in ("at-least-once", "no-guarantees"):
         raise ValueError("mode must be 'at-least-once' or 'no-guarantees'")
     os.makedirs(commit_dir, exist_ok=True)
 
-    def write_commit(entry: dict) -> None:
-        path = os.path.join(commit_dir, f"commit-{entry['epoch_id']:010d}.json")
-        with open(path, "w") as f:
-            json.dump(entry, f)
-
-    def attempt(epoch_id: int, n: int) -> None:
-        # write-then-record: the tracker only learns of the commit after the
-        # external write succeeds, so a failure keeps the point pending (C4).
-        entry = tracker.mark(epoch_id, n)
-        write_commit({**entry, "at": time.time()})
-        tracker.commit(epoch_id, n)
+    def write(entry: dict) -> None:
+        # resolved per call, so a test can substitute a failing store
+        _write_commit(commit_dir, entry)
 
     def run(batch_df: DataFrame, epoch_id: int) -> None:
         # one source scan per epoch: cache the batch before the count action
@@ -118,12 +120,12 @@ def committing_foreach_batch(
                 # work -- under the SAME C3 cadence as at-least-once (the
                 # reference's modes differ only in ordering).
                 if tracker.observe(n):
-                    attempt(epoch_id, n)
+                    commit_with_taxonomy(tracker, epoch_id, n, write=write)
                 process(batch_df, epoch_id)
                 return
             process(batch_df, epoch_id)
             if tracker.observe(n):
-                attempt(epoch_id, n)
+                commit_with_taxonomy(tracker, epoch_id, n, write=write)
         finally:
             batch_df.unpersist()
 

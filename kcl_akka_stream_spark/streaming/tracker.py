@@ -12,22 +12,25 @@ Semantics reproduced per shard:
 - gauges: processed-but-not-checkpointed count and in-flight count
   (RecordProcessorImpl.scala:30-37).
 
-State is COMPACTED each micro-batch, mirroring the reference's
-``popProcessedRecords`` (RecordProcessorImpl.scala:73-78): after the
-frontier advances, every record with ``seq <= frontier`` is evicted and the
-state keeps only (frontier_seq, records above the frontier) -- the un-acked
-window plus processed records blocked behind a gap.  A never-acked record
-still pins its successors, the reference's DOCUMENTED failure mode
-(README.md:104-108: a lost ack blocks the checkpoint forever and state
-grows with the stream).  This engine improves on that leak with an
-optional ``max_pending`` bound (``streaming_checkpoint_frontier``): when a
-shard's kept window exceeds the bound, the oldest blocking record is
-force-evicted (the frontier advances past it) and the cumulative
-``evicted_count`` gauge reports every record whose at-least-once guarantee
-was given up -- a bounded-state/bounded-loss trade the operator surfaces
-LOUDLY instead of leaking.  Shards are independent groups so state
-shuffles once by shard key and lives in the state store across
-micro-batches.
+State is COMPACTED each micro-batch by ONE vectorized scan, ``_advance``,
+mirroring the reference's ``popProcessedRecords``
+(RecordProcessorImpl.scala:73-78): acks OR together per seq, the head is
+the first unprocessed seq, the frontier advances to the seq just before
+it, and the state keeps only (frontier_seq, head and everything after it)
+-- the un-acked window plus processed records blocked behind a gap.  A
+never-acked record still pins its successors, the reference's DOCUMENTED
+failure mode (README.md:104-108: a lost ack blocks the checkpoint forever
+and state grows with the stream).  This engine improves on that leak with
+an optional ``max_pending`` bound (``streaming_checkpoint_frontier``): when
+a shard's kept window exceeds the bound, blocking records are force-evicted
+oldest first (the frontier advances past each and over what it pinned)
+until the window fits.  The same scan computes that in closed form -- the
+head moves to the first unprocessed index ``i`` with ``n - i <=
+max_pending`` -- and the cumulative ``evicted_count`` gauge reports every
+record whose at-least-once guarantee was given up: a
+bounded-state/bounded-loss trade the operator surfaces LOUDLY instead of
+leaking.  Shards are independent groups so state shuffles once by shard
+key and lives in the state store across micro-batches.
 
 The kept window is stored as two ``binary`` state fields -- ``seqs`` packed
 little-endian int64, ``procs`` packed bool -- decoded with ``np.frombuffer``
@@ -44,7 +47,7 @@ them over on a fresh ``checkpointLocation``.
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
+from typing import Iterator, Tuple
 
 import numpy as np
 import pandas as pd
@@ -96,82 +99,43 @@ EVICTING_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _frontier(seqs: list, procs: list) -> Tuple[Any, int, int]:
-    """(frontier_seq|None, processed_uncheckpointed, in_flight) from the
-    accumulated per-shard record set -- the popProcessedRecords scan."""
-    order = sorted(range(len(seqs)), key=lambda i: seqs[i])
-    frontier = None
-    blocked = False
-    processed_behind = 0
-    in_flight = 0
-    for i in order:
-        if procs[i]:
-            if blocked:
-                processed_behind += 1
-            else:
-                frontier = seqs[i]
-        else:
-            blocked = True
-            in_flight += 1
-    return frontier, processed_behind, in_flight
-
-
 def _advance(
-    frontier: int, seqs: list, procs: list
-) -> Tuple[int, list, list, int, int]:
-    """popProcessedRecords (RecordProcessorImpl.scala:73-78): advance the
-    frontier over the leading contiguous processed run (in seq order, above
-    the stored frontier) and EVICT everything at or below it.  Returns
-    (frontier, kept_seqs, kept_procs, processed_behind_gap, in_flight);
-    kept = the first unprocessed record and everything after it -- the
-    un-acked window, exactly what the reference's Queue retains after the
-    pop.
+    frontier: int, seqs: np.ndarray, procs: np.ndarray, max_pending: int | None
+) -> Tuple[int, np.ndarray, np.ndarray, int, int, int]:
+    """popProcessedRecords (RecordProcessorImpl.scala:73-78) as one scan
+    over the shard's records (int64 ``seqs``, bool ``procs``): advance the
+    frontier over the leading contiguous processed run in seq order and
+    EVICT everything before the head, the first unprocessed record.
+    Returns (frontier, kept_seqs, kept_procs, processed_behind_gap,
+    in_flight, evicted_now); kept = the head and everything after it --
+    the un-acked window, exactly what the reference's Queue retains after
+    the pop.
 
     A second row for an already-tracked seq is the ack: the reference's ack
     completes the tracked record's future in place
     (KinesisRecord.markProcessed), so processed flags OR together per seq
-    rather than tracking a duplicate."""
-    acked: dict = {}
-    for s, p in zip(seqs, procs):
-        acked[s] = acked.get(s, False) or p
-    blocked = False
-    processed_behind = 0
-    in_flight = 0
-    kept_seqs: list = []
-    kept_procs: list = []
-    for s in sorted(acked):
-        p = acked[s]
-        if not blocked and p:
-            frontier = max(frontier, s)
-            continue
-        if p:
-            processed_behind += 1
-        else:
-            blocked = True
-            in_flight += 1
-        kept_seqs.append(s)
-        kept_procs.append(p)
-    return frontier, kept_seqs, kept_procs, processed_behind, in_flight
+    rather than tracking a duplicate.
 
-
-def _evict_over_bound(
-    frontier: int, seqs: list, procs: list, max_pending: int
-) -> Tuple[int, list, list, int, int, int]:
-    """Bound the kept window: while it exceeds ``max_pending``, force-evict
-    the oldest record (after ``_advance`` the head is always the blocking
-    unprocessed one), advance the frontier past it, and re-run the
-    contiguous-prefix advance over whatever it was pinning.  Returns
-    (frontier, seqs, procs, processed_behind, in_flight, evicted_now)."""
-    evicted = 0
-    processed_behind = sum(1 for p in procs if p)
-    in_flight = len(procs) - processed_behind
-    while len(seqs) > max_pending:
-        frontier = max(frontier, seqs[0])
-        evicted += 1
-        frontier, seqs, procs, processed_behind, in_flight = _advance(
-            frontier, seqs[1:], procs[1:]
-        )
-    return frontier, seqs, procs, processed_behind, in_flight, evicted
+    ``max_pending`` (None = unbounded) bounds the kept window.  Evicting
+    the head one at a time and re-advancing over the processed run it
+    pinned ends at a closed form: the head moves to the first unprocessed
+    index ``i`` with ``n - i <= max_pending`` (or to ``n``), and every
+    unprocessed record it passes is force-evicted and counted."""
+    uniq, inverse = np.unique(seqs, return_inverse=True)
+    acked = np.zeros(len(uniq), dtype=np.bool_)
+    acked[inverse[procs]] = True
+    n = len(uniq)
+    pending = np.flatnonzero(~acked)
+    head = int(pending[0]) if len(pending) else n
+    evicted_now = 0
+    if max_pending is not None and n - head > max_pending:
+        evicted_now = int(np.searchsorted(pending, n - max_pending))
+        head = int(pending[evicted_now]) if evicted_now < len(pending) else n
+    if head > 0:
+        frontier = max(frontier, int(uniq[head - 1]))
+    in_flight = len(pending) - evicted_now
+    processed_behind = n - head - in_flight
+    return frontier, uniq[head:], acked[head:], processed_behind, in_flight, evicted_now
 
 
 def _make_track(max_pending: int | None):
@@ -193,27 +157,23 @@ def _make_track(max_pending: int | None):
                     "a separate evicted_count field).  Resume with the same "
                     "max_pending setting, or start a fresh checkpoint location."
                 )
-            if evicting:
-                frontier, seqs_b, procs_b, n_updates, n_evicted = got
-            else:
-                frontier, seqs_b, procs_b, n_updates = got
-                n_evicted = 0
-            seqs = np.frombuffer(seqs_b, dtype="<i8").tolist()
-            procs = np.frombuffer(procs_b, dtype=np.bool_).tolist()
+            frontier, seqs_b, procs_b, n_updates, *rest = got
+            n_evicted = rest[0] if evicting else 0
         else:
-            frontier, seqs, procs, n_updates, n_evicted = _NO_FRONTIER, [], [], 0, 0
+            frontier, seqs_b, procs_b, n_updates, n_evicted = _NO_FRONTIER, b"", b"", 0, 0
+        seqs = [np.frombuffer(seqs_b, dtype="<i8")]
+        procs = [np.frombuffer(procs_b, dtype=np.bool_)]
         for pdf in pdfs:
-            seqs.extend(int(s) for s in pdf["seq"])
-            procs.extend(bool(p) for p in pdf["processed"])
-        frontier, seqs, procs, processed_behind, in_flight = _advance(frontier, seqs, procs)
-        if evicting:
-            frontier, seqs, procs, processed_behind, in_flight, evicted_now = (
-                _evict_over_bound(frontier, seqs, procs, max_pending)
-            )
-            n_evicted += evicted_now
+            # astype raises on a null seq; a null ack counts as unprocessed
+            seqs.append(pdf["seq"].astype(np.int64).to_numpy())
+            procs.append(pdf["processed"].to_numpy(dtype=np.bool_, na_value=False))
+        frontier, kept_seqs, kept_procs, processed_behind, in_flight, evicted_now = _advance(
+            frontier, np.concatenate(seqs), np.concatenate(procs), max_pending
+        )
+        n_evicted += evicted_now
         n_updates += 1
-        seqs_b = np.asarray(seqs, dtype="<i8").tobytes()
-        procs_b = np.asarray(procs, dtype=np.bool_).tobytes()
+        seqs_b = np.asarray(kept_seqs, dtype="<i8").tobytes()
+        procs_b = kept_procs.tobytes()
         if evicting:
             state.update((frontier, seqs_b, procs_b, n_updates, n_evicted))
         else:
@@ -230,11 +190,6 @@ def _make_track(max_pending: int | None):
         yield pd.DataFrame([row])
 
     return _track
-
-
-#: Default kernel (reference semantics, no eviction) -- kept as a module
-#: attribute so checkpointed queries resume against a stable function.
-_track = _make_track(None)
 
 
 def streaming_checkpoint_frontier(
@@ -256,7 +211,7 @@ def streaming_checkpoint_frontier(
     schemas are fixed at first run.  The kernel detects the mismatch and
     raises an actionable error instead of an opaque unpack failure."""
     return df.groupBy("shard_id").applyInPandasWithState(
-        _track if max_pending is None else _make_track(max_pending),
+        _make_track(max_pending),
         outputStructType=(
             OUTPUT_SCHEMA if max_pending is None else EVICTING_OUTPUT_SCHEMA
         ),

@@ -310,3 +310,71 @@ def test_one_source_scan_per_epoch(spark):
         cb(df, 0)
     assert processed == [100]
     assert acc.value == 100  # one scan, not 200
+
+
+def _file_stream(spark, src, n_files):
+    """A real file stream of ``n_files`` 10-row files, one file per trigger."""
+    for i in range(n_files):
+        spark.range(i * 10, i * 10 + 10).coalesce(1).write.mode("append").parquet(src)
+    return spark.readStream.schema("id long").option("maxFilesPerTrigger", 1).parquet(src)
+
+
+def test_live_stream_survives_throttled_commit_writes(spark, tmp_path, monkeypatch):
+    # SURVEY §5.2 scenario 5 on the live path: the checkpoint store
+    # throttles, the reference retries (RecordProcessorImpl.scala:229-241)
+    # and keeps consuming; a later commit lands the newer point.
+    from kcl_akka_stream_spark.streaming import commit as C
+
+    calls = []
+    write = C._write_commit
+
+    def throttled_twice(commit_dir, entry):
+        calls.append(entry["epoch_id"])
+        if len(calls) <= 2:
+            raise C.CommitThrottled("slow down")
+        write(commit_dir, entry)
+
+    monkeypatch.setattr(C, "_write_commit", throttled_twice)
+    t = CommitTracker(ShardCheckpointConfig(checkpoint_period_seconds=1e9,
+                                            checkpoint_after_processing_nr_of_records=1))
+    processed = []
+    commit_dir = str(tmp_path / "commits")
+    cb = committing_foreach_batch(lambda b, e: processed.append(b.count()), t, commit_dir)
+    q = _file_stream(spark, str(tmp_path / "src"), 4).writeStream.foreachBatch(cb).start()
+    try:
+        q.processAllAvailable()
+        assert q.isActive
+    finally:
+        q.stop()
+    assert processed == [10, 10, 10, 10]
+    assert calls == [0, 1, 2, 3]
+    assert [c["epoch_id"] for c in read_commits(commit_dir)] == [2, 3]
+    assert t.commits[-1]["epoch_id"] == 3 and t.pending is None
+
+
+def test_live_stream_aborts_on_unclassified_commit_error(spark, tmp_path, monkeypatch):
+    # Anything outside the throttle/shutdown taxonomy is the reference's
+    # kill switch: the query fails with CommitAbort, caused by the write's
+    # own error.
+    from pyspark.errors import StreamingQueryException
+
+    from kcl_akka_stream_spark.streaming import commit as C
+
+    def corrupt(commit_dir, entry):
+        raise ValueError("disk corrupt")
+
+    monkeypatch.setattr(C, "_write_commit", corrupt)
+    t = CommitTracker(ShardCheckpointConfig(checkpoint_period_seconds=1e9,
+                                            checkpoint_after_processing_nr_of_records=1))
+    cb = committing_foreach_batch(lambda b, e: None, t, str(tmp_path / "commits"))
+    q = _file_stream(spark, str(tmp_path / "src"), 1).writeStream.foreachBatch(cb).start()
+    try:
+        with pytest.raises(StreamingQueryException) as err:
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    msg = str(err.value)
+    assert "ValueError: disk corrupt" in msg
+    assert "direct cause" in msg
+    assert "CommitAbort: disk corrupt" in msg
+    assert t.commits == [] and t.pending == {"epoch_id": 0, "n_records": 10}

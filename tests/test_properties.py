@@ -6,6 +6,7 @@ properties generalize those matrices."""
 
 from __future__ import annotations
 
+import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -13,7 +14,7 @@ from kcl_akka_stream_spark.operators.replay import (
     UnexpectedMessageSequence,
     remove_reprocessed_list,
 )
-from kcl_akka_stream_spark.streaming.tracker import _frontier
+from kcl_akka_stream_spark.streaming.tracker import _NO_FRONTIER, _advance
 
 
 # --- replay acceptance ------------------------------------------------------
@@ -83,6 +84,47 @@ def brute_frontier(seqs, procs):
     return frontier, processed_behind, in_flight
 
 
+def brute_tracker(frontier, seqs, procs, max_pending):
+    """The tracker's documented update, brute force: OR the acks per seq,
+    pop the maximal contiguous processed prefix in seq order, and while
+    more than ``max_pending`` records are kept (None = no bound),
+    force-evict the oldest kept record -- always an unprocessed one --
+    and pop again.  Returns (frontier, kept_seqs, kept_procs,
+    processed_behind, in_flight, evicted)."""
+    acked = {}
+    for s, p in zip(seqs, procs):
+        acked[s] = acked.get(s, False) or p
+    kept = sorted(acked.items())
+    evicted = 0
+    while True:
+        while kept and kept[0][1]:
+            frontier = max(frontier, kept.pop(0)[0])
+        if max_pending is None or len(kept) <= max_pending:
+            break
+        frontier = max(frontier, kept.pop(0)[0])
+        evicted += 1
+    behind = sum(1 for _, p in kept if p)
+    return (
+        frontier,
+        [s for s, _ in kept],
+        [p for _, p in kept],
+        behind,
+        len(kept) - behind,
+        evicted,
+    )
+
+
+def advance(frontier, seqs, procs, max_pending=None):
+    """``_advance`` on plain lists, its arrays returned as lists."""
+    f, kept_seqs, kept_procs, behind, in_flight, evicted = _advance(
+        frontier,
+        np.array(seqs, dtype=np.int64),
+        np.array(procs, dtype=np.bool_),
+        max_pending,
+    )
+    return f, kept_seqs.tolist(), kept_procs.tolist(), behind, in_flight, evicted
+
+
 @given(
     st.lists(
         st.tuples(st.integers(0, 50), st.booleans()), min_size=0, max_size=30, unique_by=lambda t: t[0]
@@ -92,7 +134,24 @@ def brute_frontier(seqs, procs):
 def test_frontier_matches_brute_force(pairs):
     seqs = [s for s, _ in pairs]
     procs = [p for _, p in pairs]
-    assert _frontier(seqs, procs) == brute_frontier(seqs, procs)
+    f, _, _, behind, in_flight, _ = advance(_NO_FRONTIER, seqs, procs)
+    got = (None if f == _NO_FRONTIER else f, behind, in_flight)
+    assert got == brute_frontier(seqs, procs)
+
+
+@given(
+    st.sampled_from([_NO_FRONTIER, -1, 3]),
+    # few distinct seqs, so most lists carry duplicates (ack rows)
+    st.lists(st.tuples(st.integers(0, 12), st.booleans()), max_size=30),
+    st.sampled_from([None, 0, 1, 2, 3, 4, 5]),
+)
+@settings(max_examples=500, deadline=None)
+def test_advance_matches_brute_force_model(frontier, pairs, max_pending):
+    seqs = [s for s, _ in pairs]
+    procs = [p for _, p in pairs]
+    assert advance(frontier, seqs, procs, max_pending) == brute_tracker(
+        frontier, seqs, procs, max_pending
+    )
 
 
 # --- salting equivalence ----------------------------------------------------
@@ -129,8 +188,8 @@ def test_salted_aggregate_equivalence(spark, rows, n_salts):
 # --- compacted tracker vs full-history scan ---------------------------------
 # Under per-shard in-order delivery (the Kinesis contract the reference
 # relies on), iterating the COMPACTING _advance over any batch split must
-# emit exactly what the full-history _frontier computes -- and the retained
-# state must equal the un-acked window.
+# emit exactly what the brute-force scan of the full history computes --
+# and the retained state must equal the un-acked window.
 
 
 @st.composite
@@ -149,13 +208,11 @@ def ordered_batches(draw):
 @given(ordered_batches())
 @settings(max_examples=300, deadline=None)
 def test_advance_iterated_matches_full_history(case):
-    from kcl_akka_stream_spark.streaming.tracker import _NO_FRONTIER, _advance, _frontier
-
     procs, batches = case
     frontier, seqs_kept, procs_kept = _NO_FRONTIER, [], []
     out = None
     for batch in batches:
-        frontier, seqs_kept, procs_kept, behind, in_flight = _advance(
+        frontier, seqs_kept, procs_kept, behind, in_flight, _ = advance(
             frontier,
             seqs_kept + batch,
             procs_kept + [procs[s] for s in batch],
@@ -169,7 +226,7 @@ def test_advance_iterated_matches_full_history(case):
         assert seqs_kept == window
     if out is not None:
         all_seqs = [s for b in batches for s in b]
-        assert out == _frontier(all_seqs, [procs[s] for s in all_seqs])
+        assert out == brute_frontier(all_seqs, [procs[s] for s in all_seqs])
 
 
 # --- zip-chain gram construction -------------------------------------------
@@ -205,24 +262,6 @@ def test_shingles_match_python_reference(spark, text):
     df = spark.createDataFrame([(text,)], "text string")
     got = sorted(df.select(shingles(F.col("text")).alias("s")).collect()[0].s)
     assert got == want
-
-
-@given(_texts)
-@settings(max_examples=20, deadline=None)
-def test_quality_grams_match_python_reference(spark, text):
-    from pyspark.sql import functions as F
-
-    from kcl_akka_stream_spark.operators.quality import _grams
-
-    toks = _py_tokens(text)
-    df = spark.createDataFrame([(text,)], "text string")
-    for n in (2, 3):
-        want = [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
-        want = want if len(toks) >= n else []
-        from kcl_akka_stream_spark.operators.text import tokens as tok_col
-
-        got = df.select(_grams(tok_col(F.col("text")), n).alias("g")).collect()[0].g
-        assert got == want, (n, toks)
 
 
 @given(_texts)

@@ -487,30 +487,42 @@ def test_throttle_trigger_pacing(spark, stream_dir):
     assert all(n == per_chunk for _, n in n_batches)
 
 
+def _advance_lists(frontier, seqs, procs, max_pending=None):
+    """The tracker's ``_advance`` on plain lists, its arrays returned as lists."""
+    import numpy as np
+
+    from kcl_akka_stream_spark.streaming.tracker import _advance
+
+    f, seqs, procs, behind, in_flight, evicted = _advance(
+        frontier, np.array(seqs, dtype=np.int64), np.array(procs, dtype=bool), max_pending
+    )
+    return f, seqs.tolist(), procs.tolist(), behind, in_flight, evicted
+
+
 def test_tracker_state_compaction_unit():
     # popProcessedRecords semantics (RecordProcessorImpl.scala:73-78): after
     # each batch the retained state is the un-acked window (first unprocessed
     # record and everything above it), never the records-seen history.
-    from kcl_akka_stream_spark.streaming.tracker import _NO_FRONTIER, _advance
+    from kcl_akka_stream_spark.streaming.tracker import _NO_FRONTIER
 
     # batch 1: seqs 0-3 all processed -> everything evicted
-    f, seqs, procs, behind, in_flight = _advance(_NO_FRONTIER, [0, 1, 2, 3], [True] * 4)
+    f, seqs, procs, behind, in_flight, _ = _advance_lists(_NO_FRONTIER, [0, 1, 2, 3], [True] * 4)
     assert (f, seqs, procs, behind, in_flight) == (3, [], [], 0, 0)
 
     # batch 2: gap at 4; 5,6 processed behind it -> window = [4,5,6]
-    f, seqs, procs, behind, in_flight = _advance(f, seqs + [4, 5, 6], procs + [False, True, True])
+    f, seqs, procs, behind, in_flight, _ = _advance_lists(f, seqs + [4, 5, 6], procs + [False, True, True])
     assert f == 3
     assert seqs == [4, 5, 6] and procs == [False, True, True]
     assert (behind, in_flight) == (2, 1)
 
     # batch 3: more processed above the gap -> window grows only by them
-    f, seqs, procs, behind, in_flight = _advance(f, seqs + [7, 8], procs + [True, True])
+    f, seqs, procs, behind, in_flight, _ = _advance_lists(f, seqs + [7, 8], procs + [True, True])
     assert f == 3
     assert seqs == [4, 5, 6, 7, 8]  # bounded by the un-acked window (5), not 9 seen
     assert (behind, in_flight) == (4, 1)
 
     # the ack arrives for 4 (replayed row, now processed) -> window drains
-    f, seqs, procs, behind, in_flight = _advance(f, seqs + [4], procs + [True])
+    f, seqs, procs, behind, in_flight, _ = _advance_lists(f, seqs + [4], procs + [True])
     assert f == 8
     assert seqs == [] and procs == []
     assert (behind, in_flight) == (0, 0)
@@ -581,22 +593,18 @@ def test_tracker_state_bounded_across_microbatches(spark, tmp_path):
 
 
 def test_tracker_eviction_bound_unit():
-    # _evict_over_bound: the poisoned-shard guard.  A never-acked record
-    # pins its successors (the reference's documented leak, README.md:104-
-    # 108); with a bound, the oldest blocker is force-evicted, the frontier
-    # advances over whatever it pinned, and the loss is counted.
-    from kcl_akka_stream_spark.streaming.tracker import (
-        _NO_FRONTIER,
-        _advance,
-        _evict_over_bound,
-    )
+    # _advance's max_pending bound: the poisoned-shard guard.  A never-acked
+    # record pins its successors (the reference's documented leak,
+    # README.md:104-108); with a bound, the oldest blocker is force-evicted,
+    # the frontier advances over whatever it pinned, and the loss is counted.
+    from kcl_akka_stream_spark.streaming.tracker import _NO_FRONTIER
 
     # poison at 2; 3..9 processed behind it -> window of 8
-    f, seqs, procs, behind, in_flight = _advance(
+    f, seqs, procs, behind, in_flight, _ = _advance_lists(
         _NO_FRONTIER, list(range(10)), [True, True, False] + [True] * 7
     )
     assert f == 1 and len(seqs) == 8
-    f, seqs, procs, behind, in_flight, evicted = _evict_over_bound(
+    f, seqs, procs, behind, in_flight, evicted = _advance_lists(
         f, seqs, procs, max_pending=3
     )
     # evicting the single poison releases the whole pinned run
@@ -604,18 +612,18 @@ def test_tracker_eviction_bound_unit():
     assert (behind, in_flight) == (0, 0)
 
     # under the bound -> untouched, zero evictions
-    f2, seqs2, procs2, behind2, in_flight2 = _advance(9, [10, 11], [False, True])
-    f2, seqs2, procs2, behind2, in_flight2, ev2 = _evict_over_bound(
+    f2, seqs2, procs2, behind2, in_flight2, _ = _advance_lists(9, [10, 11], [False, True])
+    f2, seqs2, procs2, behind2, in_flight2, ev2 = _advance_lists(
         f2, seqs2, procs2, max_pending=3
     )
     assert (f2, seqs2, ev2) == (9, [10, 11], 0)
     assert (behind2, in_flight2) == (1, 1)
 
     # two interleaved poisons over the bound -> both evicted
-    f3, seqs3, procs3, *_ = _advance(
+    f3, seqs3, procs3, *_ = _advance_lists(
         _NO_FRONTIER, list(range(6)), [False, True, True, False, True, True]
     )
-    f3, seqs3, procs3, behind3, in_flight3, ev3 = _evict_over_bound(
+    f3, seqs3, procs3, behind3, in_flight3, ev3 = _advance_lists(
         f3, seqs3, procs3, max_pending=2
     )
     assert (f3, seqs3, ev3) == (5, [], 2)
@@ -799,6 +807,90 @@ def test_tracker_rejects_array_layout_checkpoint(spark, tmp_path):
     finally:
         q.stop()
     assert "STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE" in str(err.value)
+
+
+@pytest.mark.parametrize("max_pending", [None, 3])
+def test_tracker_resumes_state_written_in_the_binary_layout(spark, tmp_path, max_pending):
+    # A hand-made kernel writes the tracker's state exactly as the binary
+    # layout defines it (frontier, seqs packed little-endian int64, procs
+    # packed bool, n_updates[, n_evicted]); the real tracker must resume
+    # that checkpoint and carry on from it.  Guards the field order and the
+    # encoding, which old checkpoints depend on.
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from kcl_akka_stream_spark.streaming.tracker import (
+        EVICTING_OUTPUT_SCHEMA,
+        EVICTING_STATE_SCHEMA,
+        OUTPUT_SCHEMA,
+        STATE_SCHEMA,
+        streaming_checkpoint_frontier,
+    )
+
+    evicting = max_pending is not None
+    output_schema = EVICTING_OUTPUT_SCHEMA if evicting else OUTPUT_SCHEMA
+    src = str(tmp_path / "layout_src")
+    ckpt = str(tmp_path / "layout_ckpt")
+    schema = "shard_id long, seq long, processed boolean"
+    spark.createDataFrame([(1, 0, True)], schema).write.parquet(src)
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+
+    def seed_state(key, pdfs, state):
+        for _ in pdfs:
+            pass
+        # frontier 10; window 12 (un-acked), 13 (acked), 15 (un-acked),
+        # 20 (acked); 7 updates so far; 4 records evicted so far
+        seqs = np.array([12, 13, 15, 20], dtype="<i8").tobytes()
+        procs = np.array([False, True, False, True], dtype=np.bool_).tobytes()
+        state.update((10, seqs, procs, 7) + ((4,) if evicting else ()))
+        row = (int(key[0]), 10, 2, 2, 7) + ((4,) if evicting else ())
+        yield pd.DataFrame([row], columns=output_schema.names)
+
+    def run(df, rows):
+        q = (
+            df.writeStream.outputMode("update")
+            .foreachBatch(lambda b, _: rows.extend(b.collect()))
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    seeded = stream.groupBy("shard_id").applyInPandasWithState(
+        seed_state,
+        outputStructType=output_schema,
+        stateStructType=EVICTING_STATE_SCHEMA if evicting else STATE_SCHEMA,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    run(seeded, [])
+
+    spark.createDataFrame([(1, 16, True)], schema).write.mode("append").parquet(src)
+    rows = []
+    run(streaming_checkpoint_frontier(stream, max_pending=max_pending), rows)
+    (last,) = rows
+    window = (
+        spark.read.format("statestore")
+        .load(ckpt)
+        .selectExpr("value.groupState.seqs AS seqs")
+        .collect()[0]
+        .seqs
+    )
+    kept = np.frombuffer(window, dtype="<i8").tolist()
+    assert last.update_id == 8
+    if evicting:
+        # window 12..20 is 5 > 3: evicting 12 releases 13; 15 blocks again
+        assert (last.frontier_seq, last.processed_uncheckpointed_count) == (13, 2)
+        assert (last.in_flight_count, last.evicted_count) == (1, 5)
+        assert kept == [15, 16, 20]
+    else:
+        # 12 still blocks: the stored frontier holds, 16 joins the window
+        assert (last.frontier_seq, last.processed_uncheckpointed_count) == (10, 3)
+        assert last.in_flight_count == 2
+        assert kept == [12, 13, 15, 16, 20]
 
 
 _ZIP_REREAD_PROBE = r"""
