@@ -1,194 +1,2 @@
-"""Operator library façade: one import point for the engine's public
-operators.  Submodules stay importable directly; this just re-exports the
-stable surface (see COVERAGE.md for the reference-inventory mapping)."""
-
-from kcl_akka_stream_spark.operators.aggregations import (
-    counts,
-    dedup_and_group_by_key,
-    group_by_key,
-    shard_stats,
-)
-from kcl_akka_stream_spark.operators.checkpoint import checkpoint_frontier
-from kcl_akka_stream_spark.operators.dedup import (
-    connected_components,
-    exact_dedup,
-    minhash_candidate_pairs,
-    minhash_lsh_buckets,
-    minhash_signatures,
-    ngram_jaccard_pairs,
-    simhash,
-)
-from kcl_akka_stream_spark.operators.joins import (
-    anti_join,
-    asof_join,
-    equi_join,
-    range_join_bucketed,
-    semi_join,
-)
-from kcl_akka_stream_spark.operators.merges import (
-    demux_process_remux,
-    except_all,
-    intersect_all,
-    merge,
-)
-from kcl_akka_stream_spark.operators.multimodal import (
-    extract_features,
-    frame_sample,
-    resize_images,
-    set_decoder,
-)
-from kcl_akka_stream_spark.operators.projections import (
-    ack_passthrough,
-    decode_json_payload,
-    decode_payload,
-    filter_bootstrap,
-    flatten,
-    grouped,
-)
-from kcl_akka_stream_spark.operators.replay import (
-    UnexpectedMessageSequence,
-    remove_reprocessed,
-)
-from kcl_akka_stream_spark.operators.similarity import (
-    brute_force_topk,
-    brute_force_topk_vectorized,
-    cosine,
-    embedding_near_dup_pairs,
-    ivf_topk,
-    lsh_topk,
-)
-from kcl_akka_stream_spark.operators.sinks import (
-    compact_parquet_dir,
-    keyed_ordered_write,
-    ordered_effect_per_key,
-)
-from kcl_akka_stream_spark.operators.skew import salted_aggregate, salted_join
-from kcl_akka_stream_spark.operators.windows import (
-    limit_n,
-    sessionize,
-    shard_order,
-    top_k_per_group,
-)
-from kcl_akka_stream_spark.operators.text import (
-    bpe_token_count,
-    fingerprint,
-    lang_id,
-    quality_score,
-    rolling_fingerprint,
-    tfidf_topk,
-    token_count,
-)
-from kcl_akka_stream_spark.operators.clustering import (
-    kmeans,
-    kmeans_assign,
-    kmeans_update,
-)
-from kcl_akka_stream_spark.operators.corpus import (
-    chunk_documents,
-    snapshot_diff,
-    decontaminate,
-    dedup_segments,
-    pack_token_budget,
-    redact_pii,
-)
-from kcl_akka_stream_spark.operators.dedup import (
-    verify_candidate_edit_distance,
-    verify_candidate_jaccard,
-)
-from kcl_akka_stream_spark.operators.similarity import quantize_int8
-from kcl_akka_stream_spark.operators.quality import (
-    gopher_quality_flags,
-    repetition_metrics,
-    structural_metrics,
-)
-from kcl_akka_stream_spark.operators.sampling import (
-    rebalance_summary,
-    rebalance_to_weights,
-    stratified_topk_sample,
-)
-from kcl_akka_stream_spark.operators.sketches import (
-    cms_estimate,
-    cms_merge,
-    cms_state,
-    kmv_distinct,
-)
-
-__all__ = [
-    "UnexpectedMessageSequence",
-    "ack_passthrough",
-    "anti_join",
-    "asof_join",
-    "bpe_token_count",
-    "brute_force_topk",
-    "brute_force_topk_vectorized",
-    "checkpoint_frontier",
-    "chunk_documents",
-    "cms_estimate",
-    "cms_merge",
-    "cms_state",
-    "compact_parquet_dir",
-    "connected_components",
-    "cosine",
-    "counts",
-    "decode_json_payload",
-    "decode_payload",
-    "decontaminate",
-    "dedup_and_group_by_key",
-    "dedup_segments",
-    "demux_process_remux",
-    "embedding_near_dup_pairs",
-    "equi_join",
-    "exact_dedup",
-    "except_all",
-    "extract_features",
-    "filter_bootstrap",
-    "fingerprint",
-    "flatten",
-    "frame_sample",
-    "gopher_quality_flags",
-    "group_by_key",
-    "grouped",
-    "intersect_all",
-    "ivf_topk",
-    "keyed_ordered_write",
-    "kmeans",
-    "kmeans_assign",
-    "kmeans_update",
-    "kmv_distinct",
-    "lang_id",
-    "limit_n",
-    "lsh_topk",
-    "merge",
-    "minhash_candidate_pairs",
-    "minhash_lsh_buckets",
-    "minhash_signatures",
-    "ngram_jaccard_pairs",
-    "ordered_effect_per_key",
-    "pack_token_budget",
-    "quality_score",
-    "quantize_int8",
-    "range_join_bucketed",
-    "rebalance_summary",
-    "rebalance_to_weights",
-    "redact_pii",
-    "remove_reprocessed",
-    "repetition_metrics",
-    "resize_images",
-    "rolling_fingerprint",
-    "salted_aggregate",
-    "salted_join",
-    "semi_join",
-    "sessionize",
-    "set_decoder",
-    "shard_order",
-    "shard_stats",
-    "simhash",
-    "snapshot_diff",
-    "stratified_topk_sample",
-    "structural_metrics",
-    "tfidf_topk",
-    "token_count",
-    "top_k_per_group",
-    "verify_candidate_edit_distance",
-    "verify_candidate_jaccard",
-]
+"""Operator library: import each submodule directly (see COVERAGE.md for
+the reference-inventory mapping)."""

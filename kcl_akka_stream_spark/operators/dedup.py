@@ -365,15 +365,14 @@ def ngram_jaccard_pairs(
 
 
 def _mirrored_edge_base(pairs: DataFrame) -> DataFrame:
-    """Checkpointed bidirectional edge base shared by both CC variants
+    """Checkpointed bidirectional edge base of ``connected_components``
     (VERDICT r8 #6 -- the graph.py:28 ``_edge_base`` discipline): the
     candidate-pair subtree (often a whole LSH pipeline) is materialized
     ONCE via an eager localCheckpoint, and the reverse direction is a
-    cheap re-read of the checkpointed blocks -- previously the union's
-    two branches each recomputed the pair pipeline, and the plain
-    variant re-derived it in EVERY propagation round.  The distinct
-    rides the checkpointed relation (callers may feed non-normalized
-    pairs)."""
+    cheap re-read of the checkpointed blocks, so neither the union's two
+    branches nor any propagation round recomputes the pair pipeline.  The
+    distinct rides the checkpointed relation (callers may feed
+    non-normalized pairs)."""
     base = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).localCheckpoint()
@@ -403,45 +402,6 @@ def _restrict_edges_to_nodes(
     )
 
 
-def _cc_run(
-    edges: DataFrame,
-    nodes: DataFrame,
-    id_col: str,
-    step,
-    max_iterations: int,
-    op_name: str,
-    fallback_step=None,
-) -> DataFrame:
-    """Shared CC driver: iterate ONLY over edge-touched nodes, then
-    attach singletons by construction (VERDICT r8 #6's real lever).  A
-    node with no candidate pair can never change label, so carrying the
-    whole corpus through every propagation round is pure waste: the
-    iteration state is EDGE-sized (dup-involved docs), not corpus-sized
-    -- at 100 TB with a few-percent dup rate that is orders of
-    magnitude, and at any scale it turns the per-round joins into
-    broadcast-sized work.  Singletons get ``cluster_id = id`` in one
-    map-only projection at the end."""
-    touched = edges.select(F.col("src").alias("id")).distinct().localCheckpoint()
-    labels = touched.select("id", F.col("id").alias("label"))
-    labels, _ = _cc_loop(
-        lambda ls: step(edges, ls),
-        labels,
-        max_iterations,
-        op_name,
-        fallback_step=(
-            None if fallback_step is None
-            else (lambda ls: fallback_step(edges, ls))
-        ),
-    )
-    out = nodes.select(F.col(id_col)).join(
-        labels.withColumnRenamed("id", id_col), id_col, "left"
-    )
-    return out.select(
-        id_col,
-        F.coalesce(F.col("label"), F.col(id_col)).alias("cluster_id"),
-    )
-
-
 def connected_components(
     pairs: DataFrame,
     nodes: DataFrame,
@@ -458,21 +418,26 @@ def connected_components(
     distributed join+agg and the loop runs O(component diameter) times;
     near-dup graphs are shallow (dup clusters are cliques or near-cliques
     from LSH banding, diameter ~2-3).  localCheckpoint every iteration cuts
-    the lineage so plans stay flat.  At extreme scale the large-star/
-    small-star variant halves rounds; not needed at dup-cluster diameters.
+    the lineage so plans stay flat.
+
+    Only edge-touched nodes iterate: a node with no candidate pair can
+    never change label, so the iteration state is EDGE-sized
+    (dup-involved docs), not corpus-sized, and singletons get
+    ``cluster_id = id`` in one map-only projection at the end.
 
     ``max_iterations`` bounds the CHEAP phase, not the computation
-    (ADVICE r15 #1): if the labels have not converged when it runs out (a
-    pathological long-chain graph, or a runaway candidate generator
-    feeding giant components), the loop continues from the current labels
-    with POINTER-JUMPING rounds (``_cc_step_jump``, O(log remaining-
-    diameter)) for up to another ``max_iterations`` -- component depth is
-    a property of the DATA, and a dedup pipeline must not hard-fail at
-    production scale on one long near-dup chain.  The min-label fixpoint
-    is identical either way (same semilattice, same edges), so results
-    are unchanged for every graph the plain loop could finish.  Only if
-    even pointer jumping cannot converge (diameter > ~2^max_iterations)
-    does the operator raise rather than silently returning HALF-MERGED
+    (ADVICE r15 #1): ``max_iterations`` plain rounds plus one confirmation
+    round (labels that stabilize exactly on the last allowed round are a
+    success).  If the labels still move -- a long near-dup chain, or a
+    runaway candidate generator feeding giant components -- the loop
+    continues from the current labels with POINTER-JUMPING rounds
+    (``_cc_step_jump``, O(log remaining-diameter)) under the same budget:
+    component depth is a property of the DATA, and a dedup pipeline must
+    not hard-fail at production scale on one long chain.  The min-label
+    fixpoint is identical either way (same semilattice, same edges), so
+    shallow graphs pay only the cheaper plain rounds.  Only if even
+    pointer jumping cannot converge (diameter > ~2^max_iterations) does
+    the operator raise rather than silently returning HALF-MERGED
     clusters -- wrong cluster ids in a dedup pipeline mean silently
     dropping the wrong documents downstream.
 
@@ -490,144 +455,85 @@ def connected_components(
     edges = _mirrored_edge_base(pairs)
     if validate_pairs:
         edges = _restrict_edges_to_nodes(edges, nodes, id_col)
-    return _cc_run(
-        edges, nodes, id_col, _cc_step_plain, max_iterations,
-        "connected_components", fallback_step=_cc_step_jump,
-    )
-
-
-def _cc_step_plain(edges, labels):
-    neighbor_min = (
-        edges.join(labels, edges.dst == labels.id)
-        .groupBy("src")
-        .agg(F.min("label").alias("nbr_label"))
-    )
-    staged = (
-        labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-        .select(
-            "id",
-            F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias(
-                "label"
-            ),
-            (F.col("label")).alias("__old"),
+    touched = edges.select(F.col("src").alias("id")).distinct().localCheckpoint()
+    labels = touched.select("id", F.col("id").alias("label"))
+    rounds = [_cc_step_plain] * (max_iterations + 1)
+    rounds += [_cc_step_jump] * (max_iterations + 1)
+    for step in rounds:
+        labels, changed = step(edges, labels)
+        if changed == 0:
+            break
+    else:
+        raise RuntimeError(
+            f"connected_components: labels still changing after "
+            f"{max_iterations} plain and {max_iterations} pointer-jumping "
+            f"iterations ({changed} nodes moved in the confirmation round) "
+            f"-- component diameter exceeds the bound; raise max_iterations"
         )
-        .localCheckpoint()
+    out = nodes.select(F.col(id_col)).join(
+        labels.withColumnRenamed("id", id_col), id_col, "left"
     )
-    # convergence witness without a self-join: the old label rode the
-    # projection into the checkpoint, so counting movers is a map-only
-    # scan of the materialized blocks
+    return out.select(
+        id_col,
+        F.coalesce(F.col("label"), F.col(id_col)).alias("cluster_id"),
+    )
+
+
+def _cc_hop(edges, labels):
+    """One min-label propagation hop; ``__old`` carries each node's label
+    from before the hop.  Each node's own row and the labels its
+    neighbours offer meet in ONE aggregate, a shuffle fewer per round
+    than a neighbour-min aggregate joined back onto the labels (every
+    edge source is a labelled node, so the id set never changes)."""
+    offers = edges.join(labels, edges.dst == labels.id).select(
+        F.col("src").alias("id"),
+        F.col("label").alias("cand"),
+        F.lit(None).cast(labels.schema["label"].dataType).alias("old"),
+    )
+    own = labels.select(
+        "id", F.col("label").alias("cand"), F.col("label").alias("old")
+    )
+    return (
+        own.unionByName(offers)
+        .groupBy("id")
+        .agg(F.min("cand").alias("label"), F.max("old").alias("__old"))
+    )
+
+
+def _cc_settle(staged):
+    """Checkpoint one round's labels and count the nodes that moved.  The
+    old label rode the projection into the checkpoint, so the convergence
+    witness is a map-only scan of the materialized blocks, no self-join."""
+    staged = staged.localCheckpoint()
     changed = staged.filter(F.col("label") != F.col("__old")).count()
     return staged.drop("__old"), changed
 
 
-def _cc_loop(step, labels, max_iterations: int, op_name: str,
-             fallback_step=None):
-    """Shared propagate-until-stable loop with a confirmation round:
-    ``max_iterations`` propagation rounds, plus (if the last round still
-    moved labels) ONE extra round that either confirms convergence --
-    labels that stabilized exactly on the final allowed round are a
-    SUCCESS, not an error -- or proves the graph is genuinely deeper
-    than the budget and raises.
-
-    ``fallback_step`` (ADVICE r15 #1): a deeper-than-budget graph is a
-    DATA property, not a bug -- a dedup pipeline that hard-fails on one
-    long near-dup chain at production scale trades a 0.6 s local win for
-    a data-dependent outage.  When provided, budget exhaustion continues
-    from the CURRENT labels with the fallback step (pointer jumping,
-    O(log remaining-diameter) rounds) instead of raising; the min-label
-    fixpoint is identical (same semilattice, same edges), so results are
-    unchanged for every graph the plain loop could finish -- the
-    fallback only ever runs where the old code threw RuntimeError."""
-    changed = -1
-    for _ in range(max_iterations):
-        labels, changed = step(labels)
-        if changed == 0:
-            return labels, changed
-    labels, changed = step(labels)
-    if changed == 0:
-        return labels, changed
-    if fallback_step is not None:
-        for _ in range(max_iterations):
-            labels, changed = fallback_step(labels)
-            if changed == 0:
-                return labels, changed
-        labels, changed = fallback_step(labels)
-        if changed == 0:
-            return labels, changed
-    raise RuntimeError(
-        f"{op_name}: labels still changing after {max_iterations} "
-        f"iterations ({changed} nodes moved in the confirmation round) "
-        f"-- component diameter exceeds the bound; raise max_iterations "
-        f"or use connected_components_fast (pointer jumping, O(log "
-        f"diameter) rounds) for this graph shape"
-    )
-
-
-def connected_components_fast(
-    pairs: DataFrame,
-    nodes: DataFrame,
-    id_col: str = "doc_id",
-    max_iterations: int = 25,
-    validate_pairs: bool = False,
-) -> DataFrame:
-    """Connected components with POINTER JUMPING: each round does one
-    min-label propagation hop (as ``connected_components``) and then a
-    label-of-label join (``L(u) <- L(L(u))``), which halves the remaining
-    pointer-chain depth -- convergence in O(log diameter) rounds instead
-    of O(diameter).  This is the graph shape the plain operator's
-    iteration guard points at: a 1000-deep chain converges in ~10 rounds
-    here versus 1000 there.  Same contract and the same loud
-    non-convergence failure; per-round cost is one extra self-join of the
-    (id, label) table, so for the shallow near-dup cliques LSH banding
-    produces, the plain operator is cheaper -- use this one when
-    components can be deep (reply chains, co-citation paths, web graphs).
-    Same pairs-subset-of-nodes precondition and ``validate_pairs`` guard
-    as ``connected_components``.
-    """
-    edges = _mirrored_edge_base(pairs)
-    if validate_pairs:
-        edges = _restrict_edges_to_nodes(edges, nodes, id_col)
-    return _cc_run(
-        edges, nodes, id_col, _cc_step_jump, max_iterations,
-        "connected_components_fast",
-    )
+def _cc_step_plain(edges, labels):
+    return _cc_settle(_cc_hop(edges, labels))
 
 
 def _cc_step_jump(edges, labels):
-    neighbor_min = (
-        edges.join(labels, edges.dst == labels.id)
-        .groupBy("src")
-        .agg(F.min("label").alias("nbr_label"))
-    )
-    hopped = labels.join(
-        neighbor_min, labels.id == neighbor_min.src, "left"
-    ).select(
-        "id",
-        F.least(
-            F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-        ).alias("label"),
-        F.col("label").alias("__old"),
-    )
+    """A min-label hop followed by a label-of-label join
+    (``L(u) <- L(L(u))``), which halves the remaining pointer-chain depth:
+    O(log diameter) rounds instead of O(diameter), at the price of one
+    extra self-join of the (id, label) table per round."""
+    hopped = _cc_hop(edges, labels)
     # pointer jump: follow the label's own label (labels only ever
     # DECREASE toward the component min, so L(L(u)) <= L(u) and the
     # jump is always safe)
     parent = hopped.select(
         F.col("id").alias("p_id"), F.col("label").alias("p_label")
     )
-    staged = (
-        hopped.join(parent, hopped.label == parent.p_id, "left")
-        .select(
+    return _cc_settle(
+        hopped.join(parent, hopped.label == parent.p_id, "left").select(
             "id",
             F.least(
                 F.col("label"), F.coalesce(F.col("p_label"), F.col("label"))
             ).alias("label"),
             F.col("__old"),
         )
-        .localCheckpoint()
     )
-    # map-only convergence count over the checkpointed blocks (no join)
-    changed = staged.filter(F.col("label") != F.col("__old")).count()
-    return staged.drop("__old"), changed
 
 
 def simhash_near_dup_pairs(
@@ -1229,22 +1135,20 @@ def chain_audit(ver_pairs: DataFrame) -> DataFrame:
 
     Scale shape: edges checkpointed once (they feed CC, the edge count
     and the node set); every relation after CC is cluster- or
-    cluster-size-bounded; density math is exact int64.  CC here is the
-    pointer-jumping variant (O(log diameter) rounds): chaining is
-    exactly the pathology this audit measures, so a deep chain must not
-    hit the plain variant's propagation-round guard (ADVICE r12)."""
+    cluster-size-bounded; density math is exact int64.  Chaining is
+    exactly the pathology this audit measures, so a deep chain must
+    converge: ``connected_components`` finishes it with pointer jumping
+    once its plain rounds run out (ADVICE r12)."""
     ver = ver_pairs.select("id_a", "id_b").localCheckpoint(eager=True)
     nodes = (
         ver.select(F.col("id_a").alias("doc_id"))
         .unionByName(ver.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
-    # Pointer-jumping CC on purpose (r15 optimization probe: plain CC is
-    # ~0.5 s cheaper on the shallow fixture graph, but CHAINED clusters
-    # are exactly what this audit measures -- a 60-hop verified chain
-    # must converge, and plain CC's bounded-round guard would raise;
-    # pinned by test_chain_audit_deep_chain_converges).
-    lab = connected_components_fast(ver, nodes)
+    # Plain rounds settle the shallow fixture graph; a 60-hop verified
+    # chain runs out of them and converges under pointer jumping (pinned
+    # by test_chain_audit_deep_chain_converges).
+    lab = connected_components(ver, nodes)
     members = lab.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("m"))
     epc = (
         ver.join(

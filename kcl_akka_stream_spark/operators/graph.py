@@ -553,46 +553,21 @@ def bfs_distance(
 ) -> DataFrame:
     """Multi-source BFS distance, ``rounds`` hops: the proximity label
     behind "within k hops of a trusted/flagged set" (fraud rings,
-    moderation blast radius, recommendation seeds).  Fixed rounds keep
-    the relation unrollable for an external oracle and bound the cost;
-    distances are exact hop counts for every node reached within
-    ``rounds``, unreached nodes are absent.
+    moderation blast radius, recommendation seeds).  It is
+    ``weighted_distance`` over a unit ``cost`` column, so distances are
+    exact hop counts for every node reached within ``rounds``; unreached
+    nodes are absent.
 
     Input: directed (src, dst) with the symmetrized contract of
-    ``pagerank`` for undirected graphs.  Each round is one edge-keyed
-    join against the (node-sized, checkpointed) frontier relation
-    (shuffled by default; ``broadcast_scores=True`` opts into the
-    broadcast when the reached set provably fits -- see
-    ``_maybe_bcast``) plus a min-combine -- distance labels stay node-sized, the edge relation
-    is checkpointed once; monotone (min of a growing set), so extra
-    rounds past the diameter are no-ops.
-
-    Returns (node, dist) with dist in [0, rounds].
+    ``pagerank`` for undirected graphs.  Returns (node, dist) with dist in
+    [0, rounds].
     """
-    if not seeds:
-        raise ValueError("bfs_distance requires at least one seed")
-    e = edges.select("src", "dst").localCheckpoint(eager=True)
-    spark = e.sparkSession
-    dist = spark.createDataFrame(
-        [(int(s), 0) for s in seeds], "node long, dist long"
+    return weighted_distance(
+        edges.select("src", "dst", F.lit(1).alias("cost")),
+        seeds,
+        rounds,
+        broadcast_scores,
     )
-    for _ in range(rounds):
-        # One combinable min-aggregation per round: the relaxed edge-sized
-        # relation unions with the standing node-sized distances and a
-        # single hash aggregate takes the min (min over the union equals
-        # min over per-key pre-mins, and the partial map-side combine does
-        # the same reduction the old inner groupBy("dst") paid a second
-        # exchange for).
-        reached = e.join(
-            _maybe_bcast(dist, broadcast_scores), e.src == dist.node
-        ).select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-        dist = (
-            dist.unionByName(reached)
-            .groupBy("node")
-            .agg(F.min("dist").cast("long").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-    return dist
 
 
 def weighted_distance(
@@ -604,23 +579,24 @@ def weighted_distance(
     """Bounded Bellman-Ford: min-cost distance from a seed set over a
     weighted edge list (src, dst, cost), ``rounds`` relaxation rounds --
     i.e. the exact cheapest cost over paths of at most ``rounds`` edges
-    (public min-plus relaxation; Bellman 1958).  The weighted twin of
-    ``bfs_distance``: hop counts become additive integer costs, the
-    "how strongly connected is this node to the trusted set" signal.
+    (public min-plus relaxation; Bellman 1958).  Additive integer costs
+    give the "how strongly connected is this node to the trusted set"
+    signal; unit costs give ``bfs_distance``'s hop counts.
 
-    Same scale discipline: the edge relation is checkpointed ONCE, the
+    Scale discipline: the edge relation is checkpointed ONCE, the
     distance relation stays node-sized and checkpoints each round (a
     cache miss costs one round, not the whole derivation), each round is
     one distance-attach join (shuffled by default; ``broadcast_scores=
     True`` opts into the broadcast when the reached set provably fits --
     see ``_maybe_bcast``) + one min-combine.  Monotone in rounds (longer
-    paths can only add alternatives to the min).  Integer costs ->
-    deterministic, oracle-unrollable.
+    paths can only add alternatives to the min, so extra rounds past the
+    diameter are no-ops).  Integer costs -> deterministic,
+    oracle-unrollable.
 
     Returns (node, dist) for every node reachable within ``rounds``.
     """
     if not seeds:
-        raise ValueError("weighted_distance requires at least one seed")
+        raise ValueError("distance search requires at least one seed")
     e = edges.select(
         "src", "dst", F.col("cost").cast("long").alias("cost")
     ).localCheckpoint(eager=True)
@@ -629,11 +605,12 @@ def weighted_distance(
         [(int(s), 0) for s in seeds], "node long, dist long"
     )
     for _ in range(rounds):
-        # Single min-aggregation per round (see bfs_distance): the union
-        # of the standing distances with the un-preaggregated relaxations
-        # feeds ONE combinable hash aggregate -- the old inner
-        # groupBy("dst") min paid a second exchange for the same map-side
-        # reduction.
+        # One combinable min-aggregation per round: the relaxed edge-sized
+        # relation unions with the standing node-sized distances and a
+        # single hash aggregate takes the min (min over the union equals
+        # min over per-key pre-mins, and the partial map-side combine does
+        # the same reduction an inner groupBy("dst") would pay a second
+        # exchange for).
         relaxed = e.join(
             _maybe_bcast(dist, broadcast_scores), e.src == dist.node
         ).select(

@@ -290,7 +290,8 @@ def semantic_dedup(
     ``n_clusters`` must grow with the corpus (k = n / target cluster
     size -- SemDeDup runs ~100k clusters at web scale) exactly like
     ``auto_lsh_dims`` grows the near-dup blocking; the component pass is
-    O(log diameter) pointer jumping.  No stage shuffles the corpus more
+    ``connected_components`` (plain min-label rounds, pointer jumping
+    past ``max_iterations``).  No stage shuffles the corpus more
     than once on a key.
 
     Pass ``cluster_col`` to reuse an EXISTING cluster assignment (e.g.
@@ -307,7 +308,7 @@ def semantic_dedup(
     frozen k=8 vs ~flat for the auto mode); the learned-quantizer mode exists
     for oracle-pinned gates and pre-clustered corpora, the auto mode is
     the 100 TB default."""
-    from kcl_akka_stream_spark.operators.dedup import connected_components_fast
+    from kcl_akka_stream_spark.operators.dedup import connected_components
 
     if cluster_col is not None:
         withc = corpus.withColumn("sem_cluster", F.col(cluster_col))
@@ -324,7 +325,7 @@ def semantic_dedup(
             id_col, vec_col, F.col("cluster_id").alias("sem_cluster")
         )
     pairs = _semantic_pairs(withc, threshold, id_col, vec_col)
-    comps = connected_components_fast(
+    comps = connected_components(
         pairs, withc.select(id_col), id_col=id_col, max_iterations=max_iterations
     ).select(id_col, F.col("cluster_id").alias("dup_group"))
     return (

@@ -1,21 +1,1 @@
-from kcl_akka_stream_spark.plans.hygiene import (
-    count_exchanges,
-    count_in_plan,
-    count_operator,
-    has_broadcast_hash_join,
-    has_cartesian_product,
-    physical_plan,
-    pushed_filters,
-    spread,
-)
-
-__all__ = [
-    "count_exchanges",
-    "count_in_plan",
-    "count_operator",
-    "has_broadcast_hash_join",
-    "has_cartesian_product",
-    "physical_plan",
-    "pushed_filters",
-    "spread",
-]
+"""Physical-plan inspection helpers (``plans.hygiene``)."""

@@ -4828,6 +4828,14 @@ def agg_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("event_id") % 2 == 0).cast("long")).cast("long").alias("ca"),
         F.sum((F.col("event_id") % 2 == 1).cast("long")).cast("long").alias("cb"),
     )
+    return _ks_finalize(j)
+
+
+def _ks_finalize(j: DataFrame) -> DataFrame:
+    """KS max-gap fold over per-(event_type, bin) half counts ``ca``/``cb``:
+    cumulative CDFs, totals and the integer-ppm max gap.  Shared by
+    ``agg_ks_drift`` and its streaming twin (cumulative sums do not merge;
+    counts do, so the fold runs after the merge)."""
     wcum = (
         Window.partitionBy("event_type")
         .orderBy("bin")
@@ -4844,6 +4852,8 @@ def agg_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cum.groupBy("event_type").agg(
         F.max("na").cast("long").alias("na"),
         F.max("nb").cast("long").alias("nb"),
+        # ppm scaling is ONE shared IEEE double op (gini_ppm pattern;
+        # an int64 *1_000_000 form overflows past ~3e6 rows per half)
         F.expr(
             "cast(floor(cast(max(abs(cum_a * nb - cum_b * na)) as double)"
             " * 1000000.0 / (cast(max(na) as double) * max(nb))) as bigint)"
@@ -5018,10 +5028,15 @@ def agg_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = ev.groupBy(
         "event_type", F.hour("ts").cast("long").alias("hr")
     ).agg(F.count(F.lit(1)).cast("long").alias("c"))
+    return _entropy_finalize(h)
+
+
+def _entropy_finalize(h: DataFrame) -> DataFrame:
+    """Frozen-ln entropy fold over per-(event_type, hr) counts ``c``.
+    Shared by ``agg_entropy_profile`` and its streaming twin (averaging
+    per-batch entropies is not the union's entropy, so the fold runs after
+    the merge)."""
     t = h.withColumn("n", F.sum("c").over(Window.partitionBy("event_type")))
-    term = F.expr(
-        "cast(round(ln(cast(n as double) / c) * 1000000) as bigint)"
-    )
     return t.groupBy("event_type").agg(
         F.max("n").cast("long").alias("n"),
         F.count(F.lit(1)).cast("long").alias("n_bins"),
@@ -5096,6 +5111,13 @@ def agg_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = ev.groupBy(
         "event_type", F.hour("ts").cast("long").alias("hr")
     ).agg(F.count(F.lit(1)).cast("long").alias("o")).localCheckpoint(eager=True)
+    return _mi_finalize(cells)
+
+
+def _mi_finalize(cells: DataFrame) -> DataFrame:
+    """MI fold plus both marginal entropies over checkpointed
+    per-(event_type, hr) cell counts ``o``.  Shared by
+    ``agg_mutual_information`` and its streaming twin."""
     m = cells.select(
         "o",
         F.sum("o").over(Window.partitionBy("event_type")).alias("r"),

@@ -866,14 +866,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("dedup_clusters_fast", _clusters_oracle())
 def dedup_clusters_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Same cluster assignment through the pointer-jumping variant
-    # (O(log diameter) rounds -- operators/dedup.py::
-    # connected_components_fast): both implementations must agree with
-    # the recursive-CTE transitive closure, so the oracle is shared.
-    docs = tbl(spark, sf_dir, "documents")
-    buckets = D.minhash_lsh_buckets(docs, num_hashes=8, bands=4, k=3)
-    pairs = D.minhash_candidate_pairs(buckets)
-    return D.connected_components_fast(pairs, docs.select("doc_id"))
+    # Runs the same operator as dedup_clusters (operators/dedup.py::
+    # connected_components, which falls back to pointer jumping on deep
+    # graphs); kept as its own registry entry with the shared oracle.
+    return dedup_clusters(spark, sf_dir)
 
 
 @query(
@@ -2361,8 +2357,6 @@ def agg_hist_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     # property as the KMV/CMS sketches) with linear interpolation inside
     # the median bin.  At 100 TB this replaces the exact sort-based
     # median with one combinable agg + a bins-sized window.
-    from pyspark.sql import Window
-
     width, n_bins = 10.0, 50
     ev = tbl(spark, sf_dir, "events")
     b = ev.groupBy(
@@ -2371,6 +2365,13 @@ def agg_hist_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("value") / width).cast("long"), F.lit(n_bins - 1)
         ).alias("bin"),
     ).agg(F.count(F.lit(1)).alias("cnt"))
+    return _hist_median_finalize(b, width)
+
+
+def _hist_median_finalize(b: DataFrame, width: float) -> DataFrame:
+    """Median-bin pick plus linear interpolation over per-(event_type,
+    bin) counts ``cnt`` of a ``width``-wide equi-width histogram.  Shared
+    by ``agg_hist_median`` and its streaming twin."""
     wc = Window.partitionBy("event_type").orderBy("bin").rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -3704,25 +3705,31 @@ def pipeline_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
     )
 
-    def partial(d: DataFrame) -> DataFrame:
-        return d.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("v").cast("long").alias("sum_cents"),
-            F.min("v").cast("long").alias("min_cents"),
-            F.max("v").cast("long").alias("max_cents"),
-        )
+    history = _rollup_partial(ev.filter(F.col("event_id") % 4 != 0))
+    batch = _rollup_partial(ev.filter(F.col("event_id") % 4 == 0))
+    return _rollup_finalize(history.unionByName(batch))
 
-    history = partial(ev.filter(F.col("event_id") % 4 != 0))
-    batch = partial(ev.filter(F.col("event_id") % 4 == 0))
-    merged = (
-        history.unionByName(batch)
-        .groupBy("event_type")
-        .agg(
-            F.sum("n").cast("long").alias("n"),
-            F.sum("sum_cents").cast("long").alias("sum_cents"),
-            F.min("min_cents").cast("long").alias("min_cents"),
-            F.max("max_cents").cast("long").alias("max_cents"),
-        )
+
+def _rollup_partial(d: DataFrame) -> DataFrame:
+    """Per-event_type (count, sum, min, max) state of the cents column
+    ``v`` -- each a commutative monoid."""
+    return d.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("v").cast("long").alias("sum_cents"),
+        F.min("v").cast("long").alias("min_cents"),
+        F.max("v").cast("long").alias("max_cents"),
+    )
+
+
+def _rollup_finalize(states: DataFrame) -> DataFrame:
+    """Merge ``_rollup_partial`` states and derive ``avg_micro`` after the
+    merge.  Shared by ``pipeline_rollup_incremental`` and its streaming
+    twin."""
+    merged = states.groupBy("event_type").agg(
+        F.sum("n").cast("long").alias("n"),
+        F.sum("sum_cents").cast("long").alias("sum_cents"),
+        F.min("min_cents").cast("long").alias("min_cents"),
+        F.max("max_cents").cast("long").alias("max_cents"),
     )
     return merged.select(
         "event_type",
@@ -5319,6 +5326,15 @@ def sample_reservoir_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     states = hash_bottom_k(
         parted, "event_type", "event_id", 8, seed="rsv", part_cols=["part"]
     ).drop("part")
+    return _reservoir_finalize(states)
+
+
+def _reservoir_finalize(states: DataFrame) -> DataFrame:
+    """Merge per-part bottom-8-by-hash survivors with the same selection
+    and rank the sample.  Shared by ``sample_reservoir_merge`` and its
+    streaming twin."""
+    from kcl_akka_stream_spark.operators.sampling import hash_bottom_k
+
     merged = hash_bottom_k(states, "event_type", "event_id", 8, seed="rsv")
     key = F.md5(F.concat(F.lit("rsv|"), F.col("event_id").cast("string")))
     w = Window.partitionBy("event_type").orderBy(key, F.col("event_id"))
@@ -6025,17 +6041,25 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep_means = reps.groupBy("event_type", "b").agg(
         F.expr("sum(w * cents) * 100 div greatest(sum(w), 1)").alias("mean_cc")
     )
-    w = Window.partitionBy("event_type").orderBy("mean_cc", "b")
-    ranked = rep_means.withColumn("r", F.row_number().over(w))
-    ci = ranked.groupBy("event_type").agg(
-        F.max(F.when(F.col("r") == 2, F.col("mean_cc"))).alias("ci_lo_cc"),
-        F.max(F.when(F.col("r") == 31, F.col("mean_cc"))).alias("ci_hi_cc"),
-    )
     pt = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.expr(
             "sum(cast(floor(value * 100 + 0.5) as bigint)) * 100 div count(*)"
         ).alias("mean_cc"),
+    )
+    return _bootstrap_finalize(rep_means, pt)
+
+
+def _bootstrap_finalize(rep_means: DataFrame, pt: DataFrame) -> DataFrame:
+    """(2nd, 31st) of the 32 ranked replicate means ``rep_means``
+    (event_type, b, mean_cc) as the CI, joined to the point estimate ``pt``
+    (event_type, n_events, mean_cc).  Shared by ``agg_bootstrap_ci`` and
+    its streaming twin."""
+    w = Window.partitionBy("event_type").orderBy("mean_cc", "b")
+    ranked = rep_means.withColumn("r", F.row_number().over(w))
+    ci = ranked.groupBy("event_type").agg(
+        F.max(F.when(F.col("r") == 2, F.col("mean_cc"))).alias("ci_lo_cc"),
+        F.max(F.when(F.col("r") == 31, F.col("mean_cc"))).alias("ci_hi_cc"),
     )
     return pt.join(ci, "event_type").select(
         "event_type",
@@ -6421,6 +6445,15 @@ def agg_histogram_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     hb = ev.filter(F.col("event_id") % 2 == 1).groupBy("event_type", "bin").agg(
         F.count(F.lit(1)).alias("bc")
     )
+    return _kl_drift_finalize(ha, hb)
+
+
+def _kl_drift_finalize(ha: DataFrame, hb: DataFrame) -> DataFrame:
+    """+1 Laplace smoothing, full-outer bin alignment and the frozen-ln KL
+    fold over the two halves' per-(event_type, bin) counts ``a`` and
+    ``bc``.  Shared by ``agg_histogram_kl_drift`` and its streaming twin
+    (smoothing per batch would double-count the prior, so it runs after
+    the merge)."""
     j = ha.join(hb, ["event_type", "bin"], "full_outer").select(
         "event_type",
         "bin",
@@ -11310,13 +11343,18 @@ def agg_hll_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # IEEE expression written identically on both engines.  ACCEPTANCE:
     # relative error vs the exact distinct count per type, gated at 3x
     # the m=64 standard error (3 * 1.04/sqrt(64) = 39%).
-    from kcl_akka_stream_spark.operators.sketches import (
-        hll_estimate,
-        hll_registers,
-    )
+    from kcl_akka_stream_spark.operators.sketches import hll_registers
 
     ev = tbl(spark, sf_dir, "events").select("event_type", "user_id")
-    reg = hll_registers(ev, "event_type", "user_id")
+    return _hll_finalize(ev, hll_registers(ev, "event_type", "user_id"))
+
+
+def _hll_finalize(ev: DataFrame, reg: DataFrame) -> DataFrame:
+    """HLL estimate from per-(event_type, j) registers ``reg`` beside the
+    exact distinct-user count of ``ev``, gated at 3 sigma.  Shared by
+    ``agg_hll_estimate`` and its streaming twin."""
+    from kcl_akka_stream_spark.operators.sketches import hll_estimate
+
     est = hll_estimate(reg, "event_type")
     truth = ev.groupBy("event_type").agg(
         F.countDistinct("user_id").cast("long").alias("n_true")
@@ -11391,15 +11429,19 @@ def agg_f2_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # map-side combine) -- never a b-fold explode.  ACCEPTANCE: exact
     # F2 from the per-key counts, relative error gated at 3 sigma
     # (sigma_rel = sqrt(2/64) -> 530,330 ppm).
-    from kcl_akka_stream_spark.operators.sketches import (
-        f2_estimate,
-        f2_sketch_state,
-    )
+    from kcl_akka_stream_spark.operators.sketches import f2_sketch_state
 
     ev = tbl(spark, sf_dir, "events").select("event_type", "user_id")
-    est = f2_estimate(
-        f2_sketch_state(ev, "event_type", "user_id"), "event_type"
-    )
+    return _f2_finalize(ev, f2_sketch_state(ev, "event_type", "user_id"))
+
+
+def _f2_finalize(ev: DataFrame, state: DataFrame) -> DataFrame:
+    """AMS F2 estimate from the per-event_type signed sums ``state`` beside
+    the exact F2 of ``ev``, gated at 3 sigma.  Shared by ``agg_f2_sketch``
+    and its streaming twin."""
+    from kcl_akka_stream_spark.operators.sketches import f2_estimate
+
+    est = f2_estimate(state, "event_type")
     exact = (
         ev.groupBy("event_type", "user_id")
         .agg(F.count(F.lit(1)).alias("c"))

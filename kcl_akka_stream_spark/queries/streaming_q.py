@@ -2,11 +2,14 @@
 
 Each callable runs a REAL streaming query and returns its result, so the
 DuckDB oracle checks end-to-end streaming semantics, not a batch
-re-expression (SURVEY §2.9).  Two private helpers own every streaming
+re-expression (SURVEY §2.9).  Private helpers own every streaming
 lifecycle in this module:
 
 - ``_drain(writer)`` starts a query, drives it with processAllAvailable
   and stops it in ``finally``, whatever the query raised.
+- ``_memory_sink(spark, writer, tag)`` drains into a memory sink and
+  returns its rows with the sink's temp view already dropped, so no run
+  leaves a view (and its rows) behind in the session catalog.
 - ``_fold_epochs(spark, df, partial, tag)`` is the one harness for the
   mergeable-state twins, modelled on Discretized Streams (state is one
   dataset per interval, merged after the intervals).  It stages ``df``
@@ -16,7 +19,10 @@ lifecycle in this module:
   localCheckpoint.  After the drain it stops the query, removes the
   staged files and returns the union of the per-epoch states; the twin
   merges and finalizes that union.  No state row ever folds through the
-  driver, so state size is an executor concern at any scale.
+  driver, so state size is an executor concern at any scale.  A twin
+  whose batch query derives its answer from the same state calls that
+  query's ``_*_finalize`` helper (core.py / pipeline.py) instead of a
+  copy, so the two differ only in how the state is built.
 
 ``stream_scd2_merge`` keeps its own callback: its merge depends on batch
 order, so each batch folds into the standing table as it arrives.
@@ -35,6 +41,21 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from kcl_akka_stream_spark.queries.core import (
+    _entropy_finalize,
+    _ks_finalize,
+    _mi_finalize,
+)
+from kcl_akka_stream_spark.queries.pipeline import (
+    _bootstrap_finalize,
+    _f2_finalize,
+    _hist_median_finalize,
+    _hll_finalize,
+    _kl_drift_finalize,
+    _reservoir_finalize,
+    _rollup_finalize,
+    _rollup_partial,
+)
 from kcl_akka_stream_spark.queries.registry import query, tbl
 
 
@@ -82,6 +103,24 @@ def _drain(writer: DataStreamWriter) -> StreamingQuery:
     finally:
         q.stop()
     return q
+
+
+def _memory_sink(
+    spark: SparkSession, writer: DataStreamWriter, tag: str
+) -> DataFrame:
+    """Drain ``writer`` into a uniquely named memory sink and return its
+    rows.  The sink's temp view is dropped before returning: the DataFrame
+    keeps the sink's rows, and the session catalog holds nothing once the
+    query is done.  With PLAN_CAPTURE installed, the last trigger's plan
+    (extended: the physical StateStoreRestore/Save + Exchange chain; a
+    stopped query keeps its last execution) is recorded under ``tag``."""
+    name = f"{tag}_{uuid.uuid4().hex[:8]}"
+    q = _drain(writer.format("memory").queryName(name))
+    if PLAN_CAPTURE is not None:
+        PLAN_CAPTURE.setdefault(tag, []).append(q._jsq.explainInternal(True))
+    rows = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return rows
 
 
 def _fold_epochs(
@@ -132,7 +171,6 @@ def stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixture file directly (no temp copy).
     from kcl_akka_stream_spark.sources.batch import stream_events
 
-    name = f"stream_agg_{uuid.uuid4().hex[:8]}"
     stream = stream_events(spark, sf_dir)
     agg = (
         stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -144,16 +182,9 @@ def stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    q = _drain(agg.writeStream.outputMode("complete").format("memory").queryName(name))
-    if PLAN_CAPTURE is not None:
-        # the watermark/stateful plan of the last executed trigger
-        # (extended=True includes the physical plan with the
-        # StateStoreRestore/Save + Exchange chain); a stopped query
-        # keeps its last execution
-        PLAN_CAPTURE.setdefault("stream_tumbling_agg", []).append(
-            q._jsq.explainInternal(True)
-        )
-    return spark.table(name)
+    return _memory_sink(
+        spark, agg.writeStream.outputMode("complete"), "stream_tumbling_agg"
+    )
 
 
 @query(
@@ -171,7 +202,6 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # watermark -- fine for a bounded replay test, an unbounded-state
     # bug on an endless stream; stream_dedup_watermarked below is the
     # state-bounded production form.
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
     ev = tbl(spark, sf_dir, "events")
     tmp = tempfile.mkdtemp(prefix="kcl_spark_dedup_")
     try:
@@ -179,10 +209,11 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.write.mode("append").parquet(tmp)  # the replayed duplicates
         stream = spark.readStream.schema(ev.schema).parquet(tmp)
         deduped = stream.withWatermark("ts", "1 hour").dropDuplicates(["event_id"])
-        _drain(deduped.writeStream.outputMode("append").format("memory").queryName(name))
+        sink = _memory_sink(
+            spark, deduped.writeStream.outputMode("append"), "stream_dedup"
+        )
         return (
-            spark.table(name)
-            .groupBy("event_type")
+            sink.groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n"))
         )
     finally:
@@ -206,7 +237,6 @@ def stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     # regardless of run length.  Semantics differ only for duplicates
     # arriving later than the delay -- the replay fixture's duplicates
     # carry identical timestamps, so the exact-dedup oracle still holds.
-    name = f"stream_dedup_wm_{uuid.uuid4().hex[:8]}"
     ev = tbl(spark, sf_dir, "events")
     tmp = tempfile.mkdtemp(prefix="kcl_spark_dedup_wm_")
     try:
@@ -216,10 +246,11 @@ def stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
         deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
             ["event_id"]
         )
-        _drain(deduped.writeStream.outputMode("append").format("memory").queryName(name))
+        sink = _memory_sink(
+            spark, deduped.writeStream.outputMode("append"), "stream_dedup_watermarked"
+        )
         return (
-            spark.table(name)
-            .groupBy("event_type")
+            sink.groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n"))
         )
     finally:
@@ -246,7 +277,6 @@ def stream_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # epoch-aligned window starts per event.
     from kcl_akka_stream_spark.sources.batch import stream_events
 
-    name = f"stream_slide_{uuid.uuid4().hex[:8]}"
     stream = stream_events(spark, sf_dir)
     agg = (
         stream.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
@@ -261,8 +291,9 @@ def stream_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    _drain(agg.writeStream.outputMode("complete").format("memory").queryName(name))
-    return spark.table(name)
+    return _memory_sink(
+        spark, agg.writeStream.outputMode("complete"), "stream_sliding_agg"
+    )
 
 
 @query(
@@ -290,7 +321,6 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # envelope stream.  Oracle is the classic gaps-and-islands rewrite.
     from kcl_akka_stream_spark.sources.batch import stream_events
 
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
     stream = stream_events(spark, sf_dir)
     agg = (
         stream.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
@@ -301,8 +331,9 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    _drain(agg.writeStream.outputMode("complete").format("memory").queryName(name))
-    return spark.table(name)
+    return _memory_sink(
+        spark, agg.writeStream.outputMode("complete"), "stream_session_window"
+    )
 
 
 @query(
@@ -339,7 +370,6 @@ def stream_checkpoint_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from kcl_akka_stream_spark.streaming.tracker import streaming_checkpoint_frontier
 
-    name = f"stream_ckpt_{uuid.uuid4().hex[:8]}"
     ev = tbl(spark, sf_dir, "events")
     tmp = tempfile.mkdtemp(prefix="kcl_spark_ckpt_")
     try:
@@ -361,11 +391,12 @@ def stream_checkpoint_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("event_type") != "error").alias("processed"),
             )
         )
-        _drain(tracked.writeStream.outputMode("update").format("memory").queryName(name))
+        sink = _memory_sink(
+            spark, tracked.writeStream.outputMode("update"), "stream_checkpoint_frontier"
+        )
         w = Window.partitionBy("shard_id").orderBy(F.col("update_id").desc())
         return (
-            spark.table(name)
-            .withColumn("__r", F.row_number().over(w))
+            sink.withColumn("__r", F.row_number().over(w))
             .filter(F.col("__r") == 1)
             .select(
                 "shard_id", "frontier_seq", "processed_uncheckpointed_count", "in_flight_count"
@@ -395,7 +426,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream yields the full deterministic result.
     from kcl_akka_stream_spark.sources.batch import stream_events
 
-    name = f"stream_ssj_{uuid.uuid4().hex[:8]}"
     errs = (
         stream_events(spark, sf_dir)
         .filter(F.col("event_type") == "error")
@@ -415,10 +445,11 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("clk_ts") <= F.col("err_ts")),
         "inner",
     )
-    _drain(joined.writeStream.outputMode("append").format("memory").queryName(name))
+    sink = _memory_sink(
+        spark, joined.writeStream.outputMode("append"), "stream_stream_join"
+    )
     return (
-        spark.table(name)
-        .groupBy(F.col("err_id"))
+        sink.groupBy(F.col("err_id"))
         .agg(F.count(F.lit(1)).alias("n_clicks_before"))
     )
 
@@ -497,7 +528,6 @@ def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # its live tail on one code path.
     from kcl_akka_stream_spark.operators.quality import structural_metrics
 
-    name = f"stream_quality_{uuid.uuid4().hex[:8]}"
     path = os.path.join(sf_dir, "documents.parquet")
     schema = spark.read.parquet(path).schema
     stream = spark.readStream.schema(schema).parquet(
@@ -506,8 +536,9 @@ def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagged = structural_metrics(stream).filter(F.col("n_words") >= 30).select(
         "doc_id", "n_words", "mean_word_len"
     )
-    _drain(flagged.writeStream.outputMode("append").format("memory").queryName(name))
-    return spark.table(name)
+    return _memory_sink(
+        spark, flagged.writeStream.outputMode("append"), "stream_quality_filter"
+    )
 
 
 @query(
@@ -615,7 +646,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     # market segment.
     from kcl_akka_stream_spark.sources.batch import stream_events
 
-    name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
     stream = stream_events(spark, sf_dir)
     dim = tbl(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     enriched = stream.join(F.broadcast(dim), stream.user_id == dim.c_custkey)
@@ -625,8 +655,9 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value"
         ),
     )
-    _drain(agg.writeStream.outputMode("complete").format("memory").queryName(name))
-    return spark.table(name)
+    return _memory_sink(
+        spark, agg.writeStream.outputMode("complete"), "stream_static_enrich"
+    )
 
 
 @query(
@@ -673,33 +704,7 @@ def stream_hist_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stream_hist_merge",
     )
     merged = states.groupBy("event_type", "bin").agg(F.sum("cnt").alias("cnt"))
-    wc = Window.partitionBy("event_type").orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    wt = Window.partitionBy("event_type")
-    c = merged.select(
-        "event_type",
-        "bin",
-        "cnt",
-        F.sum("cnt").over(wc).alias("cum"),
-        F.sum("cnt").over(wt).alias("n"),
-    ).filter(F.col("cum") >= F.col("n") * 0.5)
-    rk = Window.partitionBy("event_type").orderBy("bin")
-    return (
-        c.withColumn("rk", F.row_number().over(rk))
-        .filter(F.col("rk") == 1)
-        .select(
-            "event_type",
-            F.col("n").cast("long").alias("n_rows"),
-            F.round(
-                F.col("bin") * width
-                + (F.col("n") * 0.5 - (F.col("cum") - F.col("cnt")))
-                / F.col("cnt")
-                * width,
-                6,
-            ).alias("est_median"),
-        )
-    )
+    return _hist_median_finalize(merged, width)
 
 
 @query(
@@ -737,7 +742,6 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream-joins that surprises every production user.
     from kcl_akka_stream_spark.sources.batch import stream_events
 
-    name = f"stream_loj_{uuid.uuid4().hex[:8]}"
     errs = (
         stream_events(spark, sf_dir)
         .filter(F.col("event_type") == "error")
@@ -761,10 +765,11 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("clk_ts") <= F.col("err_ts")),
         "left_outer",
     )
-    _drain(joined.writeStream.outputMode("append").format("memory").queryName(name))
+    sink = _memory_sink(
+        spark, joined.writeStream.outputMode("append"), "stream_left_outer_join"
+    )
     return (
-        spark.table(name)
-        .groupBy("err_id")
+        sink.groupBy("err_id")
         .agg(F.count("clk_ts").alias("n_clicks_before"))
     )
 
@@ -830,7 +835,6 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kcl_akka_stream_spark.sources.python_source import register
 
     register(spark)
-    name = f"stream_pyds_{uuid.uuid4().hex[:8]}"
     stream = (
         spark.readStream.format("envelope_sim")
         .option("seqs_per_batch", "100")
@@ -845,8 +849,9 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         # boundary shifts it
         F.sum("sequence_number").alias("sum_seq"),
     )
-    _drain(agg.writeStream.outputMode("complete").format("memory").queryName(name))
-    return spark.table(name)
+    return _memory_sink(
+        spark, agg.writeStream.outputMode("complete"), "stream_python_datasource"
+    )
 
 
 @query(
@@ -884,7 +889,6 @@ def stream_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (a new session starts when ts >= the running end).
     from kcl_akka_stream_spark.sources.batch import stream_events
 
-    name = f"stream_dynsess_{uuid.uuid4().hex[:8]}"
     stream = stream_events(spark, sf_dir)
     gap = (
         F.when(F.col("event_type") == "click", F.lit("15 minutes"))
@@ -899,8 +903,9 @@ def stream_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    _drain(agg.writeStream.outputMode("complete").format("memory").queryName(name))
-    return spark.table(name)
+    return _memory_sink(
+        spark, agg.writeStream.outputMode("complete"), "stream_session_dynamic_gap"
+    )
 
 
 @query(
@@ -933,7 +938,6 @@ def stream_chained_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # watermark-eviction boundary itself part of the checked contract.
     from kcl_akka_stream_spark.sources.batch import stream_events
 
-    name = f"stream_chain_{uuid.uuid4().hex[:8]}"
     stream = stream_events(spark, sf_dir)
     hourly = (
         stream.withWatermark("ts", "1 hour")
@@ -950,8 +954,9 @@ def stream_chained_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "n_hours",
     )
-    _drain(out.writeStream.outputMode("append").format("memory").queryName(name))
-    return spark.table(name)
+    return _memory_sink(
+        spark, out.writeStream.outputMode("append"), "stream_chained_window_agg"
+    )
 
 
 @query(
@@ -1063,7 +1068,6 @@ def stream_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("digest").alias("__kd"), F.lit(1).alias("__is_known")
     )
 
-    name = f"stream_bloom_{uuid.uuid4().hex[:8]}"
     stream = (
         spark.readStream.schema(static_docs.schema)
         .parquet(os.path.join(sf_dir, "documents.[p]arquet"))
@@ -1103,8 +1107,9 @@ def stream_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int")
         .alias("is_known"),
     )
-    _drain(out.writeStream.outputMode("append").format("memory").queryName(name))
-    return spark.table(name)
+    return _memory_sink(
+        spark, out.writeStream.outputMode("append"), "stream_bloom_dedup"
+    )
 
 
 def _stream_kmv_set_ops_oracle() -> str:
@@ -1172,33 +1177,15 @@ def stream_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     states = _fold_epochs(
         spark,
         ev,
-        lambda b, _epoch: b.select(
-            "event_type",
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("v").cast("long").alias("sum_cents"),
-            F.min("v").cast("long").alias("min_cents"),
-            F.max("v").cast("long").alias("max_cents"),
+        lambda b, _epoch: _rollup_partial(
+            b.select(
+                "event_type",
+                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
+            )
         ),
         "stream_rollup_incremental",
     )
-    merged = states.groupBy("event_type").agg(
-        F.sum("n").cast("long").alias("n"),
-        F.sum("sum_cents").cast("long").alias("sum_cents"),
-        F.min("min_cents").cast("long").alias("min_cents"),
-        F.max("max_cents").cast("long").alias("max_cents"),
-    )
-    return merged.select(
-        "event_type",
-        "n",
-        "sum_cents",
-        "min_cents",
-        "max_cents",
-        F.expr("(sum_cents * 10000) div n").cast("long").alias("avg_micro"),
-    )
+    return _rollup_finalize(states)
 
 
 def _power_sums_oracle() -> str:
@@ -1320,7 +1307,6 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the dashboard "top talkers per hour" shape at any volume.
     from kcl_akka_stream_spark.sources.batch import stream_events
 
-    name = f"stream_topk_{uuid.uuid4().hex[:8]}"
     stream = stream_events(spark, sf_dir)
     agg = (
         stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -1333,8 +1319,9 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    _drain(agg.writeStream.outputMode("complete").format("memory").queryName(name))
-    sink = spark.table(name)
+    sink = _memory_sink(
+        spark, agg.writeStream.outputMode("complete"), "stream_topk_per_window"
+    )
     w = Window.partitionBy("window_start").orderBy(
         F.col("n").desc(), "event_type"
     )
@@ -1402,16 +1389,7 @@ def stream_reservoir_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda b, _epoch: hash_bottom_k(b, "event_type", "event_id", 8, seed="rsv"),
         "stream_reservoir_merge",
     )
-    merged = hash_bottom_k(states, "event_type", "event_id", 8, seed="rsv")
-    key = F.md5(
-        F.concat(F.lit("rsv|"), F.col("event_id").cast("string"))
-    )
-    w = Window.partitionBy("event_type").orderBy(key, F.col("event_id"))
-    return merged.select(
-        "event_type",
-        F.row_number().over(w).alias("sample_rank"),
-        "event_id",
-    )
+    return _reservoir_finalize(states)
 
 
 def _bootstrap_ci_oracle() -> str:
@@ -1459,24 +1437,12 @@ def stream_bootstrap_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "b",
         F.expr("swc * 100 div greatest(sw, 1)").alias("mean_cc"),
     )
-    w = Window.partitionBy("event_type").orderBy("mean_cc", "b")
-    ranked = rep_means.withColumn("r", F.row_number().over(w))
-    ci = ranked.groupBy("event_type").agg(
-        F.max(F.when(F.col("r") == 2, F.col("mean_cc"))).alias("ci_lo_cc"),
-        F.max(F.when(F.col("r") == 31, F.col("mean_cc"))).alias("ci_hi_cc"),
-    )
     pt = merged.filter(F.col("b") < 0).select(
         "event_type",
         F.col("sw").alias("n_events"),
         F.expr("swc * 100 div sw").cast("long").alias("mean_cc"),
     )
-    return pt.join(ci, "event_type").select(
-        "event_type",
-        "n_events",
-        F.col("mean_cc").cast("long").alias("mean_cc"),
-        F.col("ci_lo_cc").cast("long").alias("ci_lo_cc"),
-        F.col("ci_hi_cc").cast("long").alias("ci_hi_cc"),
-    )
+    return _bootstrap_finalize(rep_means, pt)
 
 
 def _pearson_oracle() -> str:
@@ -1568,30 +1534,7 @@ def stream_kl_drift_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     hb = merged.filter(F.col("half") == 1).select(
         "event_type", "bin", F.col("c").alias("bc")
     )
-    j = ha.join(hb, ["event_type", "bin"], "full_outer").select(
-        "event_type",
-        "bin",
-        (F.coalesce("a", F.lit(0)) + 1).alias("a1"),
-        (F.coalesce("bc", F.lit(0)) + 1).alias("b1"),
-    )
-    tw = Window.partitionBy("event_type")
-    t = j.withColumn("na", F.sum("a1").over(tw)).withColumn(
-        "nb", F.sum("b1").over(tw)
-    )
-    term = F.round(
-        F.log(
-            (F.col("a1").cast("double") * F.col("nb"))
-            / (F.col("b1").cast("double") * F.col("na"))
-        )
-        * 1e6,
-        0,
-    ).cast("long")
-    return t.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_bins"),
-        F.max("na").cast("long").alias("n_a_smoothed"),
-        F.max("nb").cast("long").alias("n_b_smoothed"),
-        F.sum(F.col("a1") * term).cast("long").alias("kl_num_micro"),
-    )
+    return _kl_drift_finalize(ha, hb)
 
 
 def _ks_drift_oracle() -> str:
@@ -1630,29 +1573,7 @@ def stream_ks_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("cb"),
     )
-    wcum = (
-        Window.partitionBy("event_type")
-        .orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wall = Window.partitionBy("event_type")
-    cum = j.select(
-        "event_type",
-        F.sum("ca").over(wcum).alias("cum_a"),
-        F.sum("cb").over(wcum).alias("cum_b"),
-        F.sum("ca").over(wall).alias("na"),
-        F.sum("cb").over(wall).alias("nb"),
-    )
-    return cum.groupBy("event_type").agg(
-        F.max("na").cast("long").alias("na"),
-        F.max("nb").cast("long").alias("nb"),
-        # ppm scaling is ONE shared IEEE double op (gini_ppm pattern;
-        # an int64 *1_000_000 form overflows past ~3e6 rows per half)
-        F.expr(
-            "cast(floor(cast(max(abs(cum_a * nb - cum_b * na)) as double)"
-            " * 1000000.0 / (cast(max(na) as double) * max(nb))) as bigint)"
-        ).alias("ks_ppm"),
-    )
+    return _ks_finalize(j)
 
 
 def _entropy_oracle() -> str:
@@ -1678,17 +1599,7 @@ def stream_entropy_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = states.groupBy("event_type", "hr").agg(
         F.sum("c").cast("long").alias("c")
     )
-    t = merged.withColumn(
-        "n", F.sum("c").over(Window.partitionBy("event_type"))
-    )
-    return t.groupBy("event_type").agg(
-        F.max("n").cast("long").alias("n"),
-        F.count(F.lit(1)).cast("long").alias("n_bins"),
-        F.expr(
-            "cast(sum(c * cast(round(ln(cast(n as double) / c) * 1000000)"
-            " as bigint)) div max(n) as bigint)"
-        ).alias("entropy_micronats"),
-    )
+    return _entropy_finalize(merged)
 
 
 def _mi_oracle() -> str:
@@ -1714,38 +1625,7 @@ def stream_mi_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = states.groupBy("event_type", "hr").agg(
         F.sum("c").cast("long").alias("o")
     ).localCheckpoint(eager=True)  # feeds the MI fold AND both margins
-    m = cells.select(
-        "o",
-        F.sum("o").over(Window.partitionBy("event_type")).alias("r"),
-        F.sum("o").over(Window.partitionBy("hr")).alias("c"),
-        F.sum("o").over(Window.partitionBy()).alias("n"),
-    )
-    mi = m.agg(
-        F.max("n").cast("long").alias("n"),
-        F.expr(
-            "cast(sum(o * cast(round(ln(cast(o as double) * n"
-            " / (cast(r as double) * c)) * 1000000) as bigint))"
-            " div max(n) as bigint)"
-        ).alias("mi_micronats"),
-    )
-
-    def _margin_entropy(key: str, alias: str):
-        mg = cells.groupBy(key).agg(F.sum("o").cast("long").alias("cnt"))
-        mg = mg.withColumn("n1", F.sum("cnt").over(Window.partitionBy()))
-        return mg.agg(
-            F.expr(
-                "cast(sum(cnt * cast(round(ln(cast(n1 as double) / cnt)"
-                " * 1000000) as bigint)) div max(n1) as bigint)"
-            ).alias(alias)
-        )
-
-    hx = _margin_entropy("event_type", "h_type_micronats")
-    hy = _margin_entropy("hr", "h_hour_micronats")
-    return (
-        mi.crossJoin(F.broadcast(hx))
-        .crossJoin(F.broadcast(hy))
-        .select("n", "mi_micronats", "h_type_micronats", "h_hour_micronats")
-    )
+    return _mi_finalize(cells)
 
 
 def _ohlc_oracle() -> str:
@@ -2292,10 +2172,7 @@ def stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # JOIN-SEMILATTICE under per-register MAX, so epoch register relations
     # merge into exactly the whole-stream registers and a replay is absorbed.
     # CONSTANT state: types x 64 registers.
-    from kcl_akka_stream_spark.operators.sketches import (
-        hll_estimate,
-        hll_registers,
-    )
+    from kcl_akka_stream_spark.operators.sketches import hll_registers
 
     ev = tbl(spark, sf_dir, "events").select("event_type", "user_id")
     states = _fold_epochs(
@@ -2308,32 +2185,7 @@ def stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = states.groupBy("event_type", "j").agg(
         F.max("m_r").cast("long").alias("m_r")
     )
-    est = hll_estimate(merged, "event_type")
-    truth = ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").cast("long").alias("n_true")
-    )
-    out = (
-        est.join(truth, "event_type")
-        .select(
-            "event_type",
-            "n_registers_set",
-            "v_zeros",
-            "rmax",
-            "s2",
-            "method",
-            "est_micro",
-            "n_true",
-            F.expr("abs(est_micro div n_true - 1000000)").alias(
-                "rel_err_ppm"
-            ),
-            F.expr(
-                "case when abs(est_micro div n_true - 1000000)"
-                " <= 390000 then 1 else 0 end"
-            ).alias("within_3sigma"),
-        )
-        .orderBy("event_type")
-    )
-    return out.localCheckpoint(eager=True)
+    return _hll_finalize(ev, merged).localCheckpoint(eager=True)
 
 
 def _f2_merge_oracle() -> str:
@@ -2348,10 +2200,7 @@ def stream_f2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # epoch states merge by column-wise sum into exactly the whole-stream
     # sketch -- a self-join-size monitor at types x b=64 int64s of state.
     # Not idempotent: exactly-once batch semantics, like every sum family.
-    from kcl_akka_stream_spark.operators.sketches import (
-        f2_estimate,
-        f2_sketch_state,
-    )
+    from kcl_akka_stream_spark.operators.sketches import f2_sketch_state
 
     b = 64
     ev = tbl(spark, sf_dir, "events").select("event_type", "user_id")
@@ -2365,31 +2214,4 @@ def stream_f2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = states.groupBy("event_type").agg(
         *[F.sum(f"x_{r}").cast("long").alias(f"x_{r}") for r in range(b)]
     )
-    est = f2_estimate(merged, "event_type")
-    exact = (
-        ev.groupBy("event_type", "user_id")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy("event_type")
-        .agg(
-            F.sum(F.expr("c * c")).cast("long").alias("f2_exact"),
-            F.sum("c").cast("long").alias("n_rows"),
-        )
-    )
-    out = (
-        est.join(exact, "event_type")
-        .select(
-            "event_type",
-            "n_rows",
-            "f2_exact",
-            "est_f2",
-            F.expr(
-                "abs(1000000 * est_f2 div f2_exact - 1000000)"
-            ).alias("rel_err_ppm"),
-            F.expr(
-                "case when abs(1000000 * est_f2 div f2_exact"
-                " - 1000000) <= 530330 then 1 else 0 end"
-            ).alias("within_3sigma"),
-        )
-        .orderBy("event_type")
-    )
-    return out.localCheckpoint(eager=True)
+    return _f2_finalize(ev, merged).localCheckpoint(eager=True)

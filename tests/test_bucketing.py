@@ -9,7 +9,7 @@ import uuid
 
 from pyspark.sql import functions as F
 
-from kcl_akka_stream_spark.plans import count_exchanges
+from kcl_akka_stream_spark.plans.hygiene import count_exchanges
 
 
 def test_bucketed_join_has_no_shuffle(spark):

@@ -140,7 +140,7 @@ def test_lateral_topk_decorrelates(spark, sf_dir):
     # decorrelates it into partial-top-k (WindowGroupLimit) + row_number
     # + one equi-join.  A CartesianProduct here would be the 100 TB
     # scale-killer this query exists to disprove.
-    from kcl_akka_stream_spark.plans import has_cartesian_product
+    from kcl_akka_stream_spark.plans.hygiene import has_cartesian_product
     from kcl_akka_stream_spark.plans.hygiene import physical_plan
     from kcl_akka_stream_spark.queries import QUERIES
 
@@ -364,7 +364,7 @@ def test_pq_encode_map_only_matches_pq_assign(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from kcl_akka_stream_spark.operators.clustering import pq_assign, pq_encode
-    from kcl_akka_stream_spark.plans import count_exchanges
+    from kcl_akka_stream_spark.plans.hygiene import count_exchanges
     from kcl_akka_stream_spark.queries.registry import tbl
 
     emb = tbl(spark, sf_dir, "embeddings")
@@ -435,7 +435,7 @@ def test_graph_default_plan_has_no_broadcast_exchange(spark):
     # with auto-broadcast disabled, the default neighbor_jaccard plan
     # contains NO BroadcastExchange; the opt-in plan does.
     from kcl_akka_stream_spark.operators.graph import neighbor_jaccard
-    from kcl_akka_stream_spark.plans import physical_plan
+    from kcl_akka_stream_spark.plans.hygiene import physical_plan
 
     canon = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (1, 4), (1, 3)], "src long, dst long"

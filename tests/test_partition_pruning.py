@@ -10,7 +10,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from kcl_akka_stream_spark.plans import physical_plan
+from kcl_akka_stream_spark.plans.hygiene import physical_plan
 
 
 def test_date_partitioned_scan_prunes(spark, sf_dir):

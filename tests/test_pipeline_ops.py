@@ -202,23 +202,11 @@ def test_connected_components_iteration_guard(spark):
     }
     assert got == {i: 0 for i in range(n)}
     # the loud guard still exists where even pointer jumping cannot
-    # converge within budget (diameter >> 2^max_iterations): _cc_loop
-    # with NO fallback raises rather than returning half-merged labels
-    from kcl_akka_stream_spark.operators.dedup import (
-        _cc_loop,
-        _cc_step_plain,
-        _mirrored_edge_base,
-    )
-
-    edges = _mirrored_edge_base(pairs)
-    labels = edges.select(F.col("src").alias("id")).distinct().select(
-        "id", F.col("id").alias("label")
-    )
+    # converge within budget (diameter >> 2^max_iterations): two plain
+    # and two jumping rounds leave this chain unsettled, and the operator
+    # raises rather than returning half-merged labels
     with pytest.raises(RuntimeError, match="still changing"):
-        _cc_loop(
-            lambda ls: _cc_step_plain(edges, ls), labels, 3,
-            "connected_components",
-        )
+        connected_components(pairs, nodes, max_iterations=1)
 
 
 def test_vectorized_topk_matches_jvm_fold(spark):
@@ -651,53 +639,89 @@ def test_kmeans_assign_ties_break_on_lower_cluster_id(spark):
     assert row.cluster_id == 0  # equal distance -> lower id wins
 
 
-def test_connected_components_fast_log_rounds_and_equivalence(spark):
-    # Pointer jumping converges a 60-deep chain within ~log2(60)+slack
-    # rounds -- the budget that makes the plain operator RAISE.
-    import pytest
-
-    from kcl_akka_stream_spark.operators.dedup import (
-        connected_components,
-        connected_components_fast,
-    )
+def test_connected_components_deep_chain_converges(spark):
+    # A 60-deep chain exhausts a budget of 10 plain rounds (+1
+    # confirmation); pointer jumping from the current labels converges it
+    # in ~log2 of the remaining depth to the same fixpoint instead of
+    # hard-failing (ADVICE r15 #1).
+    from kcl_akka_stream_spark.operators.dedup import connected_components
 
     n = 60
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
     nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    # ADVICE r15 #1: the plain operator no longer hard-fails on a
-    # deeper-than-budget chain -- it continues with pointer jumping from
-    # the current labels and converges to the same fixpoint.
     got = {
         r.doc_id: r.cluster_id
         for r in connected_components(pairs, nodes, max_iterations=10).collect()
     }
     assert got == {i: 0 for i in range(n)}
-    got = {
-        r.doc_id: r.cluster_id
-        for r in connected_components_fast(pairs, nodes, max_iterations=10).collect()
-    }
-    assert got == {i: 0 for i in range(n)}
 
-    # equivalence with the plain operator on a multi-component graph
-    # (two cliques bridged to nothing + a path + singletons)
-    pairs2 = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (20, 21)],
-        "id_a long, id_b long",
-    )
-    nodes2 = spark.createDataFrame(
-        [(i,) for i in (1, 2, 3, 10, 11, 12, 20, 21, 99)], "doc_id long"
-    )
-    slow = {
-        r.doc_id: r.cluster_id
-        for r in connected_components(pairs2, nodes2).collect()
-    }
-    fast = {
-        r.doc_id: r.cluster_id
-        for r in connected_components_fast(pairs2, nodes2).collect()
-    }
-    assert fast == slow
+
+def _union_find_clusters(pairs, nodes, validate_pairs):
+    """Reference CC: union-find with the smaller root always winning, so
+    every root is its component's min id."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        if validate_pairs and (a not in nodes or b not in nodes):
+            continue
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in nodes}
+
+
+def _random_cc_graph(rng):
+    """Chains, cliques and singletons over shuffled ids, plus pairs with a
+    stray endpoint (an id outside the node set, sometimes the smallest)."""
+    ids = rng.sample(range(1, 10_000), 150)
+    nodes, pairs = set(), []
+    while len(ids) > 20:
+        kind = rng.choice(["chain", "clique", "singleton"])
+        if kind == "chain":
+            part = [ids.pop() for _ in range(rng.randint(2, 14))]
+            pairs += list(zip(part, part[1:]))
+        elif kind == "clique":
+            part = [ids.pop() for _ in range(rng.randint(3, 6))]
+            pairs += [(a, b) for i, a in enumerate(part) for b in part[i + 1:]]
+        else:
+            part = [ids.pop()]
+        nodes.update(part)
+    members = sorted(nodes)
+    for stray in (0, *ids[:3]):  # never in `nodes`; 0 undercuts every id
+        pairs.append((stray, rng.choice(members)))
+    rng.shuffle(pairs)
+    return pairs, nodes
+
+
+def test_connected_components_matches_union_find(spark):
+    import random
+
+    from kcl_akka_stream_spark.operators.dedup import connected_components
+
+    # seed 3 with a budget of 4 runs out of plain rounds and settles
+    # under pointer jumping
+    for seed, max_iterations in ((1, 20), (2, 20), (3, 4)):
+        pairs, nodes = _random_cc_graph(random.Random(seed))
+        pdf = spark.createDataFrame(pairs, "id_a long, id_b long")
+        ndf = spark.createDataFrame([(v,) for v in nodes], "doc_id long")
+        for validate_pairs in (False, True):
+            got = {
+                r.doc_id: r.cluster_id
+                for r in connected_components(
+                    pdf, ndf, max_iterations=max_iterations,
+                    validate_pairs=validate_pairs,
+                ).collect()
+            }
+            want = _union_find_clusters(pairs, nodes, validate_pairs)
+            assert got == want, (seed, validate_pairs)
 
 
 def test_weighted_sample_prefers_heavy_rows(spark):
@@ -963,28 +987,26 @@ def test_cc_stray_endpoint_contract(spark):
     # -- a cluster_id referencing an id not in nodes), while output ROWS
     # are always exactly `nodes`.  validate_pairs=True semi-joins stray
     # edges out, so every cluster_id is then drawn from nodes.
-    from kcl_akka_stream_spark.operators.dedup import (
-        connected_components,
-        connected_components_fast,
-    )
+    from kcl_akka_stream_spark.operators.dedup import connected_components
 
     nodes = spark.createDataFrame([(2,), (3,), (4,)], "doc_id long")
     # pair (1, 2): endpoint 1 is NOT a node; pair (3, 4) is clean
     pairs = spark.createDataFrame([(1, 2), (3, 4)], "id_a long, id_b long")
 
-    for cc in (connected_components, connected_components_fast):
-        default = {r.doc_id: r.cluster_id for r in cc(pairs, nodes).collect()}
-        # documented default: the stray min label 1 leaks into node 2's
-        # cluster_id; rows are still exactly the node set
-        assert default == {2: 1, 3: 3, 4: 3}
-        strict = {
-            r.doc_id: r.cluster_id
-            for r in cc(pairs, nodes, validate_pairs=True).collect()
-        }
-        # validated: the stray edge drops entirely (both directions),
-        # node 2 is a singleton, every cluster_id is a node id
-        assert strict == {2: 2, 3: 3, 4: 3}
-        assert set(strict.values()) <= {2, 3, 4}
+    default = {
+        r.doc_id: r.cluster_id for r in connected_components(pairs, nodes).collect()
+    }
+    # documented default: the stray min label 1 leaks into node 2's
+    # cluster_id; rows are still exactly the node set
+    assert default == {2: 1, 3: 3, 4: 3}
+    strict = {
+        r.doc_id: r.cluster_id
+        for r in connected_components(pairs, nodes, validate_pairs=True).collect()
+    }
+    # validated: the stray edge drops entirely (both directions),
+    # node 2 is a singleton, every cluster_id is a node id
+    assert strict == {2: 2, 3: 3, 4: 3}
+    assert set(strict.values()) <= {2, 3, 4}
 
 
 def test_range_search_include_self_contract(spark):

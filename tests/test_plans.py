@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from kcl_akka_stream_spark.plans import (
+from kcl_akka_stream_spark.plans.hygiene import (
     count_in_plan,
     has_broadcast_hash_join,
     has_cartesian_product,
@@ -31,7 +31,7 @@ def test_star_join_broadcasts_dims(spark, sf_dir):
 def test_projection_prunes_columns(spark, sf_dir):
     # A 2-column projection must not scan all 11 lineitem columns.
     from kcl_akka_stream_spark.queries.registry import tbl
-    from kcl_akka_stream_spark.plans import physical_plan
+    from kcl_akka_stream_spark.plans.hygiene import physical_plan
 
     df = tbl(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     plan = physical_plan(df)
@@ -52,7 +52,7 @@ def test_topn_uses_take_ordered(spark, sf_dir):
 def test_shuffle_budgets(spark, sf_dir):
     # Lock in each operator's documented shuffle accounting: a regression
     # that adds an Exchange is a scale bug even when results stay correct.
-    from kcl_akka_stream_spark.plans import count_exchanges
+    from kcl_akka_stream_spark.plans.hygiene import count_exchanges
 
     budgets = {
         "dedup_simhash": 1,  # spread only -- fingerprint is map-only
@@ -431,7 +431,7 @@ def test_kmv_set_ops_kmin_is_take_ordered(spark, sf_dir):
     # plan as TakeOrderedAndProject (per-partition top-k + k-sized merge),
     # never as an unpartitioned Window ranking that funnels every distinct
     # hash of a data-sized set through ONE task before the r<=k filter.
-    from kcl_akka_stream_spark.plans import physical_plan
+    from kcl_akka_stream_spark.plans.hygiene import physical_plan
 
     plan = physical_plan(QUERIES["agg_kmv_set_ops"](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
@@ -442,7 +442,7 @@ def test_kmv_set_ops_kmin_is_take_ordered(spark, sf_dir):
 def test_simhash_filter_pushed_to_scan(spark, sf_dir):
     # The zero-token guard must reach the scan as a cheap rlike, not sit
     # above the exchange recomputing the token-hash transform.
-    from kcl_akka_stream_spark.plans import physical_plan
+    from kcl_akka_stream_spark.plans.hygiene import physical_plan
 
     plan = physical_plan(QUERIES["dedup_simhash"](spark, sf_dir))
     assert "RLIKE" in plan or "rlike" in plan
@@ -465,7 +465,7 @@ def test_bucketed_join_is_shuffle_free(spark, sf_dir, tmp_path):
     # broadcast shortcut.
     import uuid as _uuid
 
-    from kcl_akka_stream_spark.plans import count_exchanges
+    from kcl_akka_stream_spark.plans.hygiene import count_exchanges
     from kcl_akka_stream_spark.queries.registry import tbl
     from kcl_akka_stream_spark.sources.bucketed import drop_table, write_bucketed
 
@@ -511,7 +511,7 @@ def test_null_bypass_join_filters_nulls_before_join(spark, sf_dir):
     # The null-keyed rows must flow through the Union branch, never into
     # the join: the join's left input carries an isnotnull filter and the
     # plan has exactly one join under a Union.
-    from kcl_akka_stream_spark.plans import physical_plan
+    from kcl_akka_stream_spark.plans.hygiene import physical_plan
 
     plan = physical_plan(QUERIES["j_null_skew_bypass"](spark, sf_dir))
     assert "Union" in plan
@@ -523,7 +523,7 @@ def test_ivf_prebuilt_probe_prunes_partitions(spark, sf_dir):
     # broadcast equi-join on that partition column must trigger dynamic
     # partition pruning so only the probed clusters' directories are
     # scanned -- the index's entire point at 100 TB.
-    from kcl_akka_stream_spark.plans import physical_plan
+    from kcl_akka_stream_spark.plans.hygiene import physical_plan
 
     plan = physical_plan(QUERIES["sim_topk_ivf_prebuilt"](spark, sf_dir))
     assert "dynamicpruning" in plan, "probe scan lost dynamic partition pruning"
@@ -541,7 +541,7 @@ def test_semantic_dedup_scores_pairs_in_arrow_kernel(spark, sf_dir):
         auto_lsh_dims,
         sign_lsh_bucket,
     )
-    from kcl_akka_stream_spark.plans import physical_plan
+    from kcl_akka_stream_spark.plans.hygiene import physical_plan
     from kcl_akka_stream_spark.queries.registry import tbl
 
     emb = tbl(spark, sf_dir, "embeddings")
@@ -657,7 +657,7 @@ def test_sql_join_hints_control_strategy(spark, sf_dir):
     # bind.  MERGE forces sort-merge where the dim would otherwise
     # broadcast; SHUFFLE_HASH forces a shuffled hash join; BROADCAST
     # still broadcasts under them all.
-    from kcl_akka_stream_spark.plans import count_operator
+    from kcl_akka_stream_spark.plans.hygiene import count_operator
     from kcl_akka_stream_spark.sources.batch import load_table
 
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("h_orders")
@@ -679,7 +679,7 @@ def test_ivf_pq_prebuilt_probe_prunes_partitions_and_stays_codes_only(spark, sf_
     # partition pruning (only the probed inverted lists' directories are
     # read), and the codes scan must NOT read any vector column -- the
     # serving plan touches m small ints per vector plus broadcasts.
-    from kcl_akka_stream_spark.plans import physical_plan
+    from kcl_akka_stream_spark.plans.hygiene import physical_plan
 
     df = QUERIES["sim_topk_ivf_pq_prebuilt"](spark, sf_dir)
     plan = physical_plan(df)

@@ -328,59 +328,3 @@ def test_stream_arrow_mode_matches_row_mode(spark):
         )
     assert results["true"] == results["false"]
     assert len(results["true"]) == 500
-
-
-def test_vectorized_md5_matches_hashlib_property():
-    # functions/vectorized_md5.py must be byte-identical to hashlib for
-    # every single-block input (the r11 md5_vectorization_probe's
-    # correctness leg).  Random binary inputs use the explicit-lens
-    # path; connector-shaped text keys use the default path.
-    import hashlib
-    import random
-
-    import numpy as np
-
-    from kcl_akka_stream_spark.functions.vectorized_md5 import md5_hex
-
-    rng = random.Random(11)
-    blobs = [
-        bytes(rng.choices(range(256), k=rng.randint(0, 55))) for _ in range(500)
-    ]
-    arr = np.array(blobs, dtype="S55")
-    lens = np.array([len(b) for b in blobs])
-    got = md5_hex(arr, lens=lens)
-    for i, b in enumerate(blobs):
-        assert got[i] == hashlib.md5(b).hexdigest()
-
-    keys = [f"pk-{s}-{q}".encode() for s in range(3) for q in range(200)]
-    got2 = md5_hex(np.array(keys, dtype="S"))
-    for i, k in enumerate(keys):
-        assert got2[i] == hashlib.md5(k).hexdigest()
-
-
-def test_vectorized_md5_contract_errors():
-    import numpy as np
-
-    import pytest
-
-    from kcl_akka_stream_spark.functions.vectorized_md5 import md5_hex
-
-    with pytest.raises(ValueError, match="single-block"):
-        md5_hex(np.array([b"x" * 60], dtype="S60"))
-    with pytest.raises(ValueError, match="'S' bytes array"):
-        md5_hex(np.array(["text"], dtype="U4"))
-    with pytest.raises(ValueError, match="lens"):
-        md5_hex(np.array([b"ab"], dtype="S5"), lens=np.array([9]))
-    assert md5_hex(np.empty(0, dtype="S5")).shape == (0,)
-    # ADVICE r11: inference guard -- a width-maximal value ending in
-    # 0x00 stores stripped, so no row explains the itemsize; raise
-    # instead of silently hashing the truncated value
-    with pytest.raises(ValueError, match="ambiguous"):
-        md5_hex(np.array([b"abcd\x00", b"ab"], dtype="S5"))
-    # ...and the same shape passes once true lengths are supplied
-    got = md5_hex(np.array([b"abcd\x00", b"ab"], dtype="S5"),
-                  lens=np.array([5, 2]))
-    import hashlib
-
-    assert got[0] == hashlib.md5(b"abcd\x00").hexdigest()
-    assert got[1] == hashlib.md5(b"ab").hexdigest()

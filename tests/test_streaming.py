@@ -1243,3 +1243,16 @@ def test_drain_stops_query_on_failure(spark, tmp_path):
     with pytest.raises(Exception, match="injected failure on epoch 1"):
         _drain(stream.writeStream.foreachBatch(_failing_on_second_epoch))
     assert spark.streams.active == []
+
+
+def test_memory_sink_query_leaves_catalog_unchanged(spark, sf_dir):
+    # A memory-sink twin used to leave its uniquely named temp view (and
+    # the sink's rows on the driver) in the catalog after every run.  The
+    # view is dropped before the query returns; the result still counts.
+    from kcl_akka_stream_spark.queries import QUERIES
+
+    before = sorted(t.name for t in spark.catalog.listTables())
+    out = QUERIES["stream_tumbling_agg"](spark, sf_dir)
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
+    assert out.agg(F.sum("n")).first()[0] == n_events
