@@ -4,8 +4,10 @@ Local testing runs ``local[$SPARK_GRAFT_CPUS]`` in a single JVM, but every
 config below is chosen for the 1000-executor / 100 TB posture:
 
 - AQE on (runtime coalesce, skew-join splitting, dynamic join strategy);
-- shuffle partitions sized to cores locally -- on a real cluster this would be
-  2-3x total executor cores, and AQE coalesces down;
+- batch exchanges start at ``spark.sql.adaptive.coalescePartitions.
+  initialPartitionNum`` = cores locally (on a real cluster 2-3x total
+  executor cores) and AQE coalesces down; stateful streaming queries get
+  ``STATE_PARTITIONS`` state partitions instead (see there);
 - Arrow enabled so the few Pandas-UDF operators batch-transfer;
 - UTC session timezone so results hash-match the DuckDB oracle;
 - Python workers forked from ``kcl_akka_stream_spark.worker_daemon``
@@ -22,6 +24,24 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: ``spark.sql.shuffle.partitions``.  Streaming runs without AQE, so only
+#: stateful streaming queries read it, as their count of state partitions;
+#: batch exchanges read ``initialPartitionNum`` instead.  Spark writes it into
+#: a checkpoint's offset log at first start and restores it on every resume,
+#: so it sizes new checkpoints only, and for good.  Each state partition costs
+#: every trigger a Python round trip and a state-store commit whatever it
+#: holds, so one partition wins while a trigger carries few state groups:
+#: ``stream_ingest`` (8 shards, local[4]) 4 partitions -> 1 cut ``pass_cpu_s``
+#: from 3.67 to 2.58 s.  The checkpoint tracker keeps that true for any shard
+#: count (at most ``tracker.SHARD_BUCKETS`` groups per trigger):
+#: ``stream_checkpoint_frontier`` at sf0.1 (1,500 shards) 3.71 -> 2.04 s.
+#: Native state (windows, joins, dedup) keeps one group per key, and a trigger
+#: with many keys runs them all in one task: of the 16 other streaming
+#: registry queries at sf0.1, 4 took 13-30% longer (session windows and
+#: dedup, 100k events in one trigger), 6 took 8-19% less.  A deployment with heavy native
+#: per-trigger state raises the setting before the query's first start.
+STATE_PARTITIONS = 1
+
 
 def _cpus() -> int:
     try:
@@ -30,17 +50,29 @@ def _cpus() -> int:
         return 32
 
 
-def get_session(app_name: str = "kcl_akka_stream_spark", *, shuffle_partitions: int | None = None) -> SparkSession:
+def _driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else the smaller of 48g and half the
+    host's physical memory (a 48g heap on a small host lets two sessions
+    run the machine out of memory).  ``SC_PHYS_PAGES`` is the host's RAM,
+    not a container's cgroup limit: inside a smaller container, set
+    ``SPARK_GRAFT_DRIVER_MEM``."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(48 * 1024, phys_mb // 2)}m"
+
+
+def get_session(app_name: str = "kcl_akka_stream_spark") -> SparkSession:
     """Build (or reuse) the SparkSession with scale-aware defaults."""
     cpus = _cpus()
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", str(cpus))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -56,7 +88,7 @@ def get_session(app_name: str = "kcl_akka_stream_spark", *, shuffle_partitions: 
         # within worker memory at any realistic row width here.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
         .config("spark.sql.python.filterPushdown.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")

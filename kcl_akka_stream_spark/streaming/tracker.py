@@ -29,20 +29,30 @@ head moves to the first unprocessed index ``i`` with ``n - i <=
 max_pending`` -- and the cumulative ``evicted_count`` gauge reports every
 record whose at-least-once guarantee was given up: a
 bounded-state/bounded-loss trade the operator surfaces LOUDLY instead of
-leaking.  Shards are independent groups so state shuffles once by shard
-key and lives in the state store across micro-batches.
+leaking.
 
-The kept window is stored as two ``binary`` state fields -- ``seqs`` packed
-little-endian int64, ``procs`` packed bool -- decoded with ``np.frombuffer``
-and re-encoded with ``tobytes`` at the kernel's edges.  Array fields
-(``array<long>``/``array<boolean>``) cost a fresh code generation every
-trigger: Spark rebuilds the state encoder per micro-batch, its
-``MapObjects`` draw new global lambda-variable ids, so the generated
-projection source never matched the codegen cache and every trigger
-compiled (and JIT-warmed) two new classes.  Flat binary fields generate
-the same source each trigger.  Checkpoints written with the array layout
-fail to resume with ``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``; start
-them over on a fresh ``checkpointLocation``.
+Shards are independent, but the state is keyed by BUCKET, ``shard_id mod
+SHARD_BUCKETS``, not by shard: ``applyInPandasWithState`` pays ~2 ms of
+Python per group per trigger (state and data conversion around the call,
+measured with 1,500 shards at local[4]), ten times the scan itself, so one
+call scans all of a bucket's shards at once and a trigger makes at most
+``SHARD_BUCKETS`` calls however many shards it carries.  How many state
+partitions hold the buckets: see ``session.STATE_PARTITIONS``.
+
+A bucket's state is flat ``binary`` fields: per shard, ascending
+``shards``, ``frontiers``, ``updates``, window ``lens`` (and ``evicted``
+when bounded), packed little-endian int64; the kept windows concatenated
+in shard order as ``seqs`` (int64) and ``procs`` (bool).  They are decoded
+with ``np.frombuffer`` and re-encoded with ``tobytes`` at the kernel's
+edges.  Array fields (``array<long>``/``array<boolean>``) cost a fresh
+code generation every trigger: Spark rebuilds the state encoder per
+micro-batch, its ``MapObjects`` draw new global lambda-variable ids, so
+the generated projection source never matched the codegen cache and every
+trigger compiled (and JIT-warmed) two new classes.  Flat binary fields
+generate the same source each trigger.  Checkpoints written with an
+earlier layout (per-shard keys, or array fields) fail to resume with
+``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``; start them over on a fresh
+``checkpointLocation``.
 """
 
 from __future__ import annotations
@@ -52,6 +62,7 @@ from typing import Iterator, Tuple
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BinaryType,
@@ -61,25 +72,28 @@ from pyspark.sql.types import (
     StructType,
 )
 
+#: State key = ``shard_id mod SHARD_BUCKETS``.  A checkpoint keeps the
+#: bucket of every shard it has seen, so this must not change under an
+#: existing checkpoint (the kernel raises if a stored shard is not in its
+#: bucket).  It caps the calls per trigger (~2 ms each) and the state
+#: partitions that can hold work; 32 is the bench host's core count.
+SHARD_BUCKETS = 32
+
+_PER_SHARD = ("shards", "frontiers", "updates", "lens")
+
 STATE_SCHEMA = StructType(
-    [
-        StructField("frontier", LongType()),
-        StructField("seqs", BinaryType()),  # packed little-endian int64
-        StructField("procs", BinaryType()),  # packed bool
-        StructField("n_updates", IntegerType()),
-    ]
+    [StructField(name, BinaryType()) for name in _PER_SHARD + ("seqs", "procs")]
 )
 
-#: State schema when the eviction bound is active: adds the cumulative
-#: evicted counter.  Kept SEPARATE from the default schema so existing
-#: checkpoints written by the no-eviction tracker keep resuming against
-#: the unchanged 4-field state layout.
+#: State schema when the eviction bound is active: adds the per-shard
+#: cumulative evicted counts.  Kept SEPARATE from the default schema so a
+#: checkpoint written without the bound keeps its layout.
 EVICTING_STATE_SCHEMA = StructType(
-    STATE_SCHEMA.fields + [StructField("n_evicted", LongType())]
+    STATE_SCHEMA.fields + [StructField("evicted", BinaryType())]
 )
 
-# state-store sentinel for "no frontier yet" (state columns are typed, not
-# optional; seqs in the fixtures are non-negative so this never collides)
+# frontier sentinel for "no frontier yet" (seqs in the fixtures are
+# non-negative so this never collides)
 _NO_FRONTIER = -(1 << 62)
 
 OUTPUT_SCHEMA = StructType(
@@ -100,16 +114,23 @@ EVICTING_OUTPUT_SCHEMA = StructType(
 
 
 def _advance(
-    frontier: int, seqs: np.ndarray, procs: np.ndarray, max_pending: int | None
-) -> Tuple[int, np.ndarray, np.ndarray, int, int, int]:
+    shards: np.ndarray,
+    frontier: np.ndarray,
+    shard: np.ndarray,
+    seqs: np.ndarray,
+    procs: np.ndarray,
+    max_pending: int | None,
+) -> Tuple[np.ndarray, ...]:
     """popProcessedRecords (RecordProcessorImpl.scala:73-78) as one scan
-    over the shard's records (int64 ``seqs``, bool ``procs``): advance the
-    frontier over the leading contiguous processed run in seq order and
-    EVICT everything before the head, the first unprocessed record.
-    Returns (frontier, kept_seqs, kept_procs, processed_behind_gap,
-    in_flight, evicted_now); kept = the head and everything after it --
-    the un-acked window, exactly what the reference's Queue retains after
-    the pop.
+    over the records (int64 ``shard`` and ``seqs``, bool ``procs``, any
+    order) of the ascending ``shards``, whose frontiers ``frontier`` holds:
+    per shard, advance the frontier over the leading contiguous processed
+    run in seq order and EVICT everything before the head, the first
+    unprocessed record.  Returns per-shard arrays (frontier, kept_len,
+    processed_behind_gap, in_flight, evicted_now) and the kept records
+    (kept_seqs, kept_procs) in (shard, seq) order; kept = the head and
+    everything after it -- the un-acked window, exactly what the
+    reference's Queue retains after the pop.
 
     A second row for an already-tracked seq is the ack: the reference's ack
     completes the tracked record's future in place
@@ -121,73 +142,122 @@ def _advance(
     pinned ends at a closed form: the head moves to the first unprocessed
     index ``i`` with ``n - i <= max_pending`` (or to ``n``), and every
     unprocessed record it passes is force-evicted and counted."""
-    uniq, inverse = np.unique(seqs, return_inverse=True)
+    order = np.lexsort((seqs, shard))
+    shard, seqs, procs = shard[order], seqs[order], procs[order]
+    first = np.ones(len(seqs), dtype=np.bool_)
+    first[1:] = (shard[1:] != shard[:-1]) | (seqs[1:] != seqs[:-1])
+    uniq, u_shard = seqs[first], shard[first]
     acked = np.zeros(len(uniq), dtype=np.bool_)
-    acked[inverse[procs]] = True
-    n = len(uniq)
-    pending = np.flatnonzero(~acked)
-    head = int(pending[0]) if len(pending) else n
-    evicted_now = 0
-    if max_pending is not None and n - head > max_pending:
-        evicted_now = int(np.searchsorted(pending, n - max_pending))
-        head = int(pending[evicted_now]) if evicted_now < len(pending) else n
-    if head > 0:
-        frontier = max(frontier, int(uniq[head - 1]))
-    in_flight = len(pending) - evicted_now
-    processed_behind = n - head - in_flight
-    return frontier, uniq[head:], acked[head:], processed_behind, in_flight, evicted_now
+    acked[(np.cumsum(first) - 1)[procs]] = True
+    starts = np.searchsorted(u_shard, shards)
+    ends = np.searchsorted(u_shard, shards, side="right")
+    n = ends - starts
+    seg = np.searchsorted(shards, u_shard)
+    idx = np.arange(len(uniq)) - starts[seg]
+    pending = ~acked
+    # unprocessed records below n - max_pending are evicted; the head is
+    # the first unprocessed record at or above it (or the shard's end)
+    floor = (n - max_pending)[seg] if max_pending is not None else 0
+    evicted_now = np.bincount(seg[pending & (idx < floor)], minlength=len(shards))
+    heads = np.append(np.flatnonzero(pending & (idx >= floor)), len(uniq))
+    head = np.minimum(heads[np.searchsorted(heads, starts)], ends) - starts
+    in_flight = np.bincount(seg[pending], minlength=len(shards)) - evicted_now
+    frontier = frontier.copy()
+    moved = head > 0
+    frontier[moved] = np.maximum(frontier[moved], uniq[(starts + head - 1)[moved]])
+    keep = idx >= head[seg]
+    return frontier, n - head, n - head - in_flight, in_flight, evicted_now, uniq[keep], acked[keep]
 
 
 def _make_track(max_pending: int | None):
     """Tracker kernel factory: ``max_pending=None`` is the faithful
     reference semantics (a never-acked record pins its successors
     forever); an integer bound adds the force-eviction guard."""
+    evicting = max_pending is not None
+    n_fields = len(EVICTING_STATE_SCHEMA if evicting else STATE_SCHEMA)
 
     def _track(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        evicting = max_pending is not None
         if state.exists:
             got = state.get
-            if len(got) != (5 if evicting else 4):
+            if len(got) != n_fields:
                 raise ValueError(
                     "cannot toggle max_pending on an existing checkpoint: the "
                     f"stored tracker state has {len(got)} fields but this query "
-                    f"expects {5 if evicting else 4} (the bounded tracker keeps "
-                    "a separate evicted_count field).  Resume with the same "
-                    "max_pending setting, or start a fresh checkpoint location."
+                    f"expects {n_fields} (the bounded tracker keeps a separate "
+                    "evicted field).  Resume with the same max_pending setting, "
+                    "or start a fresh checkpoint location."
                 )
-            frontier, seqs_b, procs_b, n_updates, *rest = got
-            n_evicted = rest[0] if evicting else 0
+            shards, frontiers, updates, lens, seqs = (
+                np.frombuffer(b, dtype="<i8") for b in got[:5]
+            )
+            procs = np.frombuffer(got[5], dtype=np.bool_)
+            evicted = np.frombuffer(got[6], dtype="<i8") if evicting else np.zeros_like(shards)
+            if (shards % SHARD_BUCKETS != key[0]).any():
+                raise ValueError(
+                    f"tracker state for bucket {key[0]} holds shards of another "
+                    "bucket: the checkpoint was written with a different "
+                    "SHARD_BUCKETS; start a fresh checkpoint location."
+                )
         else:
-            frontier, seqs_b, procs_b, n_updates, n_evicted = _NO_FRONTIER, b"", b"", 0, 0
-        seqs = [np.frombuffer(seqs_b, dtype="<i8")]
-        procs = [np.frombuffer(procs_b, dtype=np.bool_)]
-        for pdf in pdfs:
-            # astype raises on a null seq; a null ack counts as unprocessed
-            seqs.append(pdf["seq"].astype(np.int64).to_numpy())
-            procs.append(pdf["processed"].to_numpy(dtype=np.bool_, na_value=False))
-        frontier, kept_seqs, kept_procs, processed_behind, in_flight, evicted_now = _advance(
-            frontier, np.concatenate(seqs), np.concatenate(procs), max_pending
+            shards = frontiers = updates = lens = seqs = evicted = np.zeros(0, "<i8")
+            procs = np.zeros(0, np.bool_)
+        pdfs = list(pdfs)
+        # astype raises on a null shard or seq; a null ack counts as unprocessed
+        new_shard = np.concatenate([p["shard_id"].astype(np.int64).to_numpy() for p in pdfs])
+        active = np.unique(new_shard)
+        stored = np.isin(shards, active)
+        row_shard = np.repeat(shards, lens)
+        carried = np.isin(row_shard, active)
+        frontier = np.full(len(active), _NO_FRONTIER, dtype=np.int64)
+        done = np.zeros(len(active), dtype=np.int64)
+        lost = np.zeros(len(active), dtype=np.int64)
+        at = np.searchsorted(active, shards[stored])
+        frontier[at], done[at], lost[at] = frontiers[stored], updates[stored], evicted[stored]
+        frontier, kept_len, behind, in_flight, evicted_now, kept_seqs, kept_procs = _advance(
+            active,
+            frontier,
+            np.concatenate([row_shard[carried], new_shard]),
+            np.concatenate([seqs[carried]] + [p["seq"].astype(np.int64).to_numpy() for p in pdfs]),
+            np.concatenate(
+                [procs[carried]]
+                + [p["processed"].to_numpy(dtype=np.bool_, na_value=False) for p in pdfs]
+            ),
+            max_pending,
         )
-        n_evicted += evicted_now
-        n_updates += 1
-        seqs_b = np.asarray(kept_seqs, dtype="<i8").tobytes()
-        procs_b = kept_procs.tobytes()
-        if evicting:
-            state.update((frontier, seqs_b, procs_b, n_updates, n_evicted))
-        else:
-            state.update((frontier, seqs_b, procs_b, n_updates))
-        row = {
-            "shard_id": int(key[0]),
-            "frontier_seq": None if frontier == _NO_FRONTIER else frontier,
-            "processed_uncheckpointed_count": processed_behind,
+        done += 1
+        lost += evicted_now
+        # idle shards keep their state; active ones take the scan's
+        idle = ~stored
+        by_shard = np.argsort(np.concatenate([shards[idle], active]), kind="stable")
+        by_row = np.argsort(
+            np.concatenate([row_shard[~carried], np.repeat(active, kept_len)]), kind="stable"
+        )
+        shards, frontiers, updates, lens, evicted = (
+            np.concatenate([a[idle], b])[by_shard].astype("<i8")
+            for a, b in (
+                (shards, active),
+                (frontiers, frontier),
+                (updates, done),
+                (lens, kept_len),
+                (evicted, lost),
+            )
+        )
+        seqs = np.concatenate([seqs[~carried], kept_seqs])[by_row].astype("<i8")
+        procs = np.concatenate([procs[~carried], kept_procs])[by_row]
+        fields = (shards, frontiers, updates, lens, seqs, procs, evicted)
+        state.update(tuple(f.tobytes() for f in fields[:n_fields]))
+        out = {
+            "shard_id": active,
+            "frontier_seq": pd.Series(frontier, dtype="Int64").mask(frontier == _NO_FRONTIER),
+            "processed_uncheckpointed_count": behind,
             "in_flight_count": in_flight,
-            "update_id": n_updates,
+            "update_id": done.astype(np.int32),
         }
         if evicting:
-            row["evicted_count"] = n_evicted
-        yield pd.DataFrame([row])
+            out["evicted_count"] = lost
+        yield pd.DataFrame(out)
 
     return _track
 
@@ -206,11 +276,11 @@ def streaming_checkpoint_frontier(
     and the cumulative ``evicted_count`` column reports the loss.
 
     ``max_pending`` CANNOT be toggled across a restart of the same
-    checkpoint location: the bounded tracker persists a 5-field state
-    (extra evicted_count) where the default persists 4, and Spark state
-    schemas are fixed at first run.  The kernel detects the mismatch and
+    checkpoint location: the bounded tracker persists an extra ``evicted``
+    state field, and Spark state schemas are fixed at first run.  The kernel detects the mismatch and
     raises an actionable error instead of an opaque unpack failure."""
-    return df.groupBy("shard_id").applyInPandasWithState(
+    bucketed = df.withColumn("bucket", F.pmod(F.col("shard_id"), F.lit(SHARD_BUCKETS)))
+    return bucketed.groupBy("bucket").applyInPandasWithState(
         _make_track(max_pending),
         outputStructType=(
             OUTPUT_SCHEMA if max_pending is None else EVICTING_OUTPUT_SCHEMA

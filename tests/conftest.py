@@ -15,7 +15,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    s = get_session("tests", shuffle_partitions=8)
+    s = get_session("tests")
     yield s
 
 

@@ -87,19 +87,14 @@ def test_window_query_matches_tracker_scan_randomized(spark):
     # Cross-implementation invariant: the batch window-SQL frontier
     # (operators/checkpoint.py) and the stateful tracker's scan
     # (streaming/tracker.py::_advance) implement the SAME semantics.
-    # 200 random (shard, seq, processed) rows, fixed seed.
+    # 200 random (shard, seq, processed) rows, fixed seed, all shards in
+    # ONE scan as the tracker runs a bucket of shards.
     import random
 
     import numpy as np
 
     from kcl_akka_stream_spark.operators.checkpoint import checkpoint_frontier
     from kcl_akka_stream_spark.streaming.tracker import _NO_FRONTIER, _advance
-
-    def scan(seqs, procs):
-        f, _, _, behind, in_flight, _ = _advance(
-            _NO_FRONTIER, np.array(seqs, dtype=np.int64), np.array(procs, dtype=bool), None
-        )
-        return None if f == _NO_FRONTIER else f, behind, in_flight
 
     rng = random.Random(42)
     rows = []
@@ -116,18 +111,21 @@ def test_window_query_matches_tracker_scan_randomized(spark):
         r.shard_id: (r.frontier_seq, r.processed_uncheckpointed_count, r.in_flight_count)
         for r in checkpoint_frontier(df, "shard_id", "seq", "processed").collect()
     }
-    per_shard: dict[int, tuple[list, list]] = {}
-    for shard, seq, proc in rows:
-        per_shard.setdefault(shard, ([], []))
-        per_shard[shard][0].append(seq)
-        per_shard[shard][1].append(proc)
-    want = {s: scan(seqs, procs) for s, (seqs, procs) in per_shard.items()}
+    shard, seq, proc = (np.array(col) for col in zip(*rows))
+    shards = np.unique(shard)
+    f, _, behind, in_flight, _, _, _ = _advance(
+        shards, np.full(len(shards), _NO_FRONTIER), shard, seq, proc, None
+    )
+    want = {
+        int(s): (None if f[i] == _NO_FRONTIER else int(f[i]), int(behind[i]), int(in_flight[i]))
+        for i, s in enumerate(shards)
+    }
     assert got == want
 
 
 def test_tracker_rejects_max_pending_toggle_on_existing_state():
-    # A checkpoint written by the 4-field default tracker cannot resume
-    # with max_pending enabled (5-field state) -- the kernel must raise
+    # A checkpoint written by the 6-field default tracker cannot resume
+    # with max_pending enabled (7-field state) -- the kernel must raise
     # an actionable error, not an opaque unpack failure.
     import pandas as pd
     import pytest
@@ -136,12 +134,12 @@ def test_tracker_rejects_max_pending_toggle_on_existing_state():
 
     class FakeState:
         exists = True
-        get = (0, [], [], 1)  # 4-field default-tracker state
+        get = (b"",) * 6  # 6-field default-tracker state
 
         def update(self, v):
             pass
 
     track = _make_track(3)
-    batch = pd.DataFrame({"seq": [1], "processed": [True]})
+    batch = pd.DataFrame({"shard_id": [1], "seq": [1], "processed": [True]})
     with pytest.raises(ValueError, match="max_pending"):
         list(track((1,), iter([batch]), FakeState()))

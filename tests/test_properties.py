@@ -115,14 +115,24 @@ def brute_tracker(frontier, seqs, procs, max_pending):
 
 
 def advance(frontier, seqs, procs, max_pending=None):
-    """``_advance`` on plain lists, its arrays returned as lists."""
-    f, kept_seqs, kept_procs, behind, in_flight, evicted = _advance(
-        frontier,
+    """``_advance`` on one shard's plain lists: (frontier, kept seqs, kept
+    procs, processed behind the gap, in flight, evicted)."""
+    f, _, behind, in_flight, evicted, kept_seqs, kept_procs = _advance(
+        np.zeros(1, dtype=np.int64),
+        np.array([frontier], dtype=np.int64),
+        np.zeros(len(seqs), dtype=np.int64),
         np.array(seqs, dtype=np.int64),
         np.array(procs, dtype=np.bool_),
         max_pending,
     )
-    return f, kept_seqs.tolist(), kept_procs.tolist(), behind, in_flight, evicted
+    return (
+        int(f[0]),
+        kept_seqs.tolist(),
+        kept_procs.tolist(),
+        int(behind[0]),
+        int(in_flight[0]),
+        int(evicted[0]),
+    )
 
 
 @given(
@@ -152,6 +162,38 @@ def test_advance_matches_brute_force_model(frontier, pairs, max_pending):
     assert advance(frontier, seqs, procs, max_pending) == brute_tracker(
         frontier, seqs, procs, max_pending
     )
+
+
+@given(
+    # (shard, seq, processed) rows in any order; shard 3 never has a row
+    st.lists(st.tuples(st.integers(0, 2), st.integers(0, 12), st.booleans()), max_size=40),
+    st.sampled_from([None, 0, 1, 2, 4]),
+)
+@settings(max_examples=500, deadline=None)
+def test_advance_scans_shards_independently(rows, max_pending):
+    # One scan over several shards, as the tracker runs a bucket, gives
+    # every shard what the brute-force model gives it alone.
+    shards = np.arange(4, dtype=np.int64)
+    frontier = np.array([_NO_FRONTIER, -1, 3, 7], dtype=np.int64)
+    shard = np.array([r[0] for r in rows], dtype=np.int64)
+    seqs = np.array([r[1] for r in rows], dtype=np.int64)
+    procs = np.array([r[2] for r in rows], dtype=np.bool_)
+    f, kept_len, behind, in_flight, evicted, kept_seqs, kept_procs = _advance(
+        shards, frontier, shard, seqs, procs, max_pending
+    )
+    windows = np.split(np.arange(len(kept_seqs)), np.cumsum(kept_len)[:-1])
+    for i in shards:
+        mine = shard == i
+        want = brute_tracker(int(frontier[i]), seqs[mine].tolist(), procs[mine].tolist(), max_pending)
+        got = (
+            int(f[i]),
+            kept_seqs[windows[i]].tolist(),
+            kept_procs[windows[i]].tolist(),
+            int(behind[i]),
+            int(in_flight[i]),
+            int(evicted[i]),
+        )
+        assert got == want
 
 
 # --- salting equivalence ----------------------------------------------------

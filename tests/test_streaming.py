@@ -11,7 +11,9 @@ integration scenarios (IT/KinesisSourceTest.scala, SURVEY §5.2):
 from __future__ import annotations
 
 import datetime
+import json
 import os
+import re
 import shutil
 import tempfile
 import uuid
@@ -488,15 +490,40 @@ def test_throttle_trigger_pacing(spark, stream_dir):
 
 
 def _advance_lists(frontier, seqs, procs, max_pending=None):
-    """The tracker's ``_advance`` on plain lists, its arrays returned as lists."""
+    """The tracker's ``_advance`` on one shard's plain lists: (frontier,
+    kept seqs, kept procs, processed behind the gap, in flight, evicted)."""
     import numpy as np
 
     from kcl_akka_stream_spark.streaming.tracker import _advance
 
-    f, seqs, procs, behind, in_flight, evicted = _advance(
-        frontier, np.array(seqs, dtype=np.int64), np.array(procs, dtype=bool), max_pending
+    f, _, behind, in_flight, evicted, seqs, procs = _advance(
+        np.zeros(1, dtype=np.int64),
+        np.array([frontier]),
+        np.zeros(len(seqs), dtype=np.int64),
+        np.array(seqs, dtype=np.int64),
+        np.array(procs, dtype=bool),
+        max_pending,
     )
-    return f, seqs.tolist(), procs.tolist(), behind, in_flight, evicted
+    return int(f[0]), seqs.tolist(), procs.tolist(), int(behind[0]), int(in_flight[0]), int(evicted[0])
+
+
+def _tracker_state(spark, ckpt):
+    """The tracker's state store under ``ckpt`` decoded per shard:
+    ``{shard: (bucket, frontier, kept seqs, evicted or None)}``."""
+    import numpy as np
+
+    out = {}
+    rows = spark.read.format("statestore").load(ckpt).select("key.bucket", "value.groupState.*")
+    for r in rows.collect():
+        d = r.asDict()
+        shards, frontiers, lens, seqs = (
+            np.frombuffer(d[f], dtype="<i8") for f in ("shards", "frontiers", "lens", "seqs")
+        )
+        windows = np.split(seqs, np.cumsum(lens)[:-1])
+        evicted = np.frombuffer(d["evicted"], dtype="<i8") if "evicted" in d else [None] * len(shards)
+        for shard, frontier, window, n_evicted in zip(shards, frontiers, windows, evicted):
+            out[int(shard)] = (d["bucket"], int(frontier), window.tolist(), n_evicted)
+    return out
 
 
 def test_tracker_state_compaction_unit():
@@ -576,20 +603,10 @@ def test_tracker_state_bounded_across_microbatches(spark, tmp_path):
     assert last.processed_uncheckpointed_count == 5  # 5,6,7,8,9 behind the gap
     assert last.in_flight_count == 1  # seq 4
 
-    state = (
-        spark.read.format("statestore")
-        .load(ckpt)
-        .selectExpr(
-            "key.shard_id AS shard_id",
-            "value.groupState.frontier AS frontier",
-            "octet_length(value.groupState.seqs) DIV 8 AS n_kept",
-        )
-        .collect()
-    )
-    by_shard = {r.shard_id: r for r in state}
-    assert by_shard[1].frontier == 3
+    _, frontier, kept, _ = _tracker_state(spark, ckpt)[1]
+    assert frontier == 3
     # un-acked window = {4,5,6,7,8,9}: 6 records kept, NOT the 10 seen
-    assert by_shard[1].n_kept == 6
+    assert kept == [4, 5, 6, 7, 8, 9]
 
 
 def test_tracker_eviction_bound_unit():
@@ -678,19 +695,9 @@ def test_tracker_poisoned_shard_bounded_state(spark, tmp_path):
     assert last.evicted_count == 1
     assert last.in_flight_count == 0 and last.processed_uncheckpointed_count == 0
 
-    state = (
-        spark.read.format("statestore")
-        .load(ckpt)
-        .selectExpr(
-            "key.shard_id AS shard_id",
-            "octet_length(value.groupState.seqs) DIV 8 AS n_kept",
-            "value.groupState.n_evicted AS n_evicted",
-        )
-        .collect()
-    )
-    by_shard = {r.shard_id: r for r in state}
-    assert by_shard[1].n_kept == 0
-    assert by_shard[1].n_evicted == 1
+    _, _, kept, n_evicted = _tracker_state(spark, ckpt)[1]
+    assert kept == []
+    assert n_evicted == 1
 
 
 def test_tracker_compiles_no_code_per_steady_trigger(spark, tmp_path):
@@ -700,15 +707,15 @@ def test_tracker_compiles_no_code_per_steady_trigger(spark, tmp_path):
     # fresh lambda-variable ids: 2 compilations per trigger); the binary
     # state must compile nothing once every path has run.  Files are
     # written with pandas, so nothing else in the window runs Spark code.
+    # Runs on the session's state partitions and again on 4, where the
+    # shards' groups fall in several tasks and some tasks get none.
     import pandas as pd
 
     from kcl_akka_stream_spark.streaming.tracker import streaming_checkpoint_frontier
 
-    src = tmp_path / "codegen_src"
-    src.mkdir()
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
 
-    def put(i):
+    def put(src, i):
         # every trigger touches every shard: new records, some left un-acked
         seqs = list(range(i * 10, i * 10 + 10))
         pdf = pd.DataFrame(
@@ -721,38 +728,48 @@ def test_tracker_compiles_no_code_per_steady_trigger(spark, tmp_path):
         pdf.to_parquet(src / f".f{i}", index=False)
         os.rename(src / f".f{i}", src / f"f{i}.parquet")
 
-    put(0)
-    stream = (
-        spark.readStream.schema("shard_id long, seq long, processed boolean")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    q = (
-        streaming_checkpoint_frontier(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(f"t_codegen_{uuid.uuid4().hex[:8]}")
-        .option("checkpointLocation", str(tmp_path / "codegen_ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        counts = []
-        for i in range(1, 6):
-            put(i)
+    def run(tag):
+        src = tmp_path / f"codegen_src_{tag}"
+        src.mkdir()
+        put(src, 0)
+        stream = (
+            spark.readStream.schema("shard_id long, seq long, processed boolean")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(str(src))
+        )
+        q = (
+            streaming_checkpoint_frontier(stream)
+            .writeStream.outputMode("update")
+            .format("memory")
+            .queryName(f"t_codegen_{uuid.uuid4().hex[:8]}")
+            .option("checkpointLocation", str(tmp_path / f"codegen_ckpt_{tag}"))
+            .start()
+        )
+        try:
             q.processAllAvailable()
-            counts.append(codegen.METRIC_COMPILATION_TIME().getCount())
+            counts = []
+            for i in range(1, 6):
+                put(src, i)
+                q.processAllAvailable()
+                counts.append(codegen.METRIC_COMPILATION_TIME().getCount())
+        finally:
+            q.stop()
+        assert q.lastProgress["batchId"] == 5
+        assert counts[-1] == counts[1], f"compilations after triggers 1-5: {counts}"
+
+    run("default")
+    previous = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        run("four")
     finally:
-        q.stop()
-    assert q.lastProgress["batchId"] == 5
-    assert counts[-1] == counts[1], f"compilations after triggers 1-5: {counts}"
+        spark.conf.set("spark.sql.shuffle.partitions", previous)
 
 
-def test_tracker_rejects_array_layout_checkpoint(spark, tmp_path):
-    # Checkpoints written before the state went binary held the kept window
-    # as array<long>/array<boolean>; resuming one must fail on Spark's
-    # state-schema check (documented: start a fresh checkpointLocation),
-    # never decode array bytes as packed int64.
+def _tracker_refuses_checkpoint(spark, tmp_path, state_schema, state_of):
+    """Start a checkpoint with a hand-made per-shard kernel that stores
+    ``state_of(seqs)`` under ``state_schema``, resume it with the tracker
+    and return the error it stops with."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
     from pyspark.sql.utils import StreamingQueryException
@@ -769,16 +786,13 @@ def test_tracker_rejects_array_layout_checkpoint(spark, tmp_path):
     stream = spark.readStream.schema(schema).parquet(src)
 
     def _old_track(key, pdfs, state):
-        seqs = [int(s) for pdf in pdfs for s in pdf["seq"]]
-        state.update((0, seqs, [True] * len(seqs), 1))
+        state.update(state_of([int(s) for pdf in pdfs for s in pdf["seq"]]))
         yield pd.DataFrame([(int(key[0]), 0, 0, 0, 1)], columns=OUTPUT_SCHEMA.names)
 
     old = stream.groupBy("shard_id").applyInPandasWithState(
         _old_track,
         outputStructType=OUTPUT_SCHEMA,
-        stateStructType=(
-            "frontier long, seqs array<long>, procs array<boolean>, n_updates int"
-        ),
+        stateStructType=state_schema,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -806,16 +820,52 @@ def test_tracker_rejects_array_layout_checkpoint(spark, tmp_path):
             q.processAllAvailable()
     finally:
         q.stop()
-    assert "STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE" in str(err.value)
+    return str(err.value)
+
+
+def test_tracker_rejects_array_layout_checkpoint(spark, tmp_path):
+    # Checkpoints written before the state went binary held the kept window
+    # as array<long>/array<boolean>; resuming one must fail on Spark's
+    # state-schema check (documented: start a fresh checkpointLocation),
+    # never decode array bytes as packed int64.
+    err = _tracker_refuses_checkpoint(
+        spark,
+        tmp_path,
+        "frontier long, seqs array<long>, procs array<boolean>, n_updates int",
+        lambda seqs: (0, seqs, [True] * len(seqs), 1),
+    )
+    assert "STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE" in err
+
+
+def test_tracker_rejects_per_shard_layout_checkpoint(spark, tmp_path):
+    # Checkpoints written before the state was keyed by bucket held one
+    # binary window per shard key; resuming one must fail on Spark's
+    # state-schema check, never read a shard's window as a bucket's.
+    import numpy as np
+
+    err = _tracker_refuses_checkpoint(
+        spark,
+        tmp_path,
+        "frontier long, seqs binary, procs binary, n_updates int",
+        lambda seqs: (
+            0,
+            np.array(seqs, dtype="<i8").tobytes(),
+            np.ones(len(seqs), dtype=np.bool_).tobytes(),
+            1,
+        ),
+    )
+    assert "STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE" in err
 
 
 @pytest.mark.parametrize("max_pending", [None, 3])
 def test_tracker_resumes_state_written_in_the_binary_layout(spark, tmp_path, max_pending):
-    # A hand-made kernel writes the tracker's state exactly as the binary
-    # layout defines it (frontier, seqs packed little-endian int64, procs
-    # packed bool, n_updates[, n_evicted]); the real tracker must resume
-    # that checkpoint and carry on from it.  Guards the field order and the
-    # encoding, which old checkpoints depend on.
+    # A hand-made kernel writes a bucket's state exactly as the binary
+    # layout defines it (per shard: shards, frontiers, updates, window
+    # lens[, evicted] packed little-endian int64; the windows' seqs int64
+    # and procs bool concatenated in shard order); the real tracker must
+    # resume that checkpoint, carry on from it, and keep the state of a
+    # shard of the same bucket that this trigger does not touch.  Guards
+    # the field order and the encoding, which checkpoints depend on.
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -824,27 +874,41 @@ def test_tracker_resumes_state_written_in_the_binary_layout(spark, tmp_path, max
         EVICTING_OUTPUT_SCHEMA,
         EVICTING_STATE_SCHEMA,
         OUTPUT_SCHEMA,
+        SHARD_BUCKETS,
         STATE_SCHEMA,
         streaming_checkpoint_frontier,
     )
 
     evicting = max_pending is not None
     output_schema = EVICTING_OUTPUT_SCHEMA if evicting else OUTPUT_SCHEMA
+    idle = 1 + SHARD_BUCKETS  # same bucket as shard 1
     src = str(tmp_path / "layout_src")
     ckpt = str(tmp_path / "layout_ckpt")
     schema = "shard_id long, seq long, processed boolean"
     spark.createDataFrame([(1, 0, True)], schema).write.parquet(src)
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
 
+    def packed(*values, dtype="<i8"):
+        return np.array(values, dtype=dtype).tobytes()
+
     def seed_state(key, pdfs, state):
         for _ in pdfs:
             pass
-        # frontier 10; window 12 (un-acked), 13 (acked), 15 (un-acked),
-        # 20 (acked); 7 updates so far; 4 records evicted so far
-        seqs = np.array([12, 13, 15, 20], dtype="<i8").tobytes()
-        procs = np.array([False, True, False, True], dtype=np.bool_).tobytes()
-        state.update((10, seqs, procs, 7) + ((4,) if evicting else ()))
-        row = (int(key[0]), 10, 2, 2, 7) + ((4,) if evicting else ())
+        # shard 1: frontier 10; window 12 (un-acked), 13 (acked), 15
+        # (un-acked), 20 (acked); 7 updates so far; 4 records evicted.
+        # shard 33: frontier 5; window 7 (un-acked); 2 updates; 0 evicted
+        state.update(
+            (
+                packed(1, idle),
+                packed(10, 5),
+                packed(7, 2),
+                packed(4, 1),
+                packed(12, 13, 15, 20, 7),
+                packed(False, True, False, True, False, dtype=np.bool_),
+            )
+            + ((packed(4, 0),) if evicting else ())
+        )
+        row = (1, 10, 2, 2, 7) + ((4,) if evicting else ())
         yield pd.DataFrame([row], columns=output_schema.names)
 
     def run(df, rows):
@@ -859,12 +923,16 @@ def test_tracker_resumes_state_written_in_the_binary_layout(spark, tmp_path, max
         finally:
             q.stop()
 
-    seeded = stream.groupBy("shard_id").applyInPandasWithState(
-        seed_state,
-        outputStructType=output_schema,
-        stateStructType=EVICTING_STATE_SCHEMA if evicting else STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    seeded = (
+        stream.withColumn("bucket", F.pmod(F.col("shard_id"), F.lit(SHARD_BUCKETS)))
+        .groupBy("bucket")
+        .applyInPandasWithState(
+            seed_state,
+            outputStructType=output_schema,
+            stateStructType=EVICTING_STATE_SCHEMA if evicting else STATE_SCHEMA,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
     )
     run(seeded, [])
 
@@ -872,25 +940,43 @@ def test_tracker_resumes_state_written_in_the_binary_layout(spark, tmp_path, max
     rows = []
     run(streaming_checkpoint_frontier(stream, max_pending=max_pending), rows)
     (last,) = rows
-    window = (
-        spark.read.format("statestore")
-        .load(ckpt)
-        .selectExpr("value.groupState.seqs AS seqs")
-        .collect()[0]
-        .seqs
-    )
-    kept = np.frombuffer(window, dtype="<i8").tolist()
-    assert last.update_id == 8
+    state = _tracker_state(spark, ckpt)
+    assert last.shard_id == 1 and last.update_id == 8
+    assert state[idle] == (1, 5, [7], 0 if evicting else None)
     if evicting:
         # window 12..20 is 5 > 3: evicting 12 releases 13; 15 blocks again
         assert (last.frontier_seq, last.processed_uncheckpointed_count) == (13, 2)
         assert (last.in_flight_count, last.evicted_count) == (1, 5)
-        assert kept == [15, 16, 20]
+        assert state[1] == (1, 13, [15, 16, 20], 5)
     else:
         # 12 still blocks: the stored frontier holds, 16 joins the window
         assert (last.frontier_seq, last.processed_uncheckpointed_count) == (10, 3)
         assert last.in_flight_count == 2
-        assert kept == [12, 13, 15, 16, 20]
+        assert state[1] == (1, 10, [12, 13, 15, 16, 20], None)
+
+
+def test_tracker_state_keys_are_buckets_not_shards(spark, tmp_path):
+    # 100 shards in one trigger land in SHARD_BUCKETS state rows (so at
+    # most that many kernel calls per trigger), each holding only shards
+    # of its own bucket, and every shard's frontier is still its own.
+    from kcl_akka_stream_spark.streaming.tracker import SHARD_BUCKETS
+
+    src = str(tmp_path / "buckets_src")
+    ckpt = str(tmp_path / "buckets_ckpt")
+    # shard s acks seqs 0..2 except seq s % 3
+    spark.createDataFrame(
+        [(s, q, q != s % 3) for s in range(100) for q in range(3)],
+        "shard_id long, seq long, processed boolean",
+    ).write.parquet(src)
+    latest = _tracker_run(spark, src, ckpt)
+    assert {s: (r.frontier_seq, r.in_flight_count) for s, r in latest.items()} == {
+        s: ([None, 0, 1][s % 3], 1) for s in range(100)
+    }
+    rows = spark.read.format("statestore").load(ckpt).count()
+    assert rows == SHARD_BUCKETS
+    state = _tracker_state(spark, ckpt)
+    assert sorted(state) == list(range(100))
+    assert all(bucket == s % SHARD_BUCKETS for s, (bucket, *_) in state.items())
 
 
 _ZIP_REREAD_PROBE = r"""
@@ -956,6 +1042,112 @@ def test_worker_daemon_rereads_zip_directory_only_when_changed(tmp_path):
 def test_session_forks_workers_from_the_worker_daemon(spark):
     conf = spark.sparkContext.getConf()
     assert conf.get("spark.python.daemon.module") == "kcl_akka_stream_spark.worker_daemon"
+
+
+def test_session_driver_memory_default_fits_the_host(monkeypatch):
+    from kcl_akka_stream_spark.session import _driver_memory
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    assert _driver_memory() == f"{min(48 * 1024, phys_mb // 2)}m"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert _driver_memory() == "2g"
+
+
+def _tracker_run(spark, src, ckpt):
+    """Drain the files under ``src`` through the tracker on ``ckpt``;
+    return the newest row per shard."""
+    from kcl_akka_stream_spark.streaming.tracker import streaming_checkpoint_frontier
+
+    stream = (
+        spark.readStream.schema("shard_id long, seq long, processed boolean")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+    rows = []
+    q = (
+        streaming_checkpoint_frontier(stream)
+        .writeStream.outputMode("update")
+        .foreachBatch(lambda b, _: rows.extend(b.collect()))
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    latest = {}
+    for r in rows:
+        if r.shard_id not in latest or r.update_id > latest[r.shard_id].update_id:
+            latest[r.shard_id] = r
+    return latest
+
+
+def _state_partition_dirs(ckpt):
+    return sorted(d for d in os.listdir(os.path.join(ckpt, "state", "0")) if d.isdigit())
+
+
+def _offset_log_conf(ckpt, batch):
+    with open(os.path.join(ckpt, "offsets", str(batch))) as f:
+        return json.loads(f.read().splitlines()[1])["conf"]
+
+
+def test_tracker_state_partitions_apart_from_batch_parallelism(spark, tmp_path):
+    # A fresh tracker query runs STATE_PARTITIONS state partitions and pins
+    # that count in its offset log, while batch exchanges on the same
+    # session still start at one partition per core.
+    from kcl_akka_stream_spark.plans.hygiene import physical_plan
+    from kcl_akka_stream_spark.session import STATE_PARTITIONS, _cpus
+
+    src = str(tmp_path / "parts_src")
+    ckpt = str(tmp_path / "parts_ckpt")
+    spark.createDataFrame(
+        [(s, q, True) for s in range(8) for q in range(3)],
+        "shard_id long, seq long, processed boolean",
+    ).write.parquet(src)
+    latest = _tracker_run(spark, src, ckpt)
+    assert {s: r.frontier_seq for s, r in latest.items()} == {s: 2 for s in range(8)}
+    assert _state_partition_dirs(ckpt) == [str(p) for p in range(STATE_PARTITIONS)]
+    assert _offset_log_conf(ckpt, 0)["spark.sql.shuffle.partitions"] == str(STATE_PARTITIONS)
+
+    batch = spark.range(100).withColumn("k", F.col("id") % 7).groupBy("k").count()
+    assert re.findall(r"hashpartitioning\(k#\d+L, (\d+)\)", physical_plan(batch)) == [
+        str(_cpus())
+    ]
+
+
+def test_tracker_checkpoint_keeps_its_state_partition_count_on_resume(spark, tmp_path):
+    # A checkpoint first started with 4 state partitions resumes on the
+    # default session with 4: Spark restores the count from the offset log,
+    # and every shard's frontier and update_id carry on from their state.
+    schema = "shard_id long, seq long, processed boolean"
+    src = str(tmp_path / "resume_src")
+    ckpt = str(tmp_path / "resume_ckpt")
+    # seqs 0..4 per shard, seq 3 of shard 5 not yet acked
+    spark.createDataFrame(
+        [(s, q, not (s == 5 and q == 3)) for s in range(8) for q in range(5)], schema
+    ).coalesce(1).write.parquet(src)
+    previous = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        first = _tracker_run(spark, src, ckpt)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", previous)
+    assert {s: r.frontier_seq for s, r in first.items()} == {
+        s: 2 if s == 5 else 4 for s in range(8)
+    }
+    assert {r.update_id for r in first.values()} == {1}
+
+    # seqs 5..9 per shard, plus shard 5's late ack of seq 3
+    spark.createDataFrame(
+        [(s, q, True) for s in range(8) for q in range(5, 10)] + [(5, 3, True)], schema
+    ).coalesce(1).write.mode("append").parquet(src)
+    resumed = _tracker_run(spark, src, ckpt)
+    assert {s: r.frontier_seq for s, r in resumed.items()} == {s: 9 for s in range(8)}
+    assert {r.update_id for r in resumed.values()} == {2}
+    assert {r.in_flight_count for r in resumed.values()} == {0}
+    assert _state_partition_dirs(ckpt) == ["0", "1", "2", "3"]
+    assert _offset_log_conf(ckpt, 1)["spark.sql.shuffle.partitions"] == "4"
 
 
 def test_watermark_drops_too_late_rows(spark, tmp_path):
