@@ -263,18 +263,6 @@ def pearson_stats(
     )
 
 
-def merge_power_sums(states: DataFrame, group_col: str) -> DataFrame:
-    """Merge per-batch power-sum states: plain addition per component --
-    the closure property that makes the state streamable and
-    incrementally maintainable (the exact twin of KMV/CMS merge)."""
-    return states.groupBy(group_col).agg(
-        F.sum("n").cast("long").alias("n"),
-        F.sum("s1").cast("long").alias("s1"),
-        F.sum("s2").cast("long").alias("s2"),
-        F.sum("s3").cast("long").alias("s3"),
-    )
-
-
 def cooccurrence_pairs(
     df: DataFrame,
     basket_col: str,

@@ -336,13 +336,6 @@ def bitmap_state(
     )
 
 
-def bitmap_merge(states: DataFrame, group_col: str) -> DataFrame:
-    """Merge bitmap states: OR per (group, word) -- the closure property
-    that makes the exact count streamable and incrementally
-    maintainable (idempotent, so replayed batches cannot double-count)."""
-    return states.groupBy(group_col, "wrd").agg(F.bit_or("bits").alias("bits"))
-
-
 def bitmap_counts(state: DataFrame, group_col: str) -> DataFrame:
     """Finalize bitmap states: popcount each word, sum per group.
     Returns (group, n_words, n_distinct) -- n_distinct is EXACT."""

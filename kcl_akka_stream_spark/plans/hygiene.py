@@ -68,9 +68,10 @@ def summarize_plan_str(plan: str) -> dict:
     formatted mode's ``(N) Op`` detail headers (what physical_plan()
     captures for each epoch state inside streaming_q._fold_epochs) and
     the simple mode's tree lines (what StreamingQuery.explainInternal
-    emits for the watermark families).  Counting rules mirror count_operator /
-    count_exchanges exactly: node NAMES anchored, so ReusedExchange and
-    BroadcastExchange never inflate the shuffle count."""
+    emits for the _aggregate_epochs and memory-sink twins).  Counting
+    rules mirror count_operator / count_exchanges exactly: node NAMES
+    anchored, so ReusedExchange and BroadcastExchange never inflate the
+    shuffle count."""
     # explainInternal carries every section (Parsed/Analyzed/Optimized/
     # Physical); only the physical tree counts.  Formatted mode prints
     # its detail headers ``(N) Op`` at COLUMN 0 -- the simple mode's

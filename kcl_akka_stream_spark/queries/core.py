@@ -4815,20 +4815,22 @@ def agg_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows per half -- the r10 advice finding).  Shard upstream past 3e9.
     # Scale shape: ONE combinable (type, half, bin) count agg; the
     # alignment join, windows and max all ride the BIN-sized relation.
-    ev = tbl(spark, sf_dir, "events")
-    # PIVOTED build: the two halves are conditional counters inside ONE
-    # combinable (type, bin) agg -- no per-half relation, no full-outer
-    # alignment join (the streaming twin keeps the (type, half, bin)
-    # state shape because per-batch halves must merge by addition; here
-    # the batch plan can fuse them).
-    j = ev.groupBy(
+    return _ks_finalize(_ks_counts(tbl(spark, sf_dir, "events")))
+
+
+def _ks_counts(ev: DataFrame) -> DataFrame:
+    """PIVOTED half counters ``ca``/``cb`` per (event_type, deci-bin): the
+    two halves are conditional counters inside ONE combinable agg -- no
+    per-half relation, no full-outer alignment join.  Shared by
+    ``agg_ks_drift`` and its streaming twin, whose state store adds them
+    across micro-batches."""
+    return ev.groupBy(
         F.col("event_type"),
         F.expr("cast(floor(value * 10 + 0.5) as bigint)").alias("bin"),
     ).agg(
         F.sum((F.col("event_id") % 2 == 0).cast("long")).cast("long").alias("ca"),
         F.sum((F.col("event_id") % 2 == 1).cast("long")).cast("long").alias("cb"),
     )
-    return _ks_finalize(j)
 
 
 def _ks_finalize(j: DataFrame) -> DataFrame:

@@ -3707,7 +3707,13 @@ def pipeline_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     history = _rollup_partial(ev.filter(F.col("event_id") % 4 != 0))
     batch = _rollup_partial(ev.filter(F.col("event_id") % 4 == 0))
-    return _rollup_finalize(history.unionByName(batch))
+    merged = history.unionByName(batch).groupBy("event_type").agg(
+        F.sum("n").cast("long").alias("n"),
+        F.sum("sum_cents").cast("long").alias("sum_cents"),
+        F.min("min_cents").cast("long").alias("min_cents"),
+        F.max("max_cents").cast("long").alias("max_cents"),
+    )
+    return _rollup_finalize(merged)
 
 
 def _rollup_partial(d: DataFrame) -> DataFrame:
@@ -3721,16 +3727,10 @@ def _rollup_partial(d: DataFrame) -> DataFrame:
     )
 
 
-def _rollup_finalize(states: DataFrame) -> DataFrame:
-    """Merge ``_rollup_partial`` states and derive ``avg_micro`` after the
-    merge.  Shared by ``pipeline_rollup_incremental`` and its streaming
-    twin."""
-    merged = states.groupBy("event_type").agg(
-        F.sum("n").cast("long").alias("n"),
-        F.sum("sum_cents").cast("long").alias("sum_cents"),
-        F.min("min_cents").cast("long").alias("min_cents"),
-        F.max("max_cents").cast("long").alias("max_cents"),
-    )
+def _rollup_finalize(merged: DataFrame) -> DataFrame:
+    """Derive ``avg_micro`` from one merged ``_rollup_partial`` state per
+    event_type.  Shared by ``pipeline_rollup_incremental`` and its
+    streaming twin."""
     return merged.select(
         "event_type",
         "n",

@@ -10,19 +10,25 @@ lifecycle in this module:
 - ``_memory_sink(spark, writer, tag)`` drains into a memory sink and
   returns its rows with the sink's temp view already dropped, so no run
   leaves a view (and its rows) behind in the session catalog.
-- ``_fold_epochs(spark, df, partial, tag)`` is the one harness for the
-  mergeable-state twins, modelled on Discretized Streams (state is one
-  dataset per interval, merged after the intervals).  It stages ``df``
-  as ``N_EPOCHS`` files, streams one file per trigger, and in
-  foreachBatch turns each micro-batch into its partial state
-  ``partial(batch_df, epoch_id)``, pinned executor-side by an eager
-  localCheckpoint.  After the drain it stops the query, removes the
-  staged files and returns the union of the per-epoch states; the twin
-  merges and finalizes that union.  No state row ever folds through the
-  driver, so state size is an executor concern at any scale.  A twin
-  whose batch query derives its answer from the same state calls that
-  query's ``_*_finalize`` helper (core.py / pipeline.py) instead of a
-  copy, so the two differ only in how the state is built.
+- ``_stream_epochs(spark, df, sink)`` stages ``df`` as ``N_EPOCHS``
+  files and drains ``sink(stream)`` one file per trigger, removing the
+  files whatever the query raised.  Both mergeable-state harnesses run on
+  it.  ``_aggregate_epochs(spark, df, aggregate, tag)`` runs the streaming
+  aggregation ``aggregate(stream)`` in complete mode, so Spark's state
+  store merges the epochs (Structured Streaming), and returns the last
+  trigger's table.  ``_fold_epochs(spark, df, partial, tag)`` pins each
+  epoch's own state ``partial(batch_df, epoch_id)`` and returns their
+  union for the twin to merge (Discretized Streams).
+
+A twin whose merge is a built-in aggregate (count, sum, min, max,
+bit_or, max of a struct) runs on ``_aggregate_epochs`` and writes that
+aggregate once.  ``_fold_epochs`` keeps the other merges (bottom-k,
+reservoir, top-k, sessions, quantile) and the partials that call
+``plans.hygiene.spread``, whose ``df.rdd`` raises on a streaming
+DataFrame (minhash, bootstrap).  Either way eager localCheckpoints pin
+the state executor-side and no state row folds through the driver.  A
+twin whose batch query derives its answer from the same state calls that
+query's ``_*_finalize`` helper (core.py / pipeline.py) instead of a copy.
 
 ``stream_scd2_merge`` keeps its own callback: its merge depends on batch
 order, so each batch folds into the standing table as it arrives.
@@ -42,7 +48,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from kcl_akka_stream_spark.queries.core import (
+    _cents,
     _entropy_finalize,
+    _ks_counts,
     _ks_finalize,
     _mi_finalize,
 )
@@ -59,15 +67,11 @@ from kcl_akka_stream_spark.queries.pipeline import (
 from kcl_akka_stream_spark.queries.registry import query, tbl
 
 
-def _cents(col):
-    return F.floor(col * 100 + F.lit(0.5)).cast("long")
-
-
 #: When tools/explain_audit.py (or a test) installs a capture dict here,
-#: every micro-batch state relation's PHYSICAL plan is recorded under its
-#: family tag before execution: the mergeable-state twins capture inside
-#: _fold_epochs, and the watermark/memory-sink family via
-#: StreamingQuery.explainInternal after the final trigger.
+#: every streaming twin's PHYSICAL plan is recorded under its family tag:
+#: a _fold_epochs twin captures each epoch state before execution, and a
+#: query drained by _aggregate_epochs or _memory_sink captures its final
+#: trigger through StreamingQuery.explainInternal.
 PLAN_CAPTURE: dict[str, list[str]] | None = None
 
 
@@ -76,6 +80,13 @@ def _capture_plan(tag: str, df: DataFrame) -> None:
         from kcl_akka_stream_spark.plans.hygiene import physical_plan
 
         PLAN_CAPTURE.setdefault(tag, []).append(physical_plan(df))
+
+
+def _capture_query_plan(tag: str, q: StreamingQuery) -> None:
+    """Record a drained query's last trigger plan, StateStoreRestore/Save
+    included (a foreachBatch micro-batch is a LogicalRDD that hides it)."""
+    if PLAN_CAPTURE is not None:
+        PLAN_CAPTURE.setdefault(tag, []).append(q._jsq.explainInternal(True))
 
 
 #: The mergeable-state contract (epoch states fold to exactly the
@@ -111,16 +122,30 @@ def _memory_sink(
     """Drain ``writer`` into a uniquely named memory sink and return its
     rows.  The sink's temp view is dropped before returning: the DataFrame
     keeps the sink's rows, and the session catalog holds nothing once the
-    query is done.  With PLAN_CAPTURE installed, the last trigger's plan
-    (extended: the physical StateStoreRestore/Save + Exchange chain; a
-    stopped query keeps its last execution) is recorded under ``tag``."""
+    query is done."""
     name = f"{tag}_{uuid.uuid4().hex[:8]}"
     q = _drain(writer.format("memory").queryName(name))
-    if PLAN_CAPTURE is not None:
-        PLAN_CAPTURE.setdefault(tag, []).append(q._jsq.explainInternal(True))
+    _capture_query_plan(tag, q)
     rows = spark.table(name)
     spark.catalog.dropTempView(name)
     return rows
+
+
+def _stream_epochs(
+    spark: SparkSession,
+    df: DataFrame,
+    sink: Callable[[DataFrame], DataStreamWriter],
+) -> StreamingQuery:
+    """Stage ``df`` as N_EPOCHS files and drain ``sink(stream)`` over them,
+    one file per trigger.  The staged files are removed (and the query
+    stopped) even when a trigger raises."""
+    src = tempfile.mkdtemp(prefix="kcl_epochs_")
+    try:
+        _write_epoch_fixture(df, src)
+        stream = spark.readStream.schema(df.schema).option("maxFilesPerTrigger", 1)
+        return _drain(sink(stream.parquet(src)))
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
 
 
 def _fold_epochs(
@@ -132,9 +157,7 @@ def _fold_epochs(
     """Stream ``df`` as N_EPOCHS micro-batches and return the union of the
     per-epoch states ``partial(batch_df, epoch_id)``.  Each state is
     pinned by an eager localCheckpoint inside its trigger, so it lives in
-    executor block storage and outlives the staged files, which are
-    removed (and the query stopped) even when a trigger raises."""
-    src = tempfile.mkdtemp(prefix="kcl_epochs_")
+    executor block storage and outlives the staged files."""
     states: list[DataFrame] = []
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
@@ -142,17 +165,38 @@ def _fold_epochs(
         _capture_plan(tag, st)
         states.append(st.localCheckpoint(eager=True))
 
-    try:
-        _write_epoch_fixture(df, src)
-        _drain(
-            spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(fold)
-        )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    _stream_epochs(spark, df, lambda s: s.writeStream.foreachBatch(fold))
     return reduce(DataFrame.unionByName, states)
+
+
+def _aggregate_epochs(
+    spark: SparkSession,
+    df: DataFrame,
+    aggregate: Callable[[DataFrame], DataFrame],
+    tag: str,
+) -> DataFrame:
+    """Stream ``df`` as N_EPOCHS micro-batches through the streaming
+    aggregation ``aggregate(stream)`` in complete mode and return its
+    table after the last trigger: Spark's state store merges the epochs.
+    Each trigger pins its table by an eager localCheckpoint and releases
+    the one before, so one table is held at a time, executor-side."""
+    pinned: list[DataFrame] = []
+
+    def pin(batch_df: DataFrame, _epoch_id: int) -> None:
+        pinned.append(batch_df.localCheckpoint(eager=True))
+        if len(pinned) > 1:
+            # DataFrame.unpersist only drops cache-manager entries; a
+            # local checkpoint's blocks belong to its LogicalRDD's RDD
+            # (Spark warns that it cannot be recomputed; nothing reads it)
+            old = pinned.pop(0)
+            old._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+    def sink(stream: DataFrame) -> DataStreamWriter:
+        return aggregate(stream).writeStream.outputMode("complete").foreachBatch(pin)
+
+    q = _stream_epochs(spark, df, sink)
+    _capture_query_plan(tag, q)
+    return pinned[-1]
 
 
 @query(
@@ -605,27 +649,19 @@ def stream_kmv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming Count-Min rollup: per-epoch counter states (<= depth x width
-    # counters) sum into the global sketch, which counter additivity makes
-    # equal to the direct batch build -- the oracle checks every counter.
-    from kcl_akka_stream_spark.operators.sketches import cms_merge, cms_state
+    # Streaming Count-Min rollup: the state store sums the epochs' <= depth
+    # x width counters into the global sketch, equal to the direct batch
+    # build by counter additivity -- the oracle checks every counter.
+    from kcl_akka_stream_spark.operators.sketches import cms_state
 
     ev = tbl(spark, sf_dir, "events").select("user_id")
-    states = _fold_epochs(
+    state = _aggregate_epochs(
         spark,
         ev,
-        lambda b, epoch: cms_state(
-            b.withColumn("g", F.lit(epoch)),
-            "user_id",
-            depth=4,
-            width=64,
-            group_col="g",
-        ),
+        lambda s: cms_state(s, "user_id", depth=4, width=64),
         "stream_cms_merge",
     )
-    return cms_merge(states).select(
-        "row", "bucket", F.col("cnt").cast("long").alias("cnt")
-    )
+    return state.select("row", "bucket", F.col("cnt").cast("long").alias("cnt"))
 
 
 @query(
@@ -685,16 +721,16 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_hist_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming median: per-epoch equi-width histogram states (types x 50
-    # bin counts) merge by SUMMING counts, so the merged histogram equals the
-    # direct one and the oracle is agg_hist_median's.  No sort, no raw-value
-    # retention.
+    # Streaming median: an equi-width histogram (types x 50 bin counts)
+    # whose counts the state store SUMS across epochs, so it equals the
+    # direct one and the oracle is agg_hist_median's.  No sort, no
+    # raw-value retention.
     width, n_bins = 10.0, 50
     ev = tbl(spark, sf_dir, "events").select("event_type", "value")
-    states = _fold_epochs(
+    counts = _aggregate_epochs(
         spark,
         ev,
-        lambda b, _epoch: b.groupBy(
+        lambda s: s.groupBy(
             "event_type",
             F.least(
                 F.floor(F.col("value") / width).cast("long"),
@@ -703,8 +739,7 @@ def stream_hist_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).agg(F.count(F.lit(1)).alias("cnt")),
         "stream_hist_merge",
     )
-    merged = states.groupBy("event_type", "bin").agg(F.sum("cnt").alias("cnt"))
-    return _hist_median_finalize(merged, width)
+    return _hist_median_finalize(counts, width)
 
 
 @query(
@@ -788,23 +823,24 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The CDC-apply / keyed-upsert pattern: each epoch folds to its latest
-    # row per key -- the max of the UNIQUE (ts, event_id) struct (duplicate-
-    # ts max_by would be fold-order-nondeterministic) -- and the upsert is
-    # the same argmax over the epoch states.  Argmax is associative and
-    # commutative, so the final table is batch-split-independent, which the
-    # whole-table oracle verifies.  State is one row per key.
+    # The CDC-apply / keyed-upsert pattern: the latest row per key is the
+    # max of the UNIQUE (ts, event_id) struct (duplicate-ts max_by would be
+    # fold-order-nondeterministic), and the state store applies each epoch
+    # as the same argmax.  Argmax is associative and commutative, so the
+    # final table is batch-split-independent, which the whole-table oracle
+    # verifies.  State is one row per key.
     ev = tbl(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", "ts"
     )
-    latest = F.max(F.struct("ts", "event_id", "event_type")).alias("s")
-    states = _fold_epochs(
+    latest = _aggregate_epochs(
         spark,
         ev,
-        lambda b, _epoch: b.groupBy("user_id").agg(latest),
+        lambda s: s.groupBy("user_id").agg(
+            F.max(F.struct("ts", "event_id", "event_type")).alias("s")
+        ),
         "stream_cdc_upsert",
     )
-    return states.groupBy("user_id").agg(F.max("s").alias("s")).select(
+    return latest.select(
         "user_id",
         F.col("s.event_id").alias("last_event_id"),
         F.col("s.event_type").alias("last_event_type"),
@@ -1170,22 +1206,19 @@ def _rollup_incremental_oracle() -> str:
 
 @query("stream_rollup_incremental", _rollup_incremental_oracle())
 def stream_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming twin of pipeline_rollup_incremental, SAME oracle: per-epoch
-    # count/sum/min/max states (commutative monoids) merge states-sized, and
-    # derived columns (avg) compute after the merge.
+    # Streaming twin of pipeline_rollup_incremental, SAME oracle: the
+    # count/sum/min/max state (commutative monoids) merges across epochs in
+    # the state store, and derived columns (avg) compute after the drain.
     ev = tbl(spark, sf_dir, "events").select("event_type", "value")
-    states = _fold_epochs(
+    state = _aggregate_epochs(
         spark,
         ev,
-        lambda b, _epoch: _rollup_partial(
-            b.select(
-                "event_type",
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
-            )
+        lambda s: _rollup_partial(
+            s.select("event_type", _cents(F.col("value")).alias("v"))
         ),
         "stream_rollup_incremental",
     )
-    return _rollup_finalize(states)
+    return _rollup_finalize(state)
 
 
 def _power_sums_oracle() -> str:
@@ -1196,23 +1229,19 @@ def _power_sums_oracle() -> str:
 
 @query("stream_moments_merge", _power_sums_oracle())
 def stream_moments_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming twin of agg_power_sums, SAME oracle: per-epoch exact
-    # integer power sums merge by addition (merge_power_sums); the mean
-    # derives after the merge.
-    from kcl_akka_stream_spark.operators.aggregations import (
-        merge_power_sums,
-        power_sums,
-    )
+    # Streaming twin of agg_power_sums, SAME oracle: the state store adds
+    # the epochs' exact integer power sums; the mean derives after the
+    # drain.
+    from kcl_akka_stream_spark.operators.aggregations import power_sums
 
     ev = tbl(spark, sf_dir, "events").select("event_type", "value")
-    states = _fold_epochs(
+    sums = _aggregate_epochs(
         spark,
         ev,
-        lambda b, _epoch: power_sums(b, "event_type", "value"),
+        lambda s: power_sums(s, "event_type", "value"),
         "stream_moments_merge",
     )
-    merged = merge_power_sums(states, "event_type")
-    return merged.select(
+    return sums.select(
         "event_type", "n", "s1", "s2", "s3",
         F.expr("(s1 * 100000) div n").cast("long").alias("mean_micro"),
     )
@@ -1343,26 +1372,24 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_bitmap_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming EXACT distinct rollup: each epoch folds to (type, word,
-    # bits) bitmap words that OR-merge into the global exact count.  OR is
-    # idempotent, so an at-least-once replay of a whole batch changes
+    # Streaming EXACT distinct rollup: (type, word, bits) bitmap words that
+    # the state store OR-merges across epochs into the global exact count.
+    # OR is idempotent, so an at-least-once replay of a whole batch changes
     # nothing.  State is types x dense-id-range/63 words -- it grows with the
-    # id universe -- and the OR-merge is a distributed groupBy.
+    # id universe.
     from kcl_akka_stream_spark.operators.sketches import (
         bitmap_counts,
-        bitmap_merge,
         bitmap_state,
     )
 
     ev = tbl(spark, sf_dir, "events").select("event_type", "user_id")
-    states = _fold_epochs(
+    words = _aggregate_epochs(
         spark,
         ev,
-        lambda b, _epoch: bitmap_state(b, "event_type", "user_id"),
+        lambda s: bitmap_state(s, "event_type", "user_id"),
         "stream_bitmap_merge",
     )
-    merged = bitmap_merge(states, "event_type")
-    return bitmap_counts(merged, "event_type").select(
+    return bitmap_counts(words, "event_type").select(
         "event_type", "n_words", "n_distinct"
     )
 
@@ -1453,49 +1480,27 @@ def _pearson_oracle() -> str:
 
 @query("stream_pearson_merge", _pearson_oracle())
 def stream_pearson_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming twin of agg_pearson_corr, SAME oracle: the six-integer
-    # sufficient statistic (n, sx, sy, sxy, sx2, sy2) merges by int64
-    # addition; r and the slope derive only after the merge.
-    x = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    y = F.hour("ts").cast("long")
+    # Streaming twin of agg_pearson_corr, SAME oracle and the same
+    # pearson_stats: the state store adds the epochs' six-integer
+    # sufficient statistic (n, sx, sy, sxy, sx2, sy2) in int64, and r and
+    # the slope project from the merged sums on every trigger.
+    from kcl_akka_stream_spark.operators.aggregations import pearson_stats
+
     ev = tbl(spark, sf_dir, "events").select("event_type", "ts", "value")
-    states = _fold_epochs(
+    return _aggregate_epochs(
         spark,
         ev,
-        lambda b, _epoch: b.select("event_type", x.alias("x"), y.alias("y"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("x").cast("long").alias("sx"),
-            F.sum("y").cast("long").alias("sy"),
-            F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-            F.sum(F.col("x") * F.col("x")).cast("long").alias("sx2"),
-            F.sum(F.col("y") * F.col("y")).cast("long").alias("sy2"),
+        lambda s: pearson_stats(
+            s.select(
+                "event_type",
+                _cents(F.col("value")).alias("x"),
+                F.hour("ts").cast("long").alias("y"),
+            ),
+            "event_type",
+            "x",
+            "y",
         ),
         "stream_pearson_merge",
-    )
-    merged = states.groupBy("event_type").agg(
-        *[F.sum(c).cast("long").alias(c) for c in ("n", "sx", "sy", "sxy", "sx2", "sy2")]
-    )
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    cov_n = d("n") * d("sxy") - d("sx") * d("sy")
-    varx_n = d("n") * d("sx2") - d("sx") * d("sx")
-    vary_n = d("n") * d("sy2") - d("sy") * d("sy")
-    return merged.select(
-        "event_type",
-        "n",
-        "sx",
-        "sy",
-        "sxy",
-        "sx2",
-        "sy2",
-        F.when(
-            (varx_n > 0) & (vary_n > 0),
-            F.round(cov_n / (F.sqrt(varx_n) * F.sqrt(vary_n)), 6),
-        ).alias("corr_r"),
-        F.when(varx_n > 0, F.floor(cov_n * F.lit(1000000.0) / varx_n))
-        .cast("long")
-        .alias("beta_micro"),
     )
 
 
@@ -1508,15 +1513,16 @@ def _kl_drift_oracle() -> str:
 @query("stream_kl_drift_merge", _kl_drift_oracle())
 def stream_kl_drift_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Streaming twin of agg_histogram_kl_drift, SAME oracle: the state is
-    # the raw (type, half, bin) count histogram (plain-addition mergeable);
-    # the +1 Laplace smoothing, the full-outer bin alignment and the
-    # frozen-ln KL fold are FINALIZE steps after the merge -- smoothing per
-    # batch would double-count the prior and break merge == direct.
+    # the raw (type, half, bin) count histogram, which the state store adds
+    # across epochs; the +1 Laplace smoothing, the full-outer bin alignment
+    # and the frozen-ln KL fold are FINALIZE steps after the drain --
+    # smoothing per batch would double-count the prior and break
+    # merge == direct.
     ev = tbl(spark, sf_dir, "events").select("event_type", "event_id", "value")
-    states = _fold_epochs(
+    merged = _aggregate_epochs(
         spark,
         ev,
-        lambda b, _epoch: b.select(
+        lambda s: s.select(
             "event_type",
             (F.col("event_id") % 2).cast("int").alias("half"),
             F.expr("cast(floor(value * 100 + 0.5) as bigint) div 100").alias("bin"),
@@ -1524,9 +1530,6 @@ def stream_kl_drift_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "half", "bin")
         .agg(F.count(F.lit(1)).cast("long").alias("c")),
         "stream_kl_drift_merge",
-    )
-    merged = states.groupBy("event_type", "half", "bin").agg(
-        F.sum("c").cast("long").alias("c")
     )
     ha = merged.filter(F.col("half") == 0).select(
         "event_type", "bin", F.col("c").alias("a")
@@ -1545,35 +1548,13 @@ def _ks_drift_oracle() -> str:
 
 @query("stream_ks_merge", _ks_drift_oracle())
 def stream_ks_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming twin of agg_ks_drift, SAME oracle: the state is the raw
-    # (type, half, deci-bin) count histogram, as in the KL twin; the bin
-    # alignment, cumulative CDFs and max-gap fold run only after the merge
-    # (cumulative sums do not merge; counts do).
+    # Streaming twin of agg_ks_drift, SAME oracle, with its pivoted
+    # (type, deci-bin) half counters as the state, added across epochs by
+    # the state store; the cumulative CDFs and max-gap fold run only after
+    # the drain (cumulative sums do not merge; counts do).
     ev = tbl(spark, sf_dir, "events").select("event_type", "event_id", "value")
-    states = _fold_epochs(
-        spark,
-        ev,
-        lambda b, _epoch: b.select(
-            "event_type",
-            (F.col("event_id") % 2).cast("int").alias("half"),
-            F.expr("cast(floor(value * 10 + 0.5) as bigint)").alias("bin"),
-        )
-        .groupBy("event_type", "half", "bin")
-        .agg(F.count(F.lit(1)).cast("long").alias("c")),
-        "stream_ks_merge",
-    )
-    # merge (plain addition on the state key) and pivot the halves in
-    # the SAME agg -- the finalize needs no per-half relation or
-    # alignment join
-    j = states.groupBy("event_type", "bin").agg(
-        F.sum(F.when(F.col("half") == 0, F.col("c")).otherwise(0))
-        .cast("long")
-        .alias("ca"),
-        F.sum(F.when(F.col("half") == 1, F.col("c")).otherwise(0))
-        .cast("long")
-        .alias("cb"),
-    )
-    return _ks_finalize(j)
+    counts = _aggregate_epochs(spark, ev, _ks_counts, "stream_ks_merge")
+    return _ks_finalize(counts)
 
 
 def _entropy_oracle() -> str:
@@ -1584,22 +1565,20 @@ def _entropy_oracle() -> str:
 
 @query("stream_entropy_merge", _entropy_oracle())
 def stream_entropy_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming twin of agg_entropy_profile, SAME oracle: (type, hour)
-    # counts merge by addition; the frozen-ln entropy fold runs after the
-    # merge (averaging per-batch entropies is not the union's entropy).
+    # Streaming twin of agg_entropy_profile, SAME oracle: the state store
+    # adds the epochs' (type, hour) counts; the frozen-ln entropy fold runs
+    # after the drain (averaging per-batch entropies is not the union's
+    # entropy).
     ev = tbl(spark, sf_dir, "events").select("event_type", "ts")
-    states = _fold_epochs(
+    counts = _aggregate_epochs(
         spark,
         ev,
-        lambda b, _epoch: b.groupBy(
+        lambda s: s.groupBy(
             "event_type", F.hour("ts").cast("long").alias("hr")
         ).agg(F.count(F.lit(1)).cast("long").alias("c")),
         "stream_entropy_merge",
     )
-    merged = states.groupBy("event_type", "hr").agg(
-        F.sum("c").cast("long").alias("c")
-    )
-    return _entropy_finalize(merged)
+    return _entropy_finalize(counts)
 
 
 def _mi_oracle() -> str:
@@ -1611,21 +1590,19 @@ def _mi_oracle() -> str:
 @query("stream_mi_merge", _mi_oracle())
 def stream_mi_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Streaming twin of agg_mutual_information, SAME oracle, with the
-    # entropy twin's (type, hour) count state: counts merge by addition;
-    # margins, the MI fold and both marginal entropies run after the merge.
+    # entropy twin's (type, hour) count state, added across epochs by the
+    # state store; margins, the MI fold and both marginal entropies run
+    # after the drain over the one pinned table.
     ev = tbl(spark, sf_dir, "events").select("event_type", "ts")
-    states = _fold_epochs(
+    cells = _aggregate_epochs(
         spark,
         ev,
-        lambda b, _epoch: b.groupBy(
+        lambda s: s.groupBy(
             "event_type", F.hour("ts").cast("long").alias("hr")
         ).agg(F.count(F.lit(1)).cast("long").alias("c")),
         "stream_mi_merge",
     )
-    cells = states.groupBy("event_type", "hr").agg(
-        F.sum("c").cast("long").alias("o")
-    ).localCheckpoint(eager=True)  # feeds the MI fold AND both margins
-    return _mi_finalize(cells)
+    return _mi_finalize(cells.withColumnRenamed("c", "o"))
 
 
 def _ohlc_oracle() -> str:
@@ -1638,15 +1615,16 @@ def _ohlc_oracle() -> str:
 def stream_ohlc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Streaming twin of w_ohlc_bars, SAME oracle, and NON-ADDITIVE: the
     # per-(type, bar) state is a LATTICE element (earliest-keyed open, max,
-    # min, latest-keyed close, count) merged component-wise.  open/close
-    # carry their unique (ts, event_id) key THROUGH the merge as a struct, so
-    # any batch split reproduces the direct bar exactly.
+    # min, latest-keyed close, count) that the state store merges
+    # component-wise across epochs.  open/close carry their unique
+    # (ts, event_id) key THROUGH the merge as a struct, so any batch split
+    # reproduces the direct bar exactly.
     x = F.expr("cast(floor(value * 10 + 0.5) as bigint)")
     ev = tbl(spark, sf_dir, "events").select("event_type", "ts", "event_id", "value")
-    states = _fold_epochs(
+    merged = _aggregate_epochs(
         spark,
         ev,
-        lambda b, _epoch: b.select(
+        lambda s: s.select(
             "event_type",
             F.date_trunc("hour", "ts").alias("bar"),
             F.struct("ts", "event_id", x.alias("x")).alias("okey"),
@@ -1661,13 +1639,6 @@ def stream_ohlc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n"),
         ),
         "stream_ohlc_merge",
-    )
-    merged = states.groupBy("event_type", "bar").agg(
-        F.min("o").alias("o"),
-        F.max("h").alias("h"),
-        F.min("l").alias("l"),
-        F.max("c").alias("c"),
-        F.sum("n").cast("long").alias("n"),
     )
     return merged.select(
         "event_type",
@@ -1894,8 +1865,8 @@ def _bloom_merge_oracle(m_bits: int = 16384, k_hashes: int = 4,
 @query("stream_bloom_merge", _bloom_merge_oracle())
 def stream_bloom_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # A fixed-m Bloom filter is an OR-semilattice over its bit words, so
-    # epoch filters merge into exactly the whole-stream filter and a replay is
-    # absorbed.  Unlike the bitmap twin the state is CONSTANT: <= m/63 words
+    # the state store's bit_or merges the epochs into exactly the
+    # whole-stream filter and a replay is absorbed.  Unlike the bitmap twin the state is CONSTANT: <= m/63 words
     # per type regardless of the id universe.  FINALIZE: bit census, the
     # -m/k * ln(1 - X/m) cardinality inversion (micro-frozen; exact in binary
     # FP because m is a power of two), and a 200-probe ENGINEERED-ABSENT
@@ -1913,10 +1884,10 @@ def stream_bloom_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
 
     ev = tbl(spark, sf_dir, "events").select("event_type", "user_id")
-    states = _fold_epochs(
+    words = _aggregate_epochs(  # feeds the census AND the probe panel
         spark,
         ev,
-        lambda b, _epoch: b.select(
+        lambda s: s.select(
             "event_type",
             F.explode(F.array(*positions("cast(user_id as string)"))).alias("p"),
         )
@@ -1929,9 +1900,6 @@ def stream_bloom_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.bit_or("msk").alias("bits")),
         "stream_bloom_merge",
     )
-    words = states.groupBy("event_type", "wrd").agg(
-        F.bit_or("bits").alias("bits")
-    ).localCheckpoint(eager=True)  # feeds the census AND the probe panel
     filt = words.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_words"),
         F.sum(F.bit_count("bits")).cast("long").alias("n_bits_set"),
@@ -2169,23 +2137,19 @@ def _hll_merge_oracle() -> str:
 @query("stream_hll_merge", _hll_merge_oracle())
 def stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SAME oracle as agg_hll_estimate: HyperLogLog registers form a
-    # JOIN-SEMILATTICE under per-register MAX, so epoch register relations
-    # merge into exactly the whole-stream registers and a replay is absorbed.
-    # CONSTANT state: types x 64 registers.
+    # JOIN-SEMILATTICE under per-register MAX, so the state store's max
+    # merges the epochs into exactly the whole-stream registers and a
+    # replay is absorbed.  CONSTANT state: types x 64 registers.
     from kcl_akka_stream_spark.operators.sketches import hll_registers
 
     ev = tbl(spark, sf_dir, "events").select("event_type", "user_id")
-    states = _fold_epochs(
+    registers = _aggregate_epochs(
         spark,
         ev,
-        lambda b, _epoch: hll_registers(b, "event_type", "user_id"),
+        lambda s: hll_registers(s, "event_type", "user_id"),
         "stream_hll_merge",
     )
-    # merge = per-register MAX over the unioned batch states
-    merged = states.groupBy("event_type", "j").agg(
-        F.max("m_r").cast("long").alias("m_r")
-    )
-    return _hll_finalize(ev, merged).localCheckpoint(eager=True)
+    return _hll_finalize(ev, registers)
 
 
 def _f2_merge_oracle() -> str:
@@ -2197,21 +2161,17 @@ def _f2_merge_oracle() -> str:
 @query("stream_f2_merge", _f2_merge_oracle())
 def stream_f2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SAME oracle as agg_f2_sketch: the AMS signed sums are ADDITIVE, so
-    # epoch states merge by column-wise sum into exactly the whole-stream
-    # sketch -- a self-join-size monitor at types x b=64 int64s of state.
-    # Not idempotent: exactly-once batch semantics, like every sum family.
+    # the state store's column-wise sum merges the epochs into exactly the
+    # whole-stream sketch -- a self-join-size monitor at types x b=64
+    # int64s of state.  Not idempotent: exactly-once batch semantics, like
+    # every sum family.
     from kcl_akka_stream_spark.operators.sketches import f2_sketch_state
 
-    b = 64
     ev = tbl(spark, sf_dir, "events").select("event_type", "user_id")
-    states = _fold_epochs(
+    sums = _aggregate_epochs(
         spark,
         ev,
-        lambda batch, _epoch: f2_sketch_state(batch, "event_type", "user_id"),
+        lambda s: f2_sketch_state(s, "event_type", "user_id"),
         "stream_f2_merge",
     )
-    # merge = column-wise sum (abelian group addition)
-    merged = states.groupBy("event_type").agg(
-        *[F.sum(f"x_{r}").cast("long").alias(f"x_{r}") for r in range(b)]
-    )
-    return _f2_finalize(ev, merged).localCheckpoint(eager=True)
+    return _f2_finalize(ev, sums)

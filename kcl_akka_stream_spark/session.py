@@ -35,11 +35,16 @@ from pyspark.sql import SparkSession
 #: from 3.67 to 2.58 s.  The checkpoint tracker keeps that true for any shard
 #: count (at most ``tracker.SHARD_BUCKETS`` groups per trigger):
 #: ``stream_checkpoint_frontier`` at sf0.1 (1,500 shards) 3.71 -> 2.04 s.
-#: Native state (windows, joins, dedup) keeps one group per key, and a trigger
-#: with many keys runs them all in one task: of the 16 other streaming
-#: registry queries at sf0.1, 4 took 13-30% longer (session windows and
-#: dedup, 100k events in one trigger), 6 took 8-19% less.  A deployment with heavy native
-#: per-trigger state raises the setting before the query's first start.
+#: Native state keeps one group per key, and a trigger with many keys runs
+#: them all in one task.  31 other streaming registry queries use it
+#: (sf0.1, local[4]).  Of the 16 windows, joins and dedup, 4 took 13-30%
+#: longer on one partition (session windows and dedup, 100k events in one
+#: trigger) and 6 took 8-19% less.  The 15 built-in-aggregate twins
+#: (``streaming_q._aggregate_epochs``: bins, registers, words, one row per
+#: user at most) take 1.26-2.80 s, medians of 3 alternations, against
+#: 1.16-3.01 s when each trigger folded its own state; 12 of the 15 ranges
+#: overlap.  A deployment with heavy native per-trigger state raises the
+#: setting before the query's first start.
 STATE_PARTITIONS = 1
 
 

@@ -358,10 +358,10 @@ def test_streaming_twin_microbatch_shuffle_budgets(spark, sf_dir):
     # VERDICT r13 #3: the 9 headline streaming twins were the one slice
     # with no shuffle budget -- their plans are decided per micro-batch.
     # Run each twin for real with the plan capture installed and budget
-    # the WORST captured micro-batch (plus the final-trigger plan for
-    # the watermark family).  Every fold is one keyed aggregation, so
-    # the budget is 1 exchange -- except minhash, whose shingle explode
-    # re-spreads before the signature agg (2).
+    # the WORST captured micro-batch (the final-trigger plan for the
+    # state-store and memory-sink twins).  Every fold is one keyed
+    # aggregation, so the budget is 1 exchange -- except minhash, whose
+    # shingle explode re-spreads before the signature agg (2).
     from kcl_akka_stream_spark.plans.hygiene import summarize_plan_str
     from kcl_akka_stream_spark.queries import streaming_q
 

@@ -10,17 +10,25 @@ from pyspark.sql import functions as F
 def test_stream_merge_multiway_four_epochs(spark, sf_dir, monkeypatch):
     # N_EPOCHS=2 means every twin exercises a single cross-batch state
     # merge; a merge bug that only manifests with >2 states (a
-    # non-associative fold order) would not be caught.  Three twins whose
-    # merges differ in kind -- KMV bottom-k closure, additive histogram
-    # counts, keyed (ts, event_id) argmax upsert -- re-run here with a
-    # FOUR-epoch fixture: each merge law says the result must not depend
-    # on how many batches the stream is split into.
+    # non-associative fold order) would not be caught.  Five twins whose
+    # merges differ in kind -- KMV bottom-k closure (_fold_epochs), and on
+    # the state store additive histogram counts, keyed (ts, event_id)
+    # argmax upsert, the struct min/max OHLC lattice and the bit_or Bloom
+    # filter -- re-run here with a FOUR-epoch fixture: each merge law says
+    # the result must not depend on how many batches the stream is split
+    # into.
     from kcl_akka_stream_spark.queries import streaming_q as sq
 
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
 
-    twins = ("stream_kmv_merge", "stream_ks_merge", "stream_cdc_upsert")
+    twins = (
+        "stream_kmv_merge",
+        "stream_ks_merge",
+        "stream_cdc_upsert",
+        "stream_ohlc_merge",
+        "stream_bloom_merge",
+    )
     base = {t: rows(getattr(sq, t)(spark, sf_dir)) for t in twins}  # 2 epochs
 
     staged = []

@@ -1302,8 +1302,9 @@ def test_streaming_observe_metrics_ride_microbatches(spark, sf_dir):
 
 def _driver_fetches_in_stream_callbacks():
     """Every ``.collect()`` / ``.toPandas()`` call reachable from a
-    foreachBatch callback or a ``_fold_epochs`` partial in streaming_q,
-    as (root, function, line).  Reachability follows names through
+    foreachBatch callback, a ``_fold_epochs`` partial or an
+    ``_aggregate_epochs`` aggregate in streaming_q, as (root, function,
+    line).  Reachability follows names through
     nested defs, callback-building assignments, local imports and
     module globals into any function of this package (AST, not regex)."""
     import ast
@@ -1357,6 +1358,7 @@ def _driver_fetches_in_stream_callbacks():
             ):
                 visit_fn(obj, root)
 
+    harness_arg = {"_fold_epochs": "partial", "_aggregate_epochs": "aggregate"}
     n_roots = 0
     for name, fn in vars(streaming_q).items():
         if not inspect.isfunction(fn) or fn.__module__ != streaming_q.__name__:
@@ -1376,9 +1378,10 @@ def _driver_fetches_in_stream_callbacks():
             f = call.func
             if isinstance(f, ast.Attribute) and f.attr == "foreachBatch":
                 cb = call.args[0]
-            elif isinstance(f, ast.Name) and f.id == "_fold_epochs":
+            elif isinstance(f, ast.Name) and f.id in harness_arg:
                 kw = {k.arg: k.value for k in call.keywords}
-                cb = call.args[2] if len(call.args) > 2 else kw["partial"]
+                arg = harness_arg[f.id]
+                cb = call.args[2] if len(call.args) > 2 else kw[arg]
             else:
                 continue
             n_roots += 1
@@ -1389,10 +1392,13 @@ def _driver_fetches_in_stream_callbacks():
 
 
 def test_stream_callbacks_never_fetch_rows_to_the_driver():
-    # Mergeable state lives executor-side: nothing a micro-batch callback
-    # or an epoch partial can reach may pull rows onto the driver.
+    # Mergeable state lives executor-side: nothing a micro-batch callback,
+    # an epoch partial or a streaming aggregate can reach may pull rows
+    # onto the driver.
     n_roots, found = _driver_fetches_in_stream_callbacks()
-    assert n_roots >= 26  # 23 partials + _fold_epochs + scd2 + commit sink
+    # 15 aggregates + 8 partials + the two harnesses' callbacks + scd2 +
+    # commit sink
+    assert n_roots >= 26
     assert found == []
 
 
@@ -1402,8 +1408,23 @@ def _failing_on_second_epoch(batch_df, epoch_id):
     return batch_df.groupBy().count()
 
 
-def test_fold_epochs_stops_query_and_removes_fixture_on_failure(
-    spark, monkeypatch
+def _failing_aggregate(stream):
+    boom = F.raise_error(F.lit("injected failure on v=199"))
+    return stream.groupBy().agg(
+        F.sum(F.when(F.col("v") == 199, boom).otherwise(F.col("v")))
+    )
+
+
+@pytest.mark.parametrize(
+    "harness, callback",
+    [
+        ("_fold_epochs", _failing_on_second_epoch),
+        ("_aggregate_epochs", _failing_aggregate),
+    ],
+    ids=["_fold_epochs", "_aggregate_epochs"],
+)
+def test_epoch_harness_stops_query_and_removes_fixture_on_failure(
+    spark, monkeypatch, harness, callback
 ):
     from kcl_akka_stream_spark.queries import streaming_q as sq
 
@@ -1416,10 +1437,47 @@ def test_fold_epochs_stops_query_and_removes_fixture_on_failure(
 
     monkeypatch.setattr(sq, "_write_epoch_fixture", spy)
     df = spark.range(200).withColumnRenamed("id", "v")
-    with pytest.raises(Exception, match="injected failure on epoch 1"):
-        sq._fold_epochs(spark, df, _failing_on_second_epoch, "test-failure")
+    with pytest.raises(Exception, match="injected failure"):
+        getattr(sq, harness)(spark, df, callback, "test-failure")
     assert spark.streams.active == []
     assert len(staged) == 1 and not os.path.exists(staged[0])
+
+
+def test_aggregate_epochs_pins_only_the_last_trigger_table(spark, monkeypatch):
+    # Each trigger pins its complete-mode table and releases the one
+    # before, so four triggers leave exactly one pinned table, holding the
+    # whole stream's aggregate.
+    from kcl_akka_stream_spark.queries import streaming_q as sq
+
+    files = []
+    write = sq._write_epoch_fixture
+
+    def four_epochs(df, src, n=sq.N_EPOCHS):
+        write(df, src, 4)
+        files.extend(f for f in os.listdir(src) if f.endswith(".parquet"))
+
+    monkeypatch.setattr(sq, "_write_epoch_fixture", four_epochs)
+    jsc = spark.sparkContext._jsc
+
+    def pinned():
+        return set(jsc.getPersistentRDDs().keys())
+
+    before = pinned()
+    out = sq._aggregate_epochs(
+        spark,
+        spark.range(400).withColumnRenamed("id", "v"),
+        lambda s: s.groupBy((F.col("v") % 3).alias("k")).agg(
+            F.count(F.lit(1)).alias("n"), F.sum("v").alias("s")
+        ),
+        "test-pin",
+    )
+    assert len(files) == 4
+    assert len(pinned() - before) == 1
+    vs = range(400)
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (k, sum(1 for v in vs if v % 3 == k), sum(v for v in vs if v % 3 == k))
+        for k in range(3)
+    ]
 
 
 def test_drain_stops_query_on_failure(spark, tmp_path):

@@ -90,11 +90,11 @@ def main() -> None:
     for name in names or HEADLINE:
         if name.startswith("stream_"):
             # VERDICT r13 #3: run the streaming twin for real with the
-            # micro-batch plan capture installed (mergeable-state
-            # families capture each epoch state inside _fold_epochs,
-            # watermark families via explainInternal)
-            # and audit the captured physical plans -- the worst batch
-            # wins, so a single skewed trigger cannot hide.
+            # micro-batch plan capture installed (_fold_epochs twins
+            # capture each epoch state, _aggregate_epochs and memory-sink
+            # twins their final trigger via explainInternal) and audit
+            # the captured physical plans -- the worst batch wins, so a
+            # single skewed trigger cannot hide.
             from kcl_akka_stream_spark.plans.hygiene import (
                 summarize_plan_str,
             )
