@@ -2125,7 +2125,7 @@ def stream_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type", "decile")
     )
-    return out.localCheckpoint(eager=True)
+    return out
 
 
 def _hll_merge_oracle() -> str:

@@ -11,9 +11,13 @@ after every attempt, and the point survives failed attempts for re-commit
 
 Sink ordering modes (README.md:22-95):
 - at-least-once: process the batch, then record the commit (checkpoint
-  after processing) -- a crash before commit replays the batch;
+  after processing) -- a crash before commit replays the batch.  The
+  cadence counts the rows ``process``'s own action read, through an
+  ``Observation`` on the batch, so a trigger runs one job, not a count and
+  then ``process``;
 - no-guarantees: record first, then process (mark-before-process) -- a
-  crash loses the in-flight batch.
+  crash loses the in-flight batch.  The count must come before
+  ``process``, so this mode caches the batch and counts it first.
 """
 
 from __future__ import annotations
@@ -24,7 +28,8 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 from kcl_akka_stream_spark.config import ShardCheckpointConfig
 
@@ -99,6 +104,17 @@ def committing_foreach_batch(
     through ``commit_with_taxonomy``: a throttled write keeps the point
     pending and the stream goes on, a shutdown race is ignored, anything
     else fails the batch with ``CommitAbort``.
+
+    At-least-once, ``process`` receives the batch observed with one count,
+    and ``n`` -- the records the cadence counts, as the reference counts
+    the records the user marked processed (RecordProcessorImpl.scala:73-77)
+    -- is the number of rows ``process``'s FIRST action over the batch
+    read: all of them for a write or a ``collect``, fewer for a ``take``
+    or ``first``.  If ``process`` ran no action over the batch, one
+    ``count()`` supplies ``n``.  The batch is not cached: as in Spark's own
+    ``foreachBatch`` contract, a ``process`` that reads its batch more than
+    once recomputes its lineage (stateful operators and streaming
+    ``observe`` metrics included) unless it caches inside ``process``.
     """
     if mode not in ("at-least-once", "no-guarantees"):
         raise ValueError("mode must be 'at-least-once' or 'no-guarantees'")
@@ -109,25 +125,35 @@ def committing_foreach_batch(
         _write_commit(commit_dir, entry)
 
     def run(batch_df: DataFrame, epoch_id: int) -> None:
-        # one source scan per epoch: cache the batch before the count action
-        # so process() consumes the cached rows instead of re-reading the
-        # source through the whole lineage.
-        batch_df.persist()
-        try:
-            n = batch_df.count()
-            if mode == "no-guarantees":
-                # mark-before-process (README.md:61-95): ack first, then
-                # work -- under the SAME C3 cadence as at-least-once (the
-                # reference's modes differ only in ordering).
+        if mode == "no-guarantees":
+            # mark-before-process (README.md:61-95) under the SAME C3
+            # cadence: n is needed before process runs, and the cache keeps
+            # a stateful upstream from running twice.
+            batch_df.persist()
+            try:
+                n = batch_df.count()
                 if tracker.observe(n):
                     commit_with_taxonomy(tracker, epoch_id, n, write=write)
                 process(batch_df, epoch_id)
-                return
-            process(batch_df, epoch_id)
-            if tracker.observe(n):
-                commit_with_taxonomy(tracker, epoch_id, n, write=write)
-        finally:
-            batch_df.unpersist()
+            finally:
+                batch_df.unpersist()
+            return
+        # the count rides process's own action: one job per trigger
+        seen = Observation()
+        observed = batch_df.observe(seen, F.count(F.lit(1)).alias("n"))
+        process(observed, epoch_id)
+        # Spark completes an Observation from a listener event after the
+        # action returns, so drain the listener bus, then ask the JVM object
+        # (PySpark's ``get`` blocks forever if process ran no action; an
+        # action whose plan dropped the batch leaves no "n").  Counting the
+        # observed batch completes it, so the session does not keep it.
+        batch_df.sparkSession.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        jo = seen._jo
+        n = jo.getAsJava().get("n") if jo.future().isCompleted() else None
+        if n is None:
+            n = observed.count()
+        if tracker.observe(n):
+            commit_with_taxonomy(tracker, epoch_id, n, write=write)
 
     return run
 

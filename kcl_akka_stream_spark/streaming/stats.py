@@ -14,6 +14,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql.streaming import StreamingQueryListener
 
+from kcl_akka_stream_spark.streaming.tracker import TRACKER_METRICS
+
 log = logging.getLogger(__name__)
 
 
@@ -86,6 +88,17 @@ class RecordingStats(ConsumerStats):
 
     started: list[str] = field(default_factory=list)
     ended: list[str] = field(default_factory=list)
+    # latest value of each gauge
+    in_flight: dict[str, int] = field(default_factory=dict)
+    uncheckpointed: dict[str, int] = field(default_factory=dict)
+
+    def report_in_flight(self, shard_id: str, n: int) -> None:
+        with self._lock:
+            self.in_flight[shard_id] = n
+
+    def report_uncheckpointed(self, shard_id: str, n: int) -> None:
+        with self._lock:
+            self.uncheckpointed[shard_id] = n
 
     def shard_started(self, shard_id: str) -> None:
         with self._lock:
@@ -98,7 +111,10 @@ class RecordingStats(ConsumerStats):
 
 class StatsQueryListener(StreamingQueryListener):
     """Bridges StreamingQueryProgress events into ConsumerStats callbacks --
-    the Spark-native home for the reference's metrics hooks (SURVEY §2.10)."""
+    the Spark-native home for the reference's metrics hooks (SURVEY §2.10).
+    A query that runs the checkpoint tracker reports its gauges through the
+    tracker's observed metrics (``tracker.TRACKER_METRICS``), summed over
+    the shards the trigger touched."""
 
     def __init__(self, stats: ConsumerStats):
         self._stats = stats
@@ -109,8 +125,11 @@ class StatsQueryListener(StreamingQueryListener):
     def onQueryProgress(self, event) -> None:
         p = event.progress
         self._stats.track_batch(str(p.id), int(p.numInputRows))
-        for op in p.stateOperators:
-            self._stats.report_in_flight(str(p.id), int(op.numRowsTotal))
+        gauges = p.observedMetrics.get(TRACKER_METRICS)
+        # sums are null when the trigger emitted no tracker rows
+        if gauges is not None and gauges.in_flight is not None:
+            self._stats.report_in_flight(str(p.id), int(gauges.in_flight))
+            self._stats.report_uncheckpointed(str(p.id), int(gauges.uncheckpointed))
 
     def onQueryIdle(self, event) -> None:  # pragma: no cover - timing dependent
         pass

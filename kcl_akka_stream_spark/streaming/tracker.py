@@ -112,6 +112,11 @@ EVICTING_OUTPUT_SCHEMA = StructType(
     OUTPUT_SCHEMA.fields + [StructField("evicted_count", LongType())]
 )
 
+#: Name of the tracker's streaming ``observe``: per trigger, the sums of
+#: the emitted rows' ``in_flight_count`` and
+#: ``processed_uncheckpointed_count`` (StreamingQueryProgress.observedMetrics).
+TRACKER_METRICS = "checkpoint_tracker"
+
 
 def _advance(
     shards: np.ndarray,
@@ -278,9 +283,14 @@ def streaming_checkpoint_frontier(
     ``max_pending`` CANNOT be toggled across a restart of the same
     checkpoint location: the bounded tracker persists an extra ``evicted``
     state field, and Spark state schemas are fixed at first run.  The kernel detects the mismatch and
-    raises an actionable error instead of an opaque unpack failure."""
+    raises an actionable error instead of an opaque unpack failure.
+
+    The gauges also ride the trigger's own action as the streaming
+    ``observe`` named ``TRACKER_METRICS`` (``in_flight`` and
+    ``uncheckpointed``, summed over the trigger's rows), which
+    ``stats.StatsQueryListener`` hands to ``ConsumerStats``."""
     bucketed = df.withColumn("bucket", F.pmod(F.col("shard_id"), F.lit(SHARD_BUCKETS)))
-    return bucketed.groupBy("bucket").applyInPandasWithState(
+    tracked = bucketed.groupBy("bucket").applyInPandasWithState(
         _make_track(max_pending),
         outputStructType=(
             OUTPUT_SCHEMA if max_pending is None else EVICTING_OUTPUT_SCHEMA
@@ -290,5 +300,10 @@ def streaming_checkpoint_frontier(
         ),
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    return tracked.observe(
+        TRACKER_METRICS,
+        F.sum("in_flight_count").alias("in_flight"),
+        F.sum("processed_uncheckpointed_count").alias("uncheckpointed"),
     )
 

@@ -52,6 +52,16 @@ def test_at_least_once_commits_after_processing(spark):
         commits = read_commits(d)
         assert processed == [0, 1]
         assert [c["epoch_id"] for c in commits] == [0, 1]
+        # process ran no action over the batch: one count supplies n
+        assert [c["n_records"] for c in commits] == [5, 5]
+        # one action: n is the rows it read, not the rows it returned
+        returned = []
+        cb = committing_foreach_batch(
+            lambda df, e: returned.extend(df.filter("id < 2").collect()), t, d
+        )
+        cb(df, 2)
+        assert len(returned) == 2
+        assert read_commits(d)[-1]["n_records"] == 5
 
 
 def test_at_least_once_no_commit_on_failure(spark):
@@ -286,11 +296,9 @@ def test_commit_failure_clears_triggers_but_keeps_point():
 
 
 def test_one_source_scan_per_epoch(spark):
-    # "What's wrong" r2 #4: committing_foreach_batch used to run count()
-    # AND process() against the raw batch lineage -- two source scans per
-    # epoch.  The batch is now persisted, so the map work runs once even
-    # though two actions consume it.  Witness: an accumulator inside the
-    # lineage.
+    # The cadence's count rides process's own action (an Observation on
+    # the batch), so the lineage runs once per epoch with no cache and no
+    # second action.  Witness: an accumulator inside the lineage.
     t = CommitTracker(ShardCheckpointConfig(checkpoint_period_seconds=1e9,
                                             checkpoint_after_processing_nr_of_records=1))
     acc = spark.sparkContext.accumulator(0)
@@ -310,6 +318,24 @@ def test_one_source_scan_per_epoch(spark):
         cb(df, 0)
     assert processed == [100]
     assert acc.value == 100  # one scan, not 200
+
+
+def test_count_waits_for_the_observation_of_process_action(spark, tmp_path):
+    # Spark completes an Observation from a listener event after the action
+    # returns; read too early, it looks as if process ran no action, and the
+    # batch is counted by a second job (1 of 30 calls without the wait).
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    t = CommitTracker(ShardCheckpointConfig(checkpoint_period_seconds=1e9,
+                                            checkpoint_after_processing_nr_of_records=1))
+    cb = committing_foreach_batch(lambda b, e: b.collect(), t, str(tmp_path))
+    df = spark.range(100)
+    jobs = []
+    for epoch in range(30):
+        j0 = dag.nextJobId()
+        cb(df, epoch)
+        jobs.append(dag.nextJobId() - j0)
+    assert jobs == [1] * 30
+    assert [c["n_records"] for c in t.commits] == [100] * 30
 
 
 def _file_stream(spark, src, n_files):
@@ -378,3 +404,96 @@ def test_live_stream_aborts_on_unclassified_commit_error(spark, tmp_path, monkey
     assert "direct cause" in msg
     assert "CommitAbort: disk corrupt" in msg
     assert t.commits == [] and t.pending == {"epoch_id": 0, "n_records": 10}
+
+
+def _ack_stream(spark, src, n_files):
+    """A tracker input stream of ``n_files`` files, one per trigger: 3
+    shards, 10 new seqs per shard per file, seq 3 of every shard never
+    acked.  Written with pandas, so the stream runs every Spark job."""
+    import pandas as pd
+
+    src.mkdir()
+    for i in range(n_files):
+        seqs = list(range(i * 10, i * 10 + 10))
+        pd.DataFrame(
+            {
+                "shard_id": [s for s in range(3) for _ in seqs],
+                "seq": seqs * 3,
+                "processed": [q != 3 for q in seqs] * 3,
+            }
+        ).to_parquet(src / f"f{i}.parquet", index=False)
+    return (
+        spark.readStream.schema("shard_id long, seq long, processed boolean")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+
+
+def _drain_tracker(spark, tmp_path, n_files, callback):
+    from kcl_akka_stream_spark.streaming.tracker import streaming_checkpoint_frontier
+
+    q = (
+        streaming_checkpoint_frontier(_ack_stream(spark, tmp_path / "src", n_files))
+        .writeStream.foreachBatch(callback)
+        .outputMode("update")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return q
+
+
+def test_tracker_commit_path_runs_one_job_per_trigger(spark, tmp_path):
+    # source -> tracker -> commit: the cadence's count rides process's own
+    # collect, so a trigger runs one Spark job (a cache and a separate
+    # count made it two).
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    t = CommitTracker(ShardCheckpointConfig(checkpoint_period_seconds=1e9,
+                                            checkpoint_after_processing_nr_of_records=1))
+    cb = committing_foreach_batch(lambda b, e: b.collect(), t, str(tmp_path / "commits"))
+    jobs = []
+
+    def counted(batch_df, epoch_id):
+        j0 = dag.nextJobId()
+        cb(batch_df, epoch_id)
+        jobs.append(dag.nextJobId() - j0)
+
+    _drain_tracker(spark, tmp_path, 3, counted)
+    assert jobs == [1, 1, 1]
+    # one tracker row per shard per trigger
+    assert [c["n_records"] for c in t.commits] == [3, 3, 3]
+
+
+def test_listener_reports_the_tracker_gauges(spark, tmp_path):
+    # The tracker's in-flight and processed-but-uncheckpointed gauges
+    # (RecordProcessorImpl.scala:244-250) reach ConsumerStats through the
+    # tracker's observed metrics, summed over the trigger's shards.
+    import time
+
+    from kcl_akka_stream_spark.streaming.stats import StatsQueryListener
+
+    stats = RecordingStats()
+    listener = StatsQueryListener(stats)
+    t = CommitTracker(ShardCheckpointConfig(checkpoint_period_seconds=1e9,
+                                            checkpoint_after_processing_nr_of_records=1))
+    emitted = []
+    cb = committing_foreach_batch(
+        lambda b, e: emitted.append(b.collect()), t, str(tmp_path / "commits")
+    )
+    spark.streams.addListener(listener)
+    try:
+        q = _drain_tracker(spark, tmp_path, 3, cb)
+        # listener events arrive asynchronously, termination last
+        deadline = time.time() + 30
+        while time.time() < deadline and not stats.ended:
+            time.sleep(0.2)
+    finally:
+        spark.streams.removeListener(listener)
+    assert stats.ended, "onQueryTerminated not bridged"
+    last = emitted[-1]
+    qid = str(q.id)
+    # per shard: seq 3 in flight, seqs 4..29 processed behind it
+    assert stats.in_flight[qid] == sum(r.in_flight_count for r in last) == 3
+    assert stats.uncheckpointed[qid] == sum(r.processed_uncheckpointed_count for r in last) == 78

@@ -167,6 +167,102 @@ def test_restart_replay_is_contiguous_and_dedups_to_sent(spark, stream_dir):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
+def _ack_envelopes(chunk: int, shards: int = 4):
+    """Chunk c of a tracker feed: per shard seqs [5c, 5c + 5), seq 5c + 2
+    still pending, plus the ack of the previous chunk's pending seq."""
+    base = datetime.datetime(2024, 1, 1)
+    rows = []
+    for s in range(shards):
+        acked = [(q, q != chunk * 5 + 2) for q in range(chunk * 5, chunk * 5 + 5)]
+        if chunk:
+            acked.append((chunk * 5 - 3, True))
+        for q, done in acked:
+            data = b"done" if done else b"pending"
+            rows.append((data, str(s), None, str(q), 0, base + datetime.timedelta(seconds=q), None))
+    return rows
+
+
+def test_tracker_commit_kill_and_resume_replays_from_checkpoint(spark, tmp_path):
+    # The D-Streams recovery model on the paper's path, envelope source ->
+    # tracker -> commit: crash after a trigger's work but before Spark
+    # commits it (its commit file deleted), resume from the checkpoint.
+    # The resumed query recomputes that trigger from the restored tracker
+    # state, so per shard the emissions are a contiguous replay, the
+    # frontier never goes down, and the external commit log never goes
+    # back past the replayed epoch.
+    from kcl_akka_stream_spark.config import ShardCheckpointConfig
+    from kcl_akka_stream_spark.streaming.commit import (
+        CommitTracker,
+        committing_foreach_batch,
+        read_commits,
+    )
+    from kcl_akka_stream_spark.streaming.tracker import streaming_checkpoint_frontier
+
+    src, ckpt, commit_dir = (str(tmp_path / d) for d in ("src", "ckpt", "commits"))
+    emitted = []  # tracker rows in arrival order, across both runs
+    trackers = []
+
+    def write(chunk):
+        spark.createDataFrame(_ack_envelopes(chunk), ENVELOPE_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+
+    def run():
+        acks = envelope_file_stream(spark, src, max_files_per_trigger=1).select(
+            F.col("partitionKey").cast("long").alias("shard_id"),
+            F.col("sequenceNumber").cast("long").alias("seq"),
+            (F.col("data") != F.lit(b"pending")).alias("processed"),
+        )
+        tracker = CommitTracker(ShardCheckpointConfig(checkpoint_period_seconds=1e9,
+                                                      checkpoint_after_processing_nr_of_records=1))
+        trackers.append(tracker)
+        cb = committing_foreach_batch(lambda b, e: emitted.extend(b.collect()), tracker, commit_dir)
+        q = (
+            streaming_checkpoint_frontier(acks)
+            .writeStream.foreachBatch(cb)
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    for c in range(3):
+        write(c)
+    run()
+    commits_dir = os.path.join(ckpt, "commits")
+    assert sorted(f for f in os.listdir(commits_dir) if not f.startswith(".")) == ["0", "1", "2"]
+    os.remove(os.path.join(commits_dir, "2"))
+    crc = os.path.join(commits_dir, ".2.crc")
+    if os.path.exists(crc):  # hadoop ChecksumFs sidecar
+        os.remove(crc)
+    write(3)
+    run()
+
+    epochs = [c["epoch_id"] for t in trackers for c in t.commits]
+    assert epochs == [0, 1, 2, 2, 3]  # epoch 2 replayed, never earlier
+    assert [c["epoch_id"] for c in read_commits(commit_dir)] == [0, 1, 2, 3]
+    per_shard = {}
+    for r in emitted:
+        per_shard.setdefault(r.shard_id, []).append((r.update_id, r.frontier_seq))
+    assert sorted(per_shard) == [0, 1, 2, 3]
+    for shard, seen in per_shard.items():
+        frontiers = [f for _, f in seen]
+        assert frontiers == sorted(frontiers), (shard, seen)
+        assert seen == [(1, 1), (2, 6), (3, 11), (3, 11), (4, 16)], (shard, seen)
+    received = spark.createDataFrame(
+        [(r.shard_id, f"{r.update_id}:{r.frontier_seq}", i) for i, r in enumerate(emitted)],
+        "shard long, msg string, arrival long",
+    )
+    kept = remove_reprocessed(received, "shard", "msg", "arrival").collect()
+    got = {}
+    for r in sorted(kept, key=lambda r: (r.shard, r.position)):
+        got.setdefault(r.shard, []).append(r.msg)
+    assert got == {str(s): ["1:1", "2:6", "3:11", "4:16"] for s in range(4)}
+
+
 def test_windowed_aggregation(spark, stream_dir):
     for c in range(CHUNKS):
         _write_chunk(spark, stream_dir, c)

@@ -2,8 +2,12 @@
 
 Usage: python tools/probe.py [sf_dir] [--scale N] name [name ...]
 
-One Spark session.  For each name: clearCache and a JVM GC, one warm-up,
-then REPS timed noop writes of ``QUERIES[name](spark, sf_dir)``.  Prints
+One Spark session.  First warm-up sweeps run every name (on both
+directories with ``--scale``) until WARM_S seconds have passed, at least
+once; then for each name: clearCache and a JVM GC, then REPS timed noop
+writes of ``QUERIES[name](spark, sf_dir)``.  Every name is timed in a JVM
+warmed on every name's code for about the same time, so a name's median
+does not depend on its place in the list or on the list's length.  Prints
 the median, every run, and Spark jobs per run (the DAG scheduler's job-id
 delta, so eager checkpoints, dims probes and collects all count, which
 ``explain()`` does not show).  A query that raises prints ``FAILED`` and
@@ -38,6 +42,12 @@ from pyspark.sql import functions as F
 from kcl_akka_stream_spark.sources.batch import DEFAULT_SF_DIR, TABLE_NAMES, load_table
 
 REPS = 3
+#: Warm-up sweeps repeat until they have run this long, because the JVM
+#: keeps getting faster over about the first minute of query work.  At
+#: sf0.1 (local[4]) stream_hll_merge read 2.40-4.08 s as the first of 2
+#: names and 1.97-2.32 s as the 14th of 15 after one sweep; 1.84-2.18 s
+#: and 1.95-2.55 s after 60 s of sweeps.
+WARM_S = 60.0
 #: Replica i shifts every id by i * ID_STRIDE; fixture ids stay below it.
 ID_STRIDE = 10_000_000
 VOWELS = "aeiou"
@@ -94,29 +104,52 @@ def write_scaled(spark: SparkSession, src: str, dst: str, n: int) -> None:
         shutil.rmtree(stage)
 
 
-def _timed(spark: SparkSession, name: str, sf_dir: str, tag: str) -> tuple[float, float] | None:
-    """Time one query and print its line: (median, jobs per run), or None
-    after printing FAILED if it raised."""
+def _run(spark: SparkSession, name: str, sf_dir: str) -> None:
     from kcl_akka_stream_spark.queries import QUERIES
 
-    def run() -> None:
-        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
+
+def _failed(name: str, tag: str, e: Exception) -> None:
+    traceback.print_exc()
+    msg = (str(e).strip().splitlines() or [""])[0]
+    print(f"{name}{tag}: FAILED {type(e).__name__}: {msg}", flush=True)
+
+
+def _warm(spark: SparkSession, names: list[str], dirs: list[tuple[str, str]]) -> set[str]:
+    """Warm-up sweeps: run every name on every (dir, tag), again until
+    WARM_S seconds have passed; return the names that raised, after
+    printing FAILED for each."""
+    failed: set[str] = set()
+    t0 = time.perf_counter()
+    while True:
+        for name in [n for n in names if n not in failed]:
+            for sf_dir, tag in dirs:
+                try:
+                    _run(spark, name, sf_dir)
+                except Exception as e:  # report and go on to the next query
+                    _failed(name, tag, e)
+                    failed.add(name)
+                    break
+        if time.perf_counter() - t0 >= WARM_S or failed >= set(names):
+            return failed
+
+
+def _timed(spark: SparkSession, name: str, sf_dir: str, tag: str) -> tuple[float, float] | None:
+    """Time one warmed query and print its line: (median, jobs per run),
+    or None after printing FAILED if it raised."""
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     try:
         spark.catalog.clearCache()
         spark.sparkContext._jvm.System.gc()
-        run()
         j0 = dag.nextJobId()
         times = []
         for _ in range(REPS):
             t0 = time.perf_counter()
-            run()
+            _run(spark, name, sf_dir)
             times.append(time.perf_counter() - t0)
     except Exception as e:  # report and go on to the next query
-        traceback.print_exc()
-        msg = (str(e).strip().splitlines() or [""])[0]
-        print(f"{name}{tag}: FAILED {type(e).__name__}: {msg}", flush=True)
+        _failed(name, tag, e)
         return None
     med, jobs = statistics.median(times), (dag.nextJobId() - j0) / REPS
     runs = " ".join(f"{t:.3f}" for t in times)
@@ -139,20 +172,21 @@ def main() -> int:
     spark = get_session("probe")
     print(f"# {spark.sparkContext.master} on {os.cpu_count()} CPUs, {sf_dir}", flush=True)
     if scale is None:
-        results = [_timed(spark, name, sf_dir, "") for name in args]
-        return int(None in results)
+        failed = _warm(spark, args, [(sf_dir, "")])
+        results = [_timed(spark, name, sf_dir, "") for name in args if name not in failed]
+        return int(bool(failed) or None in results)
 
-    failed = False
     scaled_dir = tempfile.mkdtemp(prefix=f"probe_x{scale}_")
     try:
         t0 = time.perf_counter()
         write_scaled(spark, sf_dir, scaled_dir, scale)
         print(f"# {scale}x fixture written in {time.perf_counter() - t0:.1f}s", flush=True)
-        for name in args:
+        failed = _warm(spark, args, [(sf_dir, " [1x]"), (scaled_dir, f" [{scale}x]")])
+        for name in [n for n in args if n not in failed]:
             one = _timed(spark, name, sf_dir, " [1x]")
             big = _timed(spark, name, scaled_dir, f" [{scale}x]")
             if one is None or big is None:
-                failed = True
+                failed.add(name)
                 continue
             print(
                 f"{name}: wall ratio {big[0] / one[0]:.2f}  jobs ratio {big[1] / one[1]:.2f}",
@@ -160,7 +194,7 @@ def main() -> int:
             )
     finally:
         shutil.rmtree(scaled_dir, ignore_errors=True)
-    return int(failed)
+    return int(bool(failed))
 
 
 if __name__ == "__main__":
