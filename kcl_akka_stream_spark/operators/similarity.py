@@ -3,9 +3,15 @@
 Beyond-reference extension (no counterpart in /root/reference; the
 BASELINE.json north star).  Tiers for the 100 TB posture:
 
-- brute-force cosine top-k (the exactness baseline): query set x corpus,
-  dot product via ``F.aggregate``/``zip_with`` -- JVM-side fold, no Python;
-  the query side is broadcast so the corpus never shuffles;
+- exact scoring (the exactness baseline): every float dot product, norm
+  and cosine the engine writes as a Spark expression is ``dot``/``cosine``
+  -- a JVM-side ``F.aggregate``/``zip_with`` fold, no Python.  The broadcast-queries
+  operators (``brute_force_topk``, ``mips_topk``, ``range_search``, the
+  LSH/IVF probes, the int8 and Rocchio second rounds) share one scoring
+  join (``_broadcast_score``: small query side broadcast, so the corpus
+  never shuffles, self-matches excluded) and one rank kernel
+  (``_rank_topk``: per-query ``row_number`` over ``(score desc, n_id)``,
+  kept while <= k);
 - IVF (inverted-file) ANN: corpus pre-clustered (here: by its ``label``
   column as the deterministic cluster assignment, centroids = cluster
   means); a query probes only its nearest centroid's cluster -- the scan
@@ -13,13 +19,17 @@ BASELINE.json north star).  Tiers for the 100 TB posture:
 
 Cosine math is done in float64 with a deterministic left-to-right fold, so
 the DuckDB oracle (list_dot_product / explicit unnest-sum) matches exactly
-after rounding to 6 dp.
+after rounding to 6 dp.  The Arrow pair scorer ``_block_pair_scores`` is a
+numpy accumulation pinned bit-for-bit to this fold
+(tests/test_properties.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from kcl_akka_stream_spark.plans.hygiene import spread
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -39,6 +49,63 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def cosine_micro(a: Column, b: Column) -> Column:
+    """``cosine`` frozen to integer micro-units (bigint) -- the exact
+    score the integer greedy selections (MMR, k-center) fold over."""
+    return F.round(cosine(a, b) * 1000000, 0).cast("bigint")
+
+
+def _broadcast_score(
+    c: DataFrame,
+    q: DataFrame,
+    score: Column,
+    on: str | None = None,
+    cond: Column | None = None,
+    include_self: bool = False,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """The exact-scoring join: corpus side ``c`` (carries ``n_id``) joined
+    to the broadcast query side ``q`` (carries ``q_id``), self-matches
+    (``q_id == n_id``) excluded unless ``include_self``, plus ``cond`` if
+    given.  ``on`` names an equi-join key both sides carry (an LSH bucket,
+    an IVF cluster); the pair predicate then filters the joined rows.
+    Returns ``(q_id, n_id, *keep, score)``."""
+    pair = F.lit(True) if include_self else F.col("q_id") != F.col("n_id")
+    if cond is not None:
+        pair = pair & cond
+    if on is None:
+        joined = c.join(F.broadcast(q), pair)
+    else:
+        joined = c.join(F.broadcast(q), on=on).filter(pair)
+    return joined.select("q_id", "n_id", *keep, score)
+
+
+def _rank_topk(scored: DataFrame, score: str, k: int, rank: str = "rank") -> DataFrame:
+    """The rank kernel: per query, ``row_number`` over ``(score desc,
+    n_id)`` as ``rank`` (ties break on neighbor id -- fully deterministic),
+    rows with rank <= k kept."""
+    w = Window.partitionBy("q_id").orderBy(F.col(score).desc(), F.col("n_id"))
+    return scored.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
+def _exact_score(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    name: str,
+    fn=cosine,
+    include_self: bool = False,
+) -> DataFrame:
+    """``(q_id, n_id, name)``: ``fn(q_vec, n_vec)`` rounded to 6 dp for every
+    (query, corpus vector) pair -- the brute-force scan behind
+    ``brute_force_topk``, ``mips_topk`` and ``range_search``."""
+    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
+    c = spread(corpus.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec")))
+    score = F.round(fn(F.col("q_vec"), F.col("n_vec")), 6).alias(name)
+    return _broadcast_score(c, q, score, include_self=include_self)
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -51,20 +118,8 @@ def brute_force_topk(
     The (small) query set is broadcast; each corpus partition scores its rows
     against all queries map-side, then a per-query top-k window.  Rank ties
     break on neighbor id -> fully deterministic output."""
-    from kcl_akka_stream_spark.plans.hygiene import spread
-
-    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-    c = spread(corpus.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec")))
-    scored = (
-        c.join(F.broadcast(q), F.col("q_id") != F.col("n_id"))
-        .select(
-            "q_id",
-            "n_id",
-            F.round(cosine(F.col("q_vec"), F.col("n_vec")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("n_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    scored = _exact_score(corpus, queries, id_col, vec_col, "cos_sim")
+    return _rank_topk(scored, "cos_sim", k)
 
 
 def mips_topk(
@@ -87,19 +142,7 @@ def mips_topk(
     the per-query top-k window), dot in float64 sequential fold rounded
     to 6 dp, rank ties on neighbor id.
     """
-    from kcl_akka_stream_spark.plans.hygiene import spread
-
-    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-    c = spread(corpus.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec")))
-    scored = c.join(F.broadcast(q), F.col("q_id") != F.col("n_id")).select(
-        "q_id",
-        "n_id",
-        F.round(dot(F.col("q_vec"), F.col("n_vec")), 6).alias("ip"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("ip").desc(), F.col("n_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rank_topk(_exact_score(corpus, queries, id_col, vec_col, "ip", dot), "ip", k)
 
 
 def ivf_centroids(corpus: DataFrame, cluster_col: str = "label", vec_col: str = "embedding") -> DataFrame:
@@ -387,11 +430,8 @@ def _ivf_probe(
     c = corpus.select(
         F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"), F.col(cluster_col).alias("cluster")
     )
-    scored = c.join(F.broadcast(q_assigned), on="cluster").filter(F.col("q_id") != F.col("n_id")).select(
-        "q_id", "n_id", F.round(cosine(F.col("q_vec"), F.col("n_vec")), 6).alias("cos_sim")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("n_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    score = F.round(cosine(F.col("q_vec"), F.col("n_vec")), 6).alias("cos_sim")
+    return _rank_topk(_broadcast_score(c, q_assigned, score, on="cluster"), "cos_sim", k)
 
 
 def sign_lsh_bucket(vec: Column, dims: int = 8) -> Column:
@@ -426,8 +466,6 @@ def lsh_topk(
     join key is the bucket id, so with the corpus stored bucketed/partitioned
     by it the probe is a partition-pruned scan of ~n/2^dims rows instead of
     n.  The (small) query side is broadcast, corpus never shuffles."""
-    from kcl_akka_stream_spark.plans.hygiene import spread
-
     q = queries.select(
         F.col(id_col).alias("q_id"),
         F.col(vec_col).alias("q_vec"),
@@ -438,13 +476,8 @@ def lsh_topk(
         F.col(vec_col).alias("n_vec"),
         sign_lsh_bucket(F.col(vec_col), bucket_dims).alias("bucket"),
     )
-    scored = (
-        c.join(F.broadcast(q), on="bucket")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .select("q_id", "n_id", F.round(cosine(F.col("q_vec"), F.col("n_vec")), 6).alias("cos_sim"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("n_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    score = F.round(cosine(F.col("q_vec"), F.col("n_vec")), 6).alias("cos_sim")
+    return _rank_topk(_broadcast_score(c, q, score, on="bucket"), "cos_sim", k)
 
 
 #: Hard ceiling on auto-derived sign-LSH dims: 2^16 buckets bounds the
@@ -505,8 +538,6 @@ def embedding_near_dup_pairs(
     no silent truncation, no second scan for the cap."""
     import logging
     from collections import Counter
-
-    from kcl_akka_stream_spark.plans.hygiene import spread
 
     auto = target_block_size is not None and lsh_dims is None
     if max_block_size is not None and (auto or lsh_dims is not None):
@@ -675,80 +706,6 @@ def _block_pair_scores(id_col: str, vec_col: str, threshold: float):
     return score
 
 
-def brute_force_topk_vectorized(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_queries: int = 10_000,
-) -> DataFrame:
-    """The wide-embedding scale path for exact top-k: Arrow-batched
-    mapInPandas scoring with one numpy matmul per batch instead of a
-    per-element JVM fold -- at 1024+ dims the BLAS matmul wins by an order
-    of magnitude.
-
-    Exactness is preserved by per-partition pre-pruning: each partition
-    emits, per query, every row whose similarity >= its k-th best (ties
-    INCLUDED), so the global window over ~partitions x Q x k candidate rows
-    reproduces the full-scan top-k bit-for-bit.  The query set ships in the
-    task closure (the pandas-side equivalent of the broadcast in
-    brute_force_topk); ``max_queries`` ENFORCES the small-by-contract claim
-    -- an oversized query set fails loudly before the driver collect
-    instead of OOMing the driver or silently shipping a giant closure."""
-    import numpy as np
-    import pandas as pd
-
-    from kcl_akka_stream_spark.plans.hygiene import spread
-
-    n_queries = queries.limit(max_queries + 1).count()
-    if n_queries > max_queries:
-        raise ValueError(
-            f"brute_force_topk_vectorized: query set exceeds max_queries="
-            f"{max_queries}; partition the query set or use ivf_topk/lsh_topk"
-        )
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)  # (Q, D)
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-
-    def score(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["n_id"].to_numpy()
-            m = np.array(list(pdf["n_vec"]), dtype=np.float64)  # (B, D)
-            m_norm = np.sqrt((m * m).sum(axis=1))
-            sims = (m @ q_mat.T) / np.outer(m_norm, q_norm)  # (B, Q)
-            out = []
-            for qi in range(len(q_ids)):
-                col = sims[:, qi]
-                mask = ids != q_ids[qi]
-                cand_idx = np.nonzero(mask)[0]
-                if len(cand_idx) == 0:
-                    continue
-                col_c = col[cand_idx]
-                kth = min(k, len(col_c))
-                thresh = np.partition(col_c, -kth)[-kth]
-                keep = cand_idx[col_c >= thresh]  # ties included -> exact
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "q_id": q_ids[qi],
-                            "n_id": ids[keep],
-                            "cos_sim": np.round(col[keep], 6),
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    c = spread(corpus.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec")))
-    scored = c.mapInPandas(score, schema="q_id long, n_id long, cos_sim double")
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("n_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
 def quantize_int8(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -761,8 +718,6 @@ def quantize_int8(
     (sum, L1) plus the L2 norm, so the math is verifiable cross-engine
     without hashing float arrays.  Map-only, zero shuffle; the fold is
     the sequential float64 convention (see module docstring)."""
-    from kcl_akka_stream_spark.plans.hygiene import spread
-
     v = F.col(vec_col)
     # Materialize scale and the quantized array in CHILD projections
     # (the rolling-fingerprint lesson, re-learned here via SCALE_PROBE's
@@ -962,8 +917,6 @@ def ivf_pq_topk(
     lists, self-matches excluded.
     """
     from kcl_akka_stream_spark.operators.clustering import pq_encode
-    from kcl_akka_stream_spark.plans.hygiene import spread
-
     probe = corpus.select(F.size(vec_col).alias("d")).first()
     dims = probe["d"] if probe is not None else 0
     if dims % m != 0:
@@ -1122,8 +1075,6 @@ def ivf_pq_build(
     Deterministic: same corpus -> byte-identical index, so the prebuilt
     probe matches inline ``ivf_pq_topk`` exactly."""
     from kcl_akka_stream_spark.operators.clustering import pq_encode
-    from kcl_akka_stream_spark.plans.hygiene import spread
-
     corpus = spread(corpus)
     assignment, centroids = _learn_quantizer(corpus, id_col, vec_col, n_clusters)
     # r16: encode off the carried assignment with the cluster passed
@@ -1347,15 +1298,8 @@ def range_search(
     self-matches are wanted for audit), pass ``include_self=True`` and
     filter downstream if needed.
     """
-    from kcl_akka_stream_spark.plans.hygiene import spread
-
-    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-    c = spread(corpus.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec")))
-    pair_cond = F.lit(True) if include_self else F.col("q_id") != F.col("n_id")
-    scored = c.join(F.broadcast(q), pair_cond).select(
-        "q_id",
-        "n_id",
-        F.round(cosine(F.col("q_vec"), F.col("n_vec")), 6).alias("cos_sim"),
+    scored = _exact_score(
+        corpus, queries, id_col, vec_col, "cos_sim", include_self=include_self
     )
     return scored.filter(F.col("cos_sim") >= F.lit(threshold))
 
@@ -1386,32 +1330,27 @@ def mmr_rerank(
     of any reranker; candidates and their pairwise-sim relation are the
     only data-shaped inputs and both are (queries x n_candidates^2)-
     bounded.  Returns (q_id, n_id, rel_micro, step)."""
-    from pyspark.sql import Window
-
-    cand = brute_force_topk_vectorized(
-        corpus, queries, k=n_candidates, id_col=id_col, vec_col=vec_col
-    ).select(
-        "q_id",
-        "n_id",
-        F.expr("cast(round(cos_sim * 1000000, 0) as bigint)").alias(
-            "rel_micro"
-        ),
-    ).localCheckpoint(eager=True)  # feeds every unrolled step
+    # Every relation below is (queries x n_candidates^2)-bounded, but a
+    # checkpoint keeps the scoring join's cross-product size estimate, so
+    # the checkpointed blocks are broadcast explicitly.
+    cand = F.broadcast(
+        brute_force_topk(
+            corpus, queries, k=n_candidates, id_col=id_col, vec_col=vec_col
+        ).select(
+            "q_id",
+            "n_id",
+            F.expr("cast(round(cos_sim * 1000000, 0) as bigint)").alias(
+                "rel_micro"
+            ),
+        ).localCheckpoint(eager=True)  # feeds every unrolled step
+    )
 
     vecs = corpus.select(
         F.col(id_col).alias("__vid"), F.col(vec_col).alias("__v")
     )
     a = cand.select("q_id", F.col("n_id").alias("id_a"))
     b = cand.select("q_id", F.col("n_id").alias("id_b"))
-    dot = (
-        "aggregate(zip_with(va, vb, (x, y) -> cast(x as double) * y),"
-        " 0D, (acc, v) -> acc + v)"
-    )
-    norm = (
-        "sqrt(aggregate(transform({c}, x -> cast(x as double) * x),"
-        " 0D, (acc, v) -> acc + v))"
-    )
-    pair_sim = (
+    pair_sim = F.broadcast(
         a.join(b, "q_id")
         .filter(F.col("id_a") != F.col("id_b"))
         .join(vecs.select(F.col("__vid").alias("id_a"), F.col("__v").alias("va")), "id_a")
@@ -1420,10 +1359,7 @@ def mmr_rerank(
             "q_id",
             "id_a",
             "id_b",
-            F.expr(
-                f"cast(round({dot} / ({norm.format(c='va')} *"
-                f" {norm.format(c='vb')}) * 1000000, 0) as bigint)"
-            ).alias("sim_micro"),
+            cosine_micro(F.col("va"), F.col("vb")).alias("sim_micro"),
         )
         .localCheckpoint(eager=True)  # reused by k-1 steps
     )
@@ -1509,18 +1445,7 @@ def kcenter_select(
     seed, and for step i the exact maximin distance the pick achieved
     (monotonically non-increasing: the k-center coverage-radius curve).
     """
-    dot = (
-        "aggregate(zip_with(__v, __sv, (x, y) -> cast(x as double) * y),"
-        " 0D, (acc, v) -> acc + v)"
-    )
-    norm = (
-        "sqrt(aggregate(transform({c}, x -> cast(x as double) * x),"
-        " 0D, (acc, v) -> acc + v))"
-    )
-    dist = (
-        f"cast(1000000 - round({dot} / ({norm.format(c='__v')} *"
-        f" {norm.format(c='__sv')}) * 1000000, 0) as bigint)"
-    )
+    dist = F.lit(1000000) - cosine_micro(F.col("__v"), F.col("__sv"))
     vecs = pool.select(
         F.col(id_col).alias("__vid"), F.col(vec_col).alias("__v")
     ).localCheckpoint(eager=True)
@@ -1547,7 +1472,7 @@ def kcenter_select(
                 "left_anti",
             )
             .crossJoin(F.broadcast(sel))
-            .select("__vid", F.expr(dist).alias("__d"))
+            .select("__vid", dist.alias("__d"))
             .groupBy("__vid")
             .agg(F.min("__d").alias("__md"))
         )
@@ -1592,8 +1517,6 @@ def int8_rescore_topk(
     broadcast); stage 2 touches only queries x m full vectors.
 
     Returns (q_id, n_id, dot_int, cos6, rank)."""
-    from pyspark.sql import Window
-
     scale = corpus.agg(
         F.max(
             F.expr(
@@ -1617,52 +1540,19 @@ def int8_rescore_topk(
         F.col(vec_col).alias("__qv"),
         F.expr(q8).alias("__qq"),
     )
-    dot_i = (
-        "aggregate(zip_with(__cq, __qq, (x, y) -> x * y), 0L,"
-        " (acc, v) -> acc + v)"
+    # stage 1: exact int64 dot of the quantized vectors
+    dot_int = F.aggregate(
+        F.zip_with(F.col("__cq"), F.col("__qq"), lambda x, y: x * y),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    ).alias("dot_int")
+    stage1 = _rank_topk(
+        _broadcast_score(c, qs, dot_int, keep=("__cv", "__qv")), "dot_int", m, "__rk"
     )
-    stage1 = (
-        c.join(F.broadcast(qs), F.col("n_id") != F.col("q_id"))
-        .select(
-            "q_id", "n_id", "__cv", "__qv",
-            F.expr(dot_i).alias("dot_int"),
-        )
-        .withColumn(
-            "__rk",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy(
-                    F.col("dot_int").desc(), "n_id"
-                )
-            ),
-        )
-        .filter(F.col("__rk") <= m)
-    )
-    dot = (
-        "aggregate(zip_with(__cv, __qv, (x, y) -> cast(x as double) * y),"
-        " 0D, (acc, v) -> acc + v)"
-    )
-    nrm = (
-        "sqrt(aggregate(transform({c}, x -> cast(x as double) * x), 0D,"
-        " (acc, v) -> acc + v))"
-    )
-    rescored = stage1.select(
-        "q_id",
-        "n_id",
-        "dot_int",
-        F.expr(
-            f"round({dot} / ({nrm.format(c='__cv')} *"
-            f" {nrm.format(c='__qv')}), 6)"
-        ).alias("cos6"),
-    ).withColumn(
-        "rank",
-        F.row_number()
-        .over(
-            Window.partitionBy("q_id").orderBy(F.col("cos6").desc(), "n_id")
-        )
-        .cast("long"),
-    )
-    return rescored.filter(F.col("rank") <= k).select(
-        "q_id", "n_id", "dot_int", "cos6", "rank"
+    cos6 = F.round(cosine(F.col("__cv"), F.col("__qv")), 6).alias("cos6")
+    rescored = _rank_topk(stage1.select("q_id", "n_id", "dot_int", cos6), "cos6", k)
+    return rescored.select(
+        "q_id", "n_id", "dot_int", "cos6", F.col("rank").cast("long").alias("rank")
     )
 
 
@@ -1693,11 +1583,13 @@ def rocchio_expand_topk(
     (queries x dims)-sized and BROADCAST back; round 2 is one more
     broadcast pass over the corpus.  Returns (q_id, n_id, cos6, rank,
     was_in_round1)."""
-    from pyspark.sql import Window
-
-    r1 = brute_force_topk_vectorized(
-        corpus, queries, k=k0, id_col=id_col, vec_col=vec_col
-    ).select("q_id", "n_id").localCheckpoint(eager=True)
+    # r1 is (queries x k0) rows, but a checkpoint keeps the scoring join's
+    # cross-product size estimate, so it is broadcast explicitly
+    r1 = F.broadcast(
+        brute_force_topk(
+            corpus, queries, k=k0, id_col=id_col, vec_col=vec_col
+        ).select("q_id", "n_id").localCheckpoint(eager=True)
+    )
     cvec = corpus.select(
         F.col(id_col).alias("n_id"), F.col(vec_col).alias("__cv")
     )
@@ -1739,43 +1631,15 @@ def rocchio_expand_topk(
             " as bigint))"
         ).alias("__cx"),
     )
-    dot = (
-        "aggregate(zip_with(__cx, __qx, (a, b) ->"
-        " cast(a as double) * cast(b as double)), 0D, (acc, v) -> acc + v)"
-    )
-    nrm = (
-        "sqrt(aggregate(transform({c}, x -> cast(x as double) *"
-        " cast(x as double)), 0D, (acc, v) -> acc + v))"
-    )
-    scored = (
-        cm.join(F.broadcast(q2), F.col("n_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "n_id",
-            F.expr(
-                f"round({dot} / ({nrm.format(c='__cx')} *"
-                f" {nrm.format(c='__qx')}), 6)"
-            ).alias("cos6"),
-        )
-        .withColumn(
-            "rank",
-            F.row_number()
-            .over(
-                Window.partitionBy("q_id").orderBy(
-                    F.col("cos6").desc(), "n_id"
-                )
-            )
-            .cast("long"),
-        )
-        .filter(F.col("rank") <= k)
-    )
+    cos6 = F.round(cosine(F.col("__cx"), F.col("__qx")), 6).alias("cos6")
+    scored = _rank_topk(_broadcast_score(cm, q2, cos6), "cos6", k)
     return scored.join(
         r1.withColumn("was_in_round1", F.lit(1)), ["q_id", "n_id"], "left"
     ).select(
         "q_id",
         "n_id",
         "cos6",
-        "rank",
+        F.col("rank").cast("long").alias("rank"),
         F.coalesce("was_in_round1", F.lit(0)).cast("long").alias(
             "was_in_round1"
         ),

@@ -272,9 +272,7 @@ _COS = (
 )
 
 
-@query(
-    "sim_topk_bruteforce",
-    f"""
+_BRUTE_TOPK_ORACLE = f"""
     WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS q_vec
                FROM embeddings WHERE vec_id < 5),
          c AS (SELECT vec_id AS n_id, CAST(embedding AS DOUBLE[]) AS n_vec FROM embeddings),
@@ -287,8 +285,10 @@ _COS = (
              row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, n_id) AS rank
       FROM scored)
     WHERE rank <= 5
-    """,
-)
+    """
+
+
+@query("sim_topk_bruteforce", _BRUTE_TOPK_ORACLE)
 def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = tbl(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 5)
@@ -987,31 +987,13 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "sim_topk_vectorized",
-    f"""
-    WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS q_vec
-               FROM embeddings WHERE vec_id < 5),
-         c AS (SELECT vec_id AS n_id, CAST(embedding AS DOUBLE[]) AS n_vec FROM embeddings),
-         scored AS (
-           SELECT q_id, n_id,
-                  round({_COS.format(a="q_vec", b="n_vec")}, 6) AS cos_sim
-           FROM c, q WHERE q_id <> n_id)
-    SELECT q_id, n_id, cos_sim, rank FROM (
-      SELECT q_id, n_id, cos_sim,
-             row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, n_id) AS rank
-      FROM scored)
-    WHERE rank <= 5
-    """,
-)
+@query("sim_topk_vectorized", _BRUTE_TOPK_ORACLE)
 def sim_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Same result as sim_topk_bruteforce, computed on the numpy/BLAS path
-    # (Arrow-batched mapInPandas) -- the scale path for wide embeddings.
-    emb = tbl(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 5)
-    return S.brute_force_topk_vectorized(emb, queries_df, k=5).select(
-        "q_id", "n_id", "cos_sim", "rank"
-    )
+    # Kept as a registry name: exact top-k has one implementation
+    # (operators/similarity.py::brute_force_topk), so this is
+    # sim_topk_bruteforce.  A BLAS scorer needs a wide-embedding workload
+    # that selects it by observed dims; the fixture is 64-dim.
+    return sim_topk_bruteforce(spark, sf_dir)
 
 
 def _rolling_oracle(window: int = 4, base: int = 257, mod: int = 2147483647) -> str:
@@ -6524,20 +6506,11 @@ def pipeline_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").alias("n_vec"),
         )
     )
-    scored = c.join(
-        F.broadcast(q),
-        (F.col("q_id") != F.col("n_id")) & (F.col("q_label") != F.col("n_label")),
-    ).select(
-        "q_id",
-        "n_id",
-        F.round(S.cosine(F.col("q_vec"), F.col("n_vec")), 6).alias("cos_sim"),
+    score = F.round(S.cosine(F.col("q_vec"), F.col("n_vec")), 6).alias("cos_sim")
+    scored = S._broadcast_score(
+        c, q, score, cond=F.col("q_label") != F.col("n_label")
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), "n_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("q_id", "n_id", "cos_sim", "rank")
-    )
+    return S._rank_topk(scored, "cos_sim", 5).select("q_id", "n_id", "cos_sim", "rank")
 
 
 @query(
@@ -9629,22 +9602,17 @@ def sim_ivf_delta_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ingest window), and per-query candidates merge by score with the
     # deterministic (cos DESC, n_id) tiebreak.  No reindex on the hot
     # path; the delta folds into the base at the next offline build.
-    # Scale: base side stays cluster-pruned, delta side is a broadcast-
-    # query Arrow matmul, the merge is k-bounded per query.
+    # Scale: base side stays cluster-pruned, delta side is the exact
+    # broadcast-query scan, the merge is k-bounded per query.
     emb = tbl(spark, sf_dir, "embeddings")
     base = emb.filter(F.col("vec_id") % 10 != 0)
     delta = emb.filter(F.col("vec_id") % 10 == 0)
     queries = emb.filter(F.col("vec_id") < 5)
     ivf = S.ivf_topk(base, queries, k=5).select("q_id", "n_id", "cos_sim")
-    br = S.brute_force_topk_vectorized(delta, queries, k=5).select(
-        "q_id", "n_id", "cos_sim"
-    )
+    br = S.brute_force_topk(delta, queries, k=5).select("q_id", "n_id", "cos_sim")
     merged = ivf.unionByName(br).filter(F.col("n_id") != F.col("q_id"))
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), "n_id")
-    return (
-        merged.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("q_id", "n_id", "cos_sim", F.col("rank").cast("long"))
+    return S._rank_topk(merged, "cos_sim", 5).select(
+        "q_id", "n_id", "cos_sim", F.col("rank").cast("long")
     )
 
 
@@ -10842,19 +10810,10 @@ def sim_int8_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broken scale before it ships.  Exact: both rankings are
     # deterministic (6dp cosine, id tiebreaks), so recall is a pure
     # integer ppm.
-    from kcl_akka_stream_spark.operators.similarity import (
-        brute_force_topk_vectorized,
-        int8_rescore_topk,
-    )
-
     emb = tbl(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    two = int8_rescore_topk(emb, queries, m=32, k=10).select(
-        "q_id", "n_id"
-    )
-    brute = brute_force_topk_vectorized(emb, queries, k=10).select(
-        "q_id", "n_id"
-    )
+    two = S.int8_rescore_topk(emb, queries, m=32, k=10).select("q_id", "n_id")
+    brute = S.brute_force_topk(emb, queries, k=10).select("q_id", "n_id")
     joined = brute.join(
         two.withColumn("__hit", F.lit(1)), ["q_id", "n_id"], "left"
     )
@@ -11093,25 +11052,10 @@ def sample_kcenter_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("__cv")),
         "c_id",
     )
-    dot = (
-        "aggregate(zip_with(embedding, __cv, (x, y) -> cast(x as double) * y),"
-        " 0D, (acc, v) -> acc + v)"
-    )
-    nrm = (
-        "sqrt(aggregate(transform({c}, x -> cast(x as double) * x), 0D,"
-        " (acc, v) -> acc + v))"
-    )
-    dist = (
-        f"cast(1000000 - round({dot} / ({nrm.format(c='embedding')} *"
-        f" {nrm.format(c='__cv')}) * 1000000, 0) as bigint)"
-    )
+    dist = F.lit(1000000) - S.cosine_micro(F.col("embedding"), F.col("__cv"))
     assigned = (
         emb.crossJoin(F.broadcast(centers))
-        .select(
-            "vec_id",
-            "c_id",
-            F.expr(dist).alias("d"),
-        )
+        .select("vec_id", "c_id", dist.alias("d"))
         .groupBy("vec_id")
         .agg(
             F.expr("min_by(c_id, struct(d, c_id))").alias("center_id"),

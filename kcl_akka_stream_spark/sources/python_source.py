@@ -50,17 +50,6 @@ def _shard_id(s: int) -> str:
     return f"shardId-{s:012d}"
 
 
-def _row(shard: int, seq: int):
-    pk = hashlib.md5(f"pk-{shard}-{seq}".encode()).hexdigest()
-    return (
-        _shard_id(shard),
-        seq,
-        pk,
-        f"msg-{shard}-{seq}",
-        BASE_TS + timedelta(seconds=seq),
-    )
-
-
 class _ShardRange(InputPartition):
     def __init__(self, shard: int, start: int, end: int):
         self.shard = shard
@@ -78,8 +67,6 @@ def _opts(options) -> tuple[int, int, int]:
 class _BatchReader(DataSourceReader):
     def __init__(self, options):
         self._n_shards, self._per_shard, _ = _opts(options)
-        self._arrow = options.get("arrow", "false").lower() == "true"
-        self._chunk = int(options.get("arrow_chunk", str(ARROW_CHUNK_DEFAULT)))
         self._shard_eq: set[str] | None = None  # intersection of EqualTo values
         self._seq_lo = 0  # exclusive
         self._seq_hi = self._per_shard  # inclusive
@@ -141,38 +128,33 @@ class _BatchReader(DataSourceReader):
     def read(self, partition: _ShardRange):
         if partition is None:  # Spark runs one empty task when partitions()==[]
             return
-        if self._arrow:
-            yield from _arrow_batches(partition, self._chunk)
-            return
-        for seq in range(partition.start + 1, partition.end + 1):
-            yield _row(partition.shard, seq)
+        yield from _arrow_batches(partition)
 
 
-#: Generator-side RecordBatch size for the Arrow fast path ("arrow_chunk"
-#: source option).  Swept r10 (SCALE_PROBE.md at `f2504d4`) at
-#: the r9-tuned maxRecordsPerBatch=100k on the 2M-row RocksDB streaming
-#: pipeline: 1,024 collapses to ~25k rows/s (per-batch build overhead:
-#: one python-list -> pa.array pass per column per chunk); everything
-#: from 4,096 to 250,000 is ONE flat plateau (~96-105k rows/s, repeated
-#: head-to-head runs swing 64-102k on host noise with no stable winner).
-#: 16,384 is the default: mid-plateau with margin against the 1k cliff,
+#: Generator-side RecordBatch size.  Swept r10 (SCALE_PROBE.md at
+#: `f2504d4`) at the r9-tuned maxRecordsPerBatch=100k on the 2M-row
+#: RocksDB streaming pipeline: 1,024 collapses to ~25k rows/s (per-batch
+#: build overhead: one python-list -> pa.array pass per column per chunk);
+#: everything from 4,096 to 250,000 is ONE flat plateau (~96-105k rows/s,
+#: repeated head-to-head runs swing 64-102k on host noise with no stable
+#: winner).  16,384 sits mid-plateau with margin against the 1k cliff,
 #: while keeping per-batch worker memory (5 cols x 16k values) small.
 #: The remaining ~1.15x gap to the all-JVM ceiling is NOT chunk-bound.
 ARROW_CHUNK_DEFAULT = 16_384
 
 
-def _arrow_batches(partition: _ShardRange, chunk: int = ARROW_CHUNK_DEFAULT):
-    """The data-plane fast path of the Python connector API: ``read`` may
-    yield ``pyarrow.RecordBatch`` objects instead of tuples -- rows then
-    cross the Python/JVM boundary as columnar Arrow buffers (no per-row
-    pickling), the same transport that makes pandas UDFs ~10-100x faster
-    than row-at-a-time Python.  Columns are built vectorized; md5 is the
-    only per-value Python call left."""
+def _arrow_batches(partition: _ShardRange):
+    """The one read path of both readers: ``read`` yields
+    ``pyarrow.RecordBatch`` objects, so rows cross the Python/JVM boundary
+    as columnar Arrow buffers (no per-row pickling), the same transport
+    that makes pandas UDFs ~10-100x faster than row-at-a-time Python.
+    Columns are built vectorized; md5 is the only per-value Python call
+    left."""
     import pyarrow as pa
 
     seqs = list(range(partition.start + 1, partition.end + 1))
-    for i in range(0, len(seqs), chunk):
-        part = seqs[i : i + chunk]
+    for i in range(0, len(seqs), ARROW_CHUNK_DEFAULT):
+        part = seqs[i : i + ARROW_CHUNK_DEFAULT]
         yield pa.record_batch(
             [
                 pa.array([_shard_id(partition.shard)] * len(part), pa.string()),
@@ -210,8 +192,6 @@ class _StreamReader(DataSourceStreamReader):
 
     def __init__(self, options):
         self._n_shards, self._per_shard, self._step = _opts(options)
-        self._arrow = options.get("arrow", "false").lower() == "true"
-        self._chunk = int(options.get("arrow_chunk", str(ARROW_CHUNK_DEFAULT)))
         self._current = 0
 
     def initialOffset(self):
@@ -248,17 +228,12 @@ class _StreamReader(DataSourceStreamReader):
         return [_ShardRange(s, lo, hi) for s in range(self._n_shards)]
 
     def read(self, partition: _ShardRange):
-        # arrow=true: same RecordBatch fast path as the batch reader --
-        # micro-batch rows cross the Python/JVM boundary as columnar
-        # buffers instead of per-row pickles.  The streaming probe in
+        # Same RecordBatch path as the batch reader.  The streaming probe in
         # SCALE_PROBE.md at `f2504d4` measured ~1.7x end-to-end pipeline
-        # throughput (45k vs 27k rows/s incl. windowed agg; the source-only
-        # gain is larger but the stateful stages cap the pipeline).
-        if self._arrow:
-            yield from _arrow_batches(partition, self._chunk)
-            return
-        for seq in range(partition.start + 1, partition.end + 1):
-            yield _row(partition.shard, seq)
+        # throughput over per-row tuples (45k vs 27k rows/s incl. windowed
+        # agg; the source-only gain is larger but the stateful stages cap
+        # the pipeline).
+        yield from _arrow_batches(partition)
 
     def commit(self, end):
         # Belt-and-braces for the monotone-frontier invariant (a commit

@@ -42,3 +42,20 @@ def test_no_two_engine_functions_share_a_body():
     for dump, where in _bodies():
         seen[dump].append(where)
     assert [w for w in seen.values() if len(w) > 1] == []
+
+
+def test_one_float_dot_product():
+    # Every dot product, norm and cosine goes through
+    # operators/similarity.py's ``dot``/``cosine`` Column fold; a SQL-string
+    # copy of the fold is a second implementation that can drift from the
+    # one the oracles pin.
+    sites = []
+    for path in sorted(PKG.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and "aggregate(zip_with(" in "".join(node.value.split())
+            ):
+                sites.append(f"{path.relative_to(PKG.parent)}:{node.lineno}")
+    assert sites == []

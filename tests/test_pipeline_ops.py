@@ -209,21 +209,75 @@ def test_connected_components_iteration_guard(spark):
         connected_components(pairs, nodes, max_iterations=1)
 
 
-def test_vectorized_topk_matches_jvm_fold(spark):
-    import random
+def test_exact_scoring_matches_sequential_numpy_fold(spark):
+    # brute_force_topk, mips_topk and range_search against a numpy
+    # reference that folds each dot product dimension by dimension in
+    # float64 (the JVM fold's order of additions) and rounds HALF_UP to
+    # 6 dp like Spark's round.  The corpus plants exact ties: duplicate
+    # vectors (equal cosine and inner product under different ids) and
+    # vectors doubled exactly (equal cosine, doubled inner product), so
+    # the (score desc, n_id) tiebreak decides ranks.
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
 
     from kcl_akka_stream_spark.operators.similarity import (
         brute_force_topk,
-        brute_force_topk_vectorized,
+        mips_topk,
+        range_search,
     )
 
-    rng = random.Random(7)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(16)], 0) for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    qs = df.filter(F.col("vec_id") < 3)
-    a = {(r.q_id, r.rank): r.n_id for r in brute_force_topk(df, qs, k=5).collect()}
-    b = {(r.q_id, r.rank): r.n_id for r in brute_force_topk_vectorized(df, qs, k=5).collect()}
-    assert a == b
+    rng = np.random.default_rng(11)
+    base = rng.uniform(-1, 1, size=(30, 12)).astype(np.float32)
+    vecs = np.concatenate([base, base[:6], base[6:12] * 2])  # ids 30-35, 36-41
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>",
+    )
+    qids = [0, 1, 2, 6, 7]
+    qs = df.filter(F.col("vec_id").isin(qids))
+
+    v = vecs.astype(np.float64)
+    dots = np.zeros((len(qids), len(v)))
+    sq = np.zeros(len(v))
+    for d in range(v.shape[1]):
+        dots += np.outer(v[qids, d], v[:, d])
+        sq += v[:, d] * v[:, d]
+    norms = np.sqrt(sq)
+    cos = dots / np.outer(norms[qids], norms)
+
+    def r6(x):
+        return float(Decimal(repr(float(x))).quantize(Decimal("0.000001"), ROUND_HALF_UP))
+
+    def ref_topk(score, k):
+        out = set()
+        for qi, q in enumerate(qids):
+            cands = sorted((-r6(score[qi, n]), n) for n in range(len(v)) if n != q)
+            out |= {(q, n, -s, r) for r, (s, n) in enumerate(cands[:k], start=1)}
+        return out
+
+    for k in (1, 5, 8):
+        got = {tuple(r) for r in brute_force_topk(df, qs, k=k).collect()}
+        assert got == ref_topk(cos, k), k
+        got = {tuple(r) for r in mips_topk(df, qs, k=k).collect()}
+        assert got == ref_topk(dots, k), k
+    # the planted ties are really there: query 0's duplicate (id 30)
+    # scores 1.0, and 6 and 36 tie for query 7
+    top = {(r.q_id, r.n_id): r.cos_sim for r in brute_force_topk(df, qs, k=41).collect()}
+    assert top[(0, 30)] == 1.0 and top[(7, 6)] == top[(7, 36)]
+
+    for include_self in (False, True):
+        got = {
+            tuple(r)
+            for r in range_search(df, qs, 0.25, include_self=include_self).collect()
+        }
+        want = {
+            (q, n, r6(cos[qi, n]))
+            for qi, q in enumerate(qids)
+            for n in range(len(v))
+            if (include_self or n != q) and r6(cos[qi, n]) >= 0.25
+        }
+        assert got == want, include_self
 
 
 def test_rolling_fingerprint_matches_reference(spark):
@@ -248,19 +302,6 @@ def test_rolling_fingerprint_matches_reference(spark):
     df = _docs(spark, texts)
     got = {r.doc_id: (r.rolling_hash, r.winnow_min) for r in rolling_fingerprint(df, window=4).collect()}
     assert got == {i: py_ref(t) for i, t in enumerate(texts)}
-
-
-def test_vectorized_topk_rejects_oversized_query_set(spark):
-    # r2 "What's wrong" #7: the small-by-contract query set is now enforced
-    # -- an oversized set fails loudly before the driver-side collect.
-    import pytest as _pytest
-
-    from kcl_akka_stream_spark.operators.similarity import brute_force_topk_vectorized
-
-    rows = [(i, [float(i), 1.0]) for i in range(20)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    with _pytest.raises(ValueError, match="max_queries"):
-        brute_force_topk_vectorized(df, df, k=2, max_queries=10)
 
 
 def test_embedding_near_dup_lsh_blocks_by_sign_bucket(spark):

@@ -291,7 +291,7 @@ def test_shuffle_budgets(spark, sf_dir):
         "dedup_span_coverage": 4,  # spread + gram count agg + hit join side + doc window/fold; left join id-keyed
         "text_min_k_prob": 3,  # token explode checkpointed once; vocab agg + doc window/fold; vocab+total broadcast
         "privacy_k_anonymity_report": 3,  # QI group agg (partial-distinct + final) + single-row fold
-        "sim_ivf_delta_serving": 6,  # ivf leg (4, quantizer + probe) + brute delta Arrow leg + merge window
+        "sim_ivf_delta_serving": 6,  # ivf leg (4, quantizer + probe) + brute delta leg + merge window
         "w_trending_decay": 3,  # single-row tmax broadcast + one combinable agg + leaderboard rank
         "text_backoff_lm_score": 12,  # LM fit aggs (pair, context, unigram, total; all broadcast back) + scored-pairs fold + lang join-back
         "agg_cohens_kappa": 7,  # one contingency agg + bounded marginal folds/joins on the cells relation

@@ -1,12 +1,30 @@
 """Python Data Source connector seam (sources/python_source.py): the
 shard->partition mapping and the paced micro-batch offset protocol."""
 
+import hashlib
 import time
 import uuid
+from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
 from kcl_akka_stream_spark.sources.python_source import register
+
+
+def _python_rows(n_shards: int, per_shard: int) -> list[tuple]:
+    """envelope_sim's records written out row by row in plain Python:
+    the reference the source's Arrow read path must reproduce."""
+    return sorted(
+        (
+            f"shardId-{s:012d}",
+            q,
+            hashlib.md5(f"pk-{s}-{q}".encode()).hexdigest(),
+            f"msg-{s}-{q}",
+            datetime(2026, 1, 1) + timedelta(seconds=q),
+        )
+        for s in range(n_shards)
+        for q in range(1, per_shard + 1)
+    )
 
 
 def test_batch_one_partition_per_shard(spark):
@@ -191,24 +209,19 @@ def test_stream_writer_commits_per_batch_manifests(spark, tmp_path):
 
 
 def test_arrow_batch_read_matches_row_read(spark):
-    # The Arrow fast path (read() yielding pyarrow.RecordBatch) must be
-    # bit-identical to the tuple path -- including the timestamp column,
-    # where naive-datetime vs timestamp("us") conversions can silently
-    # shift by the session timezone.
+    # The Arrow read path (read() yielding pyarrow.RecordBatch) must be
+    # bit-identical to the records written out row by row -- including the
+    # timestamp column, where naive-datetime vs timestamp("us") conversions
+    # can silently shift by the session timezone.
     register(spark)
-
-    def load(arrow):
-        return (
-            spark.read.format("envelope_sim")
-            .option("n_shards", "3")
-            .option("records_per_shard", "200")
-            .option("arrow", arrow)
-            .load()
-        )
-
-    rows = sorted(map(tuple, load("false").collect()))
-    arrows = sorted(map(tuple, load("true").collect()))
-    assert rows == arrows and len(rows) == 600
+    df = (
+        spark.read.format("envelope_sim")
+        .option("n_shards", "3")
+        .option("records_per_shard", "200")
+        .load()
+    )
+    rows = sorted(map(tuple, df.collect()))
+    assert rows == _python_rows(3, 200) and len(rows) == 600
 
 
 def test_stream_restart_after_full_drain_emits_no_duplicates(spark, tmp_path):
@@ -291,40 +304,30 @@ def test_batch_contradictory_shard_equalities_yield_empty(spark):
 
 
 def test_stream_arrow_mode_matches_row_mode(spark):
-    # The streaming data plane's Arrow fast path (arrow=true yields
-    # RecordBatch from read()) must be bit-identical to the row path --
-    # same rows, same batch pacing.
+    # The streaming Arrow read path must reproduce the records written out
+    # row by row, with the same batch pacing.
     register(spark)
-    results = {}
-    for arrow in ("false", "true"):
-        name = f"pyds_arrow_{uuid.uuid4().hex[:8]}"
-        stream = (
-            spark.readStream.format("envelope_sim")
-            .option("n_shards", "2")
-            .option("records_per_shard", "250")
-            .option("seqs_per_batch", "100")
-            .option("arrow", arrow)
-            .load()
-        )
-        q = (
-            stream.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            sizes = [
-                int(p["numInputRows"])
-                for p in q.recentProgress
-                if int(p["numInputRows"]) > 0
-            ]
-        finally:
-            q.stop()
-        assert sizes == [200, 200, 100]
-        results[arrow] = sorted(
-            (r.shard_id, r.sequence_number, r.partition_key, r.data, r.arrival_ts)
-            for r in spark.table(name).collect()
-        )
-    assert results["true"] == results["false"]
-    assert len(results["true"]) == 500
+    name = f"pyds_arrow_{uuid.uuid4().hex[:8]}"
+    stream = (
+        spark.readStream.format("envelope_sim")
+        .option("n_shards", "2")
+        .option("records_per_shard", "250")
+        .option("seqs_per_batch", "100")
+        .load()
+    )
+    q = stream.writeStream.outputMode("append").format("memory").queryName(name).start()
+    try:
+        q.processAllAvailable()
+        sizes = [
+            int(p["numInputRows"])
+            for p in q.recentProgress
+            if int(p["numInputRows"]) > 0
+        ]
+    finally:
+        q.stop()
+    assert sizes == [200, 200, 100]
+    got = sorted(
+        (r.shard_id, r.sequence_number, r.partition_key, r.data, r.arrival_ts)
+        for r in spark.table(name).collect()
+    )
+    assert got == _python_rows(2, 250)

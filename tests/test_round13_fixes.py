@@ -466,7 +466,7 @@ def test_int8_recall_green_and_starved_prefilter_red(spark, sf_dir):
     # same report collapses -- the gate measures the prefilter, not the
     # harness.
     from kcl_akka_stream_spark.operators.similarity import (
-        brute_force_topk_vectorized,
+        brute_force_topk,
         int8_rescore_topk,
     )
     from kcl_akka_stream_spark.queries import QUERIES
@@ -478,7 +478,7 @@ def test_int8_recall_green_and_starved_prefilter_red(spark, sf_dir):
     emb = tbl(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 5)
     starved = int8_rescore_topk(emb, qs, m=1, k=10).select("q_id", "n_id")
-    brute = brute_force_topk_vectorized(emb, qs, k=10).select("q_id", "n_id")
+    brute = brute_force_topk(emb, qs, k=10).select("q_id", "n_id")
     hits = brute.join(starved, ["q_id", "n_id"]).count()
     assert hits <= 5  # at most one survivor per query can land in top-10
 

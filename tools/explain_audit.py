@@ -46,7 +46,7 @@ SPREAD_AUDIT_ALLOW = {
     "emb_pq_assign": "spread 1.77x (encode matmul over 2k rows)",
     "sim_topk_pq_adc": "spread 1.15x (same encode path)",
     "sim_topk_ivf_pq": "rides pq_encode/kmeans (allowed above)",
-    "sim_ivf_delta_serving": "rides ivf_topk's learned quantizer (sim_topk_ivf allowed above, 1.19x measured); the delta leg is the brute Arrow matmul (sim_topk_bruteforce shape, clean)",
+    "sim_ivf_delta_serving": "rides ivf_topk's learned quantizer (sim_topk_ivf allowed above, 1.19x measured); the delta leg is brute_force_topk (sim_topk_bruteforce shape, clean)",
     "emb_random_projection": "spread ~2x (matmul over 2k rows)",
     "sim_centroid_classify": "spread 1.81x (posexplode over tiny test set)",
     "pipeline_embedding_drift": "spread 2.04x (integer_centroids, tiny input)",

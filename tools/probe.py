@@ -4,14 +4,17 @@ Usage: python tools/probe.py [sf_dir] [--scale N] name [name ...]
 
 One Spark session.  First warm-up sweeps run every name (on both
 directories with ``--scale``) until WARM_S seconds have passed, at least
-once; then for each name: clearCache and a JVM GC, then REPS timed noop
-writes of ``QUERIES[name](spark, sf_dir)``.  Every name is timed in a JVM
-warmed on every name's code for about the same time, so a name's median
-does not depend on its place in the list or on the list's length.  Prints
-the median, every run, and Spark jobs per run (the DAG scheduler's job-id
-delta, so eager checkpoints, dims probes and collects all count, which
-``explain()`` does not show).  A query that raises prints ``FAILED`` and
-the run goes on; the exit code is 1 if any query failed.
+once; then for each name: clearCache and a JVM GC, one untimed run, then
+REPS timed noop writes of ``QUERIES[name](spark, sf_dir)``.  Every name is
+timed in a JVM warmed on every name's code for about the same time, so a
+name's median does not depend on its place in the list or on the list's
+length; the untimed run right before a name's timed runs keeps its first
+timed run from reading high after the other names ran.  Prints the
+median, every timed run, and Spark jobs per timed run (the DAG
+scheduler's job-id delta, so eager checkpoints, dims probes and collects
+all count, which ``explain()`` does not show).  A query that raises
+prints ``FAILED`` and the run goes on; the exit code is 1 if any query
+failed.
 
 ``--scale N`` writes an N-times copy of sf_dir once (``write_scaled``),
 into a temp directory removed at exit, times every name on both
@@ -142,6 +145,7 @@ def _timed(spark: SparkSession, name: str, sf_dir: str, tag: str) -> tuple[float
     try:
         spark.catalog.clearCache()
         spark.sparkContext._jvm.System.gc()
+        _run(spark, name, sf_dir)  # untimed: re-warm what the GC and the other names cooled
         j0 = dag.nextJobId()
         times = []
         for _ in range(REPS):
