@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from kcl_akka_stream_spark.operators.dedup import shingles
+from kcl_akka_stream_spark.operators.dedup import _zip_chain, shingles
 from kcl_akka_stream_spark.plans.hygiene import spread
 
 #: Conservative matchers shared with the DuckDB oracle (RE2/Java-compatible).
@@ -121,14 +121,9 @@ def dedup_segments(
     # expression re-runs the regex that many times per row.
     # CollapseProject keeps the non-cheap multiply-referenced alias
     # separate, so the tokenizer runs once per row.
-    toks = F.col("__toks")
-    size = F.size(toks)
-    g = toks
-    for j in range(1, seg_tokens):
-        g = F.zip_with(
-            g, F.slice(toks, j + 1, size), lambda x, y: F.concat_ws(" ", x, y)
-        )
-    segs = F.filter(g, lambda _, i: i % seg_tokens == 0)
+    segs = F.filter(
+        _zip_chain(F.col("__toks"), seg_tokens), lambda _, i: i % seg_tokens == 0
+    )
     # spread(): segment slicing is an interpreted higher-order function.
     ex = (
         spread(df.select(id_col, text_col))
@@ -445,10 +440,10 @@ def decontaminate_span_coverage(
     BROADCASTS; the corpus explodes its windows map-side (spread floor)
     and never self-joins; the interval union is the running-max
     streaming frame; per-doc fold + left join are id-keyed."""
-    from pyspark.sql import Window as W
-
-    from kcl_akka_stream_spark.operators.dedup import positional_windows
-    from kcl_akka_stream_spark.operators.text import tokens
+    from kcl_akka_stream_spark.operators.dedup import (
+        _span_coverage,
+        positional_windows,
+    )
     from kcl_akka_stream_spark.plans.hygiene import spread
 
     ex = spread(df.select(id_col, text_col)).select(
@@ -464,39 +459,4 @@ def decontaminate_span_coverage(
         .distinct()
     )
     hits = ex.join(F.broadcast(ev_grams), "gram").select(id_col, "pos")
-    w = (
-        W.partitionBy(id_col)
-        .orderBy("pos")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    prev_end = F.max(F.col("pos") + k).over(w)
-    contrib = F.greatest(
-        F.lit(0),
-        (F.col("pos") + k)
-        - F.greatest(F.coalesce(prev_end, F.col("pos")), F.col("pos")),
-    )
-    per_doc = hits.select(id_col, contrib.alias("__c")).groupBy(id_col).agg(
-        F.sum("__c").cast("long").alias("covered_tokens"),
-        F.count(F.lit(1)).cast("long").alias("n_eval_windows"),
-    )
-    all_docs = df.select(
-        F.col(id_col),
-        F.size(tokens(F.col(text_col))).cast("long").alias("n_tokens"),
-    )
-    joined = all_docs.join(per_doc, id_col, "left").select(
-        id_col,
-        "n_tokens",
-        F.coalesce("n_eval_windows", F.lit(0)).cast("long").alias(
-            "n_eval_windows"
-        ),
-        F.coalesce("covered_tokens", F.lit(0)).cast("long").alias(
-            "covered_tokens"
-        ),
-    )
-    return joined.withColumn(
-        "coverage_ppm",
-        F.expr(
-            "case when n_tokens > 0"
-            " then covered_tokens * 1000000 div n_tokens else 0 end"
-        ).cast("long"),
-    )
+    return _span_coverage(df, hits, k, text_col, id_col, "n_eval_windows")

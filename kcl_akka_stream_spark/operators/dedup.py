@@ -35,13 +35,22 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def _shingle_body(toks: Column, k: int) -> Column:
+def _zip_chain(toks: Column, k: int) -> Column:
+    """Position i joins tokens i..i+k-1 with spaces.  Each shifted slice
+    pads with nulls, which concat_ws skips, so the last k-1 positions hold
+    the shorter tails."""
     size = F.size(toks)
     g = toks
     for j in range(1, k):
         g = F.zip_with(
             g, F.slice(toks, j + 1, size), lambda x, y: F.concat_ws(" ", x, y)
         )
+    return g
+
+
+def _shingle_body(toks: Column, k: int) -> Column:
+    size = F.size(toks)
+    g = _zip_chain(toks, k)
     return F.array_distinct(
         F.when(size >= k, F.slice(g, 1, size - (k - 1))).otherwise(
             F.array(F.array_join(toks, " "))
@@ -202,6 +211,21 @@ def verify_candidate_jaccard(
     codegen'd shingle compute a second time.  The fingerprint case wins
     because its materialized rows are two int64s; this one's are
     kilobyte arrays."""
+    a, b = _shingle_sides(df, text_col, id_col, k, df_b)
+    joined = candidates.join(a, "id_a").join(b, "id_b")
+    inter = F.size(F.array_intersect("__sh_a", "__sh_b"))
+    union = F.size("__sh_a") + F.size("__sh_b") - inter
+    jac = inter / union
+    return joined.select(
+        "id_a", "id_b", F.round(jac, 6).alias("jaccard")
+    ).filter(F.col("jaccard") >= threshold)
+
+
+def _shingle_sides(
+    df: DataFrame, text_col: str, id_col: str, k: int, df_b: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """The shingle-set relations a pair verify joins on: ``(id_a, __sh_a)``
+    from ``df`` and ``(id_b, __sh_b)`` from ``df_b`` (``df`` when None)."""
     sh = df.select(F.col(id_col), shingles(F.col(text_col), k).alias("__shs"))
     sh_b = (
         sh
@@ -214,13 +238,7 @@ def verify_candidate_jaccard(
     b = sh_b.select(
         F.col(id_col).alias("id_b"), F.col("__shs").alias("__sh_b")
     )
-    joined = candidates.join(a, "id_a").join(b, "id_b")
-    inter = F.size(F.array_intersect("__sh_a", "__sh_b"))
-    union = F.size("__sh_a") + F.size("__sh_b") - inter
-    jac = inter / union
-    return joined.select(
-        "id_a", "id_b", F.round(jac, 6).alias("jaccard")
-    ).filter(F.col("jaccard") >= threshold)
+    return a, b
 
 
 def _bit_predicate(position: int):
@@ -719,9 +737,7 @@ def minhash_estimate_vs_exact(
     est = pairs.join(sa, "id_a").join(sb, "id_b").select(
         "id_a", "id_b", agree.alias("n_agree")
     )
-    sh = df.select(F.col(id_col), shingles(F.col(text_col), k).alias("__shs"))
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("__shs").alias("__sh_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("__shs").alias("__sh_b"))
+    a, b = _shingle_sides(df, text_col, id_col, k)
     inter = F.size(F.array_intersect("__sh_a", "__sh_b"))
     union = F.size("__sh_a") + F.size("__sh_b") - inter
     scored = (
@@ -1107,9 +1123,7 @@ def verify_candidate_containment(
     cost is |candidates| x shingle-set size, never corpus x corpus.
     Output keeps both set sizes so the caller can tell subset direction
     (n_a == n_common -> A inside B)."""
-    sh = df.select(F.col(id_col), shingles(F.col(text_col), k).alias("__shs"))
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("__shs").alias("__sh_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("__shs").alias("__sh_b"))
+    a, b = _shingle_sides(df, text_col, id_col, k)
     joined = candidates.join(a, "id_a").join(b, "id_b")
     inter = F.size(F.array_intersect("__sh_a", "__sh_b"))
     cont = inter / F.least(F.size("__sh_a"), F.size("__sh_b"))
@@ -1189,11 +1203,7 @@ def positional_windows(col: Column, k: int) -> Column:
 
     def body(toks: Column) -> Column:
         size = F.size(toks)
-        g = toks
-        for j in range(1, k):
-            g = F.zip_with(
-                g, F.slice(toks, j + 1, size), lambda x, y: F.concat_ws(" ", x, y)
-            )
+        g = _zip_chain(toks, k)
         return F.when(size >= k, F.slice(g, 1, size - (k - 1))).otherwise(
             F.array().cast("array<string>")
         )
@@ -1253,6 +1263,15 @@ def duplicate_span_coverage(
         F.col("__n") > 1
     )
     hits = ex.join(dup.select("gram"), "gram").select(id_col, "pos")
+    return _span_coverage(df, hits, k, text_col, id_col, "n_dup_windows")
+
+
+def _span_coverage(
+    df: DataFrame, hits: DataFrame, k: int, text_col: str, id_col: str, n_col: str
+) -> DataFrame:
+    """Per document of ``df``: its token count, the ``n_col`` count of its
+    ``hits`` (``id_col``, ``pos``) windows, the exact interval-union length
+    of their [pos, pos+k) spans and that length in ppm of the tokens."""
     w = (
         Window.partitionBy(id_col)
         .orderBy("pos")
@@ -1266,7 +1285,7 @@ def duplicate_span_coverage(
     )
     per_doc = hits.select(id_col, contrib.alias("__c")).groupBy(id_col).agg(
         F.sum("__c").cast("long").alias("covered_tokens"),
-        F.count(F.lit(1)).cast("long").alias("n_dup_windows"),
+        F.count(F.lit(1)).cast("long").alias(n_col),
     )
     all_docs = df.select(
         F.col(id_col),
@@ -1275,9 +1294,7 @@ def duplicate_span_coverage(
     joined = all_docs.join(per_doc, id_col, "left").select(
         id_col,
         "n_tokens",
-        F.coalesce("n_dup_windows", F.lit(0)).cast("long").alias(
-            "n_dup_windows"
-        ),
+        F.coalesce(n_col, F.lit(0)).cast("long").alias(n_col),
         F.coalesce("covered_tokens", F.lit(0)).cast("long").alias(
             "covered_tokens"
         ),

@@ -160,14 +160,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     # edge-derivation (13 exchanges on the co-purchase build -- measured).
     # localCheckpoint once, like _learn_quantizer/kmeans.
     e = edges.select("src", "dst").localCheckpoint(eager=True)
-    ab = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    bc = e.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    wedges = ab.join(bc, "b")
-    closed = wedges.join(
-        e.select(F.col("src").alias("a"), F.col("dst").alias("c")),
-        ["a", "c"],
-        "left_semi",
-    )
+    closed = _triangles(e)
     nodes = e.select(F.col("src").alias("n")).union(
         e.select(F.col("dst").alias("n"))
     ).distinct()
@@ -177,6 +170,18 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     )
     return F.broadcast(sizes).crossJoin(tri).select(
         "n_nodes", "n_edges", "n_triangles"
+    )
+
+
+def _triangles(e: DataFrame) -> DataFrame:
+    """The oriented triangles (a, b, c) of a canonical (src < dst) edge
+    relation: each wedge a-b-c closed by a semi-join on the a-c edge."""
+    ab = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    bc = e.select(F.col("src").alias("b"), F.col("dst").alias("c"))
+    return ab.join(bc, "b").join(
+        e.select(F.col("src").alias("a"), F.col("dst").alias("c")),
+        ["a", "c"],
+        "left_semi",
     )
 
 
@@ -197,14 +202,7 @@ def clustering_coefficients(edges: DataFrame) -> DataFrame:
     n_triangles / n_wedges where n_wedges > 0.
     """
     e = edges.select("src", "dst").localCheckpoint(eager=True)
-    ab = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    bc = e.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    triangles = ab.join(bc, "b").join(
-        e.select(F.col("src").alias("a"), F.col("dst").alias("c")),
-        ["a", "c"],
-        "left_semi",
-    )
-    corners = triangles.select(
+    corners = _triangles(e).select(
         F.explode(F.array("a", "b", "c")).alias("node")
     )
     tri_per_node = corners.groupBy("node").agg(

@@ -79,6 +79,24 @@ def asof_join(
     shuffle on the key, no Python -- scales to arbitrarily large sides (vs a
     per-key merge_asof in pandas which would OOM a hot key).
     """
+    # Right rows sort before left rows at equal timestamps => "<=" semantics.
+    return _asof(
+        left, right, key_col, left_ts, right_ts, right_value_cols, F.col("__t")
+    )
+
+
+def _asof(
+    left: DataFrame,
+    right: DataFrame,
+    key_col: str,
+    left_ts: str,
+    right_ts: str,
+    right_value_cols: list[str],
+    t_order: Column,
+) -> DataFrame:
+    """Both sides tagged and unioned; per key in ``t_order`` (then right
+    rows before left ones) each left row carries the last right value of
+    the running frame."""
     lcols = [c for c in left.columns]
     tagged_left = left.select(
         F.col(key_col).alias("__k"),
@@ -94,10 +112,9 @@ def asof_join(
         F.lit(None).cast(tagged_left.schema["__l"].dataType).alias("__l"),
         *[F.col(c).alias(f"__r_{c}") for c in right_value_cols],
     )
-    # Right rows sort before left rows at equal timestamps => "<=" semantics.
     w = (
         Window.partitionBy("__k")
-        .orderBy(F.col("__t"), F.col("__is_left"))
+        .orderBy(t_order, F.col("__is_left"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     unioned = tagged_left.unionByName(tagged_right)
@@ -106,10 +123,9 @@ def asof_join(
         "__l",
         *[F.last(f"__r_{c}", ignorenulls=True).over(w).alias(f"__r_{c}") for c in right_value_cols],
     )
-    out = carried.filter(F.col("__is_left") == 1).select(
+    return carried.filter(F.col("__is_left") == 1).select(
         "__l.*", *[F.col(f"__r_{c}").alias(c) for c in right_value_cols]
     )
-    return out
 
 
 def asof_join_forward(
@@ -139,41 +155,18 @@ def asof_join_forward(
     if multiple right rows can share a timestamp -- which of them wins
     is otherwise tie-ambiguous in any engine.
     """
-    lcols = [c for c in left.columns]
-    tagged_left = left.select(
-        F.col(key_col).alias("__k"),
-        F.col(left_ts).alias("__t"),
-        F.lit(1).alias("__is_left"),
-        F.struct(*lcols).alias("__l"),
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"__r_{c}") for c in right_value_cols],
-    )
-    tagged_right = right.select(
-        F.col(key_col).alias("__k"),
-        F.col(right_ts).alias("__t"),
-        F.lit(0).alias("__is_left"),
-        F.lit(None).cast(tagged_left.schema["__l"].dataType).alias("__l"),
-        *[F.col(c).alias(f"__r_{c}") for c in right_value_cols],
-    )
     # Left rows sort before right rows at equal timestamps => ">=" semantics.
     # first() over (asc, [0, unboundedFollowing]) == last() over the
     # REVERSED sort's [unboundedPreceding, 0] running frame; only the
     # latter is linear in Spark (see docstring).
-    w = (
-        Window.partitionBy("__k")
-        .orderBy(F.col("__t").desc(), F.col("__is_left"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    unioned = tagged_left.unionByName(tagged_right)
-    carried = unioned.select(
-        "__is_left",
-        "__l",
-        *[
-            F.last(f"__r_{c}", ignorenulls=True).over(w).alias(f"__r_{c}")
-            for c in right_value_cols
-        ],
-    )
-    return carried.filter(F.col("__is_left") == 1).select(
-        "__l.*", *[F.col(f"__r_{c}").alias(c) for c in right_value_cols]
+    return _asof(
+        left,
+        right,
+        key_col,
+        left_ts,
+        right_ts,
+        right_value_cols,
+        F.col("__t").desc(),
     )
 
 

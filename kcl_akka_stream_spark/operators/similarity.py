@@ -268,21 +268,13 @@ def ivf_build(
     Deterministic: same corpus -> byte-identical index, so the prebuilt
     probe matches the inline ``ivf_topk`` result exactly."""
     assignment, centroids = _learn_quantizer(corpus, id_col, vec_col, n_clusters)
-    extra = [c for c in corpus.columns if c not in (id_col, vec_col)]
-    if extra:
-        # corpus carries payload columns the index must keep: the
-        # cluster-attach join stays (broadcast of the node-sized
-        # assignment; the corpus itself is scanned once).
-        indexed = corpus.join(
-            assignment.select(id_col, F.col("cluster_id").alias("cluster")),
-            id_col,
-        )
-    else:
-        # r16: (id, vec, cluster) reads straight off the carried
-        # assignment -- no corpus re-scan, no join.
-        indexed = assignment.select(
-            id_col, vec_col, F.col("cluster_id").alias("cluster")
-        )
+    # the index keeps the corpus's payload columns: the cluster-attach
+    # join broadcasts the node-sized assignment; the corpus itself is
+    # scanned once.
+    indexed = corpus.join(
+        assignment.select(id_col, F.col("cluster_id").alias("cluster")),
+        id_col,
+    )
     indexed.write.mode("overwrite").partitionBy("cluster").parquet(
         f"{index_dir}/corpus"
     )
@@ -917,11 +909,7 @@ def ivf_pq_topk(
     lists, self-matches excluded.
     """
     from kcl_akka_stream_spark.operators.clustering import pq_encode
-    probe = corpus.select(F.size(vec_col).alias("d")).first()
-    dims = probe["d"] if probe is not None else 0
-    if dims % m != 0:
-        raise ValueError(f"ivf_pq_topk: vector length {dims} not divisible by m={m}")
-    sub = dims // m
+    dims, sub = _pq_dims(corpus, m, vec_col, "ivf_pq_topk")
 
     # spread: the quantizer learn + PQ encode are CPU-heavy per-row maps;
     # a 1-partition local input would serialize them (no-op on real
@@ -943,7 +931,38 @@ def ivf_pq_topk(
         dims=dims,
         passthrough=["__cluster"],
     )
+    return _ivf_pq_score(
+        codes, "__cluster", centroids, queries, codebook_vectors,
+        m, sub, k, nprobe, id_col, vec_col,
+    )
 
+
+def _pq_dims(vecs: DataFrame, m: int, vec_col: str, who: str) -> tuple[int, int]:
+    """The vector length of ``vecs`` (0 when empty) and its subspace
+    width; raises when the length does not split into ``m`` subspaces."""
+    probe = vecs.select(F.size(vec_col).alias("d")).first()
+    dims = probe["d"] if probe is not None else 0
+    if dims % m != 0:
+        raise ValueError(f"{who}: vector length {dims} not divisible by m={m}")
+    return dims, dims // m
+
+
+def _ivf_pq_score(
+    codes: DataFrame,
+    cluster_col: str,
+    centroids: DataFrame,
+    queries: DataFrame,
+    codebook_vectors: DataFrame,
+    m: int,
+    sub: int,
+    k: int,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """IVF-PQ probe: each query's ``nprobe`` nearest centroids by cosine
+    pick the inverted lists of ``codes`` (keyed by ``cluster_col``), whose
+    ADC distances are ranked per query."""
     q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
     q_scored = q.join(F.broadcast(centroids)).select(
         "q_id", "cluster", cosine(F.col("q_vec"), F.col("centroid")).alias("c_sim")
@@ -952,7 +971,7 @@ def ivf_pq_topk(
     probed = (
         q_scored.withColumn("r", F.row_number().over(wq))
         .filter(F.col("r") <= nprobe)
-        .select(F.col("q_id").alias("__probe_q"), F.col("cluster").alias("__cluster"))
+        .select(F.col("q_id").alias("__probe_q"), F.col("cluster").alias(cluster_col))
     )
 
     dtab = _pq_dtab(queries, codebook_vectors, m, sub, id_col, vec_col).select(
@@ -962,7 +981,7 @@ def ivf_pq_topk(
         "__d2",
     )
     scores = (
-        codes.join(F.broadcast(probed), "__cluster")
+        codes.join(F.broadcast(probed), cluster_col)
         .join(
             F.broadcast(dtab),
             (F.col("__pq_q") == F.col("__probe_q"))
@@ -975,6 +994,11 @@ def ivf_pq_topk(
         )
         .agg(F.sum("__d2").cast("long").alias("adc_d2_micro2"))
     )
+    return _adc_rank(scores, k)
+
+
+def _adc_rank(scores: DataFrame, k: int) -> DataFrame:
+    """The ``k`` smallest ``adc_d2_micro2`` per query, ties by ``n_id``."""
     w = Window.partitionBy("q_id").orderBy("adc_d2_micro2", "n_id")
     return (
         scores.withColumn("rank", F.row_number().over(w))
@@ -1021,11 +1045,7 @@ def pq_adc_topk(
         pq_encode,
     )
 
-    probe = corpus.select(F.size(vec_col).alias("d")).first()
-    dims = probe["d"] if probe is not None else 0
-    if dims % m != 0:
-        raise ValueError(f"pq_adc_topk: vector length {dims} not divisible by m={m}")
-    sub = dims // m
+    dims, sub = _pq_dims(corpus, m, vec_col, "pq_adc_topk")
     # map-only Arrow encode (pytest-pinned identical to the relational
     # pq_assign): the corpus-sized code relation costs ZERO exchanges.
     # dims already probed above -- passing it skips pq_encode's own probe
@@ -1041,12 +1061,7 @@ def pq_adc_topk(
         .groupBy("q_id", F.col(id_col).alias("n_id"))
         .agg(F.sum("__d2").cast("long").alias("adc_d2_micro2"))
     )
-    w = Window.partitionBy("q_id").orderBy("adc_d2_micro2", "n_id")
-    return (
-        scores.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "adc_d2_micro2", "rank")
-    )
+    return _adc_rank(scores, k)
 
 
 def ivf_pq_build(
@@ -1120,48 +1135,10 @@ def ivf_pq_probe_prebuilt(
     centroids = spark.read.parquet(f"{index_dir}/centroids")
     codebook = spark.read.parquet(f"{index_dir}/codebook")
 
-    probe = codebook.select(F.size(vec_col).alias("d")).first()
-    dims = probe["d"] if probe is not None else 0
-    if dims % m != 0:
-        raise ValueError(
-            f"ivf_pq_probe_prebuilt: vector length {dims} not divisible by m={m}"
-        )
-    sub = dims // m
-
-    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-    q_scored = q.join(F.broadcast(centroids)).select(
-        "q_id", "cluster", cosine(F.col("q_vec"), F.col("centroid")).alias("c_sim")
-    )
-    wq = Window.partitionBy("q_id").orderBy(F.col("c_sim").desc(), F.col("cluster"))
-    probed = (
-        q_scored.withColumn("r", F.row_number().over(wq))
-        .filter(F.col("r") <= nprobe)
-        .select(F.col("q_id").alias("__probe_q"), "cluster")
-    )
-
-    dtab = _pq_dtab(queries, codebook, m, sub, id_col, vec_col).select(
-        F.col("q_id").alias("__pq_q"),
-        F.col("sub_id").alias("__dt_sub"),
-        F.col("code").alias("__dt_code"),
-        "__d2",
-    )
-    scores = (
-        codes.join(F.broadcast(probed), "cluster")
-        .join(
-            F.broadcast(dtab),
-            (F.col("__pq_q") == F.col("__probe_q"))
-            & (F.col("__dt_sub") == F.col("sub_id"))
-            & (F.col("__dt_code") == F.col("code")),
-        )
-        .filter(F.col("__pq_q") != F.col(id_col))
-        .groupBy(F.col("__pq_q").alias("q_id"), F.col(id_col).alias("n_id"))
-        .agg(F.sum("__d2").cast("long").alias("adc_d2_micro2"))
-    )
-    w = Window.partitionBy("q_id").orderBy("adc_d2_micro2", "n_id")
-    return (
-        scores.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "adc_d2_micro2", "rank")
+    _, sub = _pq_dims(codebook, m, vec_col, "ivf_pq_probe_prebuilt")
+    return _ivf_pq_score(
+        codes, "cluster", centroids, queries, codebook, m, sub, k, nprobe,
+        id_col, vec_col,
     )
 
 

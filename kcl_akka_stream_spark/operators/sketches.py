@@ -31,6 +31,15 @@ def _hash01(col: Column) -> Column:
     ) / F.lit(float(1 << 32))
 
 
+def _kmv_kept(df: DataFrame, group_col: str, value_col: str, k: int) -> DataFrame:
+    """The ``k`` smallest distinct hashes ``__h`` of each group's values."""
+    hashed = df.select(
+        F.col(group_col), _hash01(F.col(value_col)).alias("__h")
+    ).distinct()
+    w = Window.partitionBy(group_col).orderBy("__h")
+    return hashed.withColumn("__r", F.row_number().over(w)).filter(F.col("__r") <= k)
+
+
 def kmv_distinct(
     df: DataFrame,
     group_col: str,
@@ -44,13 +53,9 @@ def kmv_distinct(
     values, else the exact distinct count (the sketch is exact below k --
     the standard KMV small-set rule).  Rounded to 4 dp for stable
     cross-engine hashing."""
-    hashed = df.select(
-        F.col(group_col), _hash01(F.col(value_col)).alias("__h")
-    ).distinct()
-    w = Window.partitionBy(group_col).orderBy("__h")
-    ranked = hashed.withColumn("__r", F.row_number().over(w)).filter(F.col("__r") <= k)
     return (
-        ranked.groupBy(group_col)
+        _kmv_kept(df, group_col, value_col, k)
+        .groupBy(group_col)
         .agg(
             F.count(F.lit(1)).alias("n_exact_kept"),
             F.max("__h").alias("kth_min"),
@@ -79,13 +84,8 @@ def kmv_sketch(
     """Per-group KMV sketch STATE: the sorted k smallest distinct hashes as
     an array column -- the mergeable representation (union two states, keep
     the k smallest, estimate as usual)."""
-    hashed = df.select(
-        F.col(group_col), _hash01(F.col(value_col)).alias("__h")
-    ).distinct()
-    w = Window.partitionBy(group_col).orderBy("__h")
     return (
-        hashed.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= k)
+        _kmv_kept(df, group_col, value_col, k)
         .groupBy(group_col)
         .agg(F.sort_array(F.collect_list("__h")).alias("kmins"))
     )

@@ -381,6 +381,24 @@ def unigram_logprob(
     # NO spread (r10 measured, 1.4x): triplicated subtree pays the spread
     # exchange three times; see SPREAD_AUDIT_ALLOW.
     toks = df.select("doc_id", F.explode(tokens(F.col(text_col))).alias("term"))
+    return (
+        _token_logprob(toks, broadcast_vocab, "doc_id")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_tokens"),
+            F.sum("lp").alias("sum_lp"),
+        )
+        .select(
+            "doc_id",
+            "n_tokens",
+            F.expr("(-sum_lp) div n_tokens").alias("avg_nll_micro"),
+        )
+    )
+
+
+def _token_logprob(toks: DataFrame, broadcast_vocab: bool, *keep: str) -> DataFrame:
+    """``keep`` of each ``toks`` row (one per token ``term``) with the
+    token's corpus unigram ln-probability in integer micro-nats, ``lp``."""
     vocab = toks.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("n_t"))
     if broadcast_vocab:
         vocab = F.broadcast(vocab)
@@ -392,17 +410,7 @@ def unigram_logprob(
     return (
         toks.join(vocab, "term")
         .crossJoin(F.broadcast(total))
-        .select("doc_id", lp_micro.alias("lp"))
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_tokens"),
-            F.sum("lp").alias("sum_lp"),
-        )
-        .select(
-            "doc_id",
-            "n_tokens",
-            F.expr("(-sum_lp) div n_tokens").alias("avg_nll_micro"),
-        )
+        .select(*keep, lp_micro.alias("lp"))
     )
 
 
@@ -625,20 +633,7 @@ def min_k_prob(
     )
     if cache_tokens:
         toks = toks.localCheckpoint(eager=True)
-    vocab = toks.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("n_t"))
-    if broadcast_vocab:
-        vocab = F.broadcast(vocab)
-    total = toks.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
-    lp_micro = F.round(
-        F.log(F.col("n_t").cast("double") / F.col("n_total").cast("double"))
-        * 1e6,
-        0,
-    ).cast("long")
-    lp = (
-        toks.join(vocab, "term")
-        .crossJoin(F.broadcast(total))
-        .select(id_col, "term", lp_micro.alias("lp"))
-    )
+    lp = _token_logprob(toks, broadcast_vocab, id_col, "term")
     w = Window.partitionBy(id_col).orderBy("lp", "term")
     wc = Window.partitionBy(id_col)
     ranked = lp.select(

@@ -631,6 +631,20 @@ def j_range_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _asof_sides(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The as-of family's inputs: purchases, and clicks keyed by (user, ts)."""
+    ev = tbl(spark, sf_dir, "events")
+    clicks = (
+        ev.filter(F.col("event_type") == "click")
+        .groupBy("user_id", "ts")
+        .agg(F.max("event_id").alias("click_id"))
+    )
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"), "user_id", "ts"
+    )
+    return purchases, clicks
+
+
 @query(
     "j_asof",
     """
@@ -648,15 +662,7 @@ def j_range_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
 def j_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     # As-of join via union+window (operators/joins.py) -- no Python, one
     # shuffle on the key; matches DuckDB's native ASOF JOIN.
-    ev = tbl(spark, sf_dir, "events")
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("click_id"))
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"), "user_id", "ts"
-    )
+    purchases, clicks = _asof_sides(spark, sf_dir)
     return J.asof_join(purchases, clicks, "user_id", "ts", "ts", ["click_id"]).select(
         "purchase_id", "user_id", "click_id"
     )
@@ -2896,6 +2902,19 @@ def w_cumulative_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cents_histogram(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Events as (event_type, v) integer cents, and their (event_type, v, c)
+    value histogram."""
+    ev = tbl(spark, sf_dir, "events").select(
+        "event_type",
+        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
+    )
+    hist = ev.groupBy("event_type", "v").agg(F.count(F.lit(1)).alias("c"))
+    return ev, hist
+
+
 @query(
     "agg_winsorized_stats",
     """
@@ -2945,11 +2964,7 @@ def agg_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # window runs over the DISTINCT-VALUE relation (cents-bounded, tiny),
     # and the rank-r value is min(v where cum >= r).  The clamp is a
     # broadcast join back.  Integer cents/micro throughout.
-    ev = tbl(spark, sf_dir, "events").select(
-        "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
-    )
-    hist = ev.groupBy("event_type", "v").agg(F.count(F.lit(1)).alias("c"))
+    ev, hist = _cents_histogram(spark, sf_dir)
     wc = (
         Window.partitionBy("event_type")
         .orderBy("v")
@@ -3259,11 +3274,7 @@ def agg_mode_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (group, value) histogram shuffle, then the rank window runs over
     # the VALUE-BOUNDED histogram relation, never the data (the
     # winsorized-stats discipline).
-    ev = tbl(spark, sf_dir, "events").select(
-        "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
-    )
-    hist = ev.groupBy("event_type", "v").agg(F.count(F.lit(1)).alias("c"))
+    _, hist = _cents_histogram(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy(F.col("c").desc(), "v")
     return (
         hist.withColumn("rn", F.row_number().over(w))
@@ -3554,15 +3565,7 @@ def j_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     # key shuffle, no Python; matches DuckDB's native forward ASOF
     # (`l.ts <= r.ts`).  Right side pre-aggregated per (user, ts) so
     # equal-timestamp winners are deterministic in both engines.
-    ev = tbl(spark, sf_dir, "events")
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("click_id"))
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"), "user_id", "ts"
-    )
+    purchases, clicks = _asof_sides(spark, sf_dir)
     return J.asof_join_forward(
         purchases, clicks, "user_id", "ts", "ts", ["click_id"]
     ).select("purchase_id", "user_id", "click_id")
@@ -3801,15 +3804,7 @@ def j_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frames (operators/joins.py::asof_join_nearest); the oracle
     # composes DuckDB's native backward + forward ASOF joins and applies
     # the same tie rule.
-    ev = tbl(spark, sf_dir, "events")
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("click_id"))
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"), "user_id", "ts"
-    )
+    purchases, clicks = _asof_sides(spark, sf_dir)
     j = J.asof_join_nearest(
         purchases, clicks, "user_id", "ts", "ts", ["click_id"]
     )
@@ -4863,6 +4858,16 @@ def _ks_finalize(j: DataFrame) -> DataFrame:
     )
 
 
+def _supplier_revenue_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per supplier, ``rev``: the sum of its lineitem prices in cents."""
+    li = tbl(spark, sf_dir, "lineitem")
+    return li.groupBy("l_suppkey").agg(
+        F.sum(F.expr("cast(floor(l_extendedprice * 100 + 0.5) as bigint)"))
+        .cast("long")
+        .alias("rev")
+    )
+
+
 @query(
     "agg_gini_concentration",
     """
@@ -4895,12 +4900,7 @@ def agg_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical int64s cross-engine).  The unpartitioned rank window
     # rides the SUPPLIER-sized relation (bounded dimension), never the
     # lineitem fact -- the one-reducer sort is model-sized by design.
-    li = tbl(spark, sf_dir, "lineitem")
-    r = li.groupBy("l_suppkey").agg(
-        F.sum(F.expr("cast(floor(l_extendedprice * 100 + 0.5) as bigint)"))
-        .cast("long")
-        .alias("rev")
-    )
+    r = _supplier_revenue_cents(spark, sf_dir)
     w = Window.orderBy("rev", "l_suppkey")
     o = r.select(
         "rev",
@@ -5154,6 +5154,23 @@ def _mi_finalize(cells: DataFrame) -> DataFrame:
     )
 
 
+def _type_hour_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (event_type, hour) contingency table: each cell's count ``o``
+    with its row total ``r``, column total ``c`` and grand total ``n``."""
+    ev = tbl(spark, sf_dir, "events")
+    cells = ev.groupBy(
+        "event_type", F.hour("ts").cast("long").alias("hr")
+    ).agg(F.count(F.lit(1)).cast("long").alias("o"))
+    return cells.select(
+        "event_type",
+        "hr",
+        "o",
+        F.sum("o").over(Window.partitionBy("event_type")).alias("r"),
+        F.sum("o").over(Window.partitionBy("hr")).alias("c"),
+        F.sum("o").over(Window.partitionBy()).alias("n"),
+    )
+
+
 @query(
     "agg_chi_square_independence",
     f"""
@@ -5180,18 +5197,7 @@ def agg_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # formal-test companion of agg_mutual_information -- chi2 >> dof
     # rejects independence.  Scale shape: ONE combinable cell agg; the
     # fold rides the cell-sized relation.
-    ev = tbl(spark, sf_dir, "events")
-    cells = ev.groupBy(
-        "event_type", F.hour("ts").cast("long").alias("hr")
-    ).agg(F.count(F.lit(1)).cast("long").alias("o"))
-    m = cells.select(
-        "event_type",
-        "hr",
-        "o",
-        F.sum("o").over(Window.partitionBy("event_type")).alias("r"),
-        F.sum("o").over(Window.partitionBy("hr")).alias("c"),
-        F.sum("o").over(Window.partitionBy()).alias("n"),
-    )
+    m = _type_hour_cells(spark, sf_dir)
     return m.agg(
         F.max("n").cast("long").alias("n"),
         F.count(F.lit(1)).cast("long").alias("n_cells"),
@@ -5247,12 +5253,7 @@ def agg_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sum, so the result is an order-independent int64.  Scale shape:
     # one combinable supplier agg; the rank window rides the bounded
     # supplier relation; the fold touches k rows.
-    li = tbl(spark, sf_dir, "lineitem")
-    r = li.groupBy("l_suppkey").agg(
-        F.sum(F.expr("cast(floor(l_extendedprice * 100 + 0.5) as bigint)"))
-        .cast("long")
-        .alias("rev")
-    )
+    r = _supplier_revenue_cents(spark, sf_dir)
     w = Window.orderBy(F.col("rev").desc(), "l_suppkey")
     top = r.select("rev", F.row_number().over(w).alias("rk")).filter(
         F.col("rk") <= 20
@@ -6993,6 +6994,23 @@ def agg_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _hourly_cell_sides(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Hourly volume cells ``h`` (event_type, hr, c), checkpointed, and
+    their two pair-join sides (h1, c1) and (h2, c2)."""
+    ev = tbl(spark, sf_dir, "events")
+    h = (
+        ev.select("event_type", F.hour("ts").cast("long").alias("hr"))
+        .groupBy("event_type", "hr")
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+        .localCheckpoint(eager=True)  # feeds both join sides + the count
+    )
+    a = h.select("event_type", F.col("hr").alias("h1"), F.col("c").alias("c1"))
+    b = h.select("event_type", F.col("hr").alias("h2"), F.col("c").alias("c2"))
+    return h, a, b
+
+
 @query(
     "agg_kendall_tau",
     """
@@ -7027,15 +7045,7 @@ def agg_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     # <=24*types-row relation (broadcast), exact integer
     # concordant/discordant counts and a div-exact tau in ppm (y-ties
     # counted in the denominator, tau-a).
-    ev = tbl(spark, sf_dir, "events")
-    h = (
-        ev.select("event_type", F.hour("ts").cast("long").alias("hr"))
-        .groupBy("event_type", "hr")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=True)  # feeds both join sides + the count
-    )
-    a = h.select("event_type", F.col("hr").alias("h1"), F.col("c").alias("c1"))
-    b = h.select("event_type", F.col("hr").alias("h2"), F.col("c").alias("c2"))
+    h, a, b = _hourly_cell_sides(spark, sf_dir)
     p = a.join(F.broadcast(b), "event_type").filter("h1 < h2")
     nh = h.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_hours")
@@ -7099,15 +7109,7 @@ def agg_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (agg_mad_outliers machinery) with (h1, h2) tiebreaks.  The
     # O(n^2) pair relation is GROUP-BOUNDED (<= 276 pairs/type) by the
     # hourly pre-aggregation, same shape as agg_kendall_tau.
-    ev = tbl(spark, sf_dir, "events")
-    h = (
-        ev.select("event_type", F.hour("ts").cast("long").alias("hr"))
-        .groupBy("event_type", "hr")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=True)  # feeds both join sides + the count
-    )
-    a = h.select("event_type", F.col("hr").alias("h1"), F.col("c").alias("c1"))
-    b = h.select("event_type", F.col("hr").alias("h2"), F.col("c").alias("c2"))
+    h, a, b = _hourly_cell_sides(spark, sf_dir)
     p = (
         a.join(F.broadcast(b), "event_type")
         .filter("h1 < h2")
@@ -7171,18 +7173,7 @@ def agg_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integer in both engines), so V is one sqrt over identical
     # integers (IEEE correctly-rounded, bit-identical) rounded 6 dp.
     # ONE combinable cell agg; margins ride the cell-sized relation.
-    ev = tbl(spark, sf_dir, "events")
-    cells = ev.groupBy(
-        "event_type", F.hour("ts").cast("long").alias("hr")
-    ).agg(F.count(F.lit(1)).cast("long").alias("o"))
-    m = cells.select(
-        "event_type",
-        "hr",
-        "o",
-        F.sum("o").over(Window.partitionBy("event_type")).alias("r"),
-        F.sum("o").over(Window.partitionBy("hr")).alias("c"),
-        F.sum("o").over(Window.partitionBy()).alias("n"),
-    )
+    m = _type_hour_cells(spark, sf_dir)
     chi = (
         "sum(cast(floor((cast(o as double) * n - cast(r as double) * c)"
         " * (cast(o as double) * n - cast(r as double) * c)"
@@ -7236,15 +7227,7 @@ def agg_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2*avg = c_i + c_j (hl_twice), the lower-median rank pick with
     # (h1, h2) tiebreaks; the pair relation is GROUP-BOUNDED
     # (<= 24*25/2 per type) by the hourly pre-aggregation.
-    ev = tbl(spark, sf_dir, "events")
-    h = (
-        ev.select("event_type", F.hour("ts").cast("long").alias("hr"))
-        .groupBy("event_type", "hr")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=True)
-    )
-    a = h.select("event_type", F.col("hr").alias("h1"), F.col("c").alias("c1"))
-    b = h.select("event_type", F.col("hr").alias("h2"), F.col("c").alias("c2"))
+    _, a, b = _hourly_cell_sides(spark, sf_dir)
     p = (
         a.join(F.broadcast(b), "event_type")
         .filter("h1 <= h2")
@@ -7451,6 +7434,14 @@ def _cusum_oracle() -> str:
     """
 
 
+def _hourly_volumes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per (event_type, hr) hour bucket, its event count ``n``."""
+    ev = tbl(spark, sf_dir, "events")
+    return ev.groupBy(
+        "event_type", F.date_trunc("hour", "ts").alias("hr")
+    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
+
+
 @query("w_cusum_drift", _cusum_oracle())
 def w_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One-sided CUSUM change detection (Page 1954, the SPC classic) over
@@ -7470,10 +7461,7 @@ def w_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (types x hours, never rows) -> per-type rollup.
     from pyspark.sql import Window
 
-    ev = tbl(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        "event_type", F.date_trunc("hour", "ts").alias("hr")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
+    hourly = _hourly_volumes(spark, sf_dir)
     base = hourly.groupBy("event_type").agg(
         F.expr("CAST(sum(n) AS BIGINT) div CAST(count(*) AS BIGINT)")
         .cast("long")
@@ -7699,10 +7687,7 @@ def agg_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hourly relation -> rollup.
     from pyspark.sql import Window
 
-    ev = tbl(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        "event_type", F.date_trunc("hour", "ts").alias("hr")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
+    hourly = _hourly_volumes(spark, sf_dir)
     base = hourly.groupBy("event_type").agg(
         F.expr("CAST(sum(n) AS BIGINT) div CAST(count(*) AS BIGINT)")
         .cast("long")
@@ -7802,10 +7787,7 @@ def w_record_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # relation, then the per-type rollup.
     from pyspark.sql import Window
 
-    ev = tbl(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        "event_type", F.date_trunc("hour", "ts").alias("hr")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
+    hourly = _hourly_volumes(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("hr")
     rk = hourly.select(
         "event_type",

@@ -8,8 +8,11 @@ float64-fold + round(6) convention (operators/similarity.py docstring).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from kcl_akka_stream_spark.operators import dedup as D
 from kcl_akka_stream_spark.operators import similarity as S
@@ -50,9 +53,9 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.exact_dedup(tbl(spark, sf_dir, "documents"))
 
 
-def _minhash_oracle(
-    num_hashes: int = 8, bands: int = 4, max_bucket_size: int | None = None
-) -> str:
+def _minhash_band_sql(num_hashes: int, bands: int) -> tuple[str, str]:
+    """The signature's select list (``mh_0`` ..) and the UNION ALL of its
+    per-band ``(doc_id, band, bucket)`` selects over ``mh``."""
     # Mirror of operators/dedup.py::minhash_signatures: two md5 digests per
     # shingle, each split into four 8-hex chunks -> 8 independent min-hashes.
     rows = num_hashes // bands
@@ -66,7 +69,13 @@ def _minhash_oracle(
         band_selects.append(
             f"SELECT doc_id, {b} AS band, md5({parts}) AS bucket FROM mh"
         )
-    bands_sql = "\n      UNION ALL ".join(band_selects)
+    return mins, "\n      UNION ALL ".join(band_selects)
+
+
+def _minhash_oracle(
+    num_hashes: int = 8, bands: int = 4, max_bucket_size: int | None = None
+) -> str:
+    mins, bands_sql = _minhash_band_sql(num_hashes, bands)
     cap_cte = ""
     cap_join = ""
     if max_bucket_size is not None:
@@ -116,13 +125,19 @@ def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.minhash_candidate_pairs(buckets, max_bucket_size=3)
 
 
-def _simhash_oracle(bits: int = 16) -> str:
+def _simhash_fp_sql(bits: int) -> str:
+    """SimHash fingerprint of the md5 hex list ``hs``: bit i is set when
+    most hashes have a high nibble at hex digit i."""
     highs = "('8','9','a','b','c','d','e','f')"
-    fp = " + ".join(
+    return " + ".join(
         f"(CASE WHEN 2 * len(list_filter(hs, x -> substr(x, {i + 1}, 1) IN {highs}))"
         f" - len(hs) > 0 THEN {2**i} ELSE 0 END)"
         for i in range(bits)
     )
+
+
+def _simhash_oracle(bits: int = 16) -> str:
+    fp = _simhash_fp_sql(bits)
     return f"""
     WITH t AS (
       SELECT doc_id,
@@ -1390,12 +1405,24 @@ def agg_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # digit-by-digit, not just row counts.  State is depth*width rows,
     # broadcast at probe time; nothing key-cardinality-sized shuffles
     # twice.
-    from kcl_akka_stream_spark.operators.sketches import cms_estimate, cms_state
+    from kcl_akka_stream_spark.operators.sketches import cms_state
 
     ev = tbl(spark, sf_dir, "events")
     state = cms_state(ev, "user_id", depth=4, width=64)
+    return _cms_heavy_hitters(ev, state)
+
+
+def _cms_estimates(ev: DataFrame, state: DataFrame) -> DataFrame:
+    """The 4x64 Count-Min ``state``'s ``cms_count`` of every user in ``ev``."""
+    from kcl_akka_stream_spark.operators.sketches import cms_estimate
+
     keys = ev.select("user_id").distinct()
-    est = cms_estimate(state, keys, "user_id", depth=4, width=64)
+    return cms_estimate(state, keys, "user_id", depth=4, width=64)
+
+
+def _cms_heavy_hitters(ev: DataFrame, state: DataFrame) -> DataFrame:
+    """Users whose ``state`` estimate reaches 120, beside their exact count."""
+    est = _cms_estimates(ev, state)
     exact = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("exact_count"))
     return (
         est.join(exact, "user_id")
@@ -1532,17 +1559,24 @@ def _kmeans_assign_oracle(k: int = 8) -> str:
     """
 
 
+def _kmeans_seeds(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The embeddings and the k-means seeds: the 8 lowest-id vectors as
+    (cluster_id, centroid)."""
+    emb = tbl(spark, sf_dir, "embeddings")
+    centroids = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").cast("long").alias("cluster_id"),
+        F.col("embedding").alias("centroid"),
+    )
+    return emb, centroids
+
+
 @query("cluster_kmeans_assign", _kmeans_assign_oracle())
 def cluster_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Lloyd assignment step (operators/clustering.py): deterministic
     # centroids (the 8 lowest-id embeddings) broadcast; every vector
     # scored map-side, argmin with id tie-break.  The corpus never
     # shuffles its vectors.
-    emb = tbl(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").cast("long").alias("cluster_id"),
-        F.col("embedding").alias("centroid"),
-    )
+    emb, centroids = _kmeans_seeds(spark, sf_dir)
     return CL.kmeans_assign(emb, centroids)
 
 
@@ -1582,11 +1616,7 @@ def cluster_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The gate verifies the recomputed centroids through scalar
     # checksums (sum / L2 norm per centroid) -- engine-portable without
     # hashing float arrays.
-    emb = tbl(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").cast("long").alias("cluster_id"),
-        F.col("embedding").alias("centroid"),
-    )
+    emb, centroids = _kmeans_seeds(spark, sf_dir)
     assignment = CL.kmeans_assign(emb, centroids)
     updated = CL.kmeans_update(emb, assignment, assignment_has_vector=False)
     comps = updated.select(
@@ -1688,28 +1718,11 @@ def agg_cms_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     # digit-by-digit (the partial-aggregate closure that lets frequency
     # sketches roll up map-side at 100 TB).  Same oracle as
     # agg_cms_heavy_hitters by construction.
-    from kcl_akka_stream_spark.operators.sketches import (
-        cms_estimate,
-        cms_merge,
-        cms_state,
-    )
+    from kcl_akka_stream_spark.operators.sketches import cms_merge, cms_state
 
     ev = tbl(spark, sf_dir, "events")
     states = cms_state(ev, "user_id", depth=4, width=64, group_col="event_type")
-    merged = cms_merge(states)
-    keys = ev.select("user_id").distinct()
-    est = cms_estimate(merged, keys, "user_id", depth=4, width=64)
-    exact = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("exact_count"))
-    return (
-        est.join(exact, "user_id")
-        .filter(F.col("cms_count") >= 120)
-        .select(
-            "user_id",
-            F.col("cms_count").cast("long").alias("cms_count"),
-            F.col("exact_count").cast("long").alias("exact_count"),
-            (F.col("cms_count") - F.col("exact_count")).cast("long").alias("overcount"),
-        )
-    )
+    return _cms_heavy_hitters(ev, cms_merge(states))
 
 
 @query(
@@ -2398,16 +2411,29 @@ def _dedup_savings_oracle() -> str:
     """
 
 
+def _near_dup_clusters(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The documents and their (doc_id, cluster_id) near-dup clusters:
+    connected components of the 8-hash/4-band minhash LSH candidates."""
+    docs = tbl(spark, sf_dir, "documents")
+    buckets = D.minhash_lsh_buckets(docs, num_hashes=8, bands=4, k=3)
+    pairs = D.minhash_candidate_pairs(buckets)
+    # Plain min-label CC, not pointer jumping: LSH dup clusters are
+    # shallow near-cliques, so the jump's extra label-of-label self-join
+    # per round costs more than the rounds it saves (ABBA at sf0.1:
+    # 3.73 -> 3.15 s; identical labels, collect-compared).
+    clusters = D.connected_components(pairs, docs.select("doc_id"))
+    return docs, clusters
+
+
 @query("dedup_savings_report", _dedup_savings_oracle())
 def dedup_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The number a curation run reports up: per near-dup cluster (minhash
     # candidates -> connected components), the keeper and the bytes that
     # dropping the rest saves.  Cluster assignment is the iterative
     # min-label propagation; the savings agg is one combinable groupBy.
-    docs = tbl(spark, sf_dir, "documents")
-    buckets = D.minhash_lsh_buckets(docs, num_hashes=8, bands=4, k=3)
-    pairs = D.minhash_candidate_pairs(buckets)
-    clusters = D.connected_components(pairs, docs.select("doc_id"))
+    docs, clusters = _near_dup_clusters(spark, sf_dir)
     return (
         clusters.join(docs.select("doc_id", "n_chars"), "doc_id")
         .groupBy("cluster_id")
@@ -2494,6 +2520,31 @@ def _zorder_oracle() -> str:
     """
 
 
+def _scaled_order_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Orders as (sck, sdy): custkey and order-day each scaled to
+    ``_Z_BITS`` bits with exact integer min-max math."""
+    o = tbl(spark, sf_dir, "orders").select(
+        F.col("o_custkey").alias("ck"),
+        F.datediff(
+            F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
+        ).alias("dy"),
+    )
+    mm = o.agg(
+        F.min("ck").alias("ck_lo"),
+        F.max("ck").alias("ck_hi"),
+        F.min("dy").alias("dy_lo"),
+        F.max("dy").alias("dy_hi"),
+    )
+    return o.crossJoin(F.broadcast(mm)).select(
+        LO.scale_to_bits(
+            F.col("ck"), F.col("ck_lo"), F.col("ck_hi"), _Z_BITS
+        ).alias("sck"),
+        LO.scale_to_bits(
+            F.col("dy"), F.col("dy_lo"), F.col("dy_hi"), _Z_BITS
+        ).alias("sdy"),
+    )
+
+
 @query("sink_zorder_roundtrip", _zorder_oracle())
 def sink_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Z-order layout sink as a gated roundtrip: scale (o_custkey,
@@ -2510,26 +2561,7 @@ def sink_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    o = tbl(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("ck"),
-        F.datediff(
-            F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
-        ).alias("dy"),
-    )
-    mm = o.agg(
-        F.min("ck").alias("ck_lo"),
-        F.max("ck").alias("ck_hi"),
-        F.min("dy").alias("dy_lo"),
-        F.max("dy").alias("dy_hi"),
-    )
-    scaled = o.crossJoin(F.broadcast(mm)).select(
-        LO.scale_to_bits(
-            F.col("ck"), F.col("ck_lo"), F.col("ck_hi"), _Z_BITS
-        ).alias("sck"),
-        LO.scale_to_bits(
-            F.col("dy"), F.col("dy_lo"), F.col("dy_hi"), _Z_BITS
-        ).alias("sdy"),
-    )
+    scaled = _scaled_order_grid(spark, sf_dir)
     z = scaled.select(
         "sck",
         "sdy",
@@ -2700,15 +2732,17 @@ def pipeline_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return C.chunk_documents(docs, window=8, stride=4)
 
 
-@query(
-    "sink_jsonl_roundtrip",
-    """
+#: Oracle of the document sink roundtrips: the parquet fixture's
+#: per-language fingerprint, which only a lossless roundtrip matches.
+_DOC_FINGERPRINT_SQL = """
     SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS sum_chars,
            CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_distinct_texts
     FROM documents GROUP BY lang
-    """,
-)
+    """
+
+
+@query("sink_jsonl_roundtrip", _DOC_FINGERPRINT_SQL)
 def sink_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # JSON-lines export/ingest roundtrip -- the interchange format every
     # LLM corpus pipeline speaks.  Write gzip-compressed JSONL, read it
@@ -2718,16 +2752,37 @@ def sink_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # escaping/encoding corruption changes a digest and turns the gate
     # red.  The oracle reads the original parquet, so the comparison IS
     # the fidelity check.
+    return _docs_roundtrip(
+        spark,
+        sf_dir,
+        "jsonl",
+        lambda docs, out: docs.write.mode("overwrite")
+        .option("compression", "gzip")
+        .json(out),
+        lambda schema, out: spark.read.schema(schema).json(out),
+    )
+
+
+def _docs_roundtrip(
+    spark: SparkSession,
+    sf_dir: str,
+    fmt: str,
+    write: Callable[[DataFrame, str], None],
+    read: Callable[[StructType, str], DataFrame],
+) -> DataFrame:
+    """Per language, the count, char mass and distinct text digests of the
+    documents after ``write`` to a temp dir and ``read`` back with their
+    schema (the ``_DOC_FINGERPRINT_SQL`` columns)."""
     import shutil
     import tempfile
 
     docs = tbl(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "n_chars"
     )
-    out = tempfile.mkdtemp(prefix="kcl_jsonl_sink_")
+    out = tempfile.mkdtemp(prefix=f"kcl_{fmt}_sink_")
     try:
-        docs.write.mode("overwrite").option("compression", "gzip").json(out)
-        back = spark.read.schema(docs.schema).json(out)
+        write(docs, out)
+        back = read(docs.schema, out)
         agg = back.groupBy("lang").agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("n_chars").cast("long").alias("sum_chars"),
@@ -2737,6 +2792,21 @@ def sink_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(rows, agg.schema)
     finally:
         shutil.rmtree(out, ignore_errors=True)
+
+
+def _split_80_10_10(salt: str, key: str) -> Column:
+    """'train', 'val' or 'test' at 80/10/10 from the first 8 hex digits of
+    md5(salt || key), compared in exact integers."""
+    h = F.conv(
+        F.substring(F.md5(F.concat(F.lit(salt), F.col(key).cast("string"))), 1, 8),
+        16,
+        10,
+    ).cast("long")
+    return (
+        F.when(h * 10 < F.lit(4294967296) * 8, "train")
+        .when(h * 10 < F.lit(4294967296) * 9, "val")
+        .otherwise("test")
+    )
 
 
 @query(
@@ -2765,16 +2835,7 @@ def pipeline_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integer-exact (h*10 vs 2^32 * 8/9), map-only; the only shuffle is
     # the audit aggregation itself.
     docs = tbl(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("split1|"), F.col("doc_id").cast("string"))), 1, 8),
-        16,
-        10,
-    ).cast("long")
-    split = (
-        F.when(h * 10 < F.lit(4294967296) * 8, "train")
-        .when(h * 10 < F.lit(4294967296) * 9, "val")
-        .otherwise("test")
-    )
+    split = _split_80_10_10("split1|", "doc_id")
     return (
         docs.select("doc_id", "lang", split.alias("split"))
         .groupBy("split", "lang")
@@ -2962,6 +3023,24 @@ def _graph_decode(col: str):
     ).otherwise(F.concat(F.lit("s"), (c - _GRAPH_OFF).cast("string")))
 
 
+def _co_purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The customer-supplier co-purchase graph as long-encoded (src, dst, w)
+    edges in both directions, ``w`` the lineitem count of the pair."""
+    li = tbl(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = tbl(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    p = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .groupBy(
+            F.col("o_custkey").cast("long").alias("src"),
+            (F.col("l_suppkey").cast("long") + _GRAPH_OFF).alias("dst"),
+        )
+        .agg(F.count(F.lit(1)).cast("long").alias("w"))
+    )
+    return p.unionByName(
+        p.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
+    )
+
+
 @query(
     "graph_pagerank_topk",
     """
@@ -3011,19 +3090,7 @@ def graph_pagerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whose rank table outgrows executor broadcast range.
     from kcl_akka_stream_spark.operators.graph import pagerank
 
-    li = tbl(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = tbl(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    p = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy(
-            F.col("o_custkey").cast("long").alias("src"),
-            (F.col("l_suppkey").cast("long") + _GRAPH_OFF).alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("w"))
-    )
-    edges = p.unionByName(
-        p.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-    )
+    edges = _co_purchase_edges(spark, sf_dir)
     ranks = pagerank(edges, iterations=3, broadcast_ranks=True)
     return (
         ranks.select(_graph_decode("node").alias("node"), "rank_micro")
@@ -3032,15 +3099,7 @@ def graph_pagerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "sink_csv_roundtrip",
-    """
-    SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-           CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_distinct_texts
-    FROM documents GROUP BY lang
-    """,
-)
+@query("sink_csv_roundtrip", _DOC_FINGERPRINT_SQL)
 def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CSV export/ingest roundtrip, twin of sink_jsonl_roundtrip: gzip CSV
     # with header and full quoting/escaping enabled, read back with an
@@ -3049,41 +3108,25 @@ def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # digests.  CSV is the format where quoting bugs actually corrupt
     # data (embedded delimiters/quotes/newlines); the digest comparison
     # against the parquet-reading oracle IS the fidelity check.
-    import shutil
-    import tempfile
-
-    docs = tbl(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "n_chars"
+    return _docs_roundtrip(
+        spark,
+        sf_dir,
+        "csv",
+        lambda docs, out: docs.write.mode("overwrite")
+        .option("compression", "gzip")
+        .option("header", "true")
+        .option("quoteAll", "true")
+        .option("escape", '"')
+        .csv(out),
+        lambda schema, out: spark.read.schema(schema)
+        .option("header", "true")
+        .option("escape", '"')
+        # without multiLine a quoted value containing a newline is
+        # torn into two records on re-read (ADVICE r6); the writer
+        # quotes all fields, so the reader must parse across lines
+        .option("multiLine", "true")
+        .csv(out),
     )
-    out = tempfile.mkdtemp(prefix="kcl_csv_sink_")
-    try:
-        (
-            docs.write.mode("overwrite")
-            .option("compression", "gzip")
-            .option("header", "true")
-            .option("quoteAll", "true")
-            .option("escape", '"')
-            .csv(out)
-        )
-        back = (
-            spark.read.schema(docs.schema)
-            .option("header", "true")
-            .option("escape", '"')
-            # without multiLine a quoted value containing a newline is
-            # torn into two records on re-read (ADVICE r6); the writer
-            # quotes all fields, so the reader must parse across lines
-            .option("multiLine", "true")
-            .csv(out)
-        )
-        agg = back.groupBy("lang").agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.countDistinct(F.md5("text")).cast("long").alias("n_distinct_texts"),
-        )
-        rows = agg.collect()
-        return spark.createDataFrame(rows, agg.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 def _leakage_split_oracle() -> str:
@@ -3133,24 +3176,8 @@ def pipeline_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integer-exact 80/10/10 thresholds as pipeline_train_val_split.
     # The per-split (n_docs, n_clusters) pair is the audit: n_docs >
     # n_clusters in a split proves multi-doc clusters travel whole.
-    docs = tbl(spark, sf_dir, "documents")
-    buckets = D.minhash_lsh_buckets(docs, num_hashes=8, bands=4, k=3)
-    pairs = D.minhash_candidate_pairs(buckets)
-    clusters = D.connected_components(pairs, docs.select("doc_id"))
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("lsplit1|"), F.col("cluster_id").cast("string"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
-    split = (
-        F.when(h * 10 < F.lit(4294967296) * 8, "train")
-        .when(h * 10 < F.lit(4294967296) * 9, "val")
-        .otherwise("test")
-    )
+    _, clusters = _near_dup_clusters(spark, sf_dir)
+    split = _split_80_10_10("lsplit1|", "cluster_id")
     return (
         clusters.select("doc_id", "cluster_id", split.alias("split"))
         .groupBy("split")
@@ -3275,6 +3302,13 @@ def pipeline_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shrunk so all three row classes are non-vacuous at sf0.01
     # (60 pruned / 23 false-positive / 167 known); production default is
     # m=2^20.
+    _, flagged = _bloom_flagged(spark, sf_dir)
+    return flagged.select("doc_id", "lang", "bloom_candidate", "is_known")
+
+
+def _bloom_flagged(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The history digests (ids % 3 != 0) and the odd-id incoming docs
+    flagged against them by the ``_BLOOM_M``/``_BLOOM_K`` Bloom filter."""
     docs = tbl(spark, sf_dir, "documents")
     existing = (
         docs.filter(F.col("doc_id") % 3 != 0)
@@ -3284,20 +3318,12 @@ def pipeline_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     incoming = docs.filter(F.col("doc_id") % 2 == 1).select(
         "doc_id", "lang", F.md5("text").alias("digest")
     )
-    return D.bloom_prune_known(
+    return existing, D.bloom_prune_known(
         incoming, existing, m_bits=_BLOOM_M, k_hashes=_BLOOM_K
-    ).select("doc_id", "lang", "bloom_candidate", "is_known")
+    )
 
 
-@query(
-    "sink_orc_roundtrip",
-    """
-    SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-           CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_distinct_texts
-    FROM documents GROUP BY lang
-    """,
-)
+@query("sink_orc_roundtrip", _DOC_FINGERPRINT_SQL)
 def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ORC columnar roundtrip, completing the format matrix next to
     # parquet (fixtures), z-ordered/bucketed/partitioned parquet, gzip
@@ -3306,25 +3332,15 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # PARQUET fixture, so the hash only matches if the ORC roundtrip
     # preserved every row and byte (text digests included) -- format
     # fidelity, not just row counts.
-    import shutil
-    import tempfile
-
-    docs = tbl(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "n_chars"
+    return _docs_roundtrip(
+        spark,
+        sf_dir,
+        "orc",
+        lambda docs, out: docs.write.mode("overwrite")
+        .option("compression", "zlib")
+        .orc(out),
+        lambda schema, out: spark.read.schema(schema).orc(out),
     )
-    out = tempfile.mkdtemp(prefix="kcl_orc_sink_")
-    try:
-        docs.write.mode("overwrite").option("compression", "zlib").orc(out)
-        back = spark.read.schema(docs.schema).orc(out)
-        agg = back.groupBy("lang").agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.countDistinct(F.md5("text")).cast("long").alias("n_distinct_texts"),
-        )
-        rows = agg.collect()
-        return spark.createDataFrame(rows, agg.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 def _ivf_recall_oracle() -> str:
@@ -3356,12 +3372,25 @@ def sim_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both branches so the measurement itself is hash-verified.
     # Integer-exact: hits * 100 / k.  Deterministic: both branches break
     # cosine ties by n_id (the same rule their individual gates verify).
+    return _top5_overlap(
+        spark,
+        sf_dir,
+        lambda emb, queries_df: S.ivf_topk(emb, queries_df, k=5, nprobe=1),
+    )
+
+
+def _top5_overlap(
+    spark: SparkSession,
+    sf_dir: str,
+    approx_topk: Callable[[DataFrame, DataFrame], DataFrame],
+    pct_col: str = "recall_pct",
+) -> DataFrame:
+    """Per query vector (the 5 lowest ids): how many of the exact top-5
+    ``approx_topk(embeddings, queries)`` finds, and that share in ``pct_col``."""
     emb = tbl(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 5)
-    exact = S.brute_force_topk(emb, queries_df, k=5).select(
-        "q_id", "n_id"
-    )
-    approx = S.ivf_topk(emb, queries_df, k=5, nprobe=1).select(
+    exact = S.brute_force_topk(emb, queries_df, k=5).select("q_id", "n_id")
+    approx = approx_topk(emb, queries_df).select(
         F.col("q_id").alias("a_q"), F.col("n_id").alias("a_n")
     )
     return (
@@ -3384,7 +3413,7 @@ def sim_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             "n_exact",
             "n_hits",
-            F.expr("(n_hits * 100) div n_exact").cast("long").alias("recall_pct"),
+            F.expr("(n_hits * 100) div n_exact").cast("long").alias(pct_col),
         )
     )
 
@@ -3472,6 +3501,28 @@ def agg_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmv_set_estimates(a, b, "user_id", k=64)
 
 
+def _supplier_co_order_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Supplier pairs (src < dst) sharing an order among high-quantity
+    lineitems: the canonical edges of the supplier co-purchase projection."""
+    # restrict to high-quantity lineitems: the unfiltered projection is
+    # the COMPLETE supplier graph at fixture scale (every pair shares
+    # some order -- 161,700 triangles of no structure); the filtered one
+    # has real topology (403 edges / 126 triangles at sf0.01)
+    li = (
+        tbl(spark, sf_dir, "lineitem")
+        .filter(F.col("l_quantity") >= 48)
+        .select("l_orderkey", "l_suppkey")
+    )
+    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("src"))
+    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("dst"))
+    return (
+        a.join(b, "k")
+        .filter(F.col("src") < F.col("dst"))
+        .select("src", "dst")
+        .distinct()
+    )
+
+
 @query(
     "graph_triangle_count",
     """
@@ -3504,23 +3555,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # side closes via a semi-join, never a materialized wedge table.
     from kcl_akka_stream_spark.operators.graph import triangle_count
 
-    # restrict to high-quantity lineitems: the unfiltered projection is
-    # the COMPLETE supplier graph at fixture scale (every pair shares
-    # some order -- 161,700 triangles of no structure); the filtered one
-    # has real topology (403 edges / 126 triangles at sf0.01)
-    li = (
-        tbl(spark, sf_dir, "lineitem")
-        .filter(F.col("l_quantity") >= 48)
-        .select("l_orderkey", "l_suppkey")
-    )
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("src"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("dst"))
-    edges = (
-        a.join(b, "k")
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
+    edges = _supplier_co_order_edges(spark, sf_dir)
     return triangle_count(edges)
 
 
@@ -3558,19 +3593,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integers only.
     from kcl_akka_stream_spark.operators.graph import clustering_coefficients
 
-    li = (
-        tbl(spark, sf_dir, "lineitem")
-        .filter(F.col("l_quantity") >= 48)
-        .select("l_orderkey", "l_suppkey")
-    )
-    ea = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("src"))
-    eb = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("dst"))
-    edges = (
-        ea.join(eb, "k")
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
+    edges = _supplier_co_order_edges(spark, sf_dir)
     return clustering_coefficients(edges)
 
 
@@ -3622,19 +3645,7 @@ def graph_ppr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # graph_pagerank_topk; seeds are encoded to the same long space.
     from kcl_akka_stream_spark.operators.graph import personalized_pagerank
 
-    li = tbl(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = tbl(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    p = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy(
-            F.col("o_custkey").cast("long").alias("src"),
-            (F.col("l_suppkey").cast("long") + _GRAPH_OFF).alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("w"))
-    )
-    edges = p.unionByName(
-        p.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-    )
+    edges = _co_purchase_edges(spark, sf_dir)
     seeds = [
         int(s[1:]) if s[0] == "c" else int(s[1:]) + _GRAPH_OFF
         for s in _PPR_SEEDS
@@ -4156,12 +4167,7 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _payload_simhash_pairs_oracle(
     bits: int = 16, gram: int = 4, stride: int = 4, max_hamming: int = 3
 ) -> str:
-    highs = "('8','9','a','b','c','d','e','f')"
-    fp = " + ".join(
-        f"(CASE WHEN 2 * len(list_filter(hs, x -> substr(x, {i + 1}, 1) IN {highs}))"
-        f" - len(hs) > 0 THEN {2**i} ELSE 0 END)"
-        for i in range(bits)
-    )
+    fp = _simhash_fp_sql(bits)
     # payload = UTF-8 bytes of text (documents_as_media) and the fixture
     # text is pure ASCII, so byte windows == character windows and
     # DuckDB's md5-of-substring hashes the same bytes Python's
@@ -4650,19 +4656,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (u, v); same wedge-join scale shape as triangle counting.
     from kcl_akka_stream_spark.operators.graph import neighbor_jaccard
 
-    li = (
-        tbl(spark, sf_dir, "lineitem")
-        .filter(F.col("l_quantity") >= 48)
-        .select("l_orderkey", "l_suppkey")
-    )
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("src"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("dst"))
-    edges = (
-        a.join(b, "k")
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
+    edges = _supplier_co_order_edges(spark, sf_dir)
     # broadcast_scores=True: fixture node set provably fits an executor (default False for billion-node graphs).
     return (
         neighbor_jaccard(edges, broadcast_scores=True)
@@ -4719,19 +4713,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would not: 'c101' < 'c2' lexicographically).
     from kcl_akka_stream_spark.operators.graph import label_propagation
 
-    li = tbl(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = tbl(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    p = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy(
-            F.col("o_custkey").cast("long").alias("src"),
-            (F.col("l_suppkey").cast("long") + _GRAPH_OFF).alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("w"))
-    )
-    edges = p.unionByName(
-        p.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-    )
+    edges = _co_purchase_edges(spark, sf_dir)
     # broadcast_scores=True: fixture node set provably fits an executor.
     labels = label_propagation(edges, iterations=2, broadcast_scores=True)
     return (
@@ -4812,14 +4794,7 @@ def pipeline_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     # side composes connected components (pointer jumping) with one
     # cluster-keyed window; the oracle re-derives clusters via the
     # recursive-CTE transitive closure and applies the same rule.
-    docs = tbl(spark, sf_dir, "documents")
-    buckets = D.minhash_lsh_buckets(docs, num_hashes=8, bands=4, k=3)
-    pairs = D.minhash_candidate_pairs(buckets)
-    # Plain min-label CC, not pointer jumping: LSH dup clusters are
-    # shallow near-cliques, so the jump's extra label-of-label self-join
-    # per round costs more than the rounds it saves (ABBA at sf0.1:
-    # 3.73 -> 3.15 s; identical labels, collect-compared).
-    clusters = D.connected_components(pairs, docs.select("doc_id"))
+    docs, clusters = _near_dup_clusters(spark, sf_dir)
     j = clusters.join(docs.select("doc_id", "n_chars"), "doc_id")
     w = Window.partitionBy("cluster_id").orderBy(
         F.col("n_chars").desc(), "doc_id"
@@ -4937,19 +4912,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # set broadcasts into both semi-joins.
     from kcl_akka_stream_spark.operators.graph import kcore_peel
 
-    li = (
-        tbl(spark, sf_dir, "lineitem")
-        .filter(F.col("l_quantity") >= 48)
-        .select("l_orderkey", "l_suppkey")
-    )
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("src"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("dst"))
-    edges = (
-        a.join(b, "k")
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
+    edges = _supplier_co_order_edges(spark, sf_dir)
     # broadcast_scores=True: fixture node set provably fits an executor.
     return kcore_peel(edges, k=3, rounds=3, broadcast_scores=True)
 
@@ -4998,32 +4961,14 @@ def sim_matryoshka_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # length (the sim_ivf_recall_report pattern, third ANN contract).
     # Truncation composes upstream of ANY serving path here (slice, then
     # brute force / IVF / PQ unchanged); integer overlap percentages.
-    emb = tbl(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 5)
-    exact = S.brute_force_topk(emb, queries_df, k=5).select("q_id", "n_id")
     sl = F.slice(F.col("embedding"), 1, 16).alias("embedding")
-    emb16 = emb.select("vec_id", sl)
-    q16 = queries_df.select("vec_id", sl)
-    approx = S.brute_force_topk(emb16, q16, k=5).select(
-        F.col("q_id").alias("a_q"), F.col("n_id").alias("a_n")
-    )
-    return (
-        exact.join(
-            approx,
-            (F.col("q_id") == F.col("a_q")) & (F.col("n_id") == F.col("a_n")),
-            "left",
-        )
-        .groupBy("q_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_exact"),
-            F.count("a_n").cast("long").alias("n_hits"),
-        )
-        .select(
-            "q_id",
-            "n_exact",
-            "n_hits",
-            F.expr("(n_hits * 100) div n_exact").cast("long").alias("overlap_pct"),
-        )
+    return _top5_overlap(
+        spark,
+        sf_dir,
+        lambda emb, queries_df: S.brute_force_topk(
+            emb.select("vec_id", sl), queries_df.select("vec_id", sl), k=5
+        ),
+        "overlap_pct",
     )
 
 
@@ -5062,19 +5007,7 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same seeds and unrolls the same three monotone min-combines.
     from kcl_akka_stream_spark.operators.graph import bfs_distance
 
-    li = (
-        tbl(spark, sf_dir, "lineitem")
-        .filter(F.col("l_quantity") >= 48)
-        .select("l_orderkey", "l_suppkey")
-    )
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("src"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("dst"))
-    pairs = (
-        a.join(b, "k")
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
+    pairs = _supplier_co_order_edges(spark, sf_dir)
     edges = pairs.unionByName(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -5506,12 +5439,10 @@ def agg_cms_error_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (c) underestimates, which CMS can NEVER produce -- a nonzero
     # n_underestimates turns the gate red by construction.  All counters
     # integer-exact; the oracle rebuilds the identical sketch in SQL.
-    from kcl_akka_stream_spark.operators.sketches import cms_estimate, cms_state
+    from kcl_akka_stream_spark.operators.sketches import cms_state
 
     ev = tbl(spark, sf_dir, "events")
-    state = cms_state(ev, "user_id", depth=4, width=64)
-    keys = ev.select("user_id").distinct()
-    est = cms_estimate(state, keys, "user_id", depth=4, width=64)
+    est = _cms_estimates(ev, cms_state(ev, "user_id", depth=4, width=64))
     exact = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("exact_count")
     )
@@ -5821,19 +5752,7 @@ def graph_weighted_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same three relaxations bit-for-bit.
     from kcl_akka_stream_spark.operators.graph import weighted_distance
 
-    li = tbl(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = tbl(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    p = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy(
-            F.col("o_custkey").cast("long").alias("src"),
-            (F.col("l_suppkey").cast("long") + _GRAPH_OFF).alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("w"))
-    )
-    sym = p.unionByName(
-        p.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-    )
+    sym = _co_purchase_edges(spark, sf_dir)
     edges = sym.select("src", "dst", F.expr("1000000 div w").alias("cost"))
     # broadcast_scores=True: fixture node set provably fits an executor.
     dist = weighted_distance(edges, [1, 2, 3], rounds=3, broadcast_scores=True)
@@ -7237,29 +7156,10 @@ def sim_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured gate -- a deployment picks the tier by these reports, not
     # by faith.  Integer-exact hits*100 div k; both branches tie-break
     # on n_id.
-    emb = tbl(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 5)
-    exact = S.brute_force_topk(emb, queries_df, k=5).select("q_id", "n_id")
-    approx = S.lsh_topk(emb, queries_df, k=5, bucket_dims=4).select(
-        F.col("q_id").alias("a_q"), F.col("n_id").alias("a_n")
-    )
-    return (
-        exact.join(
-            approx,
-            (F.col("q_id") == F.col("a_q")) & (F.col("n_id") == F.col("a_n")),
-            "left",
-        )
-        .groupBy("q_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_exact"),
-            F.count("a_n").cast("long").alias("n_hits"),
-        )
-        .select(
-            "q_id",
-            "n_exact",
-            "n_hits",
-            F.expr("(n_hits * 100) div n_exact").cast("long").alias("recall_pct"),
-        )
+    return _top5_overlap(
+        spark,
+        sf_dir,
+        lambda emb, queries_df: S.lsh_topk(emb, queries_df, k=5, bucket_dims=4),
     )
 
 
@@ -7922,11 +7822,7 @@ def cluster_inertia_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-vector round happens before any data-sized summation), so the
     # aggregate inertia is exact int64 in both engines regardless of
     # partial-agg order.  Centroids broadcast; one member-keyed agg.
-    emb = tbl(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").cast("long").alias("cluster_id"),
-        F.col("embedding").alias("centroid"),
-    )
+    emb, centroids = _kmeans_seeds(spark, sf_dir)
     assigned = CL.kmeans_assign(emb, centroids, keep_distance=True)
     d2m = assigned.select(
         "cluster_id",
@@ -8488,19 +8384,8 @@ def graph_modularity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # COMMUNITY-sized relation.
     from kcl_akka_stream_spark.operators.graph import label_propagation
 
-    li = tbl(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = tbl(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    p = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy(
-            F.col("o_custkey").cast("long").alias("src"),
-            (F.col("l_suppkey").cast("long") + _GRAPH_OFF).alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("w"))
-    )
-    e = p.unionByName(
-        p.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-    ).localCheckpoint(eager=True)  # feeds labels + intra + deg + total
+    # checkpointed: feeds labels + intra + deg + total
+    e = _co_purchase_edges(spark, sf_dir).localCheckpoint(eager=True)
     labels = label_propagation(
         e, iterations=2, broadcast_scores=True
     ).localCheckpoint(eager=True)  # node-sized; 2 consumers (src+dst attach)
@@ -8579,20 +8464,7 @@ def dedup_bloom_fpr_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # false positives by the TRUE-NEGATIVE opportunity set
     # (incoming - known), the quantity the formula predicts.  All
     # counts exact ints; both rates are single shared IEEE expressions.
-    from kcl_akka_stream_spark.operators.dedup import bloom_prune_known
-
-    docs = tbl(spark, sf_dir, "documents")
-    existing = (
-        docs.filter(F.col("doc_id") % 3 != 0)
-        .select(F.md5("text").alias("digest"))
-        .distinct()
-    )
-    incoming = docs.filter(F.col("doc_id") % 2 == 1).select(
-        "doc_id", "lang", F.md5("text").alias("digest")
-    )
-    flagged = bloom_prune_known(
-        incoming, existing, m_bits=_BLOOM_M, k_hashes=_BLOOM_K
-    )
+    existing, flagged = _bloom_flagged(spark, sf_dir)
     g = flagged.agg(
         F.count(F.lit(1)).alias("n_incoming"),
         F.sum("bloom_candidate").alias("n_candidates"),
@@ -9026,21 +8898,7 @@ def _decontaminate_fuzzy_oracle(
     # same 8-hash/4-band signature over ALL docs, candidates restricted
     # to corpus x eval, verify by exact 3-shingle Jaccard, then fold with
     # the exact 5-gram path into ONE coverage report row.
-    num_hashes = 8
-    rows = num_hashes // bands
-    mins = ",\n        ".join(
-        f"min(substr({'h1' if s < 4 else 'h2'}, {(s % 4) * 8 + 1}, 8)) AS mh_{s}"
-        for s in range(num_hashes)
-    )
-    band_selects = []
-    for bn in range(bands):
-        parts = " || '|' || ".join(
-            f"mh_{bn * rows + r}" for r in range(rows)
-        )
-        band_selects.append(
-            f"SELECT doc_id, {bn} AS band, md5({parts}) AS bucket FROM mh"
-        )
-    bands_sql = "\n      UNION ALL ".join(band_selects)
+    mins, bands_sql = _minhash_band_sql(8, bands)
     return f"""
     WITH {_SH_CTE},
     h AS (
@@ -9105,6 +8963,17 @@ def _decontaminate_fuzzy_oracle(
     """
 
 
+def _corpus_eval_split(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The documents, the training corpus (doc_id % 97 != 0) and the
+    fixture eval set (doc_id % 97 == 0)."""
+    docs = tbl(spark, sf_dir, "documents")
+    corpus = docs.filter(F.col("doc_id") % 97 != 0)
+    eval_df = docs.filter(F.col("doc_id") % 97 == 0)
+    return docs, corpus, eval_df
+
+
 @query("pipeline_decontaminate_fuzzy", _decontaminate_fuzzy_oracle())
 def pipeline_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # MinHash-LSH decontamination twin + coverage report (wave 44,
@@ -9123,9 +8992,7 @@ def pipeline_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         decontaminate_fuzzy,
     )
 
-    docs = tbl(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") % 97 != 0)
-    eval_df = docs.filter(F.col("doc_id") % 97 == 0)
+    docs, corpus, eval_df = _corpus_eval_split(spark, sf_dir)
     exact = decontaminate(corpus, eval_df, k=5).select(
         "doc_id", F.lit(1).alias("is_exact")
     )
@@ -9329,9 +9196,7 @@ def sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc-keyed exchange, TakeOrderedAndProject top-k.
     from kcl_akka_stream_spark.operators.sampling import dsir_select
 
-    docs = tbl(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") % 97 != 0)
-    target = docs.filter(F.col("doc_id") % 97 == 0)
+    _, corpus, target = _corpus_eval_split(spark, sf_dir)
     return dsir_select(corpus, target, k=100, n_buckets=64)
 
 
@@ -9823,9 +9688,7 @@ def pipeline_decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         decontaminate_span_coverage,
     )
 
-    docs = tbl(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") % 97 != 0)
-    eval_df = docs.filter(F.col("doc_id") % 97 == 0)
+    _, corpus, eval_df = _corpus_eval_split(spark, sf_dir)
     return decontaminate_span_coverage(corpus, eval_df, k=8)
 
 
@@ -11441,6 +11304,21 @@ def _qmodel_auc_oracle() -> str:
     """
 
 
+def _qmodel_score_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The held-out quality-model scores folded to one row per distinct
+    ``score_micro``: its doc count ``c`` and positive-label count ``c_pos``."""
+    from kcl_akka_stream_spark.operators.quality import (
+        hashed_logodds_fit_score,
+    )
+
+    fx = _qmodel_fixture(tbl(spark, sf_dir, "documents"))
+    scored = hashed_logodds_fit_score(fx)
+    return scored.groupBy("score_micro").agg(
+        F.count(F.lit(1)).cast("long").alias("c"),
+        F.sum("label").cast("long").alias("c_pos"),
+    )
+
+
 @query("text_quality_model_auc", _qmodel_auc_oracle())
 def text_quality_model_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Threshold-free acceptance for the model-based quality scorer
@@ -11457,16 +11335,7 @@ def text_quality_model_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # data-reduced tie-group relation, never the corpus.
     from pyspark.sql import Window
 
-    from kcl_akka_stream_spark.operators.quality import (
-        hashed_logodds_fit_score,
-    )
-
-    fx = _qmodel_fixture(tbl(spark, sf_dir, "documents"))
-    scored = hashed_logodds_fit_score(fx)
-    g = scored.groupBy("score_micro").agg(
-        F.count(F.lit(1)).cast("long").alias("c"),
-        F.sum("label").cast("long").alias("c_pos"),
-    )
+    g = _qmodel_score_groups(spark, sf_dir)
     w = Window.orderBy("score_micro").rowsBetween(
         Window.unboundedPreceding, -1
     )
@@ -12252,27 +12121,7 @@ def sink_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    o = tbl(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("ck"),
-        F.datediff(
-            F.col("o_orderdate").cast("date"),
-            F.lit("1970-01-01").cast("date"),
-        ).alias("dy"),
-    )
-    mm = o.agg(
-        F.min("ck").alias("ck_lo"),
-        F.max("ck").alias("ck_hi"),
-        F.min("dy").alias("dy_lo"),
-        F.max("dy").alias("dy_hi"),
-    )
-    scaled = o.crossJoin(F.broadcast(mm)).select(
-        LO.scale_to_bits(
-            F.col("ck"), F.col("ck_lo"), F.col("ck_hi"), _Z_BITS
-        ).alias("sck"),
-        LO.scale_to_bits(
-            F.col("dy"), F.col("dy_lo"), F.col("dy_hi"), _Z_BITS
-        ).alias("sdy"),
-    )
+    scaled = _scaled_order_grid(spark, sf_dir)
     h = LO.hilbert_index(scaled, "sck", "sdy", _Z_BITS)
     out = tempfile.mkdtemp(prefix="kcl_hilbert_sink_")
     try:
@@ -12346,6 +12195,29 @@ def _pc1_oracle(iters: int = 3) -> str:
     """
 
 
+def _centered_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every embedding component as (vec_id, d, cv, n): its micro-int value
+    minus the dimension's integer mean, beside the dimension's count."""
+    emb = spread(tbl(spark, sf_dir, "embeddings"))
+    e = emb.select(
+        "vec_id",
+        F.posexplode(F.col("embedding").cast("array<double>")).alias(
+            "d", "x"
+        ),
+    ).select(
+        "vec_id",
+        "d",
+        F.expr("cast(round(x * 1000000, 0) as bigint)").alias("em"),
+    ).localCheckpoint(eager=True)  # (vec, dim) relation feeds mu AND c
+    mu = e.groupBy("d").agg(
+        F.expr("cast(sum(em) div count(*) as bigint)").alias("mu"),
+        F.count(F.lit(1)).cast("long").alias("n"),
+    )
+    return e.join(F.broadcast(mu), "d").select(
+        "vec_id", "d", (F.col("em") - F.col("mu")).alias("cv"), "n"
+    )
+
+
 @query("emb_power_iteration_pc1", _pc1_oracle())
 def emb_power_iteration_pc1(spark: SparkSession, sf_dir: str) -> DataFrame:
     # First principal component by POWER ITERATION (von Mises-Pollaczek
@@ -12370,24 +12242,7 @@ def emb_power_iteration_pc1(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint (e feeds BOTH mu and c -- same shape
     # emb_effective_rank already ships) parallelize the covariance;
     # measured 3.37s -> 1.81s interleaved-median on the cov fold alone.
-    emb = spread(tbl(spark, sf_dir, "embeddings"))
-    e = emb.select(
-        "vec_id",
-        F.posexplode(F.col("embedding").cast("array<double>")).alias(
-            "d", "x"
-        ),
-    ).select(
-        "vec_id",
-        "d",
-        F.expr("cast(round(x * 1000000, 0) as bigint)").alias("em"),
-    ).localCheckpoint(eager=True)  # (vec, dim) relation feeds mu AND c
-    mu = e.groupBy("d").agg(
-        F.expr("cast(sum(em) div count(*) as bigint)").alias("mu"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    )
-    c = e.join(F.broadcast(mu), "d").select(
-        "vec_id", "d", (F.col("em") - F.col("mu")).alias("cv"), "n"
-    )
+    c = _centered_components(spark, sf_dir)
     a = c.select("vec_id", F.col("d").alias("d"), F.col("cv").alias("ca"), "n")
     b = c.select("vec_id", F.col("d").alias("d2"), F.col("cv").alias("cb"))
     cov = (
@@ -12990,16 +12845,7 @@ def agg_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AUC query), then one single-row fold.
     from pyspark.sql import Window
 
-    from kcl_akka_stream_spark.operators.quality import (
-        hashed_logodds_fit_score,
-    )
-
-    fx = _qmodel_fixture(tbl(spark, sf_dir, "documents"))
-    scored = hashed_logodds_fit_score(fx)
-    g = scored.groupBy("score_micro").agg(
-        F.count(F.lit(1)).cast("long").alias("c"),
-        F.sum("label").cast("long").alias("c_pos"),
-    )
+    g = _qmodel_score_groups(spark, sf_dir)
     w = Window.orderBy(F.col("score_micro").desc()).rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -13091,16 +12937,7 @@ def text_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # agg); sigmoid + 10-bin census on that reduced relation; the
     # decomposition is <=10-row algebra with broadcast totals.  No
     # global window anywhere.
-    from kcl_akka_stream_spark.operators.quality import (
-        hashed_logodds_fit_score,
-    )
-
-    fx = _qmodel_fixture(tbl(spark, sf_dir, "documents"))
-    scored = hashed_logodds_fit_score(fx)
-    g = scored.groupBy("score_micro").agg(
-        F.count(F.lit(1)).cast("long").alias("c"),
-        F.sum("label").cast("long").alias("c_pos"),
-    )
+    g = _qmodel_score_groups(spark, sf_dir)
     fg = g.select(
         "c",
         "c_pos",
@@ -13376,24 +13213,7 @@ def emb_effective_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Shape: one (vec, dim) explode + one 64x64 covariance agg + a
     # single-row fold -- the data touches one pass, everything after is
     # model-sized.
-    emb = spread(tbl(spark, sf_dir, "embeddings"))
-    e = emb.select(
-        "vec_id",
-        F.posexplode(F.col("embedding").cast("array<double>")).alias(
-            "d", "x"
-        ),
-    ).select(
-        "vec_id",
-        "d",
-        F.expr("cast(round(x * 1000000, 0) as bigint)").alias("em"),
-    ).localCheckpoint(eager=True)  # (vec, dim) relation feeds mu AND c
-    mu = e.groupBy("d").agg(
-        F.expr("cast(sum(em) div count(*) as bigint)").alias("mu"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    )
-    c = e.join(F.broadcast(mu), "d").select(
-        "vec_id", "d", (F.col("em") - F.col("mu")).alias("cv"), "n"
-    )
+    c = _centered_components(spark, sf_dir)
     a = c.select("vec_id", "d", F.col("cv").alias("ca"), "n")
     b = c.select("vec_id", F.col("d").alias("d2"), F.col("cv").alias("cb"))
     cov = (

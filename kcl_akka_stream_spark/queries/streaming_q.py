@@ -246,16 +246,30 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # watermark -- fine for a bounded replay test, an unbounded-state
     # bug on an endless stream; stream_dedup_watermarked below is the
     # state-bounded production form.
+    return _replayed_event_types(
+        spark,
+        sf_dir,
+        "stream_dedup",
+        lambda stream: stream.dropDuplicates(["event_id"]),
+    )
+
+
+def _replayed_event_types(
+    spark: SparkSession,
+    sf_dir: str,
+    tag: str,
+    dedup: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Per event type, the count of events left by ``dedup`` on a stream
+    (watermarked on ``ts``) that holds every event twice."""
     ev = tbl(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="kcl_spark_dedup_")
+    tmp = tempfile.mkdtemp(prefix=f"kcl_{tag}_")
     try:
         ev.write.mode("overwrite").parquet(tmp)
         ev.write.mode("append").parquet(tmp)  # the replayed duplicates
         stream = spark.readStream.schema(ev.schema).parquet(tmp)
-        deduped = stream.withWatermark("ts", "1 hour").dropDuplicates(["event_id"])
-        sink = _memory_sink(
-            spark, deduped.writeStream.outputMode("append"), "stream_dedup"
-        )
+        deduped = dedup(stream.withWatermark("ts", "1 hour"))
+        sink = _memory_sink(spark, deduped.writeStream.outputMode("append"), tag)
         return (
             sink.groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n"))
@@ -281,24 +295,12 @@ def stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     # regardless of run length.  Semantics differ only for duplicates
     # arriving later than the delay -- the replay fixture's duplicates
     # carry identical timestamps, so the exact-dedup oracle still holds.
-    ev = tbl(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="kcl_spark_dedup_wm_")
-    try:
-        ev.write.mode("overwrite").parquet(tmp)
-        ev.write.mode("append").parquet(tmp)  # the replayed duplicates
-        stream = spark.readStream.schema(ev.schema).parquet(tmp)
-        deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
-            ["event_id"]
-        )
-        sink = _memory_sink(
-            spark, deduped.writeStream.outputMode("append"), "stream_dedup_watermarked"
-        )
-        return (
-            sink.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return _replayed_event_types(
+        spark,
+        sf_dir,
+        "stream_dedup_watermarked",
+        lambda stream: stream.dropDuplicatesWithinWatermark(["event_id"]),
+    )
 
 
 @query(

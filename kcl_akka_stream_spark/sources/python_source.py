@@ -329,15 +329,19 @@ class _ManifestJsonlWriter(DataSourceWriter):
         return _StagedFile(path=path, n_rows=n)
 
     def commit(self, messages):
+        self._publish(messages, "manifest.json")
+
+    def _publish(self, messages, name: str, **extra) -> None:
+        """Atomically write manifest ``name``: the committed files, their
+        row total and ``extra``."""
         files = sorted(
             _os.path.basename(m.path) for m in messages if m is not None
         )
         rows = sum(m.n_rows for m in messages if m is not None)
-        manifest = {"files": files, "n_rows": rows}
         tmp = _os.path.join(self._dir, f".manifest-{_uuid.uuid4().hex}.tmp")
         with open(tmp, "w") as f:
-            _json.dump(manifest, f)
-        _os.replace(tmp, _os.path.join(self._dir, "manifest.json"))
+            _json.dump({"files": files, "n_rows": rows, **extra}, f)
+        _os.replace(tmp, _os.path.join(self._dir, name))
 
     def abort(self, messages):
         for m in messages:
@@ -372,20 +376,14 @@ class _ManifestJsonlStreamWriter(DataSourceStreamWriter):
 
     def __init__(self, options, overwrite: bool):
         self._inner = _ManifestJsonlWriter(options, overwrite)
-        self._dir = self._inner._dir
 
     def write(self, iterator):
         return self._inner.write(iterator)
 
     def commit(self, messages, batchId: int) -> None:
-        files = sorted(
-            _os.path.basename(m.path) for m in messages if m is not None
+        self._inner._publish(
+            messages, f"manifest-{batchId}.json", batch_id=batchId
         )
-        rows = sum(m.n_rows for m in messages if m is not None)
-        tmp = _os.path.join(self._dir, f".manifest-{_uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as f:
-            _json.dump({"files": files, "n_rows": rows, "batch_id": batchId}, f)
-        _os.replace(tmp, _os.path.join(self._dir, f"manifest-{batchId}.json"))
 
     def abort(self, messages, batchId: int) -> None:
         self._inner.abort(messages)

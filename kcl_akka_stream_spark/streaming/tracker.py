@@ -40,9 +40,12 @@ call scans all of a bucket's shards at once and a trigger makes at most
 partitions hold the buckets: see ``session.STATE_PARTITIONS``.
 
 A bucket's state is flat ``binary`` fields: per shard, ascending
-``shards``, ``frontiers``, ``updates``, window ``lens`` (and ``evicted``
-when bounded), packed little-endian int64; the kept windows concatenated
-in shard order as ``seqs`` (int64) and ``procs`` (bool).  They are decoded
+``shards``, ``frontiers``, ``updates`` and window ``lens``, packed
+little-endian int64; the kept windows concatenated in shard order as
+``seqs`` (int64) and ``procs`` (bool); and per shard the cumulative
+``evicted`` counts (int64, all 0 while ``max_pending`` is None).  The one
+layout serves the bounded and the unbounded tracker, so a checkpoint may
+switch ``max_pending`` on or off across restarts.  The fields are decoded
 with ``np.frombuffer`` and re-encoded with ``tobytes`` at the kernel's
 edges.  Array fields (``array<long>``/``array<boolean>``) cost a fresh
 code generation every trigger: Spark rebuilds the state encoder per
@@ -50,9 +53,10 @@ micro-batch, its ``MapObjects`` draw new global lambda-variable ids, so
 the generated projection source never matched the codegen cache and every
 trigger compiled (and JIT-warmed) two new classes.  Flat binary fields
 generate the same source each trigger.  Checkpoints written with an
-earlier layout (per-shard keys, or array fields) fail to resume with
-``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``; start them over on a fresh
-``checkpointLocation``.
+earlier layout (per-shard keys, array fields, or the 6-field state an
+unbounded tracker kept before ``evicted`` was always stored) fail to resume
+with ``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``; start them over on a
+fresh ``checkpointLocation``.
 """
 
 from __future__ import annotations
@@ -82,14 +86,7 @@ SHARD_BUCKETS = 32
 _PER_SHARD = ("shards", "frontiers", "updates", "lens")
 
 STATE_SCHEMA = StructType(
-    [StructField(name, BinaryType()) for name in _PER_SHARD + ("seqs", "procs")]
-)
-
-#: State schema when the eviction bound is active: adds the per-shard
-#: cumulative evicted counts.  Kept SEPARATE from the default schema so a
-#: checkpoint written without the bound keeps its layout.
-EVICTING_STATE_SCHEMA = StructType(
-    STATE_SCHEMA.fields + [StructField("evicted", BinaryType())]
+    [StructField(name, BinaryType()) for name in _PER_SHARD + ("seqs", "procs", "evicted")]
 )
 
 # frontier sentinel for "no frontier yet" (seqs in the fixtures are
@@ -103,13 +100,9 @@ OUTPUT_SCHEMA = StructType(
         StructField("processed_uncheckpointed_count", LongType()),
         StructField("in_flight_count", LongType()),
         StructField("update_id", IntegerType()),
+        # cumulative force-evicted (at-least-once-forfeited) records
+        StructField("evicted_count", LongType()),
     ]
-)
-
-#: Output schema when the eviction bound is active: adds the cumulative
-#: count of force-evicted (at-least-once-forfeited) records per shard.
-EVICTING_OUTPUT_SCHEMA = StructType(
-    OUTPUT_SCHEMA.fields + [StructField("evicted_count", LongType())]
 )
 
 #: Name of the tracker's streaming ``observe``: per trigger, the sums of
@@ -178,27 +171,17 @@ def _make_track(max_pending: int | None):
     """Tracker kernel factory: ``max_pending=None`` is the faithful
     reference semantics (a never-acked record pins its successors
     forever); an integer bound adds the force-eviction guard."""
-    evicting = max_pending is not None
-    n_fields = len(EVICTING_STATE_SCHEMA if evicting else STATE_SCHEMA)
 
     def _track(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         if state.exists:
             got = state.get
-            if len(got) != n_fields:
-                raise ValueError(
-                    "cannot toggle max_pending on an existing checkpoint: the "
-                    f"stored tracker state has {len(got)} fields but this query "
-                    f"expects {n_fields} (the bounded tracker keeps a separate "
-                    "evicted field).  Resume with the same max_pending setting, "
-                    "or start a fresh checkpoint location."
-                )
             shards, frontiers, updates, lens, seqs = (
                 np.frombuffer(b, dtype="<i8") for b in got[:5]
             )
             procs = np.frombuffer(got[5], dtype=np.bool_)
-            evicted = np.frombuffer(got[6], dtype="<i8") if evicting else np.zeros_like(shards)
+            evicted = np.frombuffer(got[6], dtype="<i8")
             if (shards % SHARD_BUCKETS != key[0]).any():
                 raise ValueError(
                     f"tracker state for bucket {key[0]} holds shards of another "
@@ -252,17 +235,17 @@ def _make_track(max_pending: int | None):
         seqs = np.concatenate([seqs[~carried], kept_seqs])[by_row].astype("<i8")
         procs = np.concatenate([procs[~carried], kept_procs])[by_row]
         fields = (shards, frontiers, updates, lens, seqs, procs, evicted)
-        state.update(tuple(f.tobytes() for f in fields[:n_fields]))
-        out = {
-            "shard_id": active,
-            "frontier_seq": pd.Series(frontier, dtype="Int64").mask(frontier == _NO_FRONTIER),
-            "processed_uncheckpointed_count": behind,
-            "in_flight_count": in_flight,
-            "update_id": done.astype(np.int32),
-        }
-        if evicting:
-            out["evicted_count"] = lost
-        yield pd.DataFrame(out)
+        state.update(tuple(f.tobytes() for f in fields))
+        yield pd.DataFrame(
+            {
+                "shard_id": active,
+                "frontier_seq": pd.Series(frontier, dtype="Int64").mask(frontier == _NO_FRONTIER),
+                "processed_uncheckpointed_count": behind,
+                "in_flight_count": in_flight,
+                "update_id": done.astype(np.int32),
+                "evicted_count": lost,
+            }
+        )
 
     return _track
 
@@ -278,12 +261,10 @@ def streaming_checkpoint_frontier(
     ``max_pending`` bounds per-shard state for poisoned shards: when the
     kept window exceeds it, the oldest blocking record is force-evicted
     (frontier advances past it, forfeiting its at-least-once redelivery)
-    and the cumulative ``evicted_count`` column reports the loss.
-
-    ``max_pending`` CANNOT be toggled across a restart of the same
-    checkpoint location: the bounded tracker persists an extra ``evicted``
-    state field, and Spark state schemas are fixed at first run.  The kernel detects the mismatch and
-    raises an actionable error instead of an opaque unpack failure.
+    and the cumulative ``evicted_count`` column reports the loss; it reads
+    0 while no bound was ever set.  The state layout is the same either
+    way, so a restart of the same checkpoint location may switch the
+    bound on or off.
 
     The gauges also ride the trigger's own action as the streaming
     ``observe`` named ``TRACKER_METRICS`` (``in_flight`` and
@@ -292,12 +273,8 @@ def streaming_checkpoint_frontier(
     bucketed = df.withColumn("bucket", F.pmod(F.col("shard_id"), F.lit(SHARD_BUCKETS)))
     tracked = bucketed.groupBy("bucket").applyInPandasWithState(
         _make_track(max_pending),
-        outputStructType=(
-            OUTPUT_SCHEMA if max_pending is None else EVICTING_OUTPUT_SCHEMA
-        ),
-        stateStructType=(
-            STATE_SCHEMA if max_pending is None else EVICTING_STATE_SCHEMA
-        ),
+        outputStructType=OUTPUT_SCHEMA,
+        stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

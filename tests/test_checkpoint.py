@@ -123,23 +123,39 @@ def test_window_query_matches_tracker_scan_randomized(spark):
     assert got == want
 
 
-def test_tracker_rejects_max_pending_toggle_on_existing_state():
-    # A checkpoint written by the 6-field default tracker cannot resume
-    # with max_pending enabled (7-field state) -- the kernel must raise
-    # an actionable error, not an opaque unpack failure.
-    import pandas as pd
-    import pytest
+def test_tracker_switches_max_pending_on_across_a_restart(spark, tmp_path):
+    # A checkpoint started without the eviction bound resumes with
+    # max_pending=3: the bounded and the unbounded tracker keep one state
+    # layout, and the resumed run counts evictions from 0.
+    from kcl_akka_stream_spark.streaming.tracker import streaming_checkpoint_frontier
 
-    from kcl_akka_stream_spark.streaming.tracker import _make_track
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    schema = "shard_id long, seq long, processed boolean"
 
-    class FakeState:
-        exists = True
-        get = (b"",) * 6  # 6-field default-tracker state
+    def run(rows, max_pending):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
+        stream = spark.readStream.schema(schema).parquet(src)
+        got = []
+        q = (
+            streaming_checkpoint_frontier(stream, max_pending=max_pending)
+            .writeStream.outputMode("update")
+            .foreachBatch(lambda b, _: got.extend(b.collect()))
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        (last,) = got
+        return last
 
-        def update(self, v):
-            pass
-
-    track = _make_track(3)
-    batch = pd.DataFrame({"shard_id": [1], "seq": [1], "processed": [True]})
-    with pytest.raises(ValueError, match="max_pending"):
-        list(track((1,), iter([batch]), FakeState()))
+    # unbounded: the never-acked seq 1 pins 2 and 3 behind the frontier
+    last = run([(1, s, s != 1) for s in range(4)], None)
+    assert (last.frontier_seq, last.in_flight_count, last.evicted_count) == (0, 1, 0)
+    # bounded: the window 1..4 is over 3, so seq 1 is evicted -- the first
+    # eviction this checkpoint has seen -- and the frontier sweeps to 4
+    last = run([(1, 4, True)], 3)
+    assert (last.frontier_seq, last.in_flight_count, last.evicted_count) == (4, 0, 1)
+    assert last.update_id == 2

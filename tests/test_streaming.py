@@ -605,18 +605,18 @@ def _advance_lists(frontier, seqs, procs, max_pending=None):
 
 def _tracker_state(spark, ckpt):
     """The tracker's state store under ``ckpt`` decoded per shard:
-    ``{shard: (bucket, frontier, kept seqs, evicted or None)}``."""
+    ``{shard: (bucket, frontier, kept seqs, evicted)}``."""
     import numpy as np
 
     out = {}
     rows = spark.read.format("statestore").load(ckpt).select("key.bucket", "value.groupState.*")
     for r in rows.collect():
         d = r.asDict()
-        shards, frontiers, lens, seqs = (
-            np.frombuffer(d[f], dtype="<i8") for f in ("shards", "frontiers", "lens", "seqs")
+        shards, frontiers, lens, seqs, evicted = (
+            np.frombuffer(d[f], dtype="<i8")
+            for f in ("shards", "frontiers", "lens", "seqs", "evicted")
         )
         windows = np.split(seqs, np.cumsum(lens)[:-1])
-        evicted = np.frombuffer(d["evicted"], dtype="<i8") if "evicted" in d else [None] * len(shards)
         for shard, frontier, window, n_evicted in zip(shards, frontiers, windows, evicted):
             out[int(shard)] = (d["bucket"], int(frontier), window.tolist(), n_evicted)
     return out
@@ -883,7 +883,7 @@ def _tracker_refuses_checkpoint(spark, tmp_path, state_schema, state_of):
 
     def _old_track(key, pdfs, state):
         state.update(state_of([int(s) for pdf in pdfs for s in pdf["seq"]]))
-        yield pd.DataFrame([(int(key[0]), 0, 0, 0, 1)], columns=OUTPUT_SCHEMA.names)
+        yield pd.DataFrame([(int(key[0]), 0, 0, 0, 1, 0)], columns=OUTPUT_SCHEMA.names)
 
     old = stream.groupBy("shard_id").applyInPandasWithState(
         _old_track,
@@ -957,26 +957,23 @@ def test_tracker_rejects_per_shard_layout_checkpoint(spark, tmp_path):
 def test_tracker_resumes_state_written_in_the_binary_layout(spark, tmp_path, max_pending):
     # A hand-made kernel writes a bucket's state exactly as the binary
     # layout defines it (per shard: shards, frontiers, updates, window
-    # lens[, evicted] packed little-endian int64; the windows' seqs int64
-    # and procs bool concatenated in shard order); the real tracker must
-    # resume that checkpoint, carry on from it, and keep the state of a
-    # shard of the same bucket that this trigger does not touch.  Guards
-    # the field order and the encoding, which checkpoints depend on.
+    # lens packed little-endian int64; the windows' seqs int64 and procs
+    # bool concatenated in shard order; per shard evicted int64); the real
+    # tracker, bounded or not, must resume that checkpoint, carry on from
+    # it, and keep the state of a shard of the same bucket that this
+    # trigger does not touch.  Guards the field order and the encoding,
+    # which checkpoints depend on.
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from kcl_akka_stream_spark.streaming.tracker import (
-        EVICTING_OUTPUT_SCHEMA,
-        EVICTING_STATE_SCHEMA,
         OUTPUT_SCHEMA,
         SHARD_BUCKETS,
         STATE_SCHEMA,
         streaming_checkpoint_frontier,
     )
 
-    evicting = max_pending is not None
-    output_schema = EVICTING_OUTPUT_SCHEMA if evicting else OUTPUT_SCHEMA
     idle = 1 + SHARD_BUCKETS  # same bucket as shard 1
     src = str(tmp_path / "layout_src")
     ckpt = str(tmp_path / "layout_ckpt")
@@ -1001,11 +998,10 @@ def test_tracker_resumes_state_written_in_the_binary_layout(spark, tmp_path, max
                 packed(4, 1),
                 packed(12, 13, 15, 20, 7),
                 packed(False, True, False, True, False, dtype=np.bool_),
+                packed(4, 0),
             )
-            + ((packed(4, 0),) if evicting else ())
         )
-        row = (1, 10, 2, 2, 7) + ((4,) if evicting else ())
-        yield pd.DataFrame([row], columns=output_schema.names)
+        yield pd.DataFrame([(1, 10, 2, 2, 7, 4)], columns=OUTPUT_SCHEMA.names)
 
     def run(df, rows):
         q = (
@@ -1024,8 +1020,8 @@ def test_tracker_resumes_state_written_in_the_binary_layout(spark, tmp_path, max
         .groupBy("bucket")
         .applyInPandasWithState(
             seed_state,
-            outputStructType=output_schema,
-            stateStructType=EVICTING_STATE_SCHEMA if evicting else STATE_SCHEMA,
+            outputStructType=OUTPUT_SCHEMA,
+            stateStructType=STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
@@ -1038,17 +1034,18 @@ def test_tracker_resumes_state_written_in_the_binary_layout(spark, tmp_path, max
     (last,) = rows
     state = _tracker_state(spark, ckpt)
     assert last.shard_id == 1 and last.update_id == 8
-    assert state[idle] == (1, 5, [7], 0 if evicting else None)
-    if evicting:
+    assert state[idle] == (1, 5, [7], 0)
+    if max_pending is not None:
         # window 12..20 is 5 > 3: evicting 12 releases 13; 15 blocks again
         assert (last.frontier_seq, last.processed_uncheckpointed_count) == (13, 2)
         assert (last.in_flight_count, last.evicted_count) == (1, 5)
         assert state[1] == (1, 13, [15, 16, 20], 5)
     else:
-        # 12 still blocks: the stored frontier holds, 16 joins the window
+        # 12 still blocks: the stored frontier holds, 16 joins the window,
+        # and the stored evicted count carries over unchanged
         assert (last.frontier_seq, last.processed_uncheckpointed_count) == (10, 3)
-        assert last.in_flight_count == 2
-        assert state[1] == (1, 10, [12, 13, 15, 16, 20], None)
+        assert (last.in_flight_count, last.evicted_count) == (2, 4)
+        assert state[1] == (1, 10, [12, 13, 15, 16, 20], 4)
 
 
 def test_tracker_state_keys_are_buckets_not_shards(spark, tmp_path):
